@@ -79,6 +79,23 @@ object ShingleHashes {
   def tokenHash(s: UTF8String): Long =
     if (s == null) 42L else XXH64.hashUTF8String(s, 42L)
 
+  /** Largest shingle count per document: beyond it twice the count
+    * overflows an Int. */
+  val MaxShingles: Int = 1 << 29
+
+  /** Capacity of the open-addressed first-occurrence dedup table: the next
+    * power of two ≥ 2m, at least 4. Past [[MaxShingles]] it fails loudly —
+    * an overflowed 2m would leave the table at 4 slots and the probe loop
+    * would spin forever once they filled. */
+  def capacity(m: Int): Int = {
+    require(m <= MaxShingles,
+      s"shingle_hashes: $m shingles in one document exceed the bound of " +
+        s"$MaxShingles")
+    var cap = 4
+    while (cap < (m << 1)) cap <<= 1
+    cap
+  }
+
   /** The whole front stage: hash, combine, first-occurrence dedup.
     * Called from both eval and the generated code (one compiled body —
     * the JIT sees the same loop either way). */
@@ -87,13 +104,11 @@ object ShingleHashes {
     if (n < 3)
       return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
         .fromPrimitiveArray(Array.emptyLongArray)
+    val m = n - 2
+    val cap = capacity(m)
     val th = new Array[Long](n)
     var i = 0
     while (i < n) { th(i) = tokenHash(toks.getUTF8String(i)); i += 1 }
-    val m = n - 2
-    // open-addressed first-occurrence dedup: capacity = next pow2 >= 2m
-    var cap = 4
-    while (cap < (m << 1)) cap <<= 1
     val table = new Array[Long](cap)
     val used = new Array[Boolean](cap)
     val mask = cap - 1

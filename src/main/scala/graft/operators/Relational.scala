@@ -79,14 +79,18 @@ object Relational {
     broadcast(c).join(o, col("c_custkey") === col("o_custkey"))
       .join(l, col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("o_orderkey"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-        .as("revenue"))
+      // exact decimal sum, then round: a double sum can land just below a
+      // half cent and round down where the exact value rounds up
+      .agg(round(sum(col("l_extendedprice").cast("decimal(15,2)")
+          * (lit(1) - col("l_discount").cast("decimal(15,2)"))), 2)
+        .cast("double").as("revenue"))
       .orderBy(col("revenue").desc, col("o_orderkey"))
       .limit(10)
   }
 
   private val q03Sql =
-    """SELECT o_orderkey, round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+    """SELECT o_orderkey, CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+      |  * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE) AS revenue
       |FROM customer
       |JOIN orders ON c_custkey = o_custkey
       |JOIN lineitem ON o_orderkey = l_orderkey

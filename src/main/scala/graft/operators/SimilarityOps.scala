@@ -383,26 +383,6 @@ object SimilarityOps {
       .limit(kmeansK)
       .select(col("vec_id").as("cid"), col("vd").as("cv"), col("nrm").as("cn"))
 
-    // rank-1 assignment via the native centroid_argmin expression over the
-    // k-row centroid frame gathered into ONE broadcast array row: each
-    // assign pass is a pure map over the cached vector frame — no N·k
-    // joined rows carrying the 64-double payload, no per-candidate struct
-    // construction, no min_by hash-aggregate exchange (the former
-    // spelling paid one exchange per Lloyd pass just to reduce k=8
-    // candidates per vector). Semantics are bit-identical by
-    // construction: CentroidArgmin replicates the in-order dot fold,
-    // RoundBase's 4dp HALF_UP, and the min_by(struct(-cc, cid)) total
-    // order (SQLOrderingUtil.compareDoubles) — see the expression's doc.
-    def assign(cents: DataFrame): DataFrame = {
-      val carr = cents.agg(sort_array(collect_list(
-        struct(col("cid"), col("cv"), col("cn")))).as("cents"))
-      emb.join(broadcast(carr), lit(true))
-        .withColumn("m", graft.functions.CentroidArgmin.centroidArgmin(
-          col("vd"), col("nrm"), col("cents")))
-        .select(col("vec_id"), col("vd"), col("nrm"),
-          col("m.cid").as("cid"), col("m.cc").as("cc"))
-    }
-
     def update(assigned: DataFrame): DataFrame =
       assigned
         .select(col("cid"), posexplode(col("vd")).as(Seq("d", "v")))
@@ -413,8 +393,30 @@ object SimilarityOps {
           .as("cv"))
         .withColumn("cn", sqrt(dotF64(col("cv"), col("cv"))))
 
-    val c2 = update(assign(update(assign(cents0))))
-    assign(c2)
+    val c2 = update(assignNearest(emb, update(assignNearest(emb, cents0))))
+    assignNearest(emb, c2)
+  }
+
+  /** Rank-1 assignment via the native centroid_argmin expression over the
+    * k-row centroid frame gathered into ONE broadcast array row: each
+    * assign pass is a pure map over the vector frame — no N·k joined rows
+    * carrying the 64-double payload, no per-candidate struct construction,
+    * no min_by hash-aggregate exchange. Semantics are bit-identical by
+    * construction: CentroidArgmin replicates the in-order dot fold,
+    * RoundBase's 4dp HALF_UP, and the min_by(struct(-cc, cid)) total
+    * order (SQLOrderingUtil.compareDoubles) — see the expression's doc.
+    * An empty centroid frame yields no rows, as the join it replaced did:
+    * the gathered row is dropped, not argmin'd into NULL cids. */
+  private[operators] def assignNearest(emb: DataFrame,
+      cents: DataFrame): DataFrame = {
+    val carr = cents.agg(sort_array(collect_list(
+        struct(col("cid"), col("cv"), col("cn")))).as("cents"))
+      .filter(size(col("cents")) > 0)
+    emb.join(broadcast(carr), lit(true))
+      .withColumn("m", graft.functions.CentroidArgmin.centroidArgmin(
+        col("vd"), col("nrm"), col("cents")))
+      .select(col("vec_id"), col("vd"), col("nrm"),
+        col("m.cid").as("cid"), col("m.cc").as("cc"))
   }
 
   private def s05(s: SparkSession, dir: String): DataFrame =

@@ -35,7 +35,7 @@ object RetryEngine {
   /** Column form of the remaining-count transition
     * (messaging/producer.clj:288-293): null → count−1, pos → dec. Records
     * with remaining 0 must be routed to the DLQ *before* this transition —
-    * see [[splitRetries]]. */
+    * see [[exhaustedCol]]. */
   def decrementedCount(cfg: RetryConfig, retryCount: Column): Column =
     when(retryCount.isNull, lit(cfg.count - 1)).otherwise(retryCount - 1)
 
@@ -54,37 +54,26 @@ object RetryEngine {
     }
 
   /** DLQ criterion for a to-retry row BEFORE the count transition (shared
-    * with Dispatch's tally job so counts and writes cannot drift):
-    * remaining ≤ 0 — the normal exhaustion at 0, plus any corrupt
-    * negative — or a FIRST failure (null count) on a route with no retry
-    * budget (count ≤ 0). Without the budget clause, enabled+count=0
-    * would decrement the first failure to −1 and the record would match
-    * neither side of the split on its next hop — vanished from both the
-    * retry topic and the DLQ. May evaluate to NULL (null count with a
-    * positive budget — the retryable case); coalesce at boolean sinks. */
+    * by Dispatch's tallies and its routing projection, so counts and
+    * writes cannot drift): remaining ≤ 0 — the normal exhaustion at 0,
+    * plus any corrupt negative — or a FIRST failure (null count) on a
+    * route with no retry budget (count ≤ 0). Without the budget clause,
+    * enabled+count=0 would decrement the first failure to −1 and the
+    * record would match neither destination on its next hop — vanished
+    * from both the retry topic and the DLQ. Exhausted rows reach the DLQ
+    * with the count restored to the configured total (producer.clj:291,
+    * so a dead-set replay starts a fresh cycle). May evaluate to NULL
+    * (null count with a positive budget — the retryable case); coalesce
+    * at boolean sinks. */
   def exhaustedCol(cfg: RetryConfig): Column =
     col("retryCount") <= 0 ||
       (col("retryCount").isNull && lit(cfg.count <= 0))
 
-  /** Splits a batch of to-retry envelopes into (retryable, exhausted):
-    * exhausted ([[exhaustedCol]]) go to the DLQ with the count restored
-    * to the configured total (producer.clj:291 restores it so a dead-set
-    * replay starts a fresh retry cycle); retryable get the decremented
-    * count and a `nextAttemptAt` stamp. The two filters PARTITION the
-    * batch — every row lands on exactly one side. */
-  def splitRetries(cfg: RetryConfig, batch: DataFrame): (DataFrame, DataFrame) = {
-    val exhausted = batch.filter(exhaustedCol(cfg))
-      .withColumn("retryCount", lit(cfg.count))
-      .withColumn("nextAttemptAt", lit(null).cast("timestamp"))
-    val retryable = batch.filter(
-        (col("retryCount").isNull && lit(cfg.count > 0))
-          || col("retryCount") > 0)
-      .withColumn("nextAttemptAt",
-        timestamp_millis(unix_millis(current_timestamp())
-          + timeoutMsCol(cfg, col("retryCount"))))
-      .withColumn("retryCount", decrementedCount(cfg, col("retryCount")))
-    (retryable, exhausted)
-  }
+  /** `nextAttemptAt` of a row published to the retry topic: now plus the
+    * backoff for its PRE-transition count. */
+  def nextAttemptCol(cfg: RetryConfig): Column =
+    timestamp_millis(unix_millis(current_timestamp())
+      + timeoutMsCol(cfg, col("retryCount")))
 
   /** Due-filter for the retry-reader query (the TTL-expiry analogue): only
     * records whose backoff has elapsed are released to reprocessing.

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import java.nio.file.{Files, Paths}
 
 /** Topic transport abstraction. Production transport is Kafka (the
@@ -47,19 +48,38 @@ trait TopicIO extends Serializable {
 
   /** Idempotent append keyed by a replay token (SURVEY §7.3.1: foreachBatch
     * may replay a micro-batch after failure; sink writes should not
-    * double-publish). The token is `<query>-<batchId>`; on a transport
-    * that implements this, an append with an already-applied token is a
-    * no-op (the file transport records applied tokens). Default:
-    * non-idempotent passthrough — which is what the Kafka transport
-    * inherits: Spark's Kafka sink has NO transactional producer, so a
-    * replayed micro-batch there may re-publish (standard Kafka
-    * at-least-once). That is SAFE, not silent corruption: duplicates
-    * carry the same `graft.*` retry state and converge through the same
-    * retry/DLQ cycle — but deployments needing exactly-once emission on
-    * Kafka must dedup downstream (e.g. on (topic, key, graft headers))
-    * or override this with a transactional client. */
+    * double-publish). The token is `<query>-<batchId>`. A transport that
+    * implements this keeps one applied marker per (topic, token), and an
+    * append whose token is already applied to the topic is a no-op; it is
+    * the single-target case of [[appendRouted]]. Default: non-idempotent
+    * passthrough — which is what the Kafka transport inherits: Spark's
+    * Kafka sink has NO transactional producer, so a replayed micro-batch
+    * there may re-publish (standard Kafka at-least-once). That is SAFE,
+    * not silent corruption: duplicates carry the same `graft.*` retry
+    * state and converge through the same retry/DLQ cycle — but
+    * deployments needing exactly-once emission on Kafka must dedup
+    * downstream (e.g. on (topic, key, graft headers)) or override this
+    * with a transactional client. */
   def appendIdempotent(df: DataFrame, topic: String, token: String): Unit =
     append(df, topic)
+
+  /** Routed append: each row of `df` goes to the topic named by its
+    * `topicCol` value; rows naming no topic in `targets` are dropped, and
+    * `topicCol` is not written. With a token, each target topic gets the
+    * [[appendIdempotent]] contract on its own, so a replay after a crash
+    * part-way through lands every row exactly once. Without one, it is a
+    * plain [[append]] per topic. Default: one such call per target — what
+    * a forwarding decorator inherits, with the same topic contents.
+    * Transports override it to write all targets in one pass. */
+  def appendRouted(df: DataFrame, topicCol: String, targets: Seq[String],
+      token: Option[String]): Unit =
+    targets.foreach { t =>
+      val rows = df.filter(col(topicCol) === t).drop(topicCol)
+      token match {
+        case Some(k) => appendIdempotent(rows, t, k)
+        case None => append(rows, t)
+      }
+    }
 }
 
 /** Kafka transport: thin option-builders over the built-in kafka source/sink
@@ -91,8 +111,12 @@ final class KafkaTopicIO(bootstrapServers: String,
 
   /** Exact option map handed to the Kafka sink. */
   private[streaming] def writerOptions(topic: String): Map[String, String] =
-    Map("kafka.bootstrap.servers" -> bootstrapServers,
-      "topic" -> topic) ++ security.kafkaOptions
+    routedWriterOptions + ("topic" -> topic)
+
+  /** The routed sink's options: no fixed `topic`, so the sink sends each
+    * row to the topic in its `topic` column. */
+  private[streaming] def routedWriterOptions: Map[String, String] =
+    Map("kafka.bootstrap.servers" -> bootstrapServers) ++ security.kafkaOptions
 
   def read(spark: SparkSession, topic: String): DataFrame =
     normalize(spark.read.format("kafka")
@@ -152,7 +176,8 @@ final class KafkaTopicIO(bootstrapServers: String,
     * `graft.*` entries; without them the retry reader would see every
     * record as a first failure forever (no backoff, never exhausting to
     * the DLQ). Any stale `graft.*` user entries are dropped first. */
-  private[streaming] def sinkProjection(df: DataFrame): DataFrame = {
+  private[streaming] def sinkProjection(df: DataFrame,
+      extra: Column*): DataFrame = {
     import KafkaTopicIO._
     def entry(name: String, v: org.apache.spark.sql.Column) =
       when(v.isNotNull, struct(lit(name).as("key"),
@@ -209,14 +234,30 @@ final class KafkaTopicIO(bootstrapServers: String,
       .map(h0 => filter(coalesce(h0, array()),
         h => !h.getField("key").startsWith(HeaderPrefix)))
       .getOrElse(array().cast("array<struct<key:string,value:binary>>"))
-    df.select(col("key"), col("value"),
-      concat(user, graft).as("headers"))
+    df.select(Seq(col("key"), col("value"),
+      concat(user, graft).as("headers")) ++ extra: _*)
   }
+
+  /** Sink projection of a routed frame: the targets' rows, with the
+    * destination as the sink's per-row `topic` column. */
+  private[streaming] def routedProjection(df: DataFrame, topicCol: String,
+      targets: Seq[String]): DataFrame =
+    sinkProjection(df.filter(col(topicCol).isin(targets: _*)),
+      col(topicCol).as("topic"))
 
   def append(df: DataFrame, topic: String): Unit =
     sinkProjection(df)
       .write.format("kafka")
       .options(writerOptions(topic))
+      .save()
+
+  /** One Kafka write for every target: the sink routes each row by its
+    * `topic` column. No replay markers (see [[appendIdempotent]]). */
+  override def appendRouted(df: DataFrame, topicCol: String,
+      targets: Seq[String], token: Option[String]): Unit =
+    routedProjection(df, topicCol, targets)
+      .write.format("kafka")
+      .options(routedWriterOptions)
       .save()
 
   def maxOffset(spark: SparkSession, topic: String): Long =
@@ -381,58 +422,176 @@ final class FileTopicIO(baseDir: String) extends TopicIO {
       math.max(1, maxPollRecords / 500).toString)
 
   def append(df: DataFrame, topic: String): Unit =
-    lockFor(topic).synchronized {
-      lastOffset.put(topic, writeStamped(df, topic, dir(topic)))
+    appendRouted(df.withColumn(FileTopicIO.OneTopic, lit(topic)),
+      FileTopicIO.OneTopic, Seq(topic), None)
+
+  override def appendIdempotent(df: DataFrame, topic: String,
+      token: String): Unit =
+    appendRouted(df.withColumn(FileTopicIO.OneTopic, lit(topic)),
+      FileTopicIO.OneTopic, Seq(topic), Some(token))
+
+  /** Runs under the topic locks just before a target's files move into its
+    * topic dir; specs make it throw to inject a crash between two moves. */
+  @transient @volatile private[streaming] var beforeMove: String => Unit =
+    _ => ()
+
+  /** CRASH-SAFE, TOKEN-SCOPED routed append — the transport's one write
+    * path ([[append]] and [[appendIdempotent]] are its single-target
+    * cases). One staged write covers every pending target: rows are
+    * stamped with their topic's next offsets and written, partitioned by
+    * destination index, into a `_staging-<token>` dir (underscore-prefixed:
+    * invisible to parquet scans) under the first pending topic's dir. Then,
+    * topic by topic, the part files move into the topic dir under
+    * token-stamped names and the topic's `_applied-<token>` marker is
+    * created. A replay skips the topics whose marker exists and, for the
+    * rest, deletes ONLY this token's stamped files and staging dir before
+    * writing again: a crash between two topics' moves lands every row
+    * exactly once, and records other writers committed to the same topics
+    * in between survive (a whole-topic snapshot diff would destroy them).
+    * The offset gap a reclaimed attempt leaves is fine: dead-set markers
+    * rely on monotone offsets, not contiguous ones. Locks are taken in
+    * sorted topic order, so concurrent routed appends cannot deadlock. */
+  override def appendRouted(df: DataFrame, topicCol: String,
+      targets: Seq[String], token: Option[String]): Unit = {
+    val topics = targets.distinct
+    withLocks(topics.sorted.toList) {
+      topics.foreach(t => Files.createDirectories(Paths.get(dir(t))))
+      val pending = topics.filter(t => token.forall(unapplied(t, _)))
+      if (pending.nonEmpty) {
+        val staging = Paths.get(dir(pending.head)).resolve("_staging-" +
+          token.getOrElse(java.util.UUID.randomUUID().toString))
+        val dest = col(topicCol)
+        val idx = pending.indices.tail.foldLeft(
+          when(dest === pending.head, 0)) { (c, i) =>
+          c.when(dest === pending(i), i)
+        }
+        val last = writeStamped(df, idx, pending, staging.toString)
+        // invalidate the warm caches BEFORE any file becomes visible: a
+        // move loop failing partway (IO error, not a crash) leaves files
+        // with offsets above the cached max, and a later append reading
+        // the stale cache would mint DUPLICATE offsets. Each topic's
+        // entry is re-established once the topic commits.
+        pending.foreach(lastOffset.remove)
+        val suffix = token.fold("")(k => s"-tok-${tokenStamp(k)}")
+        pending.zipWithIndex.foreach { case (t, i) =>
+          beforeMove(t)
+          val d = Paths.get(dir(t))
+          val part = staging.resolve(s"${FileTopicIO.DestField}=$i")
+          listNames(part)
+            .filter(n => n.endsWith(".parquet") && !n.startsWith("_")
+              && !n.startsWith("."))
+            .foreach { n =>
+              Files.move(part.resolve(n),
+                d.resolve(n.stripSuffix(".parquet") + suffix + ".parquet"),
+                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+            }
+          token.foreach(k => Files.createFile(d.resolve(s"_applied-$k")))
+          lastOffset.put(t, last(i))
+        }
+        deleteRecursively(staging)
+      }
+    }
+  }
+
+  private def withLocks[T](sorted: List[String])(body: => T): T =
+    sorted match {
+      case Nil => body
+      case t :: rest => lockFor(t).synchronized(withLocks(rest)(body))
     }
 
-  /** Offset-stamped envelope write into `outDir` (normally the topic dir;
-    * [[appendIdempotent]] targets a token staging subdir). Offsets start at
-    * the topic's current max + 1. Returns the new last offset. Caller must
-    * hold `lockFor(topic)` and update `lastOffset` once the files are
-    * visible in the topic dir. */
-  private def writeStamped(df: DataFrame, topic: String,
-      outDir: String): Long = {
+  private def listNames(d: java.nio.file.Path): Seq[String] =
+    if (!Files.isDirectory(d)) Nil
+    else {
+      val s = Files.list(d)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.getFileName.toString).toSeq
+      } finally s.close()
+    }
+
+  /** Replay bookkeeping for one (topic, token), under the topic's lock:
+    * false when the token is already applied to the topic. Otherwise a
+    * crashed attempt's stamped files and staging dir are reclaimed first. */
+  private def unapplied(topic: String, token: String): Boolean = {
+    val d = Paths.get(dir(topic))
+    val staging = d.resolve(s"_staging-$token")
+    // pre-rework recovery marker: superseded by the staging protocol (its
+    // whole-topic snapshot diff is exactly the loss bug fixed there)
+    Files.deleteIfExists(d.resolve(s"_intent-$token"))
+    if (Files.exists(d.resolve(s"_applied-$token"))) {
+      // a crash between the marker and cleanup just leaks the staging dir
+      deleteRecursively(staging)
+      false
+    } else {
+      val stamped = s"-tok-${tokenStamp(token)}.parquet"
+      val stale = listNames(d).filter(_.endsWith(stamped))
+      if (stale.nonEmpty || Files.exists(staging)) {
+        stale.foreach(n => Files.deleteIfExists(d.resolve(n)))
+        deleteRecursively(staging)
+        // the warm last-offset cache may reflect the deleted files —
+        // drop it so the re-append rescans and keeps offsets monotone
+        lastOffset.remove(topic)
+      }
+      true
+    }
+  }
+
+  /** Offset-stamped envelope write into `outDir`, partitioned by the
+    * destination index `idx` (a position in `topics`; rows whose index is
+    * NULL are dropped). Each topic's offsets continue from its current
+    * max. Returns each topic's new last offset. Caller holds the topics'
+    * locks and updates `lastOffset` once the files are visible. */
+  private def writeStamped(df: DataFrame, idx: Column, topics: Seq[String],
+      outDir: String): Array[Long] = {
     val spark = df.sparkSession
-    val base = maxOffset(spark, topic) + 1
-    // Contiguous offsets without a single-partition global window: one
-    // lightweight counting job per partition, then every partition
-    // stamps its contiguous id range in parallel — the multi-partition
-    // analogue of a log append (what zipWithIndex does internally, done
-    // by hand so the row count comes back for the cache update).
+    val bases = topics.map(maxOffset(spark, _) + 1).toArray
+    val k = topics.size
     val fields = Envelope.schema.fieldNames.toIndexedSeq
     val offsetIdx = fields.indexOf("offset")
+    val destIdx = fields.size
     val rows = Envelope.withOptionalColumns(df)
-      .select(fields.map(col): _*).rdd
+      .select(fields.map(col) :+ idx.as(FileTopicIO.DestField): _*)
+      .filter(col(FileTopicIO.DestField).isNotNull).rdd
     // persist across the two jobs: the counting job and the stamping
-    // write must see IDENTICAL partition contents — an unpersisted
-    // RDD recomputes its whole lineage for the second job, paying the
+    // write must see IDENTICAL partition contents — an unpersisted RDD
+    // recomputes its whole lineage for the second job, paying the
     // upstream twice AND (for a nondeterministic upstream, or a
-    // lost-executor recompute) risking offset ranges computed from
-    // one materialization applied to a different one, breaking the
+    // lost-executor recompute) risking offset ranges computed from one
+    // materialization applied to a different one, breaking the
     // monotone-offset invariant the dead-set markers rely on
     rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val counts = rows.mapPartitionsWithIndex((pi, it) =>
-        Iterator(pi -> it.size)).collect().sortBy(_._1).map(_._2.toLong)
-      val starts = counts.scanLeft(0L)(_ + _)
-      val total = starts.last
+      // Contiguous offsets without a single-partition global window: one
+      // counting job yields rows per (partition, topic), then every
+      // partition stamps its contiguous range of each topic in parallel
+      // — the multi-partition analogue of a log append.
+      val counts = rows.mapPartitionsWithIndex { (pi, it) =>
+        val c = new Array[Long](k)
+        it.foreach(r => c(r.getInt(destIdx)) += 1)
+        Iterator(pi -> c)
+      }.collect().sortBy(_._1).map(_._2)
+      // starts(p)(i): the first offset partition p stamps for topic i
+      val starts = counts.scanLeft(bases)((s, c) =>
+        s.zip(c).map { case (a, b) => a + b })
       val indexed = rows.mapPartitionsWithIndex { (pi, it) =>
-        var o = base + starts(pi)
+        val next = starts(pi).clone()
         it.map { r =>
-          val row = org.apache.spark.sql.Row.fromSeq(
-            r.toSeq.updated(offsetIdx, o))
-          o += 1; row
+          val i = r.getInt(destIdx)
+          val row = Row.fromSeq(r.toSeq.updated(offsetIdx, next(i)))
+          next(i) += 1; row
         }
       }
-      spark.createDataFrame(indexed, Envelope.schema)
-        .write.mode("append").parquet(outDir)
-      base + total - 1
+      spark.createDataFrame(indexed,
+        Envelope.schema.add(FileTopicIO.DestField, IntegerType))
+        .write.partitionBy(FileTopicIO.DestField).mode("append")
+        .parquet(outDir)
+      starts.last.map(_ - 1)
     } finally rows.unpersist(blocking = false)
   }
 
   def maxOffset(spark: SparkSession, topic: String): Long =
     // under the topic lock: this is public API that RE-POPULATES the
-    // cache on a miss, and an unlocked scan racing appendIdempotent's
+    // cache on a miss, and an unlocked scan racing appendRouted's
     // move-in window could snapshot a partially-moved state and put a
     // stale max back right after the append invalidated it — re-opening
     // the duplicate-offset window the invalidation closes. Reentrant for
@@ -472,82 +631,11 @@ final class FileTopicIO(baseDir: String) extends TopicIO {
     * proceeded — fail the append instead. */
   private def deleteRecursively(p: java.nio.file.Path): Unit =
     graft.FsTree.delete(p)
+}
 
-  override def appendIdempotent(df: DataFrame, topic: String,
-      token: String): Unit = lockFor(topic).synchronized {
-    val d = Paths.get(dir(topic))
-    Files.createDirectories(d)
-    val applied = d.resolve(s"_applied-$token")
-    val staging = d.resolve(s"_staging-$token")
-    if (Files.exists(applied)) {
-      // a crash between the applied marker and cleanup just leaks the
-      // staging dir (or a pre-rework intent file) — sweep them here
-      deleteRecursively(staging)
-      Files.deleteIfExists(d.resolve(s"_intent-$token"))
-    } else {
-      // CRASH-SAFE, TOKEN-SCOPED two-phase: marker-after-append alone left
-      // a window (append committed, marker not yet created) where a
-      // replayed batch re-appended — duplicated retries/DLQ copies despite
-      // the trait's idempotence promise. The attempt writes into a
-      // token-named staging subdir (underscore-prefixed: invisible to
-      // parquet scans), then moves each part file into the topic dir under
-      // a token-stamped name, then creates the applied marker. Recovery
-      // deletes ONLY this token's stamped files plus the staging dir — an
-      // earlier design snapshotted the whole topic's file list and deleted
-      // everything not in the snapshot on replay, which destroyed records
-      // OTHER writers (different tokens: dispatch emit, retry requeue,
-      // dead-set replay share topics) committed between the crash and the
-      // replay. Scoping by token closes that loss window; the offset gap a
-      // reclaimed crashed attempt leaves behind is fine (dead-set markers
-      // rely on monotone offsets, not contiguous ones).
-      val stampSuffix = s"-tok-${tokenStamp(token)}.parquet"
-      def tokenFiles(): Seq[java.nio.file.Path] = {
-        val s = Files.list(d)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala
-            .filter(p => p.getFileName.toString.endsWith(stampSuffix))
-            .toSeq
-        } finally s.close()
-      }
-      val stale = tokenFiles()
-      if (stale.nonEmpty || Files.exists(staging)) {
-        stale.foreach(Files.deleteIfExists)
-        deleteRecursively(staging)
-        // the warm last-offset cache may reflect the deleted files —
-        // drop it so the re-append rescans and keeps offsets monotone
-        lastOffset.remove(topic)
-      }
-      // pre-rework recovery marker: superseded by the staging protocol
-      // (its whole-topic snapshot diff is exactly the loss bug fixed here)
-      Files.deleteIfExists(d.resolve(s"_intent-$token"))
-      val newLast = writeStamped(df, topic, staging.toString)
-      val moved = {
-        val s = Files.list(staging)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.map(_.getFileName.toString)
-            .filter(n => n.endsWith(".parquet") && !n.startsWith("_")
-              && !n.startsWith("."))
-            .toSeq
-        } finally s.close()
-      }
-      // invalidate the warm cache BEFORE any file becomes visible: a
-      // move loop failing partway (IO error, not a crash) leaves
-      // stamped files with offsets above the cached max, and a later
-      // append reading the stale cache would mint DUPLICATE offsets.
-      // (Plain append has no such window: Spark's commit protocol only
-      // exposes part files after a successful job.) Re-established only
-      // after the applied marker commits the attempt.
-      lastOffset.remove(topic)
-      moved.foreach { n =>
-        Files.move(staging.resolve(n),
-          d.resolve(n.stripSuffix(".parquet") + stampSuffix),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-      Files.createFile(applied)
-      deleteRecursively(staging)
-      lastOffset.put(topic, newLast)
-    }
-  }
+object FileTopicIO {
+  /** Topic column of the single-target cases of `appendRouted`. */
+  private val OneTopic = "graft_dest_topic"
+  /** Staging partition column: a row's destination index. */
+  private val DestField = "dest"
 }

@@ -69,4 +69,16 @@ class ShingleHashesSpec extends SparkSuite {
       .select(col("shh")).head().getSeq[Long](0)
     assert(rows(2).getSeq[Long](2) == want && want.size == 2)
   }
+
+  test("the dedup table's capacity fails loudly past the shingle bound " +
+      "instead of overflowing 2m into a 4-slot table whose probe loop " +
+      "never ends") {
+    assert(ShingleHashes.capacity(0) == 4)
+    assert(ShingleHashes.capacity(3) == 8)
+    assert(ShingleHashes.capacity(ShingleHashes.MaxShingles) == (1 << 30))
+    for (m <- Seq(ShingleHashes.MaxShingles + 1, 1 << 30, Int.MaxValue - 2)) {
+      val e = intercept[IllegalArgumentException](ShingleHashes.capacity(m))
+      assert(e.getMessage.contains("exceed the bound"), e.getMessage)
+    }
+  }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * max(1, min(25, count) − remaining), so the first `count − 24` hops
   * all reuse the exponent-1 queue and the ladder then climbs to 2^25−1.
   * This spec drives the FULL column path (timeoutMsCol +
-  * decrementedCount + splitRetries' restore-on-exhaust) over every
+  * decrementedCount + dispatch's restore-on-exhaust) over every
   * remaining value in one Spark job and checks it against an
   * independent JVM ladder, for seeded random counts past the cap. */
 class ExponentLadderSpec extends SparkSuite {
@@ -54,17 +54,21 @@ class ExponentLadderSpec extends SparkSuite {
         "first hops past the cap must reuse the exponent-1 queue")
       // ceiling: the last chance saturates at 2^25 − 1
       assert(refT(0) == ((1L << 25) - 1) * timeout)
-      // restore-on-exhaust through the real splitRetries path
-      val batch = Seq(("k1", 0), ("k2", 3))
-        .toDF("key", "retryCount")
-      val (retryable, exhausted) = RetryEngine.splitRetries(cfg, batch)
-      val dlq = exhausted.collect()
+      // restore-on-exhaust through the real dispatch routing
+      val topics = new FileTopicIO(tmpDir("ladder"))
+      val batch = envelopes("app", Seq(("k1", "v", ts("2024-01-01 00:00:00")),
+          ("k2", "v", ts("2024-01-01 00:00:01"))))
+        .withColumn("retryCount",
+          when(col("key").cast("string") === "k1", 0).otherwise(3))
+      Dispatch.dispatch(StreamRouteConfig("app", "app-topic", retry = cfg),
+        topics, Dispatch.ExprHandler(lit("retry")))(batch)
+      val dlq = topics.read(spark, "app_dead_letter").collect()
       assert(dlq.length == 1 &&
         dlq(0).getAs[Int]("retryCount") == count,
         "exhausted record must restore the FULL configured count (a " +
           "dead-set replay starts a fresh cycle)")
-      assert(retryable.filter(col("key") === "k2")
-        .select("retryCount").collect()(0).getInt(0) == 2)
+      assert(topics.read(spark, "app_retry").select("retryCount")
+        .collect().map(_.getInt(0)).toSeq == Seq(2))
     }
   }
 }

@@ -69,6 +69,30 @@ class KafkaTopicIOSpec extends SparkSuite {
       "kafka.sasl.jaas.config" -> SecurityConfig.plainJaas("svc", "pw")))
   }
 
+  test("routed writer: one sink write whose options carry NO fixed " +
+      "`topic` (the sink then routes each row by its `topic` column), " +
+      "over a projection that keeps only the targets' rows") {
+    assert(io.routedWriterOptions == io.writerOptions("x") - "topic")
+    assert(!io.routedWriterOptions.contains("topic"))
+    val now = ts("2024-01-01 00:00:00")
+    val routed = envelopes("app", Seq(("k1", "a", now), ("k2", "b", now),
+        ("k3", "c", now), ("k4", "d", now)))
+      .withColumn("retryCount", org.apache.spark.sql.functions.lit(2))
+      .withColumn(Dispatch.TopicCol, org.apache.spark.sql.functions.expr(
+        "CASE cast(value AS string) WHEN 'a' THEN 'app_retry' " +
+          "WHEN 'b' THEN 'app_dead_letter' WHEN 'c' THEN 'app_other' END"))
+    val wire = io.routedProjection(routed, Dispatch.TopicCol,
+      Seq("app_retry", "app_dead_letter"))
+    assert(wire.schema.fieldNames.toSeq == Seq("key", "value", "headers", "topic"))
+    assert(wire.schema("topic").dataType == StringType)
+    val rows = wire.selectExpr("cast(key as string)", "topic",
+        "cast(filter(headers, h -> h.key = 'graft.retryCount')[0].value " +
+          "as string)")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .toSeq.sorted
+    assert(rows == Seq(("k1", "app_retry", "2"), ("k2", "app_dead_letter", "2")))
+  }
+
   test("sinkProjection resolves retry-state columns by the FRAME's " +
       "session conf, not the thread-local SQLConf: on a non-Spark " +
       "thread (management pool → dead-set replay → append) the " +

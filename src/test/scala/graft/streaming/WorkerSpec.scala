@@ -85,7 +85,7 @@ class WorkerSpec extends SparkSuite {
       s"fixture self-check: ${onRetry.mkString(",")}")
     // the retry hop routes to the channel: the channel copy must NOT
     // inherit retryCount=2 — the channel's enrichMetadata would report
-    // phantom hops and its splitRetries would exhaust 2 hops early
+    // phantom hops and its dispatch would exhaust 2 hops early
     engine.startRetryReader(route, identity,
       Dispatch.ExprHandler(lit("channel:geo")), Trigger.AvailableNow())
       .awaitTermination()
