@@ -132,22 +132,29 @@ object EngineConfig {
         "Spark treats a non-positive stop timeout as wait-indefinitely)"
     (cfg.streamRoutes.keySet intersect cfg.batchRoutes.keySet).foreach(e =>
       errs += s"topic entity '$e' declared as both stream and batch route")
+    // the one retry check: stream routes, their channels and batch routes
+    // all run the same retry cycle
+    def checkRetry(where: String, r: RetryConfig): Unit = {
+      if (r.count < 0) errs += s"$where: negative retry count"
+      if (r.count > MaxExponentialRetries
+          && r.backoffType == BackoffType.Exponential)
+        errs += s"$where: exponential retry count > $MaxExponentialRetries"
+    }
     cfg.streamRoutes.foreach { case (k, r) =>
       if (k != r.topicEntity) errs += s"stream route key '$k' != entity '${r.topicEntity}'"
       if (r.originTopic.isEmpty) errs += s"stream route '$k': empty origin-topic"
-      if (r.retry.count < 0) errs += s"stream route '$k': negative retry count"
-      if (r.retry.count > MaxExponentialRetries
-          && r.retry.backoffType == BackoffType.Exponential)
-        errs += s"stream route '$k': exponential retry count > $MaxExponentialRetries"
+      checkRetry(s"stream route '$k'", r.retry)
       r.channels.foreach { case (cn, ch) =>
         if (cn != ch.name) errs += s"channel key '$cn' != name '${ch.name}' in route '$k'"
         if (ch.workerCount <= 0) errs += s"channel '$cn' in route '$k': worker-count must be > 0"
+        checkRetry(s"channel '$cn' in route '$k'", ch.retry)
       }
     }
     cfg.batchRoutes.foreach { case (k, r) =>
       if (k != r.topicEntity) errs += s"batch route key '$k' != entity '${r.topicEntity}'"
       if (r.originTopic.isEmpty) errs += s"batch route '$k': empty origin-topic"
       if (r.maxPollRecords <= 0) errs += s"batch route '$k': max-poll-records must be > 0"
+      checkRetry(s"batch route '$k'", r.retry)
     }
     if (!Set("memory", "rocksdb").contains(cfg.stateStore))
       errs += s"state-store '${cfg.stateStore}' is not one of: memory, rocksdb"

@@ -239,7 +239,12 @@ object ConfigLoader {
     case Some(other) => other.toString.toLong
     case None => dflt
   }
-  private def int(o: Obj, k: String, dflt: Int): Int = lng(o, k, dflt.toLong).toInt
+  private def int(o: Obj, k: String, dflt: Int): Int = {
+    val v = lng(o, k, dflt.toLong)
+    if (!v.isValidInt)
+      throw new ParseError(s"'$k' = $v is outside the Int range")
+    v.toInt
+  }
   private def bool(o: Obj, k: String, dflt: Boolean): Boolean = o.get(k) match {
     case Some(b: Boolean) => b
     case Some(other) => other.toString.toBoolean

@@ -72,6 +72,13 @@ object Dispatch {
     * `token` = `<query>-<batchId>` makes the emit replay-safe. */
   def dispatch(route: StreamRouteConfig, topics: TopicIO, handler: Handler,
       token: Option[String] = None)(
+      batch: DataFrame): Counts =
+    dispatchChecked(route, topics, handler, token, _ => ())(batch)
+
+  /** The one dispatch body: `check` sees the tallies before anything is
+    * written and may reject the batch. */
+  private def dispatchChecked(route: StreamRouteConfig, topics: TopicIO,
+      handler: Handler, token: Option[String], check: Tallies => Unit)(
       batch: DataFrame): Counts = {
     import Envelope.Code
     val entity = route.topicEntity
@@ -99,31 +106,31 @@ object Dispatch {
     val retryBound = col("disposition") === Code.Retry ||
       !col("disposition").isin(known.toSeq: _*)
     try {
-      val exhausted = exhaustedFlag(route.retry, retryBound)
+      // a retryBound row is exhausted per RetryEngine.exhaustedCol, or
+      // always when retries are disabled for the route
+      val exhausted = if (route.retry.enabled) retryBound &&
+          coalesce(RetryEngine.exhaustedCol(route.retry), lit(false))
+        else retryBound
       val tallies = dispositionTallies(handled, exhausted)
+      check(tallies)
       // retried/exhausted include the catch-all rows: the routing below
       // uses the same retryBound and exhausted predicates
       val retried = tallies.live(Code.Retry) + tallies.liveOutside(known)
       val deadLettered = tallies.total(Code.DeadLetter) +
         tallies.exhausted(Code.Retry) + tallies.exhaustedOutside(known)
       val perChannel = channels.map { case (code, t) => t -> tallies.total(code) }
-      emitRouted(topics, routed(handled, entity, route.retry, retryBound,
-          exhausted, channels),
-        Seq(EngineConfig.retryTopic(entity) -> retried,
-          EngineConfig.deadLetterTopic(entity) -> deadLettered) ++ perChannel,
-        token)
+      // one routed emit for the destinations counted non-empty; none when
+      // every row succeeded or was skipped
+      val targets = (Seq(EngineConfig.retryTopic(entity) -> retried,
+        EngineConfig.deadLetterTopic(entity) -> deadLettered) ++ perChannel)
+        .collect { case (t, n) if n > 0 => t }
+      if (targets.nonEmpty)
+        topics.appendRouted(routed(handled, entity, route.retry, retryBound,
+          exhausted, channels), TopicCol, targets, token)
       Counts(tallies.total(Code.Success), tallies.total(Code.Skip), retried,
         deadLettered, perChannel.map(_._2).sum, tallies.invalid(known))
     } finally handled.unpersist()
   }
-
-  /** The retry-cycle side of the tallies and the routing: a `retryBound`
-    * row is exhausted per [[RetryEngine.exhaustedCol]], or always when
-    * retries are disabled for the route. */
-  private def exhaustedFlag(retry: RetryConfig, retryBound: Column): Column =
-    if (retry.enabled)
-      retryBound && coalesce(RetryEngine.exhaustedCol(retry), lit(false))
-    else retryBound
 
   /** The batch projected for one routed emit: [[TopicCol]] names each
     * row's destination, and the retry state is rewritten per destination.
@@ -159,17 +166,8 @@ object Dispatch {
       TopicCol -> dest)).drop("disposition")
   }
 
-  /** One [[TopicIO.appendRouted]] call for the destinations counted
-    * non-empty; none when every row succeeded or was skipped. */
-  private def emitRouted(topics: TopicIO, routedDf: DataFrame,
-      counted: Seq[(String, Long)], token: Option[String]): Unit = {
-    val targets = counted.collect { case (t, n) if n > 0 => t }
-    if (targets.nonEmpty)
-      topics.appendRouted(routedDf, TopicCol, targets, token)
-  }
-
-  /** Per-(disposition, exhausted?) counts; the exhausted flag is
-    * [[exhaustedFlag]], the predicate the routing uses. */
+  /** Per-(disposition, exhausted?) counts; the exhausted flag is the
+    * predicate the routing uses. */
   private final case class Tallies(m: Map[(String, Boolean), Long]) {
     def total(code: String): Long =
       m.collect { case ((c, _), n) if c == code => n }.sum
@@ -203,36 +201,19 @@ object Dispatch {
   /** E7 batch-route contract (kafka_consumer/consumer_handler.clj:36-73):
     * the batch handler's output must contain only skip/retry dispositions;
     * anything else is an invalid return (InvalidReturnTypeException in the
-    * reference). */
+    * reference), rejected before anything is written. Past that check a
+    * batch route is the stream body with no channels: every row is skip
+    * or retry, so success, dead-letter, channel and invalid counts are 0.
+    * A NULL disposition is normalized first, so it meets the same curated
+    * error instead of a NULL tally key. */
   def dispatchBatchRoute(route: BatchRouteConfig, topics: TopicIO,
       handler: Handler, token: Option[String] = None)(
-      batch: DataFrame): Counts = {
-    import Envelope.Code
-    // a NULL disposition is an invalid return like any other string
-    // outside {skip, retry} — but unnormalized it reached the tallies
-    // as SQL NULL, where the exhausted grouping flag went NULL too and
-    // Row.getBoolean NPE'd before the curated contract error below
-    // could name the route and the violation
-    val handled = handler(batch)
-      .withColumn("disposition",
-        coalesce(col("disposition"), lit("invalid:null")))
-      .cache()
-    try {
-      val retryBound = col("disposition") === Code.Retry
-      val exhausted = exhaustedFlag(route.retry, retryBound)
-      val tallies = dispositionTallies(handled, exhausted)
-      if (tallies.invalid(Set(Code.Skip, Code.Retry)) > 0)
+      batch: DataFrame): Counts =
+    dispatchChecked(StreamRouteConfig(route.topicEntity, route.originTopic,
+        retry = route.retry), topics, handler, token, { tallies =>
+      if (tallies.invalid(Set(Envelope.Code.Skip, Envelope.Code.Retry)) > 0)
         throw new IllegalArgumentException(
           s"batch handler for '${route.topicEntity}' returned dispositions " +
             "outside {skip, retry}")
-      val entity = route.topicEntity
-      val retried = tallies.live(Code.Retry)
-      val deadLettered = tallies.exhausted(Code.Retry)
-      emitRouted(topics,
-        routed(handled, entity, route.retry, retryBound, exhausted, Nil),
-        Seq(EngineConfig.retryTopic(entity) -> retried,
-          EngineConfig.deadLetterTopic(entity) -> deadLettered), token)
-      Counts(0, tallies.total(Code.Skip), retried, deadLettered, 0)
-    } finally handled.unpersist()
-  }
+    })(batch)
 }

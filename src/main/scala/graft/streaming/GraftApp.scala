@@ -71,12 +71,9 @@ final class GraftApp(
         // always-empty topic forever. The instant worker stays
         // unconditional — the DLQ (and so dead-set replay) is reachable
         // without retry via direct dead_letter dispositions.
-        if (route.retry.enabled) {
-          if (route.exactRetryRelease)
-            engine.startExactRetryReader(route, w.middleware, w.handler)
-          else
-            engine.startRetryReader(route, w.middleware, w.handler, trigger)
-        }
+        if (route.retry.enabled)
+          engine.startReleasingRetryReader(route, w.middleware, w.handler,
+            trigger)
         engine.startInstantWorker(route, w.middleware, w.handler, trigger)
         route.channels.foreach { case (ch, chCfg) =>
           engine.startChannelWorker(route, ch, w.middleware, w.handler, trigger)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
@@ -19,6 +19,21 @@ import scala.jdk.CollectionConverters._
   *  - channels (D2)              → channel-topic queries started per channel.
   *  - drain-timeout (E11)        → query.stop() completes the in-flight
   *    micro-batch; stopAll enforces the configured drain window.
+  *
+  * Every route kind is one topology over a different queue (source →
+  * filter → metadata → middleware → handler → result-code routing), and
+  * the start methods share one body for it. Each query is started by one
+  * skeleton (`startQuery`: query name, checkpoint subdir, source,
+  * trigger, per-batch body with its `<queryName>-<batchId>` emit token);
+  * only the analytics route, which needs update output mode, starts its
+  * own. Derived-topic consumers run one worker body (metadata →
+  * middleware → dispatch → counts) and the due-filter retry readers one
+  * reader body; each takes the stream or batch dispatch contract as a
+  * parameter. The query names and checkpoint subdirs are restart state:
+  * `<e>`/`route-<e>`, `view-<e>`, `retry-<e>`, `retry-exact-<e>`,
+  * `channel-<e>-<ch>`, `instant-<e>`, `retry-batch-<e>`,
+  * `instant-batch-<e>`, `batch-<e>`, `join-<e>`/`joinroute-<e>`,
+  * `analytics-<name>`.
   */
 /** E12 uncaught-exception policy (streams.clj:208-214): what to do when a
   * route's query dies with an error. */
@@ -72,10 +87,12 @@ final class GraftEngine(
   }
 
   private val queries = new ConcurrentHashMap[String, StreamingQuery]()
-  private val starters =
-    new ConcurrentHashMap[String, () => StreamingQuery]()
+  /** How a tracked query restarts: its Spark query name and its start. */
+  private final case class Starter(queryName: String,
+      start: () => StreamingQuery)
+  private val starters = new ConcurrentHashMap[String, Starter]()
   /** O3: per-route restart functions taking a new per-trigger record
-    * budget — registered by startStreamRoute. */
+    * budget — registered by startStreamRoute and startViewRoute. */
   private val scalers =
     new ConcurrentHashMap[String, Int => StreamingQuery]()
   private val idToName = new ConcurrentHashMap[java.util.UUID, String]()
@@ -88,15 +105,14 @@ final class GraftEngine(
   private val queryNameToTrack = new ConcurrentHashMap[String, String]()
   val deadSet = new DeadSet(topics, s"$checkpointDir/markers")
 
-  /** Registers a started query for lifecycle tracking + failure policy.
-    * `queryName` is the Spark-side `.queryName(...)` when it differs
-    * from the track name (only the stream route does). */
-  private def track(name: String, start: () => StreamingQuery,
-      queryName: Option[String] = None): StreamingQuery = {
-    queryNameToTrack.put(queryName.getOrElse(name), name)
-    val q = start()
+  /** Starts a query and registers it under track name `name` for
+    * lifecycle tracking + failure policy. Every start goes through here:
+    * first starts, [[scaleRoute]] restarts and the Restart policy. */
+  private def track(name: String, s: Starter): StreamingQuery = {
+    queryNameToTrack.put(s.queryName, name)
+    val q = s.start()
     queries.put(name, q)
-    starters.put(name, start)
+    starters.put(name, s)
     idToName.put(q.id, name)
     q
   }
@@ -115,15 +131,13 @@ final class GraftEngine(
   // Held in a field so stopAll can DEREGISTER it: a decommissioned
   // engine must never bind or act on a later engine's same-named
   // queries on the shared session.
-  private[streaming] val lifecycleListener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-    override def onQueryStarted(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit =
-      // synchronous with start() — see queryNameToTrack's note
+  private[streaming] val lifecycleListener = new StreamingQueryListener {
+    import StreamingQueryListener._
+    // synchronous with start() — see queryNameToTrack's note
+    override def onQueryStarted(e: QueryStartedEvent): Unit =
       bindStarted(e.name, e.id)
-    override def onQueryProgress(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-    override def onQueryTerminated(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = {
+    override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
       if (e.exception.isDefined) {
         Option(idToName.get(e.id)).foreach { name =>
           metrics.increment(s"$name.query.failed")
@@ -132,7 +146,7 @@ final class GraftEngine(
             case FailurePolicy.StopAll => stopAll()
             case FailurePolicy.Restart =>
               Option(starters.get(name)).foreach { s =>
-                try { val q = s(); queries.put(name, q); idToName.put(q.id, name) }
+                try track(name, s)
                 catch { case _: Throwable => queries.remove(name) }
               }
           }
@@ -142,32 +156,110 @@ final class GraftEngine(
   }
   spark.streams.addListener(lifecycleListener)
 
+  /** The one query skeleton: a foreachBatch query over `src` named
+    * `queryName`, checkpointed under `<checkpointDir>/<subdir>` and
+    * tracked as `name`. `body` gets each micro-batch, its id and its emit
+    * token `<queryName>-<batchId>`. Only [[startAnalyticsRoute]] (update
+    * output mode) starts its query elsewhere. */
+  private def startQuery(queryName: String)(src: DataFrame, trigger: Trigger,
+      subdir: String = queryName, name: String = queryName)(
+      body: (DataFrame, Long, String) => Unit): StreamingQuery =
+    track(name, Starter(queryName, () => src.writeStream
+      .queryName(queryName)
+      .option("checkpointLocation", s"$checkpointDir/$subdir")
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        body(batch, batchId, s"$queryName-$batchId")
+      }
+      .start()))
+
+  /** Stream and view routes: the origin topic through the route's
+    * pipeline (too-old filter, metadata, middleware, read metrics),
+    * tracked and checkpointed as `name`, and registered with
+    * [[scaleRoute]] to restart under a per-trigger record budget. */
+  private def startPaced(route: StreamRouteConfig,
+      middleware: DataFrame => DataFrame, name: String, queryName: String,
+      trigger: Trigger)(
+      body: (DataFrame, Long, String) => Unit): StreamingQuery = {
+    topics.provision(route.topicEntity, route.channels.keys)
+    def startWith(pace: Map[String, String]): StreamingQuery =
+      startQuery(queryName)(
+        Pipeline.observeReads(s"$name.reads")(Pipeline.forRoute(route,
+          middleware)(topics.readStream(spark, route.originTopic, pace))),
+        trigger, subdir = name, name = name)(body)
+    scalers.put(name, n => startWith(topics.paceOptions(n)))
+    startWith(Map.empty)
+  }
+
+  /** A route's dispatch contract as its queries see it: the entity its
+    * counts are recorded under, its retry budget, and the Dispatch call
+    * for a prepared micro-batch under an emit token. */
+  private final case class Target(entity: String, retryCount: Int,
+      dispatch: (DataFrame, String) => Dispatch.Counts) {
+    def emit(df: DataFrame, token: String): Unit =
+      metrics.recordDispatch(entity, dispatch(df, token))
+    /** The worker body every derived-topic consumer shares: metadata
+      * enrichment, the route's middleware, dispatch, counts. */
+    def work(middleware: DataFrame => DataFrame, batch: DataFrame,
+        token: String): Unit =
+      emit(middleware(Pipeline.enrichMetadata(batch, retryCount)), token)
+  }
+
+  private def streamTarget(route: StreamRouteConfig,
+      handler: Dispatch.Handler): Target =
+    Target(route.topicEntity, route.retry.count,
+      (df, token) => Dispatch.dispatch(route, topics, handler, Some(token))(df))
+
+  private def batchTarget(route: BatchRouteConfig,
+      handler: Dispatch.Handler): Target =
+    Target(route.topicEntity, route.retry.count, (df, token) =>
+      Dispatch.dispatchBatchRoute(route, topics, handler, Some(token))(df))
+
+  /** A consumer of `src` running the worker body per micro-batch;
+    * `spread` sizes a channel's batch to its worker count first. */
+  private def startWorker(queryName: String, src: DataFrame, t: Target,
+      middleware: DataFrame => DataFrame, trigger: Trigger,
+      spread: DataFrame => DataFrame = identity): StreamingQuery =
+    startQuery(queryName)(src, trigger) { (batch, _, token) =>
+      t.work(middleware, spread(batch), token)
+    }
+
+  /** The due-filter retry reader: streams `t`'s retry topic, releases the
+    * records due at one pinned `now`, requeues the rest under
+    * `<token>-requeue` (their stamp unchanged, so they surface again next
+    * trigger — the TTL-requeue analogue) and works the due ones. */
+  private def startDueFilterReader(queryName: String, t: Target,
+      middleware: DataFrame => DataFrame, trigger: Trigger): StreamingQuery = {
+    val retryTopic = EngineConfig.retryTopic(t.entity)
+    startQuery(queryName)(topics.readStreamExact(spark, retryTopic),
+        trigger) { (batch, _, token) =>
+      val cached = batch.cache()
+      try {
+        // One pinned `now` per micro-batch: the requeue job and the
+        // dispatch job then see the same due/notDue split even though
+        // they run at different wall-clock times — a record becoming due
+        // between the jobs is processed exactly once (either requeued to
+        // next trigger or dispatched, never both).
+        val now = RetryEngine.pinnedNow()
+        val due = RetryEngine.due(cached, now)
+        val notDue = RetryEngine.notDue(cached, now)
+        if (!notDue.isEmpty)
+          topics.appendIdempotent(notDue, retryTopic, s"$token-requeue")
+        t.work(middleware, due, token)
+      } finally cached.unpersist()
+    }
+  }
+
   /** Start one stream route: origin-topic stream → Pipeline → foreachBatch
     * dispatch (the driver loop of SURVEY §3.1's Spark equivalent). */
   def startStreamRoute(route: StreamRouteConfig,
       middleware: DataFrame => DataFrame,
       handler: Dispatch.Handler,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    topics.provision(route.topicEntity, route.channels.keys)
-    def startWith(pace: Map[String, String]): StreamingQuery = {
-      val src = topics.readStream(spark, route.originTopic, pace)
-      val piped = Pipeline.observeReads(s"${route.topicEntity}.reads")(
-        Pipeline.forRoute(route, middleware)(src))
-      piped.writeStream
-        .queryName(s"route-${route.topicEntity}")
-        .option("checkpointLocation", s"$checkpointDir/${route.topicEntity}")
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val counts = Dispatch.dispatch(route, topics, handler,
-            Some(s"route-${route.topicEntity}-$batchId"))(batch)
-          metrics.recordDispatch(route.topicEntity, counts)
-        }
-        .start()
-    }
-    scalers.put(route.topicEntity,
-      n => startWith(topics.paceOptions(n)))
-    track(route.topicEntity, () => startWith(Map.empty),
-      queryName = Some(s"route-${route.topicEntity}"))
+    val t = streamTarget(route, handler)
+    startPaced(route, middleware, route.topicEntity,
+      s"route-${route.topicEntity}", trigger)((batch, _, token) =>
+      t.emit(batch, token))
   }
 
   /** Serving-state route: the stream route whose output is a materialized
@@ -186,28 +278,15 @@ final class GraftEngine(
       sink: UpsertSink,
       project: DataFrame => DataFrame,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    topics.provision(route.topicEntity, route.channels.keys)
     val name = s"view-${route.topicEntity}"
     require(sink.queryId == name,
       s"sink queryId '${sink.queryId}' must equal the view route name " +
         s"'$name' (replay detection is keyed on it)")
-    def startWith(pace: Map[String, String]): StreamingQuery = {
-      val src = topics.readStream(spark, route.originTopic, pace)
-      val piped = Pipeline.observeReads(s"$name.reads")(
-        Pipeline.forRoute(route, middleware)(src))
-      piped.writeStream
-        .queryName(name)
-        .option("checkpointLocation", s"$checkpointDir/$name")
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (sink.apply(project(batch), batchId))
-            metrics.increment(s"$name.commits")
-          else metrics.increment(s"$name.replays_skipped")
-        }
-        .start()
+    startPaced(route, middleware, name, name, trigger) { (batch, batchId, _) =>
+      if (sink.apply(project(batch), batchId))
+        metrics.increment(s"$name.commits")
+      else metrics.increment(s"$name.replays_skipped")
     }
-    scalers.put(name, n => startWith(topics.paceOptions(n)))
-    track(name, () => startWith(Map.empty))
   }
 
   /** O3 runtime parallelism scaling — the Spark analogue of the reference's
@@ -225,11 +304,7 @@ final class GraftEngine(
       case Some(scale) =>
         require(maxPerTrigger > 0, "maxPerTrigger must be > 0")
         stopRoute(name)
-        val start = () => scale(maxPerTrigger)
-        val q = start()
-        queries.put(name, q)
-        starters.put(name, start)
-        idToName.put(q.id, name)
+        scale(maxPerTrigger)
         metrics.increment(s"$name.query.rescaled")
         true
       case None => false
@@ -244,34 +319,9 @@ final class GraftEngine(
   def startRetryReader(route: StreamRouteConfig,
       middleware: DataFrame => DataFrame,
       handler: Dispatch.Handler,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val entity = route.topicEntity
-    val src = topics.readStreamExact(spark, EngineConfig.retryTopic(entity))
-    track(s"retry-$entity", () => src.writeStream
-      .queryName(s"retry-$entity")
-      .option("checkpointLocation", s"$checkpointDir/retry-$entity")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cached = batch.cache()
-        try {
-          // One pinned `now` per micro-batch: the requeue job and the
-          // dispatch job then see the same due/notDue split even though
-          // they run at different wall-clock times — a record becoming due
-          // between the jobs is processed exactly once (either requeued to
-          // next trigger or dispatched, never both).
-          val now = RetryEngine.pinnedNow()
-          val due = RetryEngine.due(cached, now)
-          val notDue = RetryEngine.notDue(cached, now)
-          if (!notDue.isEmpty) topics.appendIdempotent(notDue,
-            EngineConfig.retryTopic(entity), s"retry-$entity-$batchId-requeue")
-          val counts = Dispatch.dispatch(route, topics, handler,
-            Some(s"retry-$entity-$batchId"))(
-            middleware(Pipeline.enrichMetadata(due, route.retry.count)))
-          metrics.recordDispatch(entity, counts)
-        } finally cached.unpersist()
-      }
-      .start())
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startDueFilterReader(s"retry-${route.topicEntity}",
+      streamTarget(route, handler), middleware, trigger)
 
   /** Exact-time retry reader: same contract as [[startRetryReader]] but
     * releases records via [[RetryTimers.release]] (flatMapGroupsWithState +
@@ -283,25 +333,28 @@ final class GraftEngine(
       middleware: DataFrame => DataFrame,
       handler: Dispatch.Handler,
       triggerMs: Long = 200L): StreamingQuery = {
-    val entity = route.topicEntity
     implicit val enc = org.apache.spark.sql.Encoders.product[Envelope]
-    val src = topics.readStreamExact(spark, EngineConfig.retryTopic(entity))
+    val src = topics.readStreamExact(spark,
+        EngineConfig.retryTopic(route.topicEntity))
       .select(Envelope.schema.fieldNames.map(
         org.apache.spark.sql.functions.col).toIndexedSeq: _*)
       .as[Envelope]
-    val released = RetryTimers.release(src)
-    track(s"retry-exact-$entity", () => released.toDF().writeStream
-      .queryName(s"retry-exact-$entity")
-      .option("checkpointLocation", s"$checkpointDir/retry-exact-$entity")
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val counts = Dispatch.dispatch(route, topics, handler,
-          Some(s"retry-exact-$entity-$batchId"))(
-          middleware(Pipeline.enrichMetadata(batch, route.retry.count)))
-        metrics.recordDispatch(entity, counts)
-      }
-      .start())
+    startWorker(s"retry-exact-${route.topicEntity}",
+      RetryTimers.release(src).toDF(), streamTarget(route, handler),
+      middleware, Trigger.ProcessingTime(triggerMs))
   }
+
+  /** The route's retry reader in its configured release mode: exact
+    * timer-based release ([[startExactRetryReader]]) or the per-trigger
+    * due filter ([[startRetryReader]]). The one place that choice is
+    * made, for a route's own cycle and for each channel's. */
+  private[streaming] def startReleasingRetryReader(route: StreamRouteConfig,
+      middleware: DataFrame => DataFrame,
+      handler: Dispatch.Handler,
+      trigger: Trigger): StreamingQuery =
+    if (route.exactRetryRelease)
+      startExactRetryReader(route, middleware, handler)
+    else startRetryReader(route, middleware, handler, trigger)
 
   /** Start a channel worker (D2/E2, mapper.clj:71-111): consumes the
     * channel's topic with its own handler and channel-scoped retry config —
@@ -317,21 +370,12 @@ final class GraftEngine(
     // before its worker emits into them (startStreamRoute provisions
     // only the origin entity's)
     topics.provision(chRoute.topicEntity, Nil)
-    val src = topics.readStreamExact(spark,
-      EngineConfig.channelTopic(entity, channelName))
-    track(s"channel-$entity-$channelName", () => src.writeStream
-      .queryName(s"channel-$entity-$channelName")
-      .option("checkpointLocation", s"$checkpointDir/channel-$entity-$channelName")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spread = if (ch.workerCount > 1)
-          batch.repartition(ch.workerCount) else batch
-        val counts = Dispatch.dispatch(chRoute, topics, handler,
-          Some(s"channel-$entity-$channelName-$batchId"))(
-          middleware(Pipeline.enrichMetadata(spread, chRoute.retry.count)))
-        metrics.recordDispatch(chRoute.topicEntity, counts)
-      }
-      .start())
+    startWorker(s"channel-$entity-$channelName",
+      topics.readStreamExact(spark,
+        EngineConfig.channelTopic(entity, channelName)),
+      streamTarget(chRoute, handler), middleware, trigger,
+      spread = b => if (ch.workerCount > 1) b.repartition(ch.workerCount)
+        else b)
   }
 
   /** The channel's derived route: its own topic entity (so Dispatch
@@ -357,21 +401,15 @@ final class GraftEngine(
     * parked forever: never retried, never exhausted to the channel's
     * DLQ, silently lost (the reference's channel workers share the
     * route's RabbitMQ retry machinery, mapper.clj:71-111 — here the
-    * channel's cycle is its own, so it needs its own reader).
+    * channel's cycle is its own, so it needs its own reader). It honors
+    * the route's release mode, like the route's own cycle.
     * [[GraftApp]] starts one per retry-enabled channel in Worker mode. */
   def startChannelRetryReader(route: StreamRouteConfig, channelName: String,
       middleware: DataFrame => DataFrame,
       handler: Dispatch.Handler,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val (_, chRoute) = channelRoute(route, channelName)
-    // honor the route's release mode: a route on exact timer-based
-    // release must not have its channel retries quietly quantized to
-    // the trigger interval — same selection GraftApp makes for the
-    // route's own cycle
-    if (chRoute.exactRetryRelease)
-      startExactRetryReader(chRoute, middleware, handler)
-    else startRetryReader(chRoute, middleware, handler, trigger)
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startReleasingRetryReader(channelRoute(route, channelName)._2,
+      middleware, handler, trigger)
 
   /** Start the instant-topic worker: consumes records the dead-set replay
     * re-published (messaging/consumer.clj:137-148's instant-queue
@@ -379,21 +417,10 @@ final class GraftEngine(
   def startInstantWorker(route: StreamRouteConfig,
       middleware: DataFrame => DataFrame,
       handler: Dispatch.Handler,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val entity = route.topicEntity
-    val src = topics.readStreamExact(spark, EngineConfig.instantTopic(entity))
-    track(s"instant-$entity", () => src.writeStream
-      .queryName(s"instant-$entity")
-      .option("checkpointLocation", s"$checkpointDir/instant-$entity")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val counts = Dispatch.dispatch(route, topics, handler,
-          Some(s"instant-$entity-$batchId"))(
-          middleware(Pipeline.enrichMetadata(batch, route.retry.count)))
-        metrics.recordDispatch(entity, counts)
-      }
-      .start())
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startWorker(s"instant-${route.topicEntity}", topics.readStreamExact(spark,
+      EngineConfig.instantTopic(route.topicEntity)),
+      streamTarget(route, handler), middleware, trigger)
 
   /** Retry reader for a BATCH route: the due-filter cycle of
     * [[startRetryReader]], re-dispatching through the batch contract
@@ -405,32 +432,9 @@ final class GraftEngine(
   def startBatchRetryReader(route: BatchRouteConfig,
       middleware: DataFrame => DataFrame,
       handler: Dispatch.Handler,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val entity = route.topicEntity
-    val src = topics.readStreamExact(spark, EngineConfig.retryTopic(entity))
-    track(s"retry-batch-$entity", () => src.writeStream
-      .queryName(s"retry-batch-$entity")
-      .option("checkpointLocation", s"$checkpointDir/retry-batch-$entity")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cached = batch.cache()
-        try {
-          // one pinned `now` per micro-batch — same exactly-once
-          // due/notDue split contract as startRetryReader
-          val now = RetryEngine.pinnedNow()
-          val due = RetryEngine.due(cached, now)
-          val notDue = RetryEngine.notDue(cached, now)
-          if (!notDue.isEmpty) topics.appendIdempotent(notDue,
-            EngineConfig.retryTopic(entity),
-            s"retry-batch-$entity-$batchId-requeue")
-          val counts = Dispatch.dispatchBatchRoute(route, topics, handler,
-            Some(s"retry-batch-$entity-$batchId"))(
-            middleware(Pipeline.enrichMetadata(due, route.retry.count)))
-          metrics.recordDispatch(entity, counts)
-        } finally cached.unpersist()
-      }
-      .start())
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startDueFilterReader(s"retry-batch-${route.topicEntity}",
+      batchTarget(route, handler), middleware, trigger)
 
   /** Instant-topic worker for a BATCH route: consumes the batch entity's
     * dead-set replays through the batch contract. Replay appends to
@@ -441,21 +445,11 @@ final class GraftEngine(
   def startBatchInstantWorker(route: BatchRouteConfig,
       middleware: DataFrame => DataFrame,
       handler: Dispatch.Handler,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val entity = route.topicEntity
-    val src = topics.readStreamExact(spark, EngineConfig.instantTopic(entity))
-    track(s"instant-batch-$entity", () => src.writeStream
-      .queryName(s"instant-batch-$entity")
-      .option("checkpointLocation", s"$checkpointDir/instant-batch-$entity")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val counts = Dispatch.dispatchBatchRoute(route, topics, handler,
-          Some(s"instant-batch-$entity-$batchId"))(
-          middleware(Pipeline.enrichMetadata(batch, route.retry.count)))
-        metrics.recordDispatch(entity, counts)
-      }
-      .start())
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startWorker(s"instant-batch-${route.topicEntity}",
+      topics.readStreamExact(spark,
+        EngineConfig.instantTopic(route.topicEntity)),
+      batchTarget(route, handler), middleware, trigger)
 
   /** Start a batch route (S3/E7, kafka_consumer/consumer_handler.clj):
     * polled bounded batches ≈ AvailableNow with maxFilesPerTrigger; the
@@ -468,20 +462,13 @@ final class GraftEngine(
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val entity = route.topicEntity
     topics.provision(entity, Nil)
-    val src = topics.readStream(spark, route.originTopic,
-      topics.paceOptions(route.maxPollRecords))
-    track(s"batch-$entity", () => src.writeStream
-      .queryName(s"batch-$entity")
-      .option("checkpointLocation", s"$checkpointDir/batch-$entity")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val t = batchTarget(route, handler)
+    startWorker(s"batch-$entity", topics.readStream(spark, route.originTopic,
+        topics.paceOptions(route.maxPollRecords)),
+      t.copy(dispatch = (df, token) => {
         metrics.increment(s"$entity.batches")
-        val counts = Dispatch.dispatchBatchRoute(route, topics, handler,
-          Some(s"batch-$entity-$batchId"))(
-          middleware(Pipeline.enrichMetadata(batch, route.retry.count)))
-        metrics.recordDispatch(entity, counts)
-      }
-      .start())
+        t.dispatch(df, token)
+      }), middleware, trigger)
   }
 
   /** Start a stream-joins route (S2/J1-J4, the reference's alpha
@@ -497,18 +484,11 @@ final class GraftEngine(
     require(inputTopics.size >= 2, "stream-joins route needs >= 2 topics")
     topics.provision(route.topicEntity, route.channels.keys)
     val streams = inputTopics.map(tp => topics.readStream(spark, tp))
-    val joined = StreamJoins.joinChain(streams, key, tsCol, joinCfgs)
-    track(s"joinroute-${route.topicEntity}", () => joined.writeStream
-      .queryName(s"joinroute-${route.topicEntity}")
-      .option("checkpointLocation", s"$checkpointDir/join-${route.topicEntity}")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val counts = Dispatch.dispatch(route, topics, handler,
-          Some(s"joinroute-${route.topicEntity}-$batchId"))(
-          middleware(batch))
-        metrics.recordDispatch(route.topicEntity, counts)
-      }
-      .start())
+    val t = streamTarget(route, handler)
+    startQuery(s"joinroute-${route.topicEntity}")(
+      StreamJoins.joinChain(streams, key, tsCol, joinCfgs), trigger,
+      subdir = s"join-${route.topicEntity}")((batch, _, token) =>
+      t.emit(middleware(batch), token))
   }
 
   /** Start an analytics route: a continuous windowed/stateful aggregation
@@ -525,10 +505,11 @@ final class GraftEngine(
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import org.apache.spark.sql.functions._
     val agg = aggregation(topics.readStream(spark, originTopic))
-    track(s"analytics-$name", () => agg.writeStream
-      .queryName(s"analytics-$name")
+    val queryName = s"analytics-$name"
+    track(queryName, Starter(queryName, () => agg.writeStream
+      .queryName(queryName)
       .outputMode("update")
-      .option("checkpointLocation", s"$checkpointDir/analytics-$name")
+      .option("checkpointLocation", s"$checkpointDir/$queryName")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val env = batch.select(
@@ -544,10 +525,10 @@ final class GraftEngine(
           lit(null).cast("int").as("retryCount"),
           lit(null).cast("timestamp").as("nextAttemptAt"),
           lit(null).cast("string").as("channel"))
-        topics.appendIdempotent(env, sinkTopic, s"analytics-$name-$batchId")
+        topics.appendIdempotent(env, sinkTopic, s"$queryName-$batchId")
         metrics.increment(s"$name.analytics.batches")
       }
-      .start())
+      .start()))
   }
 
   /** O2: stop/restart a single route's query at runtime (same bounded

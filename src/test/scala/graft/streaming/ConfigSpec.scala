@@ -38,6 +38,50 @@ class ConfigSpec extends AnyFunSuite {
     assert(errs.exists(_.contains("worker-count must be > 0")))
   }
 
+  test("batch routes and channels get the stream route's retry checks: " +
+      "no negative count, exponential count at most 25") {
+    val negative = RetryConfig(enabled = true, count = -1)
+    val deep = RetryConfig(enabled = true, count = 26,
+      backoffType = BackoffType.Exponential)
+    val cfg = EngineConfig(
+      streamRoutes = Map("e" -> route("e").copy(channels = Map(
+        "neg" -> ChannelConfig("neg", retry = negative),
+        "deep" -> ChannelConfig("deep", retry = deep)))),
+      batchRoutes = Map(
+        "bn" -> BatchRouteConfig("bn", "t", retry = negative),
+        "bd" -> BatchRouteConfig("bd", "t", retry = deep)))
+    val errs = EngineConfig.validate(cfg)
+    assert(errs.toSet == Set(
+      "channel 'neg' in route 'e': negative retry count",
+      "channel 'deep' in route 'e': exponential retry count > 25",
+      "batch route 'bn': negative retry count",
+      "batch route 'bd': exponential retry count > 25"), errs)
+    // 25 is the ladder's depth, still valid
+    val atLimit = deep.copy(count = 25)
+    assert(EngineConfig.validate(EngineConfig(
+      streamRoutes = Map("e" -> route("e").copy(channels = Map(
+        "c" -> ChannelConfig("c", retry = atLimit)))),
+      batchRoutes = Map("b" -> BatchRouteConfig("b", "t", retry = atLimit))))
+      .isEmpty)
+  }
+
+  test("an integer key outside the Int range is a ParseError naming the " +
+      "key, not a silently truncated value") {
+    for (v <- Seq("4294967297", "2147483648", "-2147483649")) {
+      val e = intercept[ConfigLoader.ParseError](ConfigLoader.load(
+        s"graft { stream-routes { r { origin-topic = t, retry { count = $v } } } }",
+        env = Map.empty))
+      assert(e.getMessage.contains("'count'") && e.getMessage.contains(v),
+        e.getMessage)
+    }
+    intercept[ConfigLoader.ParseError](ConfigLoader.load(
+      "graft { http-port = 4294967297 }", env = Map.empty))
+    // the Int bounds themselves load
+    val cfg = ConfigLoader.load("graft { stream-routes { r { " +
+      "origin-topic = t, retry { count = 2147483647 } } } }", env = Map.empty)
+    assert(cfg.streamRoutes("r").retry.count == Int.MaxValue)
+  }
+
   test("topic naming mirrors the reference queue topology") {
     assert(EngineConfig.retryTopic("app") == "app_retry")
     assert(EngineConfig.deadLetterTopic("app") == "app_dead_letter")

@@ -224,6 +224,45 @@ class DispatchSpec extends SparkSuite {
     batch.unpersist()
   }
 
+  for ((name, retry) <- Seq(
+      "retries enabled" -> RetryConfig(enabled = true, count = 3,
+        backoffType = BackoffType.Linear, queueTimeoutMs = timeoutMs),
+      "retries disabled" -> RetryConfig(enabled = false)))
+    test(s"a batch route dispatches like a stream route with no channels: $name") {
+      val at = ts("2024-01-01 00:00:00")
+      val sess = spark
+      import sess.implicits._
+      val rows = Seq(("skip", None), ("skip", Some(1)), ("retry", None),
+        ("retry", Some(2)), ("retry", Some(1)), ("retry", Some(0)))
+      val state = rows.zipWithIndex.map { case ((_, rc), i) =>
+        (s"k$i", rc, rc.map(_ => ts("2024-01-01 00:01:00")))
+      }.toDF("k", "rc", "na")
+      val base = envelopes("app", rows.zipWithIndex.map { case ((d, _), i) =>
+        (s"k$i", d, at) })
+      val batch = base.join(state, base("key").cast("string") === state("k"))
+        .withColumn("retryCount", col("rc"))
+        .withColumn("nextAttemptAt", col("na"))
+        .drop("k", "rc", "na")
+        .repartition(2).cache()
+      val handler = Dispatch.ExprHandler(col("value").cast("string"))
+      val viaBatch = new FileTopicIO(tmpDir("batch-body"))
+      val viaStream = new FileTopicIO(tmpDir("stream-body"))
+      val t0 = System.currentTimeMillis()
+      val batchCounts = Dispatch.dispatchBatchRoute(
+        BatchRouteConfig("app", "app-topic", retry = retry), viaBatch,
+        handler, Some("batch-app-3"))(batch)
+      val streamCounts = Dispatch.dispatch(
+        StreamRouteConfig("app", "app-topic", retry = retry), viaStream,
+        handler, Some("batch-app-3"))(batch)
+      assert(batchCounts == streamCounts)
+      assert(batchCounts == (if (retry.enabled) Dispatch.Counts(0, 2, 3, 1, 0)
+        else Dispatch.Counts(0, 2, 0, 4, 0)), batchCounts)
+      Seq("app_retry", "app_dead_letter").foreach { t =>
+        assert(rowsOf(viaBatch, t, t0) == rowsOf(viaStream, t, t0), t)
+      }
+      batch.unpersist()
+    }
+
   test("simhash near-dup join matches brute force (pigeonhole blocking + hamming64)") {
     val sess = spark
     import sess.implicits._

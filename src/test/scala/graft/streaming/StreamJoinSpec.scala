@@ -65,6 +65,37 @@ class StreamJoinSpec extends SparkSuite {
     assert(out.count() == 1)
   }
 
+  test("stream-join route end to end: two topics joined, the joined " +
+      "record dispatched into the route's retry topic") {
+    val dir = tmpDir("joinroute")
+    val topics = new FileTopicIO(s"$dir/topics")
+    val route = StreamRouteConfig("orders", "unused",
+      retry = RetryConfig(enabled = true, count = 3,
+        backoffType = BackoffType.Linear, queueTimeoutMs = 0L))
+    val engine = new GraftEngine(spark,
+      EngineConfig(streamRoutes = Map("orders" -> route)), topics, s"$dir/ckpt")
+    val at = new java.sql.Timestamp(System.currentTimeMillis)
+    topics.append(envelopes("orders", Seq(("o1", "order-1", at),
+      ("o2", "order-2", at))), "orders_placed")
+    topics.append(envelopes("payments", Seq(("o1", "paid-1", at),
+      ("o3", "paid-3", at))), "orders_paid")
+    try {
+      // the joined row carries both sides; the middleware re-exposes the
+      // order envelope and the handler retries it
+      engine.startStreamJoinRoute(route, Seq("orders_placed", "orders_paid"),
+        Seq((60000L, "inner")), key = "key", tsCol = "timestamp",
+        middleware = _.select("left_value.*"),
+        handler = Dispatch.ExprHandler(lit(Envelope.Code.Retry)))
+        .awaitTermination()
+      val retried = topics.read(spark, "orders_retry")
+        .select(col("key").cast("string"), col("value").cast("string"),
+          col("retryCount")).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq
+      assert(retried == Seq(("o1", "order-1", 2)), retried)
+      assert(engine.metrics.count("orders.message.retry") == 1)
+    } finally engine.stopAll()
+  }
+
   test("join-diff metric observes |l_ts - r_ts| (M6)") {
     val sess = spark
     import sess.implicits._
