@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-round benchmark main (driver contract): runs the headline queries on
+/** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Each query is fully executed
   * (count() materializes every row through the final stage).
   *
@@ -74,8 +74,7 @@ object Bench {
       // (monotone offsets n..2n-1, same failure mix) and time ONLY the
       // re-started route's AvailableNow drain over the warm
       // infrastructure. The cold fragments bundle ~1.3 s of fixed
-      // engine/topic setup into every pass (measured round 14: a 150k
-      // calibration probe was rejected for exactly this); this fragment
+      // engine/topic setup into every pass; this fragment
       // is the engine's MARGINAL per-event cost a long-lived production
       // route actually pays, measurable separately from start/stop.
       if (warm) {
@@ -95,7 +94,7 @@ object Bench {
       // the dead engine's failure policy (the exact stale-engine hazard
       // stopAll's doc warns about). And drop the pass's topic/checkpoint
       // tree: ~8 passes × up to 5M-event parquet logs otherwise pile up
-      // multi-GB of /tmp debris per bench round, and on a small tmpfs
+      // multi-GB of /tmp debris per bench run, and on a small tmpfs
       // the later long passes fail with no-space errors that read as
       // throughput regressions.
       try engine.stopAll()
@@ -113,9 +112,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.get("SPARK_GRAFT_CPUS")
       .flatMap(_.toIntOption).getOrElse(32)
-    // ONE canonical builder (GraftSession) for every main: the
-    // hand-rolled copies had already drifted (Verify ran without AQE,
-    // PlanProbe pinned 32 shuffle partitions under a CPUS-sized master)
+    // ONE canonical builder (GraftSession) for every main, so their
+    // session settings cannot drift apart
     val spark = GraftSession.build("graft-bench", s"local[$cpus]", cpus)
 
     val names = SparkEntry.headlines
@@ -126,9 +124,7 @@ object Bench {
     }
     // Fixed-work calibration: a constant spark.range aggregation whose cost
     // is independent of SF and of this repo's code. Any reader can compare
-    // calibration values across rounds to normalize out host load — the r4
-    // artifact recorded a 2.4x "regression" that was entirely a loaded host
-    // (its calibration-equivalent sbt wall time was 2.6x the idle run's).
+    // calibration values across runs to normalize out host load.
     def calibrate(): Double = {
       val t0 = System.nanoTime()
       // collect() (not count()) so the per-row arithmetic is the RESULT and
@@ -145,8 +141,7 @@ object Bench {
     // numSlices = cpus) for ~2 s. The single probe's per-core slice is
     // ~60 ms — too short to collide with a co-tenant reliably — so a
     // neighbor stealing half the cores barely moves it while tripling a
-    // 32-way streaming pass (the r12 artifact: stream_long 3.1x low with
-    // calibration only 1.53x high). This probe absorbs contention the
+    // 32-way streaming pass. This probe absorbs contention the
     // way the real 32-way fragments do. Modular term keeps the sum far
     // from Long overflow at any cpu count (ANSI-safe).
     def calibrateMc(): Double = {
@@ -172,8 +167,7 @@ object Bench {
     // (its long saturated window self-averages JIT tails)
     var calMcBefore = { calibrateMc(); Seq.fill(2)(calibrateMc()).min }
     // per-query time = min of 3 COLD executions with the query ORDER ROTATED
-    // between passes: this host shows load-correlated swings (r4's recorded
-    // run was ~4x); min-of-N measures the engine rather than the neighbors,
+    // between passes: min-of-N measures the engine rather than the neighbors,
     // and rotation keeps a load spike from taxing the same query every pass.
     // clearCache() between runs evicts operator-internal .cache()s so every
     // execution pays the full pipeline.
@@ -182,8 +176,7 @@ object Bench {
       .withDefaultValue(Nil)
     // A query that throws in ANY pass is a FAILURE, not a fast run: its
     // elapsed time is the time-to-crash (analysis errors abort in ms), so
-    // recording it would deflate the headline total — exactly the round-5
-    // defect where five broken events queries "ran" at 0.06 s each. Failed
+    // recording it would deflate the headline total. Failed
     // queries are excluded from queries/total and reported in `failed`.
     val failedWhy = scala.collection.mutable.Map.empty[String, String]
     def runPasses(): Unit = for (p <- 0 until passes) {
@@ -203,68 +196,43 @@ object Bench {
     }
     runPasses()
     var calAfter = calibrate()
-    // Self-defense against a loaded host (this bench recorded load-polluted
-    // totals in r4 and r6 and only post-hoc adjudication caught it): the
-    // fixed-work calibration drifting >1.3x across the run means a neighbor
-    // was taxing the box, so the run measured the neighbor, not the engine.
-    // Sleep once, re-calibrate, and re-run the rotated passes — min-of-N
-    // then picks the quiet passes. If calibration STILL drifts, flag the
-    // artifact itself as load_suspect so no reader trusts the totals.
-    val idleRef0 = calibrationIdleRef
-    val mcIdleRef0 = calibrationMcIdleRef
-    // Retry-until-quiet, BOUNDED (round-16: one rerun was not enough
-    // against a persistent co-tenant — the r15 driver artifact shipped
-    // load_suspect=true after its single rerun and the whole round's
-    // adjudication had to be done by hand through calibration ratios).
-    // Two triggers now: drift across the run (the old condition) OR the
-    // best calibration sitting >1.3x above the idle floor on EITHER
-    // probe (a neighbor present for the entire run shows no drift).
-    // Each retry sleeps 30 s, re-baselines both probes, and re-runs the
-    // rotated passes; min-of-N then picks the quiet passes. If the host
-    // never quiets, the run exhausts its [[MaxLoadReruns]] retries and
-    // ships load_suspect=true — `load_reruns` at the bound tells a
-    // reader the bench did everything it could.
-    def runElevated(): Boolean =
-      loadRerunNeeded(calBefore, calAfter) ||
-        loadSuspectAbsolute(math.min(calBefore, calAfter), idleRef0) ||
-        loadSuspectAbsolute(calMcBefore, mcIdleRef0)
+    var calMcAfter = calibrateMc()
+    // Self-defense against a loaded host: either probe drifting >1.3x
+    // across the passes (a neighbor arrived or left mid-run) or sitting
+    // >1.3x above its idle floor (a neighbor present the whole time)
+    // means the run measured the neighbor, not the engine. Retry until
+    // quiet, bounded by [[MaxLoadReruns]]: each retry sleeps 30 s,
+    // re-baselines both probes, re-runs the rotated passes and measures
+    // both probes again, so min-of-N picks the quiet passes. If the host
+    // never quiets, the artifact ships load_suspect=true with
+    // `load_reruns` at the bound.
+    val idleRef = calibrationIdleRef
+    val mcIdleRef = calibrationMcIdleRef
+    def elevated(): Boolean = loadElevated(calBefore, calAfter,
+      calMcBefore, calMcAfter, idleRef, mcIdleRef)
     var loadReruns = 0
-    while (runElevated() && loadReruns < MaxLoadReruns) {
+    while (elevated() && loadReruns < MaxLoadReruns) {
       System.err.println(f"[bench] calibration elevated (sc ${calBefore}%.3f" +
-        f" -> ${calAfter}%.3f, mc ${calMcBefore}%.3f vs floor); sleeping " +
-        f"30s and re-running passes (retry ${loadReruns + 1}/$MaxLoadReruns)")
+        f" -> ${calAfter}%.3f, mc ${calMcBefore}%.3f -> ${calMcAfter}%.3f);" +
+        f" sleeping 30s and re-running passes (retry ${loadReruns + 1}" +
+        f"/$MaxLoadReruns)")
       Thread.sleep(30000)
       loadReruns += 1
       calBefore = calibrate()
-      // refresh the MC baseline too: a stale under-load calMcBefore
-      // against a post-rerun idle calMcAfter reads as >1.3x drift and
-      // would flag the CLEAN rerun load_suspect — defeating exactly the
-      // recovery the rerun provides
       calMcBefore = calibrateMc()
       runPasses()
       calAfter = calibrate()
+      calMcAfter = calibrateMc()
     }
-    val calMcAfter = calibrateMc()
-    // two triggers: drift across the run (a neighbor arrived mid-run) OR
-    // the run's best calibration sitting >1.3x above the idle floor
-    // (the neighbor was there the whole time — drift alone misses it).
-    // The MC probe joins both triggers: r12's co-tenant tripled the
-    // 32-way stream passes while the single probe read only 1.53x high.
-    val idleRef = idleRef0
-    val mcIdleRef = mcIdleRef0
     val calRatio = math.min(calBefore, calAfter) / idleRef
     val mcRatio = math.min(calMcBefore, calMcAfter) / mcIdleRef
-    val loadSuspect = loadRerunNeeded(calBefore, calAfter) ||
-      loadSuspectAbsolute(math.min(calBefore, calAfter), idleRef) ||
-      loadRerunNeeded(calMcBefore, calMcAfter) ||
-      loadSuspectAbsolute(math.min(calMcBefore, calMcAfter), mcIdleRef)
+    val loadSuspect = elevated()
     val load1 = loadavg()
-    // calibration_ratio / calibration_mc_ratio / normalized_total make
-    // the artifact readable THROUGH host noise at a glance: r12's entire
-    // perf adjudication was burned dividing totals by calibration ratios
-    // by hand across three documents. normalized_total divides by the
-    // larger of the two ratios — the most conservative de-noising, and
-    // still an ESTIMATE: calibration measures the host, not the plans.
+    // calibration_ratio / calibration_mc_ratio / normalized_total make the
+    // artifact readable THROUGH host noise at a glance, without dividing
+    // totals by calibration ratios by hand. normalized_total divides by the
+    // larger of the two ratios — the most conservative de-noising, and still
+    // an ESTIMATE: calibration measures the host, not the plans.
     val hostJson =
       f""","calibration_sec":{"before":$calBefore%.3f,"after":$calAfter%.3f}""" +
         f""","calibration_idle_ref":$idleRef%.3f""" +
@@ -274,35 +242,31 @@ object Bench {
         f""","calibration_mc_ratio":$mcRatio%.3f""" +
         s""","load_suspect":$loadSuspect,"load_reruns":$loadReruns""" +
         s""","loadavg":{"before":"$load0","after":"$load1"}"""
-    // full-route streaming throughput: warmup pass, then the SAME
-    // min-of-N discipline as queries — the stream number is the single
-    // most load-sensitive value in the artifact (±25% across honest
-    // runs; the r8 driver artifact recorded a 4.7x-low value from one
-    // polluted single pass). Each pass builds a fresh topic/checkpoint
-    // dir, so every run pays the full cold route.
+    // full-route streaming throughput: warmup pass, then the SAME min-of-N
+    // discipline as queries — the stream number is the single most
+    // load-sensitive value in the artifact (±25% across honest runs; one
+    // polluted single pass can read several times low). Each pass builds a
+    // fresh topic/checkpoint dir, so every run pays the full cold route.
     val streamJsonStr = try {
       // warmup: its failure is a warning, not a reason to skip measuring
       try streamThroughput(spark, 20000L)
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] stream warmup failed: ${e.getMessage}")
       }
-      // SPARK_GRAFT_STREAM_N: short-horizon override (envKnob: a
-      // malformed value degrades warn-and-default — bare .toLong threw
-      // into the outer catch and shipped an artifact with NO stream
-      // keys for a typo)
+      // SPARK_GRAFT_STREAM_N: short-horizon override (a malformed value
+      // degrades warn-and-default, never drops the stream keys)
       val streamN = envKnob("SPARK_GRAFT_STREAM_N", 500000L)(_.toLongOption)
-      // STREAM-SHAPED fixed-work calibration: the single-core and MC
-      // probes measure raw arithmetic, and r13's triangulation showed a
-      // co-tenant cutting stream_long 3x while the MC ratio read only
-      // 1.07 — a saturating 32-way route pass (micro-batch planning,
-      // state, sink writes) feels contention the compute probes cannot.
-      // A constant-size pass through the SAME bench route, best-of-2
-      // before the measured fragments and once after, brackets the
-      // stream section the way calibrate() brackets the query passes;
-      // its ratio against the idle floor normalizes the stream numbers
-      // at a glance. Best-effort like every stream pass: a calibration
-      // failure degrades to an un-normalized artifact, never discards
-      // the fragments.
+      // STREAM-SHAPED fixed-work calibration: the single-core and MC probes
+      // measure raw arithmetic, and a co-tenant can cut stream_long 3x while
+      // the MC ratio reads near 1 — a saturating 32-way route pass
+      // (micro-batch planning, state, sink writes) feels contention the
+      // compute probes cannot. A constant-size pass through the SAME bench
+      // route, best-of-2 before the measured fragments and once after,
+      // brackets the stream section the way calibrate() brackets the query
+      // passes; its ratio against the idle floor normalizes the stream
+      // numbers at a glance. Best-effort like every stream pass: a
+      // calibration failure degrades to an un-normalized artifact, never
+      // discards the fragments.
       def streamCalOnce(): Option[Double] =
         try Some(streamThroughput(spark, StreamCalN)._1)
         catch { case scala.util.control.NonFatal(e) =>
@@ -312,11 +276,10 @@ object Bench {
         }
       val streamCalStart = Seq.fill(2)(streamCalOnce()).flatten.minOption
       // BOUNDARY calibration passes between fragments give EACH
-      // fragment its own (before, after) bracket: the r14 section-wide
-      // bracket certified the window clean while a contention burst
-      // hitting only the three 5M-event long passes cut stream_long 5x
-      // — and the section-wide ratio then normalized (laundered) the
-      // dirty number. `lastCal` carries the most recent measurement
+      // fragment its own (before, after) bracket: a section-wide
+      // bracket can certify the window clean while a contention burst
+      // hits only the long passes, and its ratio would then normalize
+      // (launder) the dirty number. `lastCal` carries the most recent measurement
       // forward so a failed boundary pass degrades a bracket's span,
       // never fabricates a value.
       var lastCal: Option[Double] = streamCalStart
@@ -356,7 +319,7 @@ object Bench {
       val (runs, shortReruns) =
         measureFragment("stream", streamN, streamPassCount)
       val shortCalAfter = boundaryCal(runs.nonEmpty)
-      // Warm-engine fragment (stream_warm, ADDITIVE key — round 16): the
+      // Warm-engine fragment (stream_warm, an additive key): the
       // cold fragments cannot separate the engine's per-event cost from
       // the ~1.3 s fixed route setup every pass re-pays. Each pass
       // drains one untimed cold batch, then times a second equal batch
@@ -372,10 +335,8 @@ object Bench {
       // 0 disables): their events/s should hold near the short-horizon
       // number — degradation here means O(topic-size) cost crept into
       // the append path and would be invisible to the 500k passes.
-      // Best-of-N with fresh topic/checkpoint dirs per pass: the r10
-      // artifact recorded a single 766k e/s long pass where a clean
-      // same-box run hit 1.28M — warmup sensitivity a one-pass number
-      // cannot distinguish from O(topic-size) creep.
+      // Best-of-N with fresh topic/checkpoint dirs per pass: a one-pass
+      // number cannot tell warmup sensitivity from O(topic-size) creep.
       val longN = envKnob("SPARK_GRAFT_STREAM_LONG_N",
         streamN * 10)(_.toLongOption)
       val longCalBefore = lastCal
@@ -435,7 +396,7 @@ object Bench {
   /** Load-guard decision: the fixed-work calibration drifting >1.3x in
     * EITHER direction across the run means a neighbor was taxing the
     * host for part of it — the query times measured the neighbor, not
-    * the engine (burned r4 and r6). Symmetric on purpose: a neighbor
+    * the engine. Symmetric on purpose: a neighbor
     * that was present from startup through the passes and exited before
     * calAfter shows calibration getting FASTER (calAfter/calBefore well
     * below 1), which a one-sided slower-only test read as clean. Pure —
@@ -445,22 +406,36 @@ object Bench {
     math.max(r, 1.0 / r) > 1.3
   }
 
+  /** THE load verdict over both probes' before/after calibrations,
+    * driving both the retry-until-quiet loop and `load_suspect`: either
+    * probe drifting across the passes ([[loadRerunNeeded]]) or either
+    * probe's best calibration above its idle floor
+    * ([[loadSuspectAbsolute]]). The multi-core probe counts on its own:
+    * a co-tenant can triple the 32-way stream passes while the
+    * single-core probe reads only 1.5x high. Pure — BenchJsonSpec pins
+    * it. */
+  def loadElevated(calBefore: Double, calAfter: Double,
+      calMcBefore: Double, calMcAfter: Double,
+      idleRef: Double, mcIdleRef: Double): Boolean =
+    loadRerunNeeded(calBefore, calAfter) ||
+      loadSuspectAbsolute(math.min(calBefore, calAfter), idleRef) ||
+      loadRerunNeeded(calMcBefore, calMcAfter) ||
+      loadSuspectAbsolute(math.min(calMcBefore, calMcAfter), mcIdleRef)
+
   /** Bound on the retry-until-quiet loop: each retry is ~30 s of sleep
     * plus one full set of rotated passes, so 3 retries cost a few
     * minutes against a run whose numbers would otherwise be
-    * unadjudicable (the r15 round burned its entire perf verdict on a
-    * load-poisoned artifact that a longer wait would likely have
-    * dodged). Exhausting the bound ships load_suspect=true with
+    * unadjudicable. Exhausting the bound ships load_suspect=true with
     * load_reruns at the bound — an honest "the host never quieted". */
   val MaxLoadReruns = 3
 
   /** Idle-host calibration floor (seconds) for the ABSOLUTE load guard:
     * drift-only detection reads a host that is uniformly loaded for the
-    * entire run (calBefore ≈ calAfter, both high) as clean — the round-7
-    * gap. Measured as the min of repeated calibrate() runs on this
-    * build host at rest; override with SPARK_GRAFT_CAL_IDLE when the
-    * bench moves to different hardware (the artifact records whichever
-    * reference was used as `calibration_idle_ref`). */
+    * entire run (calBefore ≈ calAfter, both high) as clean. Measured as the
+    * min of repeated calibrate() runs on this build host at rest; override
+    * with SPARK_GRAFT_CAL_IDLE when the bench moves to different hardware
+    * (the artifact records whichever reference was used as
+    * `calibration_idle_ref`). */
   val CalibrationIdleRefDefault = 0.54
 
   /** THE warn-and-default parse for every SPARK_GRAFT_* env knob: a
@@ -501,27 +476,23 @@ object Bench {
   /** Measured stream passes per run (fresh checkpoint/topic dirs each). */
   val streamPassCount = 3
 
-  /** Long-horizon (10×) passes per run — best-of-3: best-of-2 still let
-    * a 3x co-tenant artifact ride r12's stream_long (415k vs 1.19M
-    * clean; both passes landed inside the same contention window). The
-    * third pass widens the window the way streamPassCount=3 does for
-    * the short fragment, and the MC calibration ratio now flags what
-    * min-of-N cannot dodge. */
+  /** Long-horizon (10×) passes per run — best-of-3: two passes can both
+    * land inside one contention window. The third pass widens the window
+    * the way streamPassCount=3 does for the short fragment, and the MC
+    * calibration ratio flags what min-of-N cannot dodge. */
   val longStreamPassCount = 3
 
   /** Fixed event count of the stream-shaped calibration pass — constant
     * (never overridable alongside STREAM_N) so the work is comparable
-    * across rounds and hosts. Sized to the short fragment's default:
-    * a smaller probe (150k was measured first) is dominated by the
+    * across runs and hosts. Sized to the short fragment's default:
+    * a smaller probe is dominated by the
     * ~1.3 s fixed engine/topic setup of a cold route and calibrates the
     * JVM, not the host's streaming capacity. */
   val StreamCalN = 500000L
 
   /** Idle-host floor (seconds) for the [[StreamCalN]]-event calibration
     * pass, measured as the min of repeated passes on this build host at
-    * rest (round-14 host: best 2.47 s at loadavg ~1; the r11-r13 hosts'
-    * short-fragment floors sat at 2.2-2.4 s for the same work).
-    * Override with SPARK_GRAFT_CAL_STREAM_IDLE on different hardware;
+    * rest. Override with SPARK_GRAFT_CAL_STREAM_IDLE on different hardware;
     * the artifact records whichever reference was used. */
   val CalibrationStreamIdleRefDefault = 2.40
 
@@ -533,9 +504,8 @@ object Bench {
     * spread-triggered extra pass: max(sec)/min(sec) over a fragment's
     * own cold passes. Deliberately LOOSER than the 1.3x calibration
     * drift bound — fresh-route cold passes carry natural warmup
-    * variance (the r10 766k-vs-1.28M ghost was 1.67x, but routine
-    * clean rounds sit at 1.1-1.35x), and a flag that fires on every
-    * clean round stops meaning anything. */
+    * variance (clean runs sit at 1.1-1.35x), and a flag that fires on
+    * every clean run stops meaning anything. */
   val StreamSpreadBound = 1.5
 
   /** max/min seconds across a fragment's measured passes (1.0 for a
@@ -547,10 +517,9 @@ object Bench {
   /** One measured stream fragment: `runs` are its (sec, events/sec)
     * passes (empty → the fragment is omitted from the artifact);
     * `calBefore`/`calAfter` its OWN bracketing stream-shaped
-    * calibration measurements (the boundary passes in main — r14's
-    * single section-wide bracket could not see contention that hit
-    * only the long passes, and the section ratio then laundered the
-    * dirty number as normalized); `reruns` how many spread-triggered
+    * calibration measurements (the boundary passes in main — a single
+    * section-wide bracket cannot see contention that hits only the long
+    * passes); `reruns` how many spread-triggered
     * extra passes ran. */
   final case class StreamFragment(key: String, events: Long,
       runs: Seq[(Double, Double)], calBefore: Option[Double] = None,
@@ -660,18 +629,17 @@ object Bench {
   }
 
   /** Assemble the one-line bench JSON. n_queries makes headline-set growth
-    * explicit: cross-round TOTAL comparisons are only meaningful at equal
-    * query counts — new rounds add headline queries, so compare per-query
+    * explicit: cross-run TOTAL comparisons are only meaningful at equal
+    * query counts — the headline set grows, so compare per-query
     * times (or equal subsets). n_queries counts only SUCCESSFUL queries;
     * a crashed query contributes NOTHING to queries/total (its elapsed
-    * time is time-to-crash — the round-5 artifact counted five analysis
-    * errors as 0.06 s "results") and is named in `failed` + n_failed.
+    * time is time-to-crash) and is named in `failed` + n_failed.
     * Pure — BenchJsonSpec pins the accounting. */
   /** `normalizeBy`: the run's load factor (best calibration over its
     * idle ref, the larger of the single-core and multi-core ratios,
     * clamped to >= 1 by the caller so a fast host never flatters the
     * total). Emitted as `normalized_total` = value / factor — the
-    * at-a-glance cross-round number; still an estimate (calibration
+    * at-a-glance cross-run number; still an estimate (calibration
     * measures the host, not the plans). */
   def resultJson(names: Seq[String], timed: Map[String, List[Double]],
       failedWhy: Map[String, String], sfDir: String,
@@ -684,8 +652,7 @@ object Bench {
     val total = results.map(_._2).sum
     // queries_normalized: the per-query twin of normalized_total (each
     // raw time divided by the same load factor) — ADDITIVE key only;
-    // the raw `queries` map stays byte-identical. The r15 adjudication
-    // had to recompute exactly this table by hand for 24 queries.
+    // the raw `queries` map stays byte-identical.
     val normJson = normalizeBy.filter(_ > 0.0).map { f =>
       val nq = results.map { case (k, v) => "\"" + k + f"""\":${v / f}%.3f""" }
         .mkString("{", ",", "}")

@@ -68,9 +68,8 @@ object MinHashSig {
     java.security.MessageDigest.getInstance("MD5"))
 
   /** 28-bit md5-prefix base hash of one shingle's UTF-8 bytes — THE `x`
-    * every member of the family folds through `(a_i·x + b_i) mod p`.
-    * Shared with [[MinHashAgg]] so the typed aggregator's signatures
-    * interoperate with `minhash_sigs`/d03/the DuckDB oracle. */
+    * every member of the family folds through `(a_i·x + b_i) mod p`,
+    * identical to the DuckDB oracle's spelling of d03. */
   def baseHash(utf8: Array[Byte]): Long = {
     val digest = md5.get()
     digest.reset()

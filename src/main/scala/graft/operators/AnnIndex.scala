@@ -732,11 +732,8 @@ object AnnIndex {
     * in-flight READS of old committed history). A lease, not a lock:
     * a probe outliving the window remains exposed — size this knob (or
     * `keep`) to the longest reader lifetime, or have long-lived
-    * readers re-[[load]] periodically (each load drops a fresh lease).
-    * Override with -Dgraft.annindex.readLeaseMs. */
-  private[operators] def ReadLeaseMillis: Long =
-    sys.props.get("graft.annindex.readLeaseMs").flatMap(_.toLongOption)
-      .getOrElse(60L * 60 * 1000)
+    * readers re-[[load]] periodically (each load drops a fresh lease). */
+  private[operators] val ReadLeaseMillis: Long = 60L * 60 * 1000
 
   private val LeasePrefix = "_reading-"
 

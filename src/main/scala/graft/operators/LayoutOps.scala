@@ -22,23 +22,19 @@ object LayoutOps {
   private def t(s: SparkSession, dir: String) = Tables(s, dir)
 
   /** Per-(prefix, sf-dir) FIXED scratch path, recreated (old contents
-    * deleted) on each invocation: a fresh createTempDirectory per call
-    * leaked a full rewritten copy of events into /tmp per execution —
-    * a bench round (warmup + 3 rotated passes × 3 layout queries, l02
-    * writing two copies) left ~10 copies per run. Steady-state is now
-    * ONE copy per query. Single-writer per query, like every scratch
-    * consumer here (Verify/Bench run queries sequentially); the returned
-    * frame reads the files lazily, so deletion happens at the NEXT
+    * deleted) on each invocation, so steady state is ONE rewritten copy of
+    * events per query, not one per execution. Single-writer per query, like
+    * every scratch consumer here (Verify/Bench run queries sequentially); the
+    * returned frame reads the files lazily, so deletion happens at the NEXT
     * invocation, never under a live reader of the current one. The path
-    * carries the JVM's pid so two concurrent processes on one host
-    * (e.g. parallel bench + verify runs) never share a scratch root —
-    * the walk-and-delete must not yank files under the OTHER process's
-    * live lazy reader; toHexString (not math.abs, which keeps
-    * Int.MinValue negative) disambiguates the sf-dir hash. Pid-suffixed
-    * roots would re-accumulate across RUNS (the round-8 leak, one copy
-    * per process instead of per invocation), so each call also reaps
-    * sibling roots whose `-p<pid>` owner is no longer alive — live
-    * processes' roots are never touched. */
+    * carries the JVM's pid so two concurrent processes on one host (e.g.
+    * parallel bench + verify runs) never share a scratch root — the
+    * walk-and-delete must not yank files under the OTHER process's live lazy
+    * reader; toHexString (not math.abs, which keeps Int.MinValue negative)
+    * disambiguates the sf-dir hash. Pid-suffixed roots would re-accumulate
+    * across RUNS (one copy per process instead of per invocation), so each
+    * call also reaps sibling roots whose `-p<pid>` owner is no longer
+    * alive — live processes' roots are never touched. */
   private val processTag = ProcessHandle.current().pid().toString
 
   private def deleteTree(root: java.nio.file.Path): Unit =
@@ -63,12 +59,9 @@ object LayoutOps {
     * can make them so; deployments that suspend JVMs over a shared
     * tmpdir must raise the window (or give each container its own
     * tmpdir, the actually-safe layout). One hour covers every test-SF
-    * invocation by orders of magnitude while still reclaiming the
-    * round-8 style leak on the next run; `-Dgraft.scratch.reapAgeMs`
-    * overrides. */
-  private[operators] val ReapMinAgeMillis: Long =
-    sys.props.get("graft.scratch.reapAgeMs").flatMap(_.toLongOption)
-      .getOrElse(60L * 60 * 1000)
+    * invocation by orders of magnitude while still reclaiming a
+    * crashed run's scratch on the next run. */
+  private[operators] val ReapMinAgeMillis: Long = 60L * 60 * 1000
 
   /** The reader-heartbeat file each live owner re-touches inside every
     * scratch root it created: lazy readers never refresh data-file
@@ -80,15 +73,8 @@ object LayoutOps {
     * heartbeat SHOULD stop, letting the age gate reclaim the root. */
   private[operators] val HeartbeatName = ".graft-heartbeat"
 
-  /** Once a minute, or ReapMinAgeMillis/4 when the gate is tightened
-    * (a spec-scale override) — always well inside the reap window. The
-    * 50 ms floor only guards a pathological sub-200ms override against
-    * busy-spinning; any override above that keeps ≥4 beats per window
-    * (the earlier 1000 ms floor silently put overrides below 4 s at
-    * ONE beat per window — a live root reap-eligible just before each
-    * beat). */
-  private[operators] def heartbeatPeriodMs: Long =
-    math.max(50L, math.min(60L * 1000, ReapMinAgeMillis / 4))
+  /** Once a minute: sixty beats per reap window. */
+  private[operators] val heartbeatPeriodMs: Long = 60L * 1000
 
   private val heartbeatRoots =
     java.util.concurrent.ConcurrentHashMap

@@ -33,8 +33,7 @@ class PreflightAbort(message: String) extends RuntimeException(message)
 object PreflightLog {
   /** One audit event, with the line PARSED into typed fields beside
     * the raw rendering: a dashboard alerting on `diagnosis != "ok"` or
-    * charting `shareBp` should not have to regex the line (round-11
-    * shipped line-only and that was the first consumer complaint).
+    * charting `shareBp` should not have to regex the line.
     *
     *  - `rule`: which family produced it (`overlap-join` /
     *    `hamming-block`).
@@ -112,31 +111,18 @@ object PreflightLog {
   // planning. One spill path per JVM (last registration wins) — the
   // ring it mirrors is JVM-global for the same reason.
   //
-  // Two sink flavors behind one contract: a PLAIN path appends via
-  // java.nio (torn-tolerant O_APPEND — a crash loses at most one line);
-  // a SCHEME-PREFIXED path (hdfs://, s3a://, file://) goes through the
-  // Hadoop FileSystem client Spark ships — real cluster drivers
-  // checkpoint to object storage, which is exactly where post-mortem
-  // evidence matters, and the old nio-only spill silently no-opped
-  // there. Hadoop appends where the FS supports it (HDFS,
-  // RawLocalFileSystem); where it doesn't (S3A, the checksummed
-  // LocalFileSystem) the fallback is read + concat + tmp + rename, so
-  // a crash mid-write leaves the previous file intact.
+  // One sink for every path: the Hadoop FileSystem client Spark ships.
+  // Plain and `file:` paths go through the raw local filesystem, which
+  // appends in place (O_APPEND — a crash loses at most one line); remote
+  // schemes (hdfs://, s3a://) resolve through the session's Hadoop
+  // configuration, since real cluster drivers checkpoint to object
+  // storage, which is exactly where post-mortem evidence matters. Where
+  // the FS cannot append (S3A, the checksummed LocalFileSystem) the
+  // fallback is read + concat + tmp + rename, so a crash mid-write
+  // leaves the previous file intact.
 
   private val spillLock = new Object
-  @volatile private var spill: Option[Sink] = None
-
-  private[plans] sealed trait Sink {
-    /** Normalized identity — "same registration" for [[spillTo]]. */
-    def id: String
-    @volatile var maxBytes: Long = 0L
-    /** Create the parent dir (registration time, best-effort). */
-    def prepare(): Unit
-    /** Rotate-if-full then append one record's bytes. */
-    def append(bytes: Array[Byte]): Unit
-    /** All spill lines, oldest generation first. */
-    def readLines(): Seq[String]
-  }
+  @volatile private var spill: Option[SpillSink] = None
 
   /** Any file at a spill path larger than this is FOREIGN: maxBytes
     * clamps to 64 MiB and rotation fires at the cap, so no generation
@@ -147,52 +133,14 @@ object PreflightLog {
     * destroy non-spill data. */
   private[plans] val ForeignBound: Long = 128L << 20
 
-  private final class NioSink(p: java.nio.file.Path) extends Sink {
-    import java.nio.file.{Files, StandardOpenOption => O}
-    def id: String = s"nio:$p"
-    private def rotated = p.resolveSibling(p.getFileName.toString + ".1")
-    private def quarantine =
-      p.resolveSibling(p.getFileName.toString + ".quarantine")
-    def prepare(): Unit =
-      Option(p.getParent).foreach(Files.createDirectories(_))
-    def append(bytes: Array[Byte]): Unit = {
-      if (Files.exists(p)) {
-        val len = Files.size(p)
-        if (len > ForeignBound) {
-          // foreign data at the spill path: step it aside WITHOUT
-          // replace — the normal `.1` slot gets REPLACE_EXISTING'd by
-          // the next rotation, which would destroy it one generation
-          // later. If a quarantine is already parked, drop this record
-          // (appends stay dead until an operator clears the path)
-          // rather than overwrite what was preserved.
-          if (Files.exists(quarantine)) throw new java.io.IOException(
-            s"foreign file at spill path $p and quarantine occupied")
-          Files.move(p, quarantine)
-        } else if (len >= maxBytes)
-          Files.move(p, rotated,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      Files.write(p, bytes, O.CREATE, O.APPEND, O.WRITE)
-    }
-    def readLines(): Seq[String] = {
-      import scala.jdk.CollectionConverters._
-      Seq(rotated, p).filter(Files.exists(_)).flatMap { f =>
-        // mirror HadoopSink.readFully's clamp: readAllLines on a huge
-        // foreign file would OOME, which is not NonFatal and would
-        // escape the catch below, failing engine construction
-        try {
-          if (Files.size(f) > ForeignBound) Nil
-          else Files.readAllLines(f,
-            java.nio.charset.StandardCharsets.UTF_8).asScala.toSeq
-        } catch { case scala.util.control.NonFatal(_) => Nil }
-      }
-    }
-  }
-
-  private[plans] final class HadoopSink(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path) extends Sink {
+  /** The spill file at `p` on `fs`: rotate-if-full then append one
+    * record; read back every line, oldest generation first. */
+  private final class SpillSink(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path) {
     import org.apache.hadoop.fs.{Path => HPath}
-    def id: String = s"hadoop:$p"
+    /** Qualified path — "same registration" for [[spillTo]]. */
+    def id: String = p.toString
+    @volatile var maxBytes: Long = 0L
     private def rotated = new HPath(p.getParent, p.getName + ".1")
     private def bak = new HPath(p.getParent, s".${p.getName}.bak")
     private def quarantine =
@@ -306,62 +254,65 @@ object PreflightLog {
     }
   }
 
-  /** Anything a Hadoop FileSystem should resolve: a URI scheme prefix.
-    * (A plain local path — the common local-engine case — stays on the
-    * nio fast path with its torn-tolerant O_APPEND.) */
+  /** A URI scheme prefix: anything but a plain local path. */
   private val SchemePrefix = "^[a-zA-Z][a-zA-Z0-9+.-]*:.*".r
 
+  /** The local filesystem WITHOUT the checksum layer, so appends land in
+    * place instead of taking the rewrite fallback. */
+  private lazy val rawLocal = {
+    val fs = new org.apache.hadoop.fs.RawLocalFileSystem()
+    fs.initialize(java.net.URI.create("file:///"),
+      new org.apache.hadoop.conf.Configuration())
+    fs
+  }
+
   /** Register the spill file. `path` may be a plain local path or any
-    * Hadoop FileSystem URI (`hdfs://`, `s3a://`, `file://`); remote
+    * Hadoop FileSystem URI (`hdfs://`, `s3a://`, `file://`). Plain and
+    * `file:` paths resolve to the same raw local file; remote
     * filesystems resolve through `hadoopConf` when given, else the
     * active/default session's hadoopConfiguration, else a bare
-    * `Configuration()`. `file:` URIs convert to the nio sink — same
-    * disk, and O_APPEND's torn-line tolerance beats the Hadoop
-    * LocalFileSystem's no-append rewrite for both durability and cost.
-    * maxBytes clamps to [4 KiB, 64 MiB]: the spill is bounded
-    * telemetry, and the Hadoop rewrite fallback buffers a generation
-    * in memory. Returns true when this call CHANGED the path (callers
-    * reload only then — re-registering the same path, e.g. a second
-    * engine on the same checkpoint root, must not re-seed the ring
-    * with lines it already holds); a same-path re-registration still
-    * ADOPTS the new maxBytes (silently keeping the first
-    * registration's cap would ignore the second engine's tighter
-    * bound). An unresolvable path (bad scheme, FS client error) is a
-    * warn-and-refuse false that DETACHES any previous sink — audits
-    * must never keep landing in a stale engine's file while the warn
-    * claims ring-only telemetry. */
+    * `Configuration()`. maxBytes clamps to [4 KiB, 64 MiB]: the spill is
+    * bounded telemetry, and the no-append rewrite fallback buffers a
+    * generation in memory. Returns true when this call CHANGED the path
+    * (callers reload only then — re-registering the same path, e.g. a
+    * second engine on the same checkpoint root, must not re-seed the
+    * ring with lines it already holds); a same-path re-registration
+    * still ADOPTS the new maxBytes. An unresolvable path (bad scheme, FS
+    * client error) is a warn-and-refuse false that DETACHES any previous
+    * sink — audits must never keep landing in a stale engine's file
+    * while the warn claims ring-only telemetry. */
   def spillTo(path: String, maxBytes: Long = 1L << 20,
       hadoopConf: org.apache.hadoop.conf.Configuration = null): Boolean =
     spillLock.synchronized {
-      val sinkOpt: Option[Sink] =
+      import org.apache.hadoop.fs.{Path => HPath}
+      val sinkOpt: Option[SpillSink] =
         try {
-          if (SchemePrefix.matches(path)) {
-            val hp = new org.apache.hadoop.fs.Path(path)
-            if ("file".equalsIgnoreCase(hp.toUri.getScheme))
-              Some(new NioSink(java.nio.file.Paths
-                .get(hp.toUri.getPath).toAbsolutePath.normalize))
-            else {
+          val local =
+            if (!SchemePrefix.matches(path)) Some(path)
+            else Some(new HPath(path).toUri)
+              .filter(u => "file".equalsIgnoreCase(u.getScheme))
+              .map(_.getPath)
+          val (fs, hp) = local match {
+            case Some(lp) => (rawLocal, new HPath(java.nio.file.Paths
+              .get(lp).toAbsolutePath.normalize.toUri))
+            case None =>
               val conf = Option(hadoopConf).getOrElse(
                 org.apache.spark.sql.SparkSession.getActiveSession
                   .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
                   .map(_.sparkContext.hadoopConfiguration)
                   .getOrElse(new org.apache.hadoop.conf.Configuration()))
-              val fs = hp.getFileSystem(conf)
-              Some(new HadoopSink(fs, fs.makeQualified(hp)))
-            }
-          } else Some(new NioSink(
-            java.nio.file.Paths.get(path).toAbsolutePath.normalize))
+              val hp = new HPath(path)
+              (hp.getFileSystem(conf), hp)
+          }
+          Some(new SpillSink(fs, fs.makeQualified(hp)))
         } catch { case scala.util.control.NonFatal(e) =>
           // ANY scheme-shaped path that fails FS resolution is a
           // warn-and-refuse — including single-slash spellings like
-          // 's3a:/bucket/x' and colon-bearing relative paths. A
-          // local-path fallback here was tried (round 14) and
-          // reverted: it silently converted a misspelled REMOTE root
-          // into a bogus local './s3a:…' file with a true return —
-          // the operator believes the spill is on S3 while crash
-          // evidence dies with the driver's disk, the exact hazard
-          // the scheme dispatch exists to prevent. A genuinely local
-          // path with a colon in its first segment must be spelled
+          // 's3a:/bucket/x' and colon-bearing relative paths. A local
+          // fallback would turn a misspelled REMOTE root into a bogus
+          // local './s3a:…' file with a true return, so crash evidence
+          // dies with the driver's disk. A genuinely local path with a
+          // colon in its first segment must be spelled
           // './backup:tuesday/…' (no scheme shape) or via file://.
           System.err.println(s"[graft] preflight spill at '$path' " +
             s"unresolvable (${e.getClass.getSimpleName}: ${e.getMessage})" +
@@ -371,20 +322,17 @@ object PreflightLog {
       register(sinkOpt, maxBytes)
     }
 
-  /** Test seam AND the one registration rule: install a resolved sink
-    * (None detaches). Lets specs drive [[HadoopSink]] against a
-    * directly-constructed FileSystem (RawLocalFileSystem for the
-    * append path, LocalFileSystem for the no-append fallback) without
-    * scheme-mapping tricks — the production `file:` route deliberately
-    * takes the nio sink. */
-  private[plans] def registerHadoopSink(
+  /** Test seam: install a sink on a directly-constructed FileSystem (the
+    * checksummed LocalFileSystem for the no-append fallback, failing
+    * filesystems for the rotation and quarantine edges). */
+  private[plans] def registerSink(
       fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path, maxBytes: Long): Boolean =
     spillLock.synchronized {
-      register(Some(new HadoopSink(fs, fs.makeQualified(path))), maxBytes)
+      register(Some(new SpillSink(fs, fs.makeQualified(path))), maxBytes)
     }
 
-  private def register(sinkOpt: Option[Sink], maxBytes: Long): Boolean =
+  private def register(sinkOpt: Option[SpillSink], maxBytes: Long): Boolean =
     sinkOpt match {
       case None =>
         spill = None
@@ -663,8 +611,8 @@ private[plans] object RewriteSupport {
     * shingling) runs ONCE and its shuffle output is read twice. A
     * broadcast join would instead re-execute the pipeline to build the
     * broadcast side (measured on d25 at sf0.1: 4.9 s broadcast vs 2.0 s
-    * warm with the reused exchange — the r6 cached-union number, now
-    * with no cache and no caller contract). Distinct
+    * warm with the reused exchange, with no cache and no caller
+    * contract). Distinct
     * children keep the planner's choice — broadcasting a genuinely
     * small side is still right. */
   def selfJoinHint(l: LogicalPlan, r: LogicalPlan,

@@ -5,10 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** Batch source/sink formats beyond the Kafka/parquet transports: CSV and
-  * JSON-lines with explicit schemas (schema-on-read discipline — never
-  * inferSchema in production paths; at 100 TB an inference pass is a full
-  * extra scan).
+/** Batch layout and interchange helpers beyond the Kafka/parquet
+  * transports: schema-evolution reads, JSONL quarantine, z-order and
+  * key-bucketed layouts, compaction, targeted deletes. A plain format
+  * read or write is one Spark reader/writer chain and is spelled inline
+  * at its call site.
   *
   * Envelope interchange: binary columns (key/value) don't survive CSV/JSON
   * natively, so export base64-encodes them and import decodes — the
@@ -16,31 +17,15 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object Formats {
 
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-  def readParquet(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(path)
-
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
-  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).option("header", "true").csv(path)
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-  def readOrc(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).orc(path)
-
   /** Schema-evolution read across mixed parquet generations — the
     * lakehouse drift path (a long-lived dataset accumulates files written
-    * under successive schemas; the round-5 events ts-encoding switch is
-    * exactly this failure class). `mergeSchema` unions every file's
-    * footer schema at planning time: columns absent in old generations
-    * read as null (additive evolution — the only kind this engine
-    * accepts; type CHANGES of an existing column are rejected by the
-    * merge, loudly, which is the correct contract). Cost model: schema
-    * merge reads footers only, not data — but it is one footer per file,
-    * so at 100 TB pair it with compaction (`compact`) or pass
+    * under successive schemas, e.g. a timestamp encoding switch).
+    * `mergeSchema` unions every file's footer schema at planning time:
+    * columns absent in old generations read as null (additive evolution — the
+    * only kind this engine accepts; type CHANGES of an existing column are
+    * rejected by the merge, loudly, which is the correct contract). Cost
+    * model: schema merge reads footers only, not data — but it is one footer
+    * per file, so at 100 TB pair it with compaction (`compact`) or pass
     * `pinnedSchema` (the production default: evolve the schema in the
     * catalog, read with it explicitly — zero footer sweep, still
     * null-backfills). Filter pushdown and column pruning survive either
@@ -51,11 +36,6 @@ object Formats {
       case Some(sc) => spark.read.schema(sc).parquet(path)
       case None => spark.read.option("mergeSchema", "true").parquet(path)
     }
-
-  def writeJsonLines(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-  def readJsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
 
   /** JSONL ingest with corrupt-line quarantine — the raw-corpus intake
     * discipline (LLM corpora ship as JSONL): a malformed line must neither
@@ -84,40 +64,6 @@ object Formats {
       parsed.filter(col(s"j.$cr").isNotNull)
         .select(col("value").as("raw_line")))
   }
-
-  /** Envelope topic log → portable JSON-lines dump (binary → base64). */
-  /** Bucketed managed-table write — the co-located-join lever at 100 TB:
-    * two tables bucketed by the same key into the same bucket count join
-    * with ZERO exchanges (each bucket pair joins in place; BucketingSpec
-    * pins the shuffle-free plan). The same layout makes repeated
-    * aggregations on the bucket key shuffle-free. Bucket count is a
-    * layout-time commitment — pick it for the JOINED size at target scale
-    * (buckets ≈ data size / 128 MB), since both sides must match. `sortBy`
-    * pre-sorts within buckets so sort-merge join skips its sort step. */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int,
-      key: String, sortCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, key)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(table)
-  }
-
-  def readTable(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
-  /** Hive-style partitioned write — the partition-pruning lever: a query
-    * filtering on the partition column reads ONLY the matching
-    * directories (pruning happens at planning, before any file is
-    * opened — FormatsSpec pins `PartitionFilters` in the scan and the
-    * pruned file count). Partition by low-cardinality routing columns a
-    * 100 TB pipeline filters on constantly (ingest date, language,
-    * source); high-cardinality keys belong in bucketing, not partitions
-    * (a million tiny directories is a metastore DoS, not a layout). */
-  def writePartitioned(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite")
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
 
   /** Z-order (Morton-curve) layout — the MULTI-column data-skipping lever.
     * Partitioning prunes on one directory column and bucketing co-locates
@@ -262,6 +208,7 @@ object Formats {
     before - after
   }
 
+  /** Envelope topic log → portable JSON-lines dump (binary → base64). */
   def exportEnvelopes(env: DataFrame, path: String): Unit =
     env
       .withColumn("key", base64(col("key")))

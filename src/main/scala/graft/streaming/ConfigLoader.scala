@@ -38,11 +38,12 @@ object ConfigLoader {
 
   /** THE scalar-typing rule — shared by the file parser and the env
     * overlay so a value can never parse one way from the file and
-    * another from its `GRAFT_*` override. */
+    * another from its `GRAFT_*` override. An integer outside the Long
+    * range stays a string; the typed mapping then names its key. */
   private def parseScalar(raw: String): Any = raw match {
     case "true" => true
     case "false" => false
-    case r if r.matches("[+-]?\\d+") => r.toLong
+    case r if r.matches("[+-]?\\d+") => r.toLongOption.getOrElse(r)
     case r if r.matches("[+-]?\\d*\\.\\d+([eE][+-]?\\d+)?") => r.toDouble
     case r => r
   }
@@ -236,7 +237,8 @@ object ConfigLoader {
     o.get(k).map(_.toString).getOrElse(dflt)
   private def lng(o: Obj, k: String, dflt: Long): Long = o.get(k) match {
     case Some(l: Long) => l
-    case Some(other) => other.toString.toLong
+    case Some(other) => other.toString.toLongOption.getOrElse(
+      throw new ParseError(s"'$k' = $other is not a 64-bit integer"))
     case None => dflt
   }
   private def int(o: Obj, k: String, dflt: Int): Int = {
@@ -247,7 +249,8 @@ object ConfigLoader {
   }
   private def bool(o: Obj, k: String, dflt: Boolean): Boolean = o.get(k) match {
     case Some(b: Boolean) => b
-    case Some(other) => other.toString.toBoolean
+    case Some(other) => other.toString.toBooleanOption.getOrElse(
+      throw new ParseError(s"'$k' = $other is not true or false"))
     case None => dflt
   }
 

@@ -25,8 +25,7 @@ final class DeadSet(topics: TopicIO, markerDir: String) {
     * N both read the old marker, both publish, and the dead messages are
     * processed twice. The reference has the same race — its HTTP replay
     * runs in an async future (resource/dead_set.clj:54,:87) with no
-    * coordination; the management server's serial executor used to mask
-    * it here, but correctness must not depend on the HTTP layer's
+    * coordination; correctness must not depend on the HTTP layer's
     * threading. */
   private val entityLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -41,29 +40,28 @@ final class DeadSet(topics: TopicIO, markerDir: String) {
     * topic would ack records of one partition by an offset observed on
     * another — hiding unacked records or re-exposing acked ones. The
     * marker file holds `partition:offset` lines; the `*:offset` line is
-    * the global floor, which is also how a LEGACY single-number file
-    * (written before markers were per-partition) is read — exact for the
-    * file transport, whose offsets were globally assigned. */
+    * the global floor. Any other line is damage and fails loudly, naming
+    * the marker: guessing a floor would hide or re-expose records. */
   def markers(entity: String): Map[Int, Long] =
     // under the entity lock: writeMarkers' rename is atomic against
     // crashes, but the lock also orders reads against a concurrent
     // delete/replay so a view never observes a floor mid-advance
     lockFor(entity).synchronized {
-      if (!Files.exists(markerPath(entity))) Map.empty
-      else {
-        val lines = new String(Files.readAllBytes(markerPath(entity)))
-          .split("\n").map(_.trim).filter(_.nonEmpty)
-        lines.map {
-          case l if l.contains(":") =>
-            val Array(pt, off) = l.split(":", 2)
-            (if (pt == "*") -1 else pt.toInt) -> off.toLong
-          case legacy => -1 -> legacy.toLong
+      val path = markerPath(entity)
+      if (!Files.exists(path)) Map.empty
+      else new String(Files.readAllBytes(path))
+        .split("\n").map(_.trim).filter(_.nonEmpty).map { l =>
+          (l.split(":", 2) match {
+            case Array(pt, off) => (if (pt == "*") Some(-1)
+              else pt.toIntOption).zip(off.toLongOption)
+            case _ => None
+          }).getOrElse(throw new IllegalStateException(
+            s"dead-set marker $path has a line that is not " +
+              s"partition:offset: '$l'"))
         }.toMap
-      }
     }
 
-  /** The global floor — what the pre-partition-aware marker meant; kept
-    * for operational introspection. */
+  /** The global floor (`*:offset`), for operational introspection. */
   def marker(entity: String): Long = markers(entity).getOrElse(-1, -1L)
 
   private def writeMarkers(entity: String, m: Map[Int, Long]): Unit = {

@@ -66,20 +66,11 @@ final class GraftEngine(
       metrics.addSink(new StatsdSink(cfg.statsd.host, cfg.statsd.port))
     // Durable preflight evidence beside the checkpoint root: fail-mode
     // refusals are exactly the audits an operator needs post-mortem, and
-    // the in-memory ring dies with the driver. spillTo returns true only
-    // when this JVM had not already registered this path — reload ONLY
-    // then (loadSpill merges+dedupes, so even a re-registration is
-    // harmless). The spill writes through the checkpoint root's OWN
-    // filesystem: plain paths and file:// roots via java.nio (torn-
-    // tolerant O_APPEND), remote roots (hdfs://, s3a://) via the Hadoop
-    // FS client the session already carries — real cluster drivers
-    // checkpoint to object storage, which is exactly where post-mortem
-    // evidence matters, and the pre-round-14 nio-only spill silently
-    // no-opped there. spillTo
-    // itself decides flavor by scheme PREFIX (never java.net.URI
-    // parsing, whose failure on a URI-illegal character like a space
-    // once risked a bogus './s3a:…' local dir) and warn-refuses an
-    // unresolvable path — telemetry never fails engine construction.
+    // the in-memory ring dies with the driver. The spill writes through
+    // the checkpoint root's own filesystem; spillTo returns true only
+    // when this JVM had not already registered the path, so the ring
+    // reloads only then, and an unresolvable path is a warning —
+    // telemetry never fails engine construction.
     if (graft.plans.PreflightLog.spillTo(
         s"$checkpointDir/_preflight_spill.jsonl",
         hadoopConf = spark.sparkContext.hadoopConfiguration))
@@ -474,7 +465,8 @@ final class GraftEngine(
   /** Start a stream-joins route (S2/J1-J4, the reference's alpha
     * :stream-joins consumer type, streams.clj:163-179): one stream per
     * input topic, folded pairwise with per-stage windows/types, then the
-    * joined payload flows through the normal dispatch. */
+    * joined payload flows through the normal dispatch. The last stage's
+    * |left ts − right ts| is observed as `<entity>.join_diff` (M6). */
   def startStreamJoinRoute(route: StreamRouteConfig,
       inputTopics: Seq[String], joinCfgs: Seq[(Long, String)],
       key: String, tsCol: String,
@@ -486,7 +478,8 @@ final class GraftEngine(
     val streams = inputTopics.map(tp => topics.readStream(spark, tp))
     val t = streamTarget(route, handler)
     startQuery(s"joinroute-${route.topicEntity}")(
-      StreamJoins.joinChain(streams, key, tsCol, joinCfgs), trigger,
+      StreamJoins.observeJoinDiff(s"${route.topicEntity}.join_diff")(
+        StreamJoins.joinChain(streams, key, tsCol, joinCfgs)), trigger,
       subdir = s"join-${route.topicEntity}")((batch, _, token) =>
       t.emit(middleware(batch), token))
   }
@@ -627,9 +620,7 @@ final class GraftEngine(
     starters.clear()
     scalers.clear()
     // E11 bounded drain: cfg.drainTimeoutMs caps how long each stop()
-    // waits for its stream thread (Spark's own stop timeout knob —
-    // previously the config value was parsed and documented but never
-    // read, so the promised drain window was silently Spark's default)
+    // waits for its stream thread (Spark's own stop timeout knob)
     withDrainTimeout {
       queries.asScala.values.foreach { q =>
         try q.stop() catch { case _: Throwable => () }

@@ -42,9 +42,8 @@ object Pipeline {
     * context into a `metadata` struct the user payload carries.
     * `rabbitmq_retry_count` counts the retry HOPS TAKEN (configured −
     * remaining; first delivery = 0), the same contract [[userPayload]]
-    * implements and streams_test.clj:62-68 asserts — an earlier revision
-    * exposed the raw REMAINING count here, inverting the semantics for
-    * every engine route's handler. */
+    * implements and streams_test.clj:62-68 asserts (not the raw
+    * REMAINING count, which inverts the semantics for handlers). */
   def enrichMetadata(df: DataFrame, configuredRetryCount: Int = 0): DataFrame =
     df.withColumn("metadata",
       struct(col("topic"), col("timestamp"), col("partition"),
@@ -276,49 +275,7 @@ object Pipeline {
       .toDF("user_id", "stage_depth", "reached_at")
   }
 
-  /** Streaming as-of enrichment — the streaming twin of q31's batch as-of
-    * join: each probe-side event picks up the LATEST reference-side value
-    * for its key at-or-before its event time, via one keyed state cell
-    * (the reference's newest (ts, value)) instead of a windowed
-    * stream-stream join. This is the canonical latest-value topology
-    * (quote-attach, config-attach, feature-freshness): state is O(1) per
-    * key forever — a windowed join holds every row in the window on BOTH
-    * sides; latest-value needs exactly one.
-    *
-    * Input: a union frame `(key, ts, side['ref'|'probe'], value)` (one
-    * source per side upstream, per-key event-order within each — Kafka's
-    * per-partition ordering when keys partition consistently; rows are
-    * re-sorted by event time WITHIN each micro-batch so intra-batch
-    * interleavings are handled exactly). Output per probe row: its value,
-    * the attached ref value/ts (null before the first ref), and the
-    * staleness lag in ms — the same columns q31 materializes, so a batch
-    * replay through q31's union-scan is the oracle (AsOfStreamSpec
-    * drives the cross-batch equivalence). TTL expires idle keys.
-    *
-    * REF TIES (round 8): when the frame carries an optional `event_id`
-    * column, two refs at the same (key, ts) resolve to the HIGHEST
-    * event_id — exactly q31's oracle pick (`ORDER BY v.ts DESC,
-    * v.event_id DESC`) — and the winner is invariant to how the refs
-    * split across micro-batches (AsOfStreamSpec pins both orders and
-    * both batchings). Without the column the legacy last-arrival rule
-    * applies, which is only deterministic for distinct-ts refs.
-    *
-    * STATE VERSIONING: the event_id tie rule widened the state cell from
-    * `(tsMs, value)` to `(tsMs, value, event_id)` — an incompatible
-    * encoder schema. The two shapes are therefore keyed off the input:
-    * frames WITHOUT an event_id column run the original two-field state,
-    * so a stream restarted from a pre-event_id checkpoint (necessarily
-    * written without the column) restores cleanly; only frames that opt
-    * into event_id use the three-field state. Adding an event_id column
-    * to an EXISTING checkpointed stream is a state-schema migration —
-    * start a fresh checkpoint. One interim revision briefly ran ALL
-    * frames (event_id or not) through the three-field state; a
-    * no-event_id checkpoint written by THAT revision also needs a fresh
-    * checkpoint (or a literal `0L` event_id column to keep selecting
-    * the three-field branch, which reproduces its tie rule exactly). */
-  /** The shared per-key micro-batch walk of [[streamingAsOf]] — ONE
-    * implementation for both state shapes, so the tie/TTL/at-or-before
-    * semantics cannot silently diverge between them.
+  /** The per-key micro-batch walk of [[streamingAsOf]].
     *
     * Event-time walk within the batch: refs update the cell, probes
     * read it — exact for any intra-batch interleaving. At equal event
@@ -328,12 +285,9 @@ object Pipeline {
     * earlier batch). Equal-ts refs apply in event_id order, and the
     * state cell only yields to an equal-ts ref with a >= event_id — so
     * the highest event_id wins whether the contender arrived in this
-    * batch, an earlier one, or a later one. The LEGACY (no event_id)
-    * branch is exactly this walk with every event_id = 0: equal-ts
-    * refs keep their stable batch-arrival order and 0 <= 0 always
-    * yields, i.e. the original last-arrival rule — only the state
-    * ENCODER differs (the adapters at the flatMapGroupsWithState
-    * boundary keep its two-field schema byte-compatible). */
+    * batch, an earlier one, or a later one. With every event_id = 0
+    * equal-ts refs keep their stable batch-arrival order and 0 <= 0
+    * always yields: the last-arrival rule. */
   private def asOfBatchWalk(key: Long,
       rows: Seq[(Long, java.sql.Timestamp, String, Double, Long)],
       cur0: Option[(Long, Double, Long)])
@@ -356,59 +310,59 @@ object Pipeline {
     (cur, out)
   }
 
+  /** Streaming as-of enrichment — the streaming twin of q31's batch as-of
+    * join: each probe-side event picks up the LATEST reference-side value
+    * for its key at-or-before its event time, via one keyed state cell
+    * (the reference's newest (ts, value, event_id)) instead of a windowed
+    * stream-stream join. This is the canonical latest-value topology
+    * (quote-attach, config-attach, feature-freshness): state is O(1) per
+    * key forever — a windowed join holds every row in the window on BOTH
+    * sides; latest-value needs exactly one.
+    *
+    * Input: a union frame `(key, ts, side['ref'|'probe'], value)` (one
+    * source per side upstream, per-key event-order within each — Kafka's
+    * per-partition ordering when keys partition consistently; rows are
+    * re-sorted by event time WITHIN each micro-batch so intra-batch
+    * interleavings are handled exactly). Output per probe row: its value,
+    * the attached ref value/ts (null before the first ref), and the
+    * staleness lag in ms — the same columns q31 materializes, so a batch
+    * replay through q31's union-scan is the oracle (AsOfStreamSpec
+    * drives the cross-batch equivalence). TTL expires idle keys.
+    *
+    * REF TIES: when the frame carries an optional `event_id` column, two
+    * refs at the same (key, ts) resolve to the HIGHEST event_id — exactly
+    * q31's oracle pick (`ORDER BY v.ts DESC, v.event_id DESC`) — and the
+    * winner is invariant to how the refs split across micro-batches
+    * (AsOfStreamSpec pins both orders and both batchings). A frame
+    * without the column runs the same walk with every event_id = 0, the
+    * last-arrival rule, which is only deterministic for distinct-ts refs.
+    * Either way the state cell is `(tsMs, value, event_id)`. */
   def streamingAsOf(stateTtl: String = "30 minutes")(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val sess = df.sparkSession
     import sess.implicits._
-    if (df.columns.contains("event_id")) {
-      df.select(col("key").cast("long"), col("ts").cast("timestamp"),
-          col("side").cast("string"), col("value").cast("double"),
-          col("event_id").cast("long"))
-        .as[(Long, java.sql.Timestamp, String, Double, Long)]
-        .groupByKey(_._1)
-        .flatMapGroupsWithState[(Long, Double, Long),
-          (Long, java.sql.Timestamp, Double, Option[Double], Option[Long], Option[Long])](
-          OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-          (key: Long,
-              rows: Iterator[(Long, java.sql.Timestamp, String, Double, Long)],
-              state: GroupState[(Long, Double, Long)]) =>
-            if (state.hasTimedOut) { state.remove(); Iterator.empty }
-            else {
-              val (cur, out) = asOfBatchWalk(key, rows.toSeq, state.getOption)
-              cur.foreach(state.update)
-              state.setTimeoutDuration(stateTtl)
-              out.iterator
-            }
-        }
-        .toDF("key", "ts", "value", "ref_value", "ref_ts_ms", "lag_ms")
-    } else {
-      // legacy shape: two-field state, last-arrival equal-ts tie rule —
-      // byte-compatible with checkpoints written before the event_id
-      // rule existed (see STATE VERSIONING above). Same walk, every
-      // event_id pinned 0 (see asOfBatchWalk's doc for why that IS the
-      // legacy rule); only the state encoder stays two-field.
-      df.select(col("key").cast("long"), col("ts").cast("timestamp"),
-          col("side").cast("string"), col("value").cast("double"))
-        .as[(Long, java.sql.Timestamp, String, Double)]
-        .groupByKey(_._1)
-        .flatMapGroupsWithState[(Long, Double),
-          (Long, java.sql.Timestamp, Double, Option[Double], Option[Long], Option[Long])](
-          OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-          (key: Long,
-              rows: Iterator[(Long, java.sql.Timestamp, String, Double)],
-              state: GroupState[(Long, Double)]) =>
-            if (state.hasTimedOut) { state.remove(); Iterator.empty }
-            else {
-              val (cur, out) = asOfBatchWalk(key,
-                rows.toSeq.map(r => (r._1, r._2, r._3, r._4, 0L)),
-                state.getOption.map(c => (c._1, c._2, 0L)))
-              cur.foreach(c => state.update((c._1, c._2)))
-              state.setTimeoutDuration(stateTtl)
-              out.iterator
-            }
-        }
-        .toDF("key", "ts", "value", "ref_value", "ref_ts_ms", "lag_ms")
-    }
+    val eventId =
+      if (df.columns.contains("event_id")) col("event_id").cast("long")
+      else lit(0L)
+    df.select(col("key").cast("long"), col("ts").cast("timestamp"),
+        col("side").cast("string"), col("value").cast("double"), eventId)
+      .as[(Long, java.sql.Timestamp, String, Double, Long)]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[(Long, Double, Long),
+        (Long, java.sql.Timestamp, Double, Option[Double], Option[Long], Option[Long])](
+        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
+        (key: Long,
+            rows: Iterator[(Long, java.sql.Timestamp, String, Double, Long)],
+            state: GroupState[(Long, Double, Long)]) =>
+          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+          else {
+            val (cur, out) = asOfBatchWalk(key, rows.toSeq, state.getOption)
+            cur.foreach(state.update)
+            state.setTimeoutDuration(stateTtl)
+            out.iterator
+          }
+      }
+      .toDF("key", "ts", "value", "ref_value", "ref_ts_ms", "lag_ms")
   }
 
   /** The user-visible payload contract (`create-user-payload`,

@@ -78,7 +78,8 @@ object StreamJoins {
   }
 
   /** M6 stream-joins-diff metric (middleware/metrics/stream_joins_diff.clj):
-    * histogram of |left ts − right ts| observed on the joined stream. */
+    * per micro-batch average and maximum of |left ts − right ts| on the
+    * joined stream, harvested as `<name>.join_diff_ms_avg`/`_max` gauges. */
   def observeJoinDiff(name: String)(joined: DataFrame): DataFrame =
     joined.observe(name,
       avg(abs(unix_millis(col("l_ts")) - unix_millis(col("r_ts"))))

@@ -80,16 +80,13 @@ final class UpsertSink(spark: SparkSession, baseDir: String,
     * pattern the cross-query tests pin — with only the last writer
     * recorded, q1's replayed batch arriving after q2's commit would
     * re-merge and could revert a key at equal orderCol. */
-  private case class Meta(ver: Long, marks: Map[String, Long],
-      legacy: Boolean)
+  private case class Meta(ver: Long, marks: Map[String, Long])
 
-  /** Parse the pointer. Formats:
-    *  - current: `<ver>,<qid1>,<bid1>[,<qid2>,<bid2>...]` (first pair is
-    *    the most recent writer)
-    *  - legacy (pre-manifest layout): `v<batchId>,<qid>,<bid>` — version
-    *    dirs were `v<batchId>` flat parquet; surfaced as `legacy = true`
-    *    so the next merge re-buckets it into the manifest layout instead
-    *    of crashing on the non-numeric version field. */
+  /** Parse the pointer `<ver>,<qid1>,<bid1>[,<qid2>,<bid2>...]` (first
+    * pair is the most recent writer). A pointer that exists but does not
+    * parse is damage and fails loudly: read as "no state", the next
+    * `apply` would commit version 0 holding only its own batch, silently
+    * dropping the view and every replay mark. */
   private def currentMeta(): Option[Meta] = {
     val f = fs
     if (!f.exists(ptrPath)) None
@@ -97,15 +94,13 @@ final class UpsertSink(spark: SparkSession, baseDir: String,
       val in = f.open(ptrPath)
       val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
       finally in.close()
-      s.split(",") match {
-        case Array(v, qid, bid) if v.startsWith("v") =>
-          Some(Meta(v.drop(1).toLong, Map(qid -> bid.toLong), legacy = true))
-        case arr if arr.length >= 3 && arr.length % 2 == 1 =>
-          val marks = arr.tail.grouped(2)
-            .map { case Array(q, b) => q -> b.toLong }.toMap
-          Some(Meta(arr.head.toLong, marks, legacy = false))
-        case _ => None
-      }
+      val arr = s.split(",")
+      def damaged = new IllegalStateException(
+        s"unparseable UpsertSink pointer $ptrPath: '$s'")
+      if (arr.length < 3 || arr.length % 2 == 0) throw damaged
+      try Some(Meta(arr.head.toLong, arr.tail.grouped(2)
+        .map { case Array(q, b) => q -> b.toLong }.toMap))
+      catch { case _: NumberFormatException => throw damaged }
     }
   }
 
@@ -157,10 +152,9 @@ final class UpsertSink(spark: SparkSession, baseDir: String,
   /** Memo keyed by DIR-SET (a loop alternating current() and asOf
     * would defeat a single slot and write one lease per call); entries
     * refresh at half the window, so a handed-out frame is protected
-    * for AT LEAST ReaderWindowMillis/2 — size the knob to twice the
-    * longest reader lifetime. Stale entries are pruned opportunistically
-    * (the key space is bounded by the distinct dir-sets read within
-    * one window). */
+    * for AT LEAST ReaderWindowMillis/2. Stale entries are pruned
+    * opportunistically (the key space is bounded by the distinct
+    * dir-sets read within one window). */
   private val leaseMemo =
     new java.util.concurrent.ConcurrentHashMap[Set[String], java.lang.Long]()
   /** Returns the lease path ONLY when THIS call wrote one — the
@@ -221,18 +215,6 @@ final class UpsertSink(spark: SparkSession, baseDir: String,
   private def readDirs(m: Manifest): Option[DataFrame] =
     readDirsLeased(m)._1
 
-  /** The committed version's manifest — legacy pointers synthesize one
-    * pointing at the old flat `v<batchId>` dir (nBuckets = -1 forces the
-    * full re-bucketing rewrite on the next merge). */
-  private def manifestFor(meta: Meta): Option[Manifest] =
-    if (meta.legacy) {
-      val (qid, bid) = meta.marks.head
-      val dir = s"v${meta.ver}"
-      if (fs.exists(new Path(s"$baseDir/$dir")))
-        Some(Manifest(qid, bid, -1, Map(0 -> dir)))
-      else None
-    } else readManifest(meta.ver)
-
   /** The current materialized state, if any non-empty batch has
     * committed. A cold first read can race a concurrent merge + vacuum
     * (the lease lands only after the manifest resolve), in EITHER
@@ -252,7 +234,7 @@ final class UpsertSink(spark: SparkSession, baseDir: String,
         // the manifest between its exists probe and its open must hit
         // the retry below, not escape current() (the race this
         // method's contract promises to absorb)
-        m = meta.flatMap(manifestFor)
+        m = meta.flatMap(mt => readManifest(mt.ver))
         if (m.isEmpty && meta.nonEmpty &&
           currentMeta().map(_.ver) != meta.map(_.ver)) {
           // the vanished-manifest (None) leg of the same race: the
@@ -289,7 +271,8 @@ final class UpsertSink(spark: SparkSession, baseDir: String,
   /** Bucket → path map of the current version (test/ops introspection:
     * untouched buckets keep the exact same path across commits). */
   def currentBucketDirs(): Map[Int, String] =
-    currentMeta().flatMap(manifestFor).map(_.dirs).getOrElse(Map.empty)
+    currentMeta().flatMap(m => readManifest(m.ver)).map(_.dirs)
+      .getOrElse(Map.empty)
 
   /** Time travel: the materialized state as of `batchId` committed by
     * `forQuery` (this sink's queryId by default). Resolved through the
@@ -338,7 +321,7 @@ final class UpsertSink(spark: SparkSession, baseDir: String,
     val meta = currentMeta()
     if (meta.exists(_.marks.get(queryId).exists(batchId <= _)))
       return false
-    val prev = meta.flatMap(manifestFor)
+    val prev = meta.flatMap(m => readManifest(m.ver))
     val ver = meta.map(_.ver + 1).getOrElse(0L)
 
     val batchW = latestPerKey(batch)
@@ -370,7 +353,7 @@ final class UpsertSink(spark: SparkSession, baseDir: String,
               touched.map(b => b -> s"data/$ver/__bucket=$b")
           }
         case Some(p) =>
-          // bucket count changed (or legacy layout): full re-bucketing
+          // bucket count changed: full re-bucketing
           // rewrite; persisted so the touched-collect and the write share
           // the one state scan + window
           val all = readDirs(p).map(st => latestPerKey(
@@ -408,38 +391,33 @@ final class UpsertSink(spark: SparkSession, baseDir: String,
 
   /** Drop all but the newest `keepLast` COMMITTED versions. Manifests of
     * dropped versions are deleted (their `asOf` returns None afterwards);
-    * bucket data directories are deleted only when NO retained manifest
-    * still references them — a retained version that carries an old bucket
-    * forward keeps that bucket's files alive — AND no FRESH read lease
-    * (`_reading` files younger than [[UpsertSink.ReaderWindowMillis]],
-    * dropped by `current()`/`asOf` — see `readDirs`) names them: a
-    * recent reader's lazy frame keeps its files through the vacuum and
-    * the unreferenced data is reclaimed by a LATER vacuum once the
-    * lease ages. The memo refreshes leases at HALF the window, so a
-    * handed-out frame is guaranteed protection for at least
-    * window/2 — size the knob to TWICE the longest reader lifetime
-    * (or size `keepLast`); a frame held past that remains exposed (a
-    * lease, not a lock). Leases are re-read immediately before the
-    * deletes (a lease landing after the first snapshot still
-    * protects), an unreadable fresh lease defers the whole sweep, and
-    * stale lease files are deleted as housekeeping. Aged job-scratch
-    * (a crashed write's `_temporary`, judged by the newest FILE mtime
-    * in its tree) is reclaimed; live jobs' scratch is never touched.
-    * The pointer's version is always retained and orphaned manifests
-    * ABOVE the pointer (a crashed half-commit) are swept as garbage,
-    * never counted against `keepLast` — counting them would let
-    * vacuum(1) delete the live version. `current()` and every retained
-    * `asOf` are unaffected. `now` is injectable for tests. */
+    * bucket data directories are deleted only when NO retained manifest still
+    * references them — a retained version that carries an old bucket forward
+    * keeps that bucket's files alive — AND no FRESH read lease (`_reading`
+    * files younger than [[UpsertSink.ReaderWindowMillis]], dropped by
+    * `current()`/`asOf` — see `readDirs`) names them: a recent reader's lazy
+    * frame keeps its files through the vacuum and the unreferenced data is
+    * reclaimed by a LATER vacuum once the lease ages. The memo refreshes
+    * leases at HALF the window, so a handed-out frame is guaranteed
+    * protection for at least window/2 (size `keepLast` for longer readers); a
+    * frame held past that remains exposed (a lease, not a lock). Leases are
+    * re-read immediately before the deletes (a lease landing after the first
+    * snapshot still protects), an unreadable fresh lease defers the whole
+    * sweep, and stale lease files are deleted as housekeeping. Aged
+    * job-scratch (a crashed write's `_temporary`, judged by the newest FILE
+    * mtime in its tree) is reclaimed; live jobs' scratch is never touched.
+    * The pointer's version is always retained and orphaned manifests ABOVE
+    * the pointer (a crashed half-commit) are swept as garbage, never counted
+    * against `keepLast` — counting them would let vacuum(1) delete the live
+    * version. `current()` and every retained `asOf` are unaffected. `now`
+    * is injectable for tests. */
   def vacuum(keepLast: Int,
       now: Long = System.currentTimeMillis()): Unit = {
     require(keepLast >= 1, "must keep at least the current version")
     val f = fs
     val mdir = new Path(s"$baseDir/manifest")
     if (!f.exists(mdir)) return
-    val ptrVer = currentMeta() match {
-      case Some(m) if !m.legacy => m.ver
-      case _ => return // nothing committed in this layout — nothing to drop
-    }
+    val ptrVer = currentMeta().map(_.ver).getOrElse(return)
     val vers = f.listStatus(mdir).toSeq
       .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
     val committed = vers.filter(_ <= ptrVer).sorted.reverse
@@ -478,9 +456,7 @@ final class UpsertSink(spark: SparkSession, baseDir: String,
         if (failed) None else Some(dirs.toSet)
       }
     }
-    // Any file inside `p` younger than the SCRATCH age (its own knob —
-    // judging job liveness by the READER window would let a tuned-down
-    // reader knob delete a live write's stragglers mid-job) means a
+    // Any file inside `p` younger than the scratch age means a
     // possibly LIVE job (file mtimes are real on every store — the
     // dir's own mtime is synthetic on object stores). A FILE-LESS tree
     // counts as fresh/defer: a just-started job's _temporary holds
@@ -577,19 +553,12 @@ object UpsertSink {
     * `current()`/`asOf` freshen the dirs of the frames they hand out,
     * so a recent reader keeps its files through a concurrent reclaim
     * (deferred to a later vacuum). A window, not a lock: a frame held
-    * past it is exposed — size this (or `keepLast`) to the longest
-    * reader lifetime. Override with -Dgraft.upsertsink.readerWindowMs. */
-  private[streaming] def ReaderWindowMillis: Long =
-    sys.props.get("graft.upsertsink.readerWindowMs")
-      .flatMap(_.toLongOption).getOrElse(60L * 60 * 1000)
+    * past it is exposed — size `keepLast` to the longest reader
+    * lifetime. */
+  private[streaming] val ReaderWindowMillis: Long = 60L * 60 * 1000
 
   /** A write job's scratch (`_temporary`) is crash residue only once
-    * every file in its tree is older than this — its OWN knob, not the
-    * reader window: tuning the reader window down for short-lived
-    * readers must not shrink the grace a long in-flight write's
-    * straggler files get. Override with
-    * -Dgraft.upsertsink.scratchAgeMs. */
-  private[streaming] def ScratchAgeMillis: Long =
-    sys.props.get("graft.upsertsink.scratchAgeMs")
-      .flatMap(_.toLongOption).getOrElse(60L * 60 * 1000)
+    * every file in its tree is older than this — separate from the
+    * reader window, which bounds readers, not in-flight writes. */
+  private[streaming] val ScratchAgeMillis: Long = 60L * 60 * 1000
 }

@@ -328,6 +328,26 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(!withFail.contains(""""q_b":0.250"""), withFail)
   }
 
+  test("one load verdict over both probes: an MC co-tenant that arrives " +
+      "during the passes triggers a rerun even when the single-core probe " +
+      "and the MC baseline are quiet") {
+    val sc = Bench.CalibrationIdleRefDefault
+    val mc = Bench.CalibrationMcIdleRefDefault
+    def elevated(scB: Double, scA: Double, mcB: Double, mcA: Double) =
+      Bench.loadElevated(scB, scA, mcB, mcA, sc, mc)
+    assert(!elevated(sc, sc * 1.05, mc, mc * 1.1), "a quiet run is clean")
+    // the co-tenant shows only in the MC probe measured after the passes
+    assert(elevated(sc, sc * 1.05, mc, mc * 2.0),
+      "MC drift across the passes must trigger a rerun")
+    // a co-tenant present the whole time: no drift, both MC sides high
+    assert(elevated(sc, sc, mc * 1.5, mc * 1.5))
+    // and either single-core trigger on its own
+    assert(elevated(sc, sc * 1.5, mc, mc))
+    assert(elevated(sc * 1.4, sc * 1.4, mc, mc))
+    // a neighbor that LEFT mid-run shows as drift downward
+    assert(elevated(sc, sc, mc * 1.25, mc * 0.9))
+  }
+
   test("retry-until-quiet is bounded and real: at least 3 load reruns " +
       "(one rerun let the r15 artifact ship load-poisoned totals)") {
     assert(Bench.MaxLoadReruns >= 3)

@@ -154,7 +154,7 @@ class PreflightSpillSpec extends AnyFunSuite {
     val marker = "hd-" + System.nanoTime()
     try {
       PreflightLog.clearSpill()
-      assert(PreflightLog.registerHadoopSink(raw,
+      assert(PreflightLog.registerSink(raw,
         new org.apache.hadoop.fs.Path(backing), maxBytes = 4096L))
       PreflightLog.record(s"test preflight worst_element=$marker",
         aborted = true, rule = "overlap-join", kind = "preflight",
@@ -193,7 +193,7 @@ class PreflightSpillSpec extends AnyFunSuite {
     val m2 = "na2-" + System.nanoTime()
     try {
       PreflightLog.clearSpill()
-      assert(PreflightLog.registerHadoopSink(lfs,
+      assert(PreflightLog.registerSink(lfs,
         new org.apache.hadoop.fs.Path(backing), maxBytes = 1L << 20))
       PreflightLog.record(s"test preflight worst_element=$m1",
         aborted = false, rule = "overlap-join", kind = "preflight",
@@ -253,12 +253,16 @@ class PreflightSpillSpec extends AnyFunSuite {
       assert(PreflightLog.spillTo(plain))
       assert(!PreflightLog.spillTo(s"file:$plain"),
         "the file: spelling must resolve to the already-registered sink")
-      val marker = "nio-" + System.nanoTime()
+      assert(!PreflightLog.spillTo(s"file://$plain"))
+      val marker = "local-" + System.nanoTime()
       PreflightLog.record(s"test preflight worst_element=$marker",
         aborted = false, rule = "overlap-join", kind = "preflight",
         diagnosis = "ok", worstKey = s"worst_element=$marker")
       assert(new String(Files.readAllBytes(Paths.get(plain)))
         .contains(marker))
+      // the raw local filesystem appends in place: no checksum sidecar,
+      // no rewrite fallback
+      assert(!Files.exists(Paths.get(s"$dir/.spill.jsonl.crc")))
     } finally PreflightLog.clearSpill()
   }
 
@@ -275,7 +279,7 @@ class PreflightSpillSpec extends AnyFunSuite {
       assert(!PreflightLog.spillTo(s"$seg/spill.jsonl"))
       assert(!Files.exists(Paths.get(seg).toAbsolutePath),
         "a refused registration must create nothing in the cwd")
-      // the deliberate local spelling (no scheme shape) reaches nio
+      // the deliberate local spelling (no scheme shape) is a local path
       val dir = tmp("pfspill11")
       assert(PreflightLog.spillTo(s"$dir/./$seg/spill.jsonl"))
       val marker = "colon-" + System.nanoTime()
@@ -417,7 +421,7 @@ class PreflightSpillSpec extends AnyFunSuite {
     val marker = "hfq-" + System.nanoTime()
     try {
       PreflightLog.clearSpill()
-      assert(PreflightLog.registerHadoopSink(raw,
+      assert(PreflightLog.registerSink(raw,
         new org.apache.hadoop.fs.Path(backing), maxBytes = 4096L))
       PreflightLog.record(s"test preflight worst_element=$marker",
         aborted = false, rule = "overlap-join", kind = "preflight",
@@ -461,7 +465,7 @@ class PreflightSpillSpec extends AnyFunSuite {
     val marker = "ur-" + System.nanoTime()
     try {
       PreflightLog.clearSpill()
-      assert(PreflightLog.registerHadoopSink(fs1,
+      assert(PreflightLog.registerSink(fs1,
         new HPath(b1), maxBytes = 4096L))
       PreflightLog.record(s"test preflight worst_element=$marker",
         aborted = false, rule = "overlap-join", kind = "preflight",
@@ -480,7 +484,7 @@ class PreflightSpillSpec extends AnyFunSuite {
       val fs2 = new BrickFs(); fs2.initialize(
         java.net.URI.create("file:///"), conf)
       PreflightLog.clearSpill()
-      assert(PreflightLog.registerHadoopSink(fs2,
+      assert(PreflightLog.registerSink(fs2,
         new HPath(b2), maxBytes = 4096L))
       PreflightLog.record("test preflight dropped", aborted = false,
         rule = "overlap-join", kind = "preflight", diagnosis = "ok")

@@ -19,21 +19,25 @@ class BucketingSpec extends SparkSuite {
     }
   }
 
+  private def writeBucketed(df: org.apache.spark.sql.DataFrame,
+      table: String): Unit =
+    df.write.mode("overwrite").format("parquet").bucketBy(8, "k")
+      .sortBy("k").saveAsTable(table)
+
   test("bucketed-by-key join plans no exchange; unbucketed join shuffles") {
     val sess = spark
     import sess.implicits._
     val facts = (1L to 1000L).map(i => (i % 100, i, s"f$i"))
       .toDF("k", "fact_id", "payload")
     val dims = (0L until 100L).map(i => (i, s"dim$i")).toDF("k", "attr")
-    Formats.writeBucketed(facts, "b_facts", 8, "k", Seq("k"))
-    Formats.writeBucketed(dims, "b_dims", 8, "k", Seq("k"))
+    writeBucketed(facts, "b_facts")
+    writeBucketed(dims, "b_dims")
     // disable broadcast (tiny test tables would otherwise broadcast and
     // trivially show zero shuffles) and AQE's small-scan debucketing
     withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
-      val bucketed = Formats.readTable(spark, "b_facts")
-        .join(Formats.readTable(spark, "b_dims"), "k")
+      val bucketed = spark.table("b_facts").join(spark.table("b_dims"), "k")
       assert(bucketed.count() == 1000)
       assert(PlanChecks.countDataShuffles(bucketed) == 0,
         "bucketed join must be exchange-free")
@@ -49,12 +53,11 @@ class BucketingSpec extends SparkSuite {
     val sess = spark
     import sess.implicits._
     if (!spark.catalog.tableExists("b_facts"))
-      Formats.writeBucketed((1L to 1000L).map(i => (i % 100, i, s"f$i"))
-        .toDF("k", "fact_id", "payload"), "b_facts", 8, "k", Seq("k"))
+      writeBucketed((1L to 1000L).map(i => (i % 100, i, s"f$i"))
+        .toDF("k", "fact_id", "payload"), "b_facts")
     withConf(
       "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
-      val agg = Formats.readTable(spark, "b_facts")
-        .groupBy("k").count()
+      val agg = spark.table("b_facts").groupBy("k").count()
       assert(agg.count() == 100)
       assert(PlanChecks.countDataShuffles(agg) == 0,
         "groupBy on the bucket key must reuse the bucketing")

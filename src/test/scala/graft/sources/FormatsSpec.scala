@@ -5,24 +5,6 @@ import org.apache.spark.sql.functions._
 
 class FormatsSpec extends SparkSuite {
 
-  test("documents round-trip identically through parquet, csv, orc, and json") {
-    val docs = Tables(spark, sf0001).documents
-    val schema = docs.schema
-    val base = tmpDir("formats")
-    Formats.writeParquet(docs, s"$base/p")
-    Formats.writeCsv(docs, s"$base/c")
-    Formats.writeJsonLines(docs, s"$base/j")
-    Formats.writeOrc(docs, s"$base/o")
-    val fromP = Formats.readParquet(spark, s"$base/p", schema)
-    val fromC = Formats.readCsv(spark, s"$base/c", schema)
-    val fromJ = Formats.readJsonLines(spark, s"$base/j", schema)
-    val fromO = Formats.readOrc(spark, s"$base/o", schema)
-    assert(fromP.exceptAll(docs).isEmpty && docs.exceptAll(fromP).isEmpty)
-    assert(fromC.exceptAll(docs).isEmpty && docs.exceptAll(fromC).isEmpty)
-    assert(fromJ.exceptAll(docs).isEmpty && docs.exceptAll(fromJ).isEmpty)
-    assert(fromO.exceptAll(docs).isEmpty && docs.exceptAll(fromO).isEmpty)
-  }
-
   test("schema evolution: merged read over two parquet generations " +
       "null-backfills the old files, pinned-schema read agrees, and " +
       "pushdown survives the merge") {
@@ -141,7 +123,7 @@ class FormatsSpec extends SparkSuite {
       "with a healthy-looking (0, 1) return") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val base = tmpDir("compactpart")
-    Formats.writePartitioned(docs, s"$base/bylang", Seq("lang"))
+    docs.write.partitionBy("lang").parquet(s"$base/bylang")
     val e = intercept[IllegalArgumentException](
       Formats.compact(spark, s"$base/bylang", s"$base/out"))
     assert(e.getMessage.contains("Hive-partitioned"), e.getMessage)
@@ -171,7 +153,7 @@ class FormatsSpec extends SparkSuite {
       "that partition's files") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val base = tmpDir("partlayout")
-    Formats.writePartitioned(docs, s"$base/bylang", Seq("lang"))
+    docs.write.partitionBy("lang").parquet(s"$base/bylang")
     val langs = docs.select("lang").distinct().count()
     assert(langs > 1, "need several partitions for the pruning proof")
     val q = spark.read.parquet(s"$base/bylang").filter(col("lang") === "en")

@@ -126,8 +126,8 @@ class AsOfStreamSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("legacy (no event_id) state restores across a checkpointed " +
-      "restart: the two-field state cell written before the stop serves " +
+  test("a frame without event_id restores its state across a " +
+      "checkpointed restart: the state cell written before the stop serves " +
       "probes after the restart") {
     // MemoryStream forbids checkpoint recovery, so this test drives a
     // JSON-file source and collects via foreachBatch — both restartable.
@@ -184,7 +184,7 @@ class AsOfStreamSpec extends SparkSuite {
         .filter(_.getDouble(2) == 2.0)
       assert(post.length == 1, s"post-restart probe missing (${post.length})")
       assert(!post(0).isNullAt(3) && post(0).getDouble(3) == 7.5,
-        s"restored two-field state must serve the probe: ${post(0)}")
+        s"restored state must serve the probe: ${post(0)}")
     } finally q2.stop()
   }
 

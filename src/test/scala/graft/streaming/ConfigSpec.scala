@@ -82,6 +82,31 @@ class ConfigSpec extends AnyFunSuite {
     assert(cfg.streamRoutes("r").retry.count == Int.MaxValue)
   }
 
+  test("a malformed scalar is a ParseError naming the key, not a bare " +
+      "JVM exception: a non-numeric count, a non-boolean flag, a count " +
+      "beyond the Long range") {
+    def load(retry: String) = ConfigLoader.load(
+      s"graft { stream-routes { r { origin-topic = t, retry { $retry } } } }",
+      env = Map.empty)
+    for ((retry, key) <- Seq("count = abc" -> "'count'",
+        "enabled = yes" -> "'enabled'",
+        "count = 12345678901234567890" -> "'count'",
+        "queue-timeout-ms = 1.5" -> "'queue-timeout-ms'")) {
+      val e = intercept[ConfigLoader.ParseError](load(retry))
+      assert(e.getMessage.contains(key), e.getMessage)
+    }
+    // the env overlay types values through the same rule
+    val e = intercept[ConfigLoader.ParseError](ConfigLoader.load(
+      "graft { stream-routes { r { origin-topic = t, retry { count = 1 } } } }",
+      env = Map("GRAFT_STREAM_ROUTES_R_RETRY_COUNT" -> "99999999999999999999")))
+    assert(e.getMessage.contains("'count'"), e.getMessage)
+    // a 20-digit value in a string-typed key stays verbatim
+    val cfg = ConfigLoader.load(
+      "graft { stream-routes { r { origin-topic = 12345678901234567890 } } }",
+      env = Map.empty)
+    assert(cfg.streamRoutes("r").originTopic == "12345678901234567890")
+  }
+
   test("topic naming mirrors the reference queue topology") {
     assert(EngineConfig.retryTopic("app") == "app_retry")
     assert(EngineConfig.deadLetterTopic("app") == "app_dead_letter")

@@ -117,7 +117,7 @@ class DeadSetSpec extends SparkSuite {
 
   test("multi-partition DLQ (Kafka shape): markers advance PER PARTITION — " +
       "acking rows of one partition never hides unacked offsets of " +
-      "another; legacy single-number marker files still load") {
+      "another") {
     import org.apache.spark.sql.{DataFrame, SparkSession}
     import org.apache.spark.sql.functions._
     // Kafka-shaped transport: per-partition offsets (0..4 on p0, 0..2 on
@@ -158,13 +158,26 @@ class DeadSetSpec extends SparkSuite {
     assert(appended.toSeq == Seq("app_instant" -> 5L))
     assert(ds.view(spark, "app", 100).count() == 0)
     assert(ds.markers("app") == Map(0 -> 4L, 1 -> 2L))
-    // legacy single-number marker file = global floor for every partition
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$dir/markers"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/markers/leg_dlq_marker"),
-      "1".getBytes)
-    assert(ds.markers("leg") == Map(-1 -> 1L))
-    assert(ds.marker("leg") == 1L)
+  }
+
+  test("a marker line that is not partition:offset fails loudly, naming " +
+      "the marker file: guessing a floor would hide or re-expose records") {
+    val dir = tmpDir("deadset6")
+    val ds = new DeadSet(new FileTopicIO(s"$dir/topics"), s"$dir/markers")
+    val markers = java.nio.file.Paths.get(s"$dir/markers")
+    java.nio.file.Files.createDirectories(markers)
+    java.nio.file.Files.write(markers.resolve("ok_dlq_marker"),
+      "*:4\n0:7".getBytes)
+    assert(ds.markers("ok") == Map(-1 -> 4L, 0 -> 7L))
+    assert(ds.marker("ok") == 4L)
+    // a bare number (the single-floor format), a torn line, junk
+    for ((entity, body) <- Seq("bare" -> "1", "torn" -> "0:3\n1:",
+        "junk" -> "p0:3")) {
+      java.nio.file.Files.write(
+        markers.resolve(s"${entity}_dlq_marker"), body.getBytes)
+      val e = intercept[IllegalStateException](ds.markers(entity))
+      assert(e.getMessage.contains(s"${entity}_dlq_marker"), e.getMessage)
+      intercept[IllegalStateException](ds.delete(spark, entity, 1))
+    }
   }
 }

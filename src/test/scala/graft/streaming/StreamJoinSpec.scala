@@ -77,8 +77,10 @@ class StreamJoinSpec extends SparkSuite {
     val at = new java.sql.Timestamp(System.currentTimeMillis)
     topics.append(envelopes("orders", Seq(("o1", "order-1", at),
       ("o2", "order-2", at))), "orders_placed")
-    topics.append(envelopes("payments", Seq(("o1", "paid-1", at),
-      ("o3", "paid-3", at))), "orders_paid")
+    // the payment lands 1.5 s after its order: the join-diff gauge
+    val paidAt = new java.sql.Timestamp(at.getTime + 1500L)
+    topics.append(envelopes("payments", Seq(("o1", "paid-1", paidAt),
+      ("o3", "paid-3", paidAt))), "orders_paid")
     try {
       // the joined row carries both sides; the middleware re-exposes the
       // order envelope and the handler retries it
@@ -93,6 +95,13 @@ class StreamJoinSpec extends SparkSuite {
         .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq
       assert(retried == Seq(("o1", "order-1", 2)), retried)
       assert(engine.metrics.count("orders.message.retry") == 1)
+      // M6: progress events reach the metrics listener asynchronously
+      val gauge = "orders.join_diff.join_diff_ms_avg"
+      val deadline = System.currentTimeMillis + 30000
+      while (!engine.metrics.snapshot().contains(gauge) &&
+          System.currentTimeMillis < deadline) Thread.sleep(100)
+      assert(engine.metrics.snapshot().get(gauge).contains(1500.0),
+        engine.metrics.snapshot().filter(_._1.contains("join_diff")))
     } finally engine.stopAll()
   }
 

@@ -39,6 +39,30 @@ class UpsertSinkSpec extends SparkSuite {
     assert(got == Seq("a"))
   }
 
+  test("a damaged CURRENT pointer fails loudly, naming the pointer: " +
+      "read as no state, the next apply would commit a version 0 holding " +
+      "only its own batch and drop the view and every replay mark") {
+    val base = tmpDir("upsertdamaged")
+    val sink = new UpsertSink(spark, base, "k", "ord")
+    assert(sink.apply(df(Seq((1L, "a", 1L))), 0L))
+    val ptr = java.nio.file.Paths.get(base, "CURRENT")
+    // the checksum sidecar would fail the read first; this case is
+    // about the content
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(base, ".CURRENT.crc"))
+    for (junk <- Seq("", "garbage", "v0,default,0", "x,default,0",
+        "0,default")) {
+      java.nio.file.Files.write(ptr, junk.getBytes("UTF-8"))
+      val e = intercept[IllegalStateException](
+        sink.apply(df(Seq((2L, "b", 1L))), 1L))
+      assert(e.getMessage.contains("CURRENT"), e.getMessage)
+      intercept[IllegalStateException](sink.current())
+    }
+    // nothing was committed over the damage
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(base, "manifest", "1")))
+  }
+
   test("a different queryId over the same view is NOT a replay: its " +
       "batch 0 merges instead of being dropped (checkpoint-reset safety)") {
     val base = tmpDir("upsert5")
