@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.datasketches.common.ArrayOfStringsSerDe
 import org.apache.datasketches.frequencies.{ErrorType, ItemsSketch}
-import org.apache.datasketches.memory.Memory
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
@@ -31,9 +29,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * choice for a typed Aggregator: per-row compact-serde would pay an
   * O(sketch) round-trip per update). That means shuffle/spill bytes are
   * the field-serialized hash map at capacity, NOT the compact
-  * `toByteArray` form — callers persisting a sketch long-term should go
-  * through [[toBytes]]/[[fromBytes]], the compact, version-stable wire
-  * form.
+  * `toByteArray` form.
   */
 final class FreqItemsAgg(maxMapSize: Int)
     extends Aggregator[String, ItemsSketch[String], Map[String, Long]] {
@@ -58,14 +54,6 @@ final class FreqItemsAgg(maxMapSize: Int)
   override def finish(buf: ItemsSketch[String]): Map[String, Long] =
     buf.getFrequentItems(ErrorType.NO_FALSE_NEGATIVES)
       .map(r => r.getItem -> r.getEstimate).toMap
-
-  /** The compact wire form and error bound, for callers persisting the
-    * sketch instead of its answer. */
-  def toBytes(sk: ItemsSketch[String]): Array[Byte] =
-    sk.toByteArray(new ArrayOfStringsSerDe)
-  def fromBytes(buf: Array[Byte]): ItemsSketch[String] =
-    ItemsSketch.getInstance(Memory.wrap(buf), new ArrayOfStringsSerDe)
-  def maximumError(sk: ItemsSketch[String]): Long = sk.getMaximumError
 
   override def bufferEncoder: Encoder[ItemsSketch[String]] =
     Encoders.kryo[ItemsSketch[String]]

@@ -41,7 +41,7 @@ object BpeTrainer {
 
   /** Word-frequency table (word, freq) — the single corpus-sized pass. */
   def wordFrequencies(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(explode(split(col(textCol), " ")).as("word"))
+    docs.select(explode(Corpus.tokens(textCol)).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
 

@@ -18,11 +18,18 @@ object ContaminationGrams {
       |  i -> xxhash64(concat_ws(' ', toks[i], toks[i+1], toks[i+2],
       |    toks[i+3], toks[i+4]))))""".stripMargin
 
-  /** THE tokenize spelling (split on single space) — every entry routes
-    * through this one body so detection and decontamination can never
-    * fork on what a token is. */
-  private def withToks(docs: DataFrame): DataFrame =
-    docs.withColumn("toks", split(col("text"), " "))
+  /** DuckDB: CTE `name(doc_id, gram)` with every document's distinct
+    * word-5-gram strings — the oracle twin of [[perDoc]]/[[exploded]]
+    * (strings where the Spark side hashes them). */
+  def duckGramRows(name: String): String =
+    s"""$name AS (
+       |  SELECT DISTINCT doc_id, gram FROM (
+       |    SELECT doc_id, unnest(list_transform(range(1, len(w) - 3),
+       |      i -> concat(w[CAST(i AS INT)], ' ', w[CAST(i AS INT) + 1], ' ',
+       |        w[CAST(i AS INT) + 2], ' ', w[CAST(i AS INT) + 3], ' ',
+       |        w[CAST(i AS INT) + 4]))) AS gram
+       |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents) t
+       |    WHERE len(w) >= 5) u)""".stripMargin
 
   /** THE <5-token gate — docs with no gram are dropped here, once. */
   private def gated(toksDocs: DataFrame): DataFrame =
@@ -32,7 +39,7 @@ object ContaminationGrams {
     * hash array — the map-side shape (p08/p21's bloom/exact probes,
     * t15's novelty) where the array never explodes. */
   def perDoc(docs: DataFrame, keep: Seq[String] = Nil): DataFrame =
-    gated(withToks(docs))
+    gated(Corpus.tokenized(docs))
       .withColumn("ghashes", expr(gramArray))
       .select((Seq("doc_id") ++ keep ++ Seq("ghashes")).map(col): _*)
 
@@ -46,14 +53,13 @@ object ContaminationGrams {
     * serialized on the pre-shuffle scan task (measured ~6x on this
     * shape; the round-8 explode trap). */
   def exploded(docs: DataFrame): DataFrame =
-    explodedFromToks(withToks(docs))
+    explodedFromToks(Corpus.tokenized(docs))
 
   /** [[exploded]] over a frame that ALREADY carries
     * `toks = split(text, ' ')` — the shared-scan shape (p05 caches one
     * scan+spread+tokenize subtree and feeds it to both this and the
     * quality/curation branch). The caller's toks column MUST be the
-    * [[withToks]] spelling; p05 builds it via QualityScore's shared
-    * tokenizer so the spelling cannot fork. */
+    * [[Corpus.tokenized]] spelling, so the tokenizer cannot fork. */
   def explodedFromToks(toksDocs: DataFrame): DataFrame =
     gated(toksDocs)
       .select(col("doc_id"), explode(expr(gramArray)).as("g"))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import graft.functions.{MinHashFamily, MinHashSig, StableHash}
+import graft.functions.{MinHashSig, StableHash}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,13 +62,8 @@ object CorpusPipeline {
     // bit-identical on the real corpus) and the per-row string hash set
     // was half the stage's CPU — DedupOps.shingleStringsFromToks is THE
     // spelling (shared with the d03/d15 band builder, can't fork).
-    val sig = DedupOps.shingleStringsFromToks(exactKept)
-      .withColumn("sigs", MinHashSig.minhashSigs(col("sh_arr")))
-    val bands = sig.select(col("doc_id"), explode(array(
-      (0 until 4).map(b => struct(lit(b).as("band"),
-        concat_ws("-", (0 until 4).map(r => col("sigs").getItem(b * 4 + r)): _*)
-          .as("bsig"))): _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.bsig").as("bsig"))
+    val bands = Corpus.bands(DedupOps.shingleStringsFromToks(exactKept)
+      .withColumn("sigs", MinHashSig.minhashSigs(col("sh_arr"))))
     // greedy drop = every non-minimal id in any (band, bsig) bucket. One
     // groupBy gathers each bucket's sorted id list and slice() emits all
     // but the head — the same set the old band self-join produced as the
@@ -85,15 +80,7 @@ object CorpusPipeline {
       .orderBy(col("doc_id"))
   }
 
-  private val p01Sql = {
-    val h = s"(a * x + b) % ${MinHashFamily.p}"
-    val sigCols = (0 until 16)
-      .map(i => s"min(CASE WHEN seed = $i THEN h END) AS m$i").mkString(",\n    ")
-    val bandRows = (0 until 4).map { b =>
-      val cat = (0 until 4).map(r => s"CAST(m${b * 4 + r} AS VARCHAR)")
-        .mkString(" || '-' || ")
-      s"SELECT doc_id, $b AS band, $cat AS bsig FROM sig"
-    }.mkString("\n  UNION ALL\n  ")
+  private val p01Sql =
     s"""WITH scored AS (
        |  SELECT doc_id, lang, text,
        |    ${QualityScore.duckNTokens} AS n_tokens,
@@ -118,21 +105,7 @@ object CorpusPipeline {
        |        i -> concat(w[CAST(i AS INT)], ' ', w[CAST(i AS INT) + 1],
        |          ' ', w[CAST(i AS INT) + 2]))) AS shingle
        |    FROM toks) u),
-       |shh AS (
-       |  SELECT doc_id,
-       |    ('0x' || substr(md5(shingle), 1, 7))::BIGINT AS x
-       |  FROM sh),
-       |minh AS (
-       |  SELECT doc_id, seed, min($h) AS h
-       |  FROM shh, (VALUES ${MinHashFamily.duckSeedRows(16)})
-       |    seeds(seed, a, b)
-       |  GROUP BY doc_id, seed),
-       |sig AS (
-       |  SELECT doc_id,
-       |    $sigCols
-       |  FROM minh GROUP BY doc_id),
-       |bands AS (
-       |  $bandRows),
+       |${DedupOps.minhashBandsSql},
        |drop_ids AS (
        |  SELECT DISTINCT y.doc_id
        |  FROM bands x JOIN bands y
@@ -141,7 +114,6 @@ object CorpusPipeline {
        |FROM kept k
        |WHERE NOT EXISTS (SELECT 1 FROM drop_ids d WHERE d.doc_id = k.doc_id)
        |ORDER BY k.doc_id""".stripMargin
-  }
 
   /** Token-budget packing (data-mixing stage): per language, admit documents
     * in quality order until a 5,000-token budget is exhausted — the greedy
@@ -224,7 +196,7 @@ object CorpusPipeline {
     val weights = Seq(("src0", 300), ("src1", 2500), ("src2", 2000),
       ("src3", 500)).toDF("source", "w_permille")
     val docs = Tables(s, dir).documentsSpread
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+      .withColumn("n_tokens", size(Corpus.tokens()).cast("long"))
     val inCounts = docs.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs_in"))
     mixtureEpochs(docs, weights)
@@ -343,14 +315,7 @@ object CorpusPipeline {
 
   private val p05Sql =
     s"""WITH curated AS ($p01Sql),
-       |gr AS (
-       |  SELECT DISTINCT doc_id, gram FROM (
-       |    SELECT doc_id, unnest(list_transform(range(1, len(w) - 3),
-       |      i -> concat(w[CAST(i AS INT)], ' ', w[CAST(i AS INT) + 1], ' ',
-       |        w[CAST(i AS INT) + 2], ' ', w[CAST(i AS INT) + 3], ' ',
-       |        w[CAST(i AS INT) + 4]))) AS gram
-       |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents) t
-       |    WHERE len(w) >= 5) u),
+       |${ContaminationGrams.duckGramRows("gr")},
        |probe AS (SELECT DISTINCT gram FROM gr WHERE doc_id < 20),
        |contaminated AS (
        |  SELECT DISTINCT doc_id FROM gr JOIN probe USING (gram)
@@ -423,7 +388,7 @@ object CorpusPipeline {
     // run for the session lifetime
     val v = "graft_p07_mix_docs"
     Tables(s, dir).documentsSpread
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+      .withColumn("n_tokens", size(Corpus.tokens()).cast("long"))
       .createOrReplaceTempView(v)
     try s.sql(
       s"""WITH grains AS (
@@ -511,14 +476,7 @@ object CorpusPipeline {
   }
 
   private val p08Sql =
-    """WITH gr AS (
-      |  SELECT DISTINCT doc_id, gram FROM (
-      |    SELECT doc_id, unnest(list_transform(range(1, len(w) - 3),
-      |      i -> concat(w[CAST(i AS INT)], ' ', w[CAST(i AS INT) + 1], ' ',
-      |        w[CAST(i AS INT) + 2], ' ', w[CAST(i AS INT) + 3], ' ',
-      |        w[CAST(i AS INT) + 4]))) AS gram
-      |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents) t
-      |    WHERE len(w) >= 5) u),
+    s"""WITH ${ContaminationGrams.duckGramRows("gr")},
       |probe AS (SELECT DISTINCT gram FROM gr WHERE doc_id < 20),
       |contaminated AS (
       |  SELECT DISTINCT doc_id FROM gr JOIN probe USING (gram)
@@ -605,7 +563,7 @@ object CorpusPipeline {
     import org.apache.spark.sql.expressions.Window
     val keyed = Tables(s, dir).documentsSpread
       .withColumn("n_tokens",
-        size(split(col("text"), " ")).cast("long"))
+        size(Corpus.tokens()).cast("long"))
       .withColumn("okey",
         StableHash.h60(concat(col("doc_id"), lit(":pack"))))
       .withColumn("shard", (col("okey") % p10Shards).cast("long"))
@@ -674,7 +632,7 @@ object CorpusPipeline {
     * engines compute identically. */
   private def p11(s: SparkSession, dir: String): DataFrame = {
     val tot = Tables(s, dir).documentsSpread
-      .select(col("source"), size(split(col("text"), " ")).cast("long")
+      .select(col("source"), size(Corpus.tokens()).cast("long")
         .as("n_toks"))
       .groupBy(col("source")).agg(sum(col("n_toks")).as("toks"))
     val solved = tot
@@ -824,7 +782,7 @@ object CorpusPipeline {
     Tables(s, dir).documentsSpread
       .withColumn("h", StableHash.h60(col("text")))
       .withColumn("shard", pmod(col("h"), lit(8)).cast("long"))
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+      .withColumn("n_tokens", size(Corpus.tokens()).cast("long"))
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"),
@@ -870,8 +828,7 @@ object CorpusPipeline {
     * Ties (equal rounded quality) break on doc_id in both engines. */
   private def p14(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = Tables(s, dir).documentsSpread
-      .withColumn("toks", split(col("text"), " "))
+    val docs = Corpus.tokenized(Tables(s, dir).documentsSpread)
       .withColumn("quality", round(
         size(array_distinct(col("toks")))
           / size(col("toks")).cast("double"), 4))
@@ -993,7 +950,7 @@ object CorpusPipeline {
     * each partition to the bucket count first. */
   private def p16(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir).documentsSpread
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+      .withColumn("n_tokens", size(Corpus.tokens()).cast("long"))
       .withColumn("cap", greatest(lit(32L),
         expr("shiftleft(1L, length(bin(n_tokens - 1)))")))
       .groupBy(col("cap"))
@@ -1199,7 +1156,7 @@ object CorpusPipeline {
       .map(l => s"${l}L, over_$l, kept_$l")
       .mkString("stack(4, ", ", ", ") AS (max_len, docs_truncated, tokens_kept)")
     Tables(s, dir).documentsSpread
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+      .withColumn("n_tokens", size(Corpus.tokens()).cast("long"))
       .agg(count(lit(1)).as("n_docs"),
         (sum(col("n_tokens")).as("total_tokens") +: aggs): _*)
       .selectExpr("n_docs", "total_tokens", stackExpr)
@@ -1251,7 +1208,7 @@ object CorpusPipeline {
   private def p20(s: SparkSession, dir: String): DataFrame = {
     val nWorkers = 4
     val shards = Tables(s, dir).documentsSpread
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+      .withColumn("n_tokens", size(Corpus.tokens()).cast("long"))
       .withColumn("shard", StableHash.h60(col("text")) % nShards)
       .groupBy(col("shard"))
       .agg(sum(col("n_tokens")).as("shard_tokens"))
@@ -1354,27 +1311,8 @@ object CorpusPipeline {
       .orderBy(col("doc_id"))
   }
 
-  private val p21Sql =
-    """WITH gr AS (
-      |  SELECT DISTINCT doc_id, gram FROM (
-      |    SELECT doc_id, unnest(list_transform(range(1, len(w) - 3),
-      |      i -> concat(w[CAST(i AS INT)], ' ', w[CAST(i AS INT) + 1], ' ',
-      |        w[CAST(i AS INT) + 2], ' ', w[CAST(i AS INT) + 3], ' ',
-      |        w[CAST(i AS INT) + 4]))) AS gram
-      |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents) t
-      |    WHERE len(w) >= 5) u),
-      |probe AS (SELECT DISTINCT gram FROM gr WHERE doc_id < 20),
-      |contaminated AS (
-      |  SELECT DISTINCT doc_id FROM gr JOIN probe USING (gram)
-      |  WHERE doc_id >= 20)
-      |SELECT d.doc_id, d.lang,
-      |  (SELECT CAST(count(DISTINCT gram) AS BIGINT) FROM gr
-      |   WHERE gr.doc_id = d.doc_id) AS n_grams
-      |FROM documents d
-      |WHERE d.doc_id >= 20
-      |  AND len(string_split(d.text, ' ')) >= 5
-      |  AND d.doc_id NOT IN (SELECT doc_id FROM contaminated)
-      |ORDER BY d.doc_id""".stripMargin
+  /** p21 shares p08's oracle verbatim: same exact contamination set. */
+  private val p21Sql = p08Sql
 
   val defs: Seq[(String, QueryDef)] = Seq(
     "p01_training_corpus" -> QueryDef(p01, Some(p01Sql), headline = true),

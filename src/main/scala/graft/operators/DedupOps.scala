@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.{MinHashFamily, MinHashSig, SimHash32, StableHash}
-import graft.functions.DotDouble.dotF64
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,28 +23,10 @@ object DedupOps {
 
   /** Word-3-gram shingle arrays, deduped per doc map-side (array_distinct —
     * no shuffle; a global `.distinct()` would shuffle every pre-dedup
-    * shingle row). Guarded to ≥3 tokens (Spark's sequence() would run
-    * descending otherwise). Columns: doc_id, lang, sh_arr, n_sh. */
-  /** THE tokenize spelling of the shingle family (split on single space)
-    * — exposed FromToks variants below let d15/d20 feed ONE cached
-    * scan+spread+tokenize subtree to both their ground-truth and
-    * candidate sides (plan-internal subtree reuse does not exist in
-    * Spark); routing every entry through this one body keeps the two
-    * sides' token definition from ever forking. */
-  private def tokenized(docs: DataFrame): DataFrame =
-    docs.withColumn("toks", split(col("text"), " "))
-
+    * shingle row). Columns: doc_id, lang, sh_arr, n_sh. */
   private def shingleArrays(docs: DataFrame): DataFrame =
-    shingleArraysFromToks(tokenized(docs))
-
-  /** [[shingleArrays]] over a frame already carrying the [[tokenized]]
-    * `toks` column — the shared-scan shape. */
-  private def shingleArraysFromToks(toksDocs: DataFrame): DataFrame =
-    toksDocs
-      .filter(size(col("toks")) >= 3)
-      .withColumn("sh_arr", array_distinct(expr(
-        """transform(sequence(0, size(toks) - 3),
-          |  i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))""".stripMargin)))
+    Corpus.tokenized(docs, 3)
+      .withColumn("sh_arr", Corpus.distinctNgrams(3))
       .select(col("doc_id"), col("lang"), col("sh_arr"),
         size(col("sh_arr")).cast("long").as("n_sh"))
 
@@ -61,6 +42,137 @@ object DedupOps {
       |        i -> concat(w[CAST(i AS INT)], ' ', w[CAST(i AS INT) + 1],
       |          ' ', w[CAST(i AS INT) + 2]))) AS shingle
       |    FROM toks) u)""".stripMargin
+
+  /** `sizes` (per-doc shingle count) and `inter` (shared-shingle count of
+    * every doc pair) over [[shinglesSql]]'s `sh`. */
+  private val shingleInterSql =
+    """sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+      |inter AS (
+      |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_inter
+      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      |  GROUP BY a.doc_id, b.doc_id)""".stripMargin
+
+  /** [[shingleInterSql]] plus `true_pairs`: the exact Jaccard ≥ 1/2
+    * pairs, d02's definition. */
+  private val truePairsSql =
+    s"""$shingleInterSql,
+       |true_pairs AS (
+       |  SELECT a_id, b_id FROM inter
+       |  JOIN sizes sa ON sa.doc_id = a_id
+       |  JOIN sizes sb ON sb.doc_id = b_id
+       |  WHERE n_inter * 3 >= sa.n_sh + sb.n_sh)""".stripMargin
+
+  /** d15/d20's summary over `true_pairs` and a candidate pair relation
+    * `cand` (aliased `a` in the hits join): counts, recall, precision. */
+  private def recallSql(cand: String, a: String): String =
+    s"""hits AS (
+       |  SELECT t.a_id FROM true_pairs t
+       |  JOIN $cand $a ON $a.a_id = t.a_id AND $a.b_id = t.b_id)
+       |SELECT
+       |  CAST((SELECT count(*) FROM true_pairs) AS BIGINT) AS n_true,
+       |  CAST((SELECT count(*) FROM $cand) AS BIGINT) AS n_candidates,
+       |  CAST((SELECT count(*) FROM hits) AS BIGINT) AS n_hits,
+       |  CASE WHEN (SELECT count(*) FROM true_pairs) > 0 THEN
+       |    round((SELECT count(*) FROM hits)
+       |      / CAST((SELECT count(*) FROM true_pairs) AS DOUBLE), 4)
+       |    END AS recall,
+       |  CASE WHEN (SELECT count(*) FROM $cand) > 0 THEN
+       |    round((SELECT count(*) FROM hits)
+       |      / CAST((SELECT count(*) FROM $cand) AS DOUBLE), 4)
+       |    END AS candidate_precision""".stripMargin
+
+  /** `sizes` and `inter` restricted to the LSH candidate `pairs` (the
+    * shared-shingle count of each candidate pair). */
+  private val pairInterSql =
+    """sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+      |inter AS (
+      |  SELECT p.a_id, p.b_id, count(*) AS n_inter
+      |  FROM pairs p
+      |  JOIN sh a ON a.doc_id = p.a_id
+      |  JOIN sh b ON b.doc_id = p.b_id AND b.shingle = a.shingle
+      |  GROUP BY p.a_id, p.b_id)""".stripMargin
+
+  /** d11/d21's select tail: the exact Jaccard column, then every
+    * candidate pair joined to both signatures (x, y) and sizes. */
+  private val sigPairsTailSql =
+    """  round(coalesce(i.n_inter, 0)
+      |    / CAST(sa.n_sh + sb.n_sh - coalesce(i.n_inter, 0) AS DOUBLE), 4)
+      |    AS true_jaccard
+      |FROM pairs p
+      |JOIN sig x ON x.doc_id = p.a_id
+      |JOIN sig y ON y.doc_id = p.b_id
+      |JOIN sizes sa ON sa.doc_id = p.a_id
+      |JOIN sizes sb ON sb.doc_id = p.b_id
+      |LEFT JOIN inter i ON i.a_id = p.a_id AND i.b_id = p.b_id
+      |ORDER BY a_id, b_id""".stripMargin
+
+  /** Connected components over `pairs(a_id, b_id)`: `reach(v, r)` holds
+    * every vertex reachable from v, so min(r) per v is its component.
+    * Needs `WITH RECURSIVE`. */
+  private[operators] val componentsSql =
+    """edges AS (
+      |  SELECT a_id AS src, b_id AS dst FROM pairs
+      |  UNION ALL
+      |  SELECT b_id AS src, a_id AS dst FROM pairs),
+      |verts AS (SELECT DISTINCT src AS v FROM edges),
+      |reach(v, r) AS (
+      |  SELECT v, v FROM verts
+      |  UNION
+      |  SELECT w.v, e.dst FROM reach w JOIN edges e ON e.src = w.r)"""
+      .stripMargin
+
+  /** `shl(doc_id, shingles)`: distinct word-4-gram sets — the oracle twin
+    * of [[fourGramShingles]]. */
+  private val fourGramSql =
+    """w AS (
+      |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      |shl AS (
+      |  SELECT doc_id, list_distinct(list_transform(
+      |    generate_series(1, len(toks) - 3),
+      |    i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3])))
+      |    AS shingles
+      |  FROM w WHERE len(toks) >= 4)""".stripMargin
+
+  /** `g(doc_id, grams)` distinct word-3-gram sets and the banned subset
+    * `b(b_id, bg)` — the oracle twin of [[triGramBanned]]. */
+  private val triGramBannedSql =
+    """w AS (
+      |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      |g AS (
+      |  SELECT doc_id, list_distinct(list_transform(
+      |    generate_series(1, len(toks) - 2),
+      |    i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS grams
+      |  FROM w WHERE len(toks) >= 3),
+      |b AS (SELECT doc_id AS b_id, grams AS bg FROM g WHERE doc_id % 50 = 0)"""
+      .stripMargin
+
+  /** d17/d18's oracle front: word-8-gram rows of every ≥ 8-token doc and
+    * `matches`, every cross-doc (a < b) occurrence pair of one gram. */
+  private val spanMatchesSql =
+    """base AS (
+      |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
+      |  WHERE len(string_split(text, ' ')) >= 8),
+      |grams AS (
+      |  SELECT doc_id, i - 1 AS pos,
+      |    concat(w[i], ' ', w[i+1], ' ', w[i+2], ' ', w[i+3], ' ',
+      |      w[i+4], ' ', w[i+5], ' ', w[i+6], ' ', w[i+7]) AS gram
+      |  FROM base, LATERAL (SELECT unnest(range(1, len(w) - 6)) AS i) r),
+      |matches AS (
+      |  SELECT a.doc_id AS a_id, a.pos AS a_pos,
+      |    b.doc_id AS b_id, b.pos AS b_pos
+      |  FROM grams a JOIN grams b USING (gram) WHERE a.doc_id < b.doc_id)"""
+      .stripMargin
+
+  /** d18/d19's oracle result: per doc, word counts and the md5 of the
+    * kept words, from `totals` and `kept`. */
+  private val scrubSelectSql =
+    """SELECT CAST(t.doc_id AS BIGINT) AS doc_id,
+      |  CAST(t.n_words AS BIGINT) AS n_words,
+      |  CAST(t.n_words - coalesce(k.n_kept, 0) AS BIGINT)
+      |    AS n_removed_words,
+      |  md5(coalesce(k.clean_text, '')) AS clean_md5
+      |FROM totals t LEFT JOIN kept k ON k.doc_id = t.doc_id
+      |ORDER BY t.doc_id""".stripMargin
 
   /** Exact dedup via content-hash groupBy (the canonical-id pattern:
     * min(doc_id) per normalized-content hash). Map-side partial aggregation
@@ -108,11 +220,11 @@ object DedupOps {
     * doc, far below the float-rounding noise floor. Replaces a per-shingle
     * ~25-char concat_ws allocation + string hash with three long ops. */
   private def shingleHashArrays(docs: DataFrame): DataFrame =
-    shingleHashArraysFromToks(tokenized(docs))
+    shingleHashArraysFromToks(Corpus.tokenized(docs))
 
   /** [[shingleHashArrays]] over a frame already carrying the
-    * [[tokenized]] `toks` column. The hash/combine/distinct chain is the
-    * native codegen'd [[graft.functions.ShingleHashes]] expression
+    * [[Corpus.tokenized]] `toks` column. The hash/combine/distinct chain
+    * is the native codegen'd [[graft.functions.ShingleHashes]] expression
     * (round 16): the former two interpreted `transform` HOF loops + the
     * intermediate `th` array + `array_distinct` became ONE primitive
     * pass per row — bit-identical output by construction (the
@@ -228,11 +340,7 @@ object DedupOps {
 
   private val d02Sql =
     s"""WITH $shinglesSql,
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_inter
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY a.doc_id, b.doc_id)
+       |$shingleInterSql
        |SELECT CAST(a_id AS BIGINT) AS a_id, CAST(b_id AS BIGINT) AS b_id,
        |  round(n_inter / CAST(sa.n_sh + sb.n_sh - n_inter AS DOUBLE), 4) AS jaccard
        |FROM inter
@@ -300,7 +408,7 @@ object DedupOps {
     * rows per doc, no text). Map-side only: native minhash_sigs + an
     * in-row band explode. */
   private[operators] def minhashBands(docs: DataFrame): DataFrame =
-    minhashBandsFromToks(tokenized(docs))
+    minhashBandsFromToks(Corpus.tokenized(docs))
 
   /** Shingle STRINGS for the signature path, WITHOUT the per-doc
     * distinct (round 16, guide §4): MinHashSig's 16 family minimums are
@@ -308,35 +416,28 @@ object DedupOps {
     * with and without the distinct on the real corpus — and the
     * per-row hash set of ~25-char strings was HALF the stage's CPU
     * (0.57 → 0.31 s warm at sf0.1). Sig consumers ONLY: every
-    * Jaccard/size consumer needs [[shingleArraysFromToks]]'s distinct
-    * arrays (n_sh is a set size there). Shared with CorpusPipeline's
-    * p01 sig branch — ONE spelling, can't fork. */
+    * Jaccard/size consumer needs [[shingleArrays]]' distinct arrays
+    * (n_sh is a set size there). Shared with CorpusPipeline's p01 sig
+    * branch — ONE spelling, can't fork. */
   private[operators] def shingleStringsFromToks(toksDocs: DataFrame): DataFrame =
     toksDocs
       .filter(size(col("toks")) >= 3)
-      .withColumn("sh_arr", expr(
-        """transform(sequence(0, size(toks) - 3),
-          |  i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))""".stripMargin))
+      .withColumn("sh_arr", Corpus.ngrams(3))
       .select(col("doc_id"), col("sh_arr"))
 
-  /** [[minhashBands]] over a frame already carrying the [[tokenized]]
-    * `toks` column — the shared-scan shape (d15). */
+  /** [[minhashBands]] over a frame already carrying the
+    * [[Corpus.tokenized]] `toks` column — the shared-scan shape (d15). */
   private def minhashBandsFromToks(toksDocs: DataFrame): DataFrame =
-    shingleStringsFromToks(toksDocs)
-      .withColumn("sigs", MinHashSig.minhashSigs(col("sh_arr")))
-      .select(col("doc_id"), explode(array(
-        (0 until 4).map(b => struct(lit(b).as("band"),
-          concat_ws("-", (0 until 4).map(r => col("sigs").getItem(b * 4 + r)): _*)
-            .as("bsig"))): _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"),
-        col("bs.bsig").as("bsig"))
+    Corpus.bands(shingleStringsFromToks(toksDocs)
+      .withColumn("sigs", MinHashSig.minhashSigs(col("sh_arr"))))
 
   private def d03(s: SparkSession, dir: String): DataFrame =
     minhashPairs(s, dir).orderBy(col("a_id"), col("b_id"))
 
-  /** DuckDB CTE preamble ending with `pairs` = the distinct LSH candidate
-    * pairs — shared by the d03 and d06 oracles. */
-  private[operators] val minhashPairsCtes = {
+  /** DuckDB CTEs from `sh(doc_id, shingle)` to `sig` (minhash columns
+    * m0..m15) and `bands(doc_id, band, bsig)` — the oracle twin of
+    * MinHashSig + [[Corpus.bands]], shared with CorpusPipeline's p01. */
+  private[operators] val minhashBandsSql = {
     val h = s"(a * x + b) % ${MinHashFamily.p}"
     val sigCols = (0 until 16)
       .map(i => s"min(CASE WHEN seed = $i THEN h END) AS m$i").mkString(",\n    ")
@@ -345,8 +446,7 @@ object DedupOps {
         .mkString(" || '-' || ")
       s"SELECT doc_id, $b AS band, $cat AS bsig FROM sig"
     }.mkString("\n  UNION ALL\n  ")
-    s"""$shinglesSql,
-       |shh AS (
+    s"""shh AS (
        |  SELECT doc_id,
        |    ('0x' || substr(md5(shingle), 1, 7))::BIGINT AS x
        |  FROM sh),
@@ -360,13 +460,19 @@ object DedupOps {
        |    $sigCols
        |  FROM minh GROUP BY doc_id),
        |bands AS (
-       |  $bandRows),
+       |  $bandRows)""".stripMargin
+  }
+
+  /** DuckDB CTE preamble ending with `pairs` = the distinct LSH candidate
+    * pairs — shared by the d03 and d06 oracles. */
+  private[operators] val minhashPairsCtes =
+    s"""$shinglesSql,
+       |$minhashBandsSql,
        |pairs AS (
        |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
        |  FROM bands x JOIN bands y
        |    ON x.band = y.band AND x.bsig = y.bsig AND x.doc_id < y.doc_id)"""
       .stripMargin
-  }
 
   private val d03Sql =
     s"""WITH $minhashPairsCtes
@@ -385,7 +491,7 @@ object DedupOps {
   private def d04(s: SparkSession, dir: String): DataFrame =
     t(s, dir).documentsSpread
       .select(col("doc_id"),
-        SimHash32.simhash32(split(col("text"), " ")).as("simhash"))
+        SimHash32.simhash32(Corpus.tokens()).as("simhash"))
       // oracle parity: the SQL's unnest emits NO row for a doc with no
       // tokens, so a null fingerprint (empty/all-null token array —
       // unreachable via split(), which yields [""] on empty text, but
@@ -423,19 +529,14 @@ object DedupOps {
     * vector — the pair stage then does a single dot-product fold, not three.
     * Threshold applied to the rounded value so both engines cut identically. */
   private def d05(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir).embeddingsSpread
-      .withColumn("vd", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm",
-        sqrt(dotF64(col("vd"), col("vd"))))
+    val emb = SimilarityOps.normEmb(s, dir)
     val a = emb.select(col("vec_id").as("a_id"), col("label"),
       col("vd").as("av"), col("nrm").as("an"))
     val b = emb.select(col("vec_id").as("b_id"), col("label"),
       col("vd").as("bv"), col("nrm").as("bn"))
     a.join(b, Seq("label"))
       .filter(col("a_id") < col("b_id"))
-      .withColumn("cos_sim", round(
-        dotF64(col("av"), col("bv"))
-          / (col("an") * col("bn")), 4))
+      .withColumn("cos_sim", SimilarityOps.cosine("av", "an", "bv", "bn"))
       .filter(col("cos_sim") > 0.35)
       .select(col("a_id"), col("b_id"), col("label").cast("long").as("label"),
         col("cos_sim"))
@@ -560,15 +661,7 @@ object DedupOps {
 
   private val d06Sql =
     s"""WITH RECURSIVE $minhashPairsCtes,
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT b_id AS src, a_id AS dst FROM pairs),
-       |verts AS (SELECT DISTINCT src AS v FROM edges),
-       |reach(v, r) AS (
-       |  SELECT v, v FROM verts
-       |  UNION
-       |  SELECT w.v, e.dst FROM reach w JOIN edges e ON e.src = w.r)
+       |$componentsSql
        |SELECT CAST(v AS BIGINT) AS doc_id, CAST(min(r) AS BIGINT) AS component
        |FROM reach GROUP BY v
        |ORDER BY doc_id""".stripMargin
@@ -601,15 +694,7 @@ object DedupOps {
 
   private val d07Sql =
     s"""WITH RECURSIVE $minhashPairsCtes,
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT b_id AS src, a_id AS dst FROM pairs),
-       |verts AS (SELECT DISTINCT src AS v FROM edges),
-       |reach(v, r) AS (
-       |  SELECT v, v FROM verts
-       |  UNION
-       |  SELECT w.v, e.dst FROM reach w JOIN edges e ON e.src = w.r),
+       |$componentsSql,
        |comp AS (SELECT v AS doc_id, min(r) AS component FROM reach GROUP BY v),
        |members AS (
        |  SELECT c.component, c.doc_id, d.n_chars,
@@ -667,20 +752,22 @@ object DedupOps {
     * runs: signature pass is O(N·planes) map-side math, the candidate join
     * is an equi-join on the 8-bit bucket — never all-pairs. Threshold
     * applied to the 4dp-rounded value so both engines cut identically. */
-  private def d09(s: SparkSession, dir: String): DataFrame = {
-    val emb = SimilarityOps.embWithBuckets(s, dir)
-    val a = emb.select(col("vec_id").as("a_id"), col("vd").as("av"),
-      col("nrm").as("an"), col("bucket"))
-    val b = emb.select(col("vec_id").as("b_id"), col("vd").as("bv"),
-      col("nrm").as("bn"), col("bucket"))
-    a.join(b, Seq("bucket"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("cos_sim", round(
-        dotF64(col("av"), col("bv"))
-          / (col("an") * col("bn")), 4))
-      .filter(col("cos_sim") > 0.35)
+  private def d09(s: SparkSession, dir: String): DataFrame =
+    cosineNearDups(SimilarityOps.embWithBuckets(s, dir), "bucket")
       .select(col("a_id"), col("b_id"), col("bucket"), col("cos_sim"))
       .orderBy(col("a_id"), col("b_id"))
+
+  /** Cosine near-dup pairs blocked on `key` — d09 (LSH bucket) and d10
+    * (k-means cluster): both sides of a (vec_id, vd, nrm, key) frame
+    * equi-joined on the key, a_id < b_id, 4dp cosine > 0.35. */
+  private def cosineNearDups(emb: DataFrame, key: String): DataFrame = {
+    def side(id: String, v: String, n: String): DataFrame =
+      emb.select(col("vec_id").as(id), col("vd").as(v), col("nrm").as(n),
+        col(key))
+    side("a_id", "av", "an").join(side("b_id", "bv", "bn"), Seq(key))
+      .filter(col("a_id") < col("b_id"))
+      .withColumn("cos_sim", SimilarityOps.cosine("av", "an", "bv", "bn"))
+      .filter(col("cos_sim") > 0.35)
   }
 
   private val d09Sql =
@@ -714,15 +801,7 @@ object DedupOps {
     val a = SimilarityOps.kmeansAssignments(s, dir)
       .select(col("vec_id"), col("vd"), col("nrm"), col("cid"))
       .cache()
-    val x = a.select(col("vec_id").as("a_id"), col("vd").as("av"),
-      col("nrm").as("an"), col("cid"))
-    val y = a.select(col("vec_id").as("b_id"), col("vd").as("bv"),
-      col("nrm").as("bn"), col("cid"))
-    x.join(y, Seq("cid"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("cos_sim", round(
-        dotF64(col("av"), col("bv")) / (col("an") * col("bn")), 4))
-      .filter(col("cos_sim") > 0.35)
+    cosineNearDups(a, "cid")
       .select(col("a_id"), col("b_id"), col("cid").as("cluster"),
         col("cos_sim"))
       .orderBy(col("a_id"), col("b_id"))
@@ -750,57 +829,53 @@ object DedupOps {
     * Exact-pair scoring joins only the candidate pairs back to their
     * per-doc shingle arrays — array_intersect on two per-row arrays,
     * never a corpus-wide pairing. */
-  private def d11(s: SparkSession, dir: String): DataFrame = {
-    // cached: arr feeds BOTH pair-side joins and minhashLshPairs
-    // independently rebuilds the same tokenize/shingle/md5×16 lineage —
-    // uncached, the corpus map pass ran 3× per execution (the
-    // shared-frame caching ngramJaccard/d16/d22 already apply)
+  private def d11(s: SparkSession, dir: String): DataFrame =
+    sigPairs(s, dir)
+      .withColumn("matches", expr(
+        "size(filter(zip_with(a_sigs, b_sigs, (x, y) -> x = y), b -> b))"))
+      .withColumn("n_inter", pairInter)
+      .select(col("a_id"), col("b_id"),
+        round(col("matches") / 16.0, 4).as("est_jaccard"), trueJaccard)
+      .orderBy(col("a_id"), col("b_id"))
+
+  /** d11/d21's shared front: every LSH candidate pair joined back to
+    * both documents' shingle arrays (a_arr, b_arr), set sizes (na, nb)
+    * and minhash signatures (a_sigs, b_sigs). The per-doc frame is
+    * cached: it feeds both back-joins, and minhashLshPairs rebuilds the
+    * same tokenize/shingle/md5×16 lineage — uncached, the corpus map
+    * pass ran 3× per execution. */
+  private def sigPairs(s: SparkSession, dir: String): DataFrame = {
     val arr = shingleArrays(t(s, dir).documentsSpread)
       .withColumn("sigs", MinHashSig.minhashSigs(col("sh_arr")))
       .select(col("doc_id"), col("sh_arr"), col("n_sh"), col("sigs"))
       .cache()
-    val pairs = minhashLshPairs(t(s, dir).documentsSpread)
-    pairs
-      .join(arr.select(col("doc_id").as("a_id"), col("sh_arr").as("a_arr"),
-        col("n_sh").as("na"), col("sigs").as("a_sigs")), "a_id")
-      .join(arr.select(col("doc_id").as("b_id"), col("sh_arr").as("b_arr"),
-        col("n_sh").as("nb"), col("sigs").as("b_sigs")), "b_id")
-      .withColumn("matches", expr(
-        "size(filter(zip_with(a_sigs, b_sigs, (x, y) -> x = y), b -> b))"))
-      .withColumn("n_inter",
-        size(array_intersect(col("a_arr"), col("b_arr"))).cast("long"))
-      .select(col("a_id"), col("b_id"),
-        round(col("matches") / 16.0, 4).as("est_jaccard"),
-        round(col("n_inter")
-          / (col("na") + col("nb") - col("n_inter")).cast("double"), 4)
-          .as("true_jaccard"))
-      .orderBy(col("a_id"), col("b_id"))
+    def side(p: String): DataFrame =
+      arr.select(col("doc_id").as(s"${p}_id"), col("sh_arr").as(s"${p}_arr"),
+        col("n_sh").as(s"n$p"), col("sigs").as(s"${p}_sigs"))
+    minhashLshPairs(t(s, dir).documentsSpread)
+      .join(side("a"), "a_id")
+      .join(side("b"), "b_id")
   }
+
+  /** Exact shingle-set intersection size of a back-joined pair. */
+  private def pairInter: Column =
+    size(array_intersect(col("a_arr"), col("b_arr"))).cast("long")
+
+  /** Exact shingle Jaccard (4dp) from the pair's n_inter, na and nb. */
+  private def trueJaccard: Column =
+    round(col("n_inter")
+      / (col("na") + col("nb") - col("n_inter")).cast("double"), 4)
+      .as("true_jaccard")
 
   private val d11Sql = {
     val matches = (0 until 16)
       .map(i => s"CASE WHEN x.m$i = y.m$i THEN 1 ELSE 0 END")
       .mkString(" + ")
     s"""WITH $minhashPairsCtes,
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT p.a_id, p.b_id, count(*) AS n_inter
-       |  FROM pairs p
-       |  JOIN sh a ON a.doc_id = p.a_id
-       |  JOIN sh b ON b.doc_id = p.b_id AND b.shingle = a.shingle
-       |  GROUP BY p.a_id, p.b_id)
+       |$pairInterSql
        |SELECT CAST(p.a_id AS BIGINT) AS a_id, CAST(p.b_id AS BIGINT) AS b_id,
        |  round(($matches) / 16.0, 4) AS est_jaccard,
-       |  round(coalesce(i.n_inter, 0)
-       |    / CAST(sa.n_sh + sb.n_sh - coalesce(i.n_inter, 0) AS DOUBLE), 4)
-       |    AS true_jaccard
-       |FROM pairs p
-       |JOIN sig x ON x.doc_id = p.a_id
-       |JOIN sig y ON y.doc_id = p.b_id
-       |JOIN sizes sa ON sa.doc_id = p.a_id
-       |JOIN sizes sb ON sb.doc_id = p.b_id
-       |LEFT JOIN inter i ON i.a_id = p.a_id AND i.b_id = p.b_id
-       |ORDER BY a_id, b_id""".stripMargin
+       |$sigPairsTailSql""".stripMargin
   }
 
   /** Incremental FUZZY dedup — d08's near-duplicate counterpart. The
@@ -862,9 +937,7 @@ object DedupOps {
       minDocs: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val gramIdx = (0 until gramWords).map(j => s"toks[i+$j]").mkString(", ")
-    val base = docs
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= gramWords)
+    val base = Corpus.tokenized(docs, gramWords)
     val grams = base
       .select(col("doc_id"), posexplode(expr(
         s"""transform(sequence(0, size(toks) - $gramWords),
@@ -1031,23 +1104,26 @@ object DedupOps {
     * the hit join are the same keyed group-and-expand machinery as
     * d03/d02. The summary is three 1-row aggregates cross-joined —
     * broadcast by construction. */
-  private def d15(s: SparkSession, dir: String): DataFrame = {
-    // ONE scan + spread + tokenize subtree feeds BOTH the ground-truth
-    // (exact shingle Jaccard) and candidate (MinHash-LSH) sides — they
-    // diverge only after tokenization, and each previously re-ran scan +
-    // repartition + split independently (no plan-internal subtree reuse
-    // in Spark). Pruned to the consumed columns; the bench clearCache()s
-    // before every timed pass as always.
-    val base = tokenized(t(s, dir).documentsSpread)
+  private def d15(s: SparkSession, dir: String): DataFrame =
+    recallGate(s, dir)(base =>
+      lshPairsFromBands(minhashBandsFromToks(base), None))
+
+  /** d15/d20's shared gate: recall and precision of a candidate pair
+    * generator against the true near-dup pairs (exact shingle Jaccard
+    * ≥ 1/2). ONE scan + spread + tokenize subtree (doc_id, lang, toks)
+    * feeds both the ground-truth side and `candidates` — they diverge
+    * only after tokenization, and there is no plan-internal subtree
+    * reuse in Spark. The true and candidate pair frames are cached:
+    * each feeds its own count AND the hits join. The ground-truth side
+    * takes the UNORDERED Jaccard core (d02's output orderBy would be a
+    * range exchange + sort this count/join consumer never needs). */
+  private def recallGate(s: SparkSession, dir: String)(
+      candidates: DataFrame => DataFrame): DataFrame = {
+    val base = Corpus.tokenized(t(s, dir).documentsSpread)
       .select(col("doc_id"), col("lang"), col("toks")).cache()
-    // cached: each frame feeds its own count aggregate AND the hits
-    // join — uncached, Spark re-ran the candidate pipelines inside the
-    // one plan (no plan-internal subtree dedup). The ground-truth side
-    // takes the UNORDERED Jaccard core: d02's output orderBy was a
-    // range exchange + sort this count/join consumer never needed.
     val truePairs = ngramJaccardFrom(shingleHashArraysFromToks(base), None)
       .select(col("a_id"), col("b_id")).cache()
-    val cand = lshPairsFromBands(minhashBandsFromToks(base), None).cache()
+    val cand = candidates(base).cache()
     val hits = truePairs.join(cand, Seq("a_id", "b_id"))
     truePairs.agg(count(lit(1)).as("n_true"))
       .crossJoin(cand.agg(count(lit(1)).as("n_candidates")))
@@ -1066,31 +1142,8 @@ object DedupOps {
 
   private val d15Sql =
     s"""WITH $minhashPairsCtes,
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_inter
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY a.doc_id, b.doc_id),
-       |true_pairs AS (
-       |  SELECT a_id, b_id FROM inter
-       |  JOIN sizes sa ON sa.doc_id = a_id
-       |  JOIN sizes sb ON sb.doc_id = b_id
-       |  WHERE n_inter * 3 >= sa.n_sh + sb.n_sh),
-       |hits AS (
-       |  SELECT t.a_id FROM true_pairs t
-       |  JOIN pairs p ON p.a_id = t.a_id AND p.b_id = t.b_id)
-       |SELECT
-       |  CAST((SELECT count(*) FROM true_pairs) AS BIGINT) AS n_true,
-       |  CAST((SELECT count(*) FROM pairs) AS BIGINT) AS n_candidates,
-       |  CAST((SELECT count(*) FROM hits) AS BIGINT) AS n_hits,
-       |  CASE WHEN (SELECT count(*) FROM true_pairs) > 0 THEN
-       |    round((SELECT count(*) FROM hits)
-       |      / CAST((SELECT count(*) FROM true_pairs) AS DOUBLE), 4)
-       |    END AS recall,
-       |  CASE WHEN (SELECT count(*) FROM pairs) > 0 THEN
-       |    round((SELECT count(*) FROM hits)
-       |      / CAST((SELECT count(*) FROM pairs) AS DOUBLE), 4)
-       |    END AS candidate_precision""".stripMargin
+       |$truePairsSql,
+       |${recallSql("pairs", "p")}""".stripMargin
 
   /** SimHash tuning gate — d15's twin for the OTHER approximate near-dup
     * family: how much of the true near-dup pair set (exact shingle
@@ -1111,45 +1164,17 @@ object DedupOps {
     * gate doing its job: on THIS corpus it rules out SimHash in favor of
     * d03's shingle-based LSH (precision ~1) before any corpus-scale run
     * is committed. */
-  private def d20(s: SparkSession, dir: String): DataFrame = {
-    // same shared tokenized base + double-consumption caching as d15
-    // (the SimHash side reads `toks` directly — simhash32 over the same
-    // split the ground-truth side shingles)
-    val base = tokenized(t(s, dir).documentsSpread)
-      .select(col("doc_id"), col("lang"), col("toks")).cache()
-    val truePairs = ngramJaccardFrom(shingleHashArraysFromToks(base), None)
-      .select(col("a_id"), col("b_id")).cache()
-    val sims = base.select(col("doc_id"),
-      SimHash32.simhash32(col("toks")).as("simhash"))
-    val cand = simhashNearDups(sims).select(col("a_id"), col("b_id"))
-      .cache()
-    val hits = truePairs.join(cand, Seq("a_id", "b_id"))
-    truePairs.agg(count(lit(1)).as("n_true"))
-      .crossJoin(cand.agg(count(lit(1)).as("n_candidates")))
-      .crossJoin(hits.agg(count(lit(1)).as("n_hits")))
-      .select(col("n_true"), col("n_candidates"), col("n_hits"),
-        // same NULL-not-NaN empty-denominator guard as d15
-        when(col("n_true") > 0,
-          round(col("n_hits") / col("n_true").cast("double"), 4))
-          .as("recall"),
-        when(col("n_candidates") > 0,
-          round(col("n_hits") / col("n_candidates").cast("double"), 4))
-          .as("candidate_precision"))
-  }
+  private def d20(s: SparkSession, dir: String): DataFrame =
+    // the SimHash side reads `toks` directly — simhash32 over the same
+    // split the ground-truth side shingles
+    recallGate(s, dir)(base => simhashNearDups(base.select(col("doc_id"),
+      SimHash32.simhash32(col("toks")).as("simhash")))
+      .select(col("a_id"), col("b_id")))
 
   private val d20Sql = {
     val h = StableHash.duckH32("tok")
     s"""WITH $shinglesSql,
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_inter
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY a.doc_id, b.doc_id),
-       |true_pairs AS (
-       |  SELECT a_id, b_id FROM inter
-       |  JOIN sizes sa ON sa.doc_id = a_id
-       |  JOIN sizes sb ON sb.doc_id = b_id
-       |  WHERE n_inter * 3 >= sa.n_sh + sb.n_sh),
+       |$truePairsSql,
        |stoks AS (
        |  SELECT DISTINCT doc_id, tok FROM (
        |    SELECT doc_id, unnest(string_split(text, ' ')) AS tok
@@ -1174,21 +1199,7 @@ object DedupOps {
        |  FROM sbands x JOIN sbands y
        |    ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id
        |  WHERE bit_count(xor(x.simhash, y.simhash)) <= 3),
-       |hits AS (
-       |  SELECT t.a_id FROM true_pairs t
-       |  JOIN cand c ON c.a_id = t.a_id AND c.b_id = t.b_id)
-       |SELECT
-       |  CAST((SELECT count(*) FROM true_pairs) AS BIGINT) AS n_true,
-       |  CAST((SELECT count(*) FROM cand) AS BIGINT) AS n_candidates,
-       |  CAST((SELECT count(*) FROM hits) AS BIGINT) AS n_hits,
-       |  CASE WHEN (SELECT count(*) FROM true_pairs) > 0 THEN
-       |    round((SELECT count(*) FROM hits)
-       |      / CAST((SELECT count(*) FROM true_pairs) AS DOUBLE), 4)
-       |    END AS recall,
-       |  CASE WHEN (SELECT count(*) FROM cand) > 0 THEN
-       |    round((SELECT count(*) FROM hits)
-       |      / CAST((SELECT count(*) FROM cand) AS DOUBLE), 4)
-       |    END AS candidate_precision""".stripMargin
+       |${recallSql("cand", "c")}""".stripMargin
   }
 
   /** Jaccard threshold sweep — the dedup family's tuning curve (s14's
@@ -1234,11 +1245,7 @@ object DedupOps {
 
   private val d22Sql =
     s"""WITH $shinglesSql,
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_inter
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY a.doc_id, b.doc_id),
+       |$shingleInterSql,
        |levels AS (
        |  SELECT CAST(unnest([300, 500, 700]) AS BIGINT) AS tau_permille),
        |j AS (
@@ -1280,32 +1287,17 @@ object DedupOps {
     * touches only the candidate pairs' own shingle arrays. The 2-bit
     * truncation is a per-row mask on an in-row array: zero extra shuffles
     * over d11. */
-  private def d21(s: SparkSession, dir: String): DataFrame = {
-    // cached for the same 3×-lineage reason as d11
-    val arr = shingleArrays(t(s, dir).documentsSpread)
-      .withColumn("sigs", MinHashSig.minhashSigs(col("sh_arr")))
-      .select(col("doc_id"), col("sh_arr"), col("n_sh"), col("sigs"))
-      .cache()
-    val pairs = minhashLshPairs(t(s, dir).documentsSpread)
-    pairs
-      .join(arr.select(col("doc_id").as("a_id"), col("sh_arr").as("a_arr"),
-        col("n_sh").as("na"), col("sigs").as("a_sigs")), "a_id")
-      .join(arr.select(col("doc_id").as("b_id"), col("sh_arr").as("b_arr"),
-        col("n_sh").as("nb"), col("sigs").as("b_sigs")), "b_id")
+  private def d21(s: SparkSession, dir: String): DataFrame =
+    sigPairs(s, dir)
       .withColumn("m_full", expr(
         "size(filter(zip_with(a_sigs, b_sigs, (x, y) -> x = y), v -> v))"))
       .withColumn("m_bbit", expr(
         "size(filter(zip_with(a_sigs, b_sigs, (x, y) -> x % 4 = y % 4), v -> v))"))
-      .withColumn("n_inter",
-        size(array_intersect(col("a_arr"), col("b_arr"))).cast("long"))
+      .withColumn("n_inter", pairInter)
       .select(col("a_id"), col("b_id"),
         round(col("m_full") / 16.0, 4).as("est_full"),
-        round((col("m_bbit") - 4) / 12.0, 4).as("est_bbit"),
-        round(col("n_inter")
-          / (col("na") + col("nb") - col("n_inter")).cast("double"), 4)
-          .as("true_jaccard"))
+        round((col("m_bbit") - 4) / 12.0, 4).as("est_bbit"), trueJaccard)
       .orderBy(col("a_id"), col("b_id"))
-  }
 
   private val d21Sql = {
     val mFull = (0 until 16)
@@ -1315,26 +1307,11 @@ object DedupOps {
       .map(i => s"CASE WHEN x.m$i % 4 = y.m$i % 4 THEN 1 ELSE 0 END")
       .mkString(" + ")
     s"""WITH $minhashPairsCtes,
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT p.a_id, p.b_id, count(*) AS n_inter
-       |  FROM pairs p
-       |  JOIN sh a ON a.doc_id = p.a_id
-       |  JOIN sh b ON b.doc_id = p.b_id AND b.shingle = a.shingle
-       |  GROUP BY p.a_id, p.b_id)
+       |$pairInterSql
        |SELECT CAST(p.a_id AS BIGINT) AS a_id, CAST(p.b_id AS BIGINT) AS b_id,
        |  round(($mFull) / 16.0, 4) AS est_full,
        |  round((($mBbit) - 4) / 12.0, 4) AS est_bbit,
-       |  round(coalesce(i.n_inter, 0)
-       |    / CAST(sa.n_sh + sb.n_sh - coalesce(i.n_inter, 0) AS DOUBLE), 4)
-       |    AS true_jaccard
-       |FROM pairs p
-       |JOIN sig x ON x.doc_id = p.a_id
-       |JOIN sig y ON y.doc_id = p.b_id
-       |JOIN sizes sa ON sa.doc_id = p.a_id
-       |JOIN sizes sb ON sb.doc_id = p.b_id
-       |LEFT JOIN inter i ON i.a_id = p.a_id AND i.b_id = p.b_id
-       |ORDER BY a_id, b_id""".stripMargin
+       |$sigPairsTailSql""".stripMargin
   }
 
   /** Containment near-dup — the asymmetric cousin of d02's Jaccard:
@@ -1367,11 +1344,7 @@ object DedupOps {
 
   private val d16Sql =
     s"""WITH $shinglesSql,
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_inter
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY a.doc_id, b.doc_id)
+       |$shingleInterSql
        |SELECT CAST(a_id AS BIGINT) AS a_id, CAST(b_id AS BIGINT) AS b_id,
        |  CAST(sa.n_sh AS BIGINT) AS na, CAST(sb.n_sh AS BIGINT) AS nb,
        |  round(n_inter / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 4)
@@ -1435,9 +1408,7 @@ object DedupOps {
       if (r == 0) s"th[i+$j]"
       else s"(shiftleft(th[i+$j], $r) | shiftrightunsigned(th[i+$j], ${64 - r}))"
     }.mkString(" ^ ")
-    docs
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= gramWords)
+    Corpus.tokenized(docs, gramWords)
       .withColumn("th", expr("transform(toks, t -> xxhash64(t))"))
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(0, size(th) - $gramWords), i -> $combine)"))
@@ -1511,7 +1482,7 @@ object DedupOps {
       .groupBy(col("doc_id"))
       .agg(collect_list(col("rng")).as("ranges"))
     docs
-      .withColumn("ws", split(col("text"), " "))
+      .withColumn("ws", Corpus.tokens())
       .join(ranges, Seq("doc_id"), "left")
       .withColumn("kept", expr(
         """filter(ws, (x, i) -> ranges IS NULL
@@ -1580,7 +1551,7 @@ object DedupOps {
   }
 
   private val d19Sql =
-    """WITH corpus AS (
+    s"""WITH corpus AS (
       |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
       |  WHERE doc_id % 5 <> 0 AND len(string_split(text, ' ')) >= 8),
       |batch AS (
@@ -1624,30 +1595,13 @@ object DedupOps {
       |totals AS (
       |  SELECT doc_id, len(string_split(text, ' ')) AS n_words
       |  FROM documents WHERE doc_id % 5 = 0)
-      |SELECT CAST(t.doc_id AS BIGINT) AS doc_id,
-      |  CAST(t.n_words AS BIGINT) AS n_words,
-      |  CAST(t.n_words - coalesce(k.n_kept, 0) AS BIGINT)
-      |    AS n_removed_words,
-      |  md5(coalesce(k.clean_text, '')) AS clean_md5
-      |FROM totals t LEFT JOIN kept k ON k.doc_id = t.doc_id
-      |ORDER BY t.doc_id""".stripMargin
+      |$scrubSelectSql""".stripMargin
 
   private def d18(s: SparkSession, dir: String): DataFrame =
     scrubCrossDocSpans(t(s, dir).documentsSpread)
 
   private val d18Sql =
-    """WITH base AS (
-      |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      |  WHERE len(string_split(text, ' ')) >= 8),
-      |grams AS (
-      |  SELECT doc_id, i - 1 AS pos,
-      |    concat(w[i], ' ', w[i+1], ' ', w[i+2], ' ', w[i+3], ' ',
-      |      w[i+4], ' ', w[i+5], ' ', w[i+6], ' ', w[i+7]) AS gram
-      |  FROM base, LATERAL (SELECT unnest(range(1, len(w) - 6)) AS i) r),
-      |matches AS (
-      |  SELECT a.doc_id AS a_id, a.pos AS a_pos,
-      |    b.doc_id AS b_id, b.pos AS b_pos
-      |  FROM grams a JOIN grams b USING (gram) WHERE a.doc_id < b.doc_id),
+    s"""WITH $spanMatchesSql,
       |isl AS (
       |  SELECT a_id, b_id, a_pos, b_pos,
       |    a_pos - b_pos AS diag,
@@ -1676,30 +1630,13 @@ object DedupOps {
       |totals AS (
       |  SELECT doc_id, len(string_split(text, ' ')) AS n_words
       |  FROM documents)
-      |SELECT CAST(t.doc_id AS BIGINT) AS doc_id,
-      |  CAST(t.n_words AS BIGINT) AS n_words,
-      |  CAST(t.n_words - coalesce(k.n_kept, 0) AS BIGINT)
-      |    AS n_removed_words,
-      |  md5(coalesce(k.clean_text, '')) AS clean_md5
-      |FROM totals t LEFT JOIN kept k ON k.doc_id = t.doc_id
-      |ORDER BY t.doc_id""".stripMargin
+      |$scrubSelectSql""".stripMargin
 
   private def d17(s: SparkSession, dir: String): DataFrame =
     crossDocSpans(t(s, dir).documentsSpread)
 
   private val d17Sql =
-    """WITH base AS (
-      |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      |  WHERE len(string_split(text, ' ')) >= 8),
-      |grams AS (
-      |  SELECT doc_id, i - 1 AS pos,
-      |    concat(w[i], ' ', w[i+1], ' ', w[i+2], ' ', w[i+3], ' ',
-      |      w[i+4], ' ', w[i+5], ' ', w[i+6], ' ', w[i+7]) AS gram
-      |  FROM base, LATERAL (SELECT unnest(range(1, len(w) - 6)) AS i) r),
-      |matches AS (
-      |  SELECT a.doc_id AS a_id, a.pos AS a_pos,
-      |    b.doc_id AS b_id, b.pos AS b_pos
-      |  FROM grams a JOIN grams b USING (gram) WHERE a.doc_id < b.doc_id),
+    s"""WITH $spanMatchesSql,
       |isl AS (
       |  SELECT a_id, b_id, a_pos,
       |    a_pos - b_pos AS diag,
@@ -1745,15 +1682,7 @@ object DedupOps {
 
   private val d23Sql =
     s"""WITH RECURSIVE $minhashPairsCtes,
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT b_id AS src, a_id AS dst FROM pairs),
-       |verts AS (SELECT DISTINCT src AS v FROM edges),
-       |reach(v, r) AS (
-       |  SELECT v, v FROM verts
-       |  UNION
-       |  SELECT w.v, e.dst FROM reach w JOIN edges e ON e.src = w.r),
+       |$componentsSql,
        |comp AS (SELECT v, min(r) AS component FROM reach GROUP BY v),
        |csize AS (SELECT component, count(*) AS k FROM comp GROUP BY component),
        |multi AS (
@@ -1836,12 +1765,8 @@ object DedupOps {
     * fingerprint definition, so gate variants cannot drift). */
   private def simhash64(docs: DataFrame,
       extras: Seq[Column] = Nil): DataFrame =
-    docs
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 2)
-      .withColumn("bi", expr(
-        """transform(sequence(0, size(toks) - 2),
-          |  i -> concat_ws(' ', toks[i], toks[i+1]))""".stripMargin))
+    Corpus.tokenized(docs, 2)
+      .withColumn("bi", Corpus.ngrams(2))
       .select(col("doc_id") +: extras :+
         // plan_fence'd VALUE (d04's discipline, applied to the column
         // instead of a filter): a null-intolerant consumer predicate —
@@ -1970,8 +1895,7 @@ object DedupOps {
         col("len").as("b_len")), "b_id")
       .join(fp.select(col("doc_id").as("a_id"), col("sh").as("a_sh")), "a_id")
       .join(fp.select(col("doc_id").as("b_id"), col("sh").as("b_sh")), "b_id")
-      .withColumn("n_inter",
-        size(array_intersect(col("a_arr"), col("b_arr"))).cast("long"))
+      .withColumn("n_inter", pairInter)
       .withColumn("v_jaccard", col("n_inter") * 3 >= col("na") + col("nb"))
       .withColumn("thr", expr("greatest(a_len, b_len) div 5"))
       .withColumn("v_edit",
@@ -1990,13 +1914,7 @@ object DedupOps {
   private val d26Sql =
     s"""WITH $minhashPairsCtes,
        |$simhash64Ctes,
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT p.a_id, p.b_id, count(*) AS n_inter
-       |  FROM pairs p
-       |  JOIN sh a ON a.doc_id = p.a_id
-       |  JOIN sh b ON b.doc_id = p.b_id AND b.shingle = a.shingle
-       |  GROUP BY p.a_id, p.b_id),
+       |$pairInterSql,
        |txt AS (SELECT doc_id, text, length(text) AS len FROM documents),
        |scored AS (
        |  SELECT p.a_id, p.b_id,
@@ -2047,43 +1965,43 @@ object DedupOps {
     * derivation lives once (the same single-source rule as
     * [[simhashPairs]] / [[triGramBanned]]). */
   private def fourGramShingles(s: SparkSession, dir: String): DataFrame =
-    t(s, dir).documentsSpread
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 4)
-      .select(col("doc_id"), expr(
-        """array_distinct(transform(sequence(0, size(toks) - 4),
-          |  i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2],
-          |    toks[i+3])))""".stripMargin).as("shingles"))
+    Corpus.tokenized(t(s, dir).documentsSpread, 4)
+      .select(col("doc_id"), Corpus.distinctNgrams(4).as("shingles"))
 
-  private def d27(s: SparkSession, dir: String): DataFrame = {
+  private def d27(s: SparkSession, dir: String): DataFrame =
+    sharedShinglePairs(s, dir)(arrays_overlap(col("a_sh"), col("b_sh")))
+
+  /** d27/d32's naive theta join: every probe doc (doc_id % 20 = 0)
+    * paired with each higher-id doc whose 4-gram set satisfies `pred`,
+    * with the shared-shingle count. Only `pred` differs between the
+    * two gates — that difference is what each certifies. */
+  private def sharedShinglePairs(s: SparkSession, dir: String)(
+      pred: Column): DataFrame = {
     val sh = fourGramShingles(s, dir)
     val a = sh.filter(col("doc_id") % 20 === 0)
       .select(col("doc_id").as("a_id"), col("shingles").as("a_sh"))
     val b = sh.select(col("doc_id").as("b_id"), col("shingles").as("b_sh"))
-    a.join(b, arrays_overlap(col("a_sh"), col("b_sh"))
-        && col("a_id") < col("b_id"))
+    a.join(b, pred && col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
         size(array_intersect(col("a_sh"), col("b_sh"))).cast("long")
           .as("n_shared"))
       .orderBy(col("a_id"), col("b_id"))
   }
 
-  private val d27Sql =
-    """WITH w AS (
-      |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      |shl AS (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    generate_series(1, len(toks) - 3),
-      |    i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3])))
-      |    AS shingles
-      |  FROM w WHERE len(toks) >= 4),
-      |l AS (SELECT doc_id AS a_id, unnest(shingles) AS s FROM shl
-      |  WHERE doc_id % 20 = 0),
-      |r AS (SELECT doc_id AS b_id, unnest(shingles) AS s FROM shl)
-      |SELECT a_id, b_id, CAST(count(*) AS BIGINT) AS n_shared
-      |FROM l JOIN r USING (s) WHERE a_id < b_id
-      |GROUP BY a_id, b_id
-      |ORDER BY a_id, b_id""".stripMargin
+  private val d27Sql = sharedShinglePairsSql(having = "")
+
+  /** The oracle twin of [[sharedShinglePairs]]: probe-doc shingles
+    * equi-joined to every higher-id doc's, counted per pair; `having` is
+    * an optional HAVING line on those counts. */
+  private def sharedShinglePairsSql(having: String): String =
+    s"""WITH $fourGramSql,
+       |l AS (SELECT doc_id AS a_id, unnest(shingles) AS s FROM shl
+       |  WHERE doc_id % 20 = 0),
+       |r AS (SELECT doc_id AS b_id, unnest(shingles) AS s FROM shl)
+       |SELECT a_id, b_id, CAST(count(*) AS BIGINT) AS n_shared
+       |FROM l JOIN r USING (s) WHERE a_id < b_id
+       |GROUP BY a_id, b_id$having
+       |ORDER BY a_id, b_id""".stripMargin
 
   /** Membership-rewrite exactness gate — the third certified rewrite
     * ([[graft.plans.SetOverlapJoinRewrite]]'s `array_contains` path):
@@ -2097,51 +2015,56 @@ object DedupOps {
     * doc into a hash join — the shape that holds when both sides are
     * large. DuckDB computes the same relation by unnest/equi-join. */
   private def d28(s: SparkSession, dir: String): DataFrame = {
-    def tokenized = t(s, dir).documentsSpread
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 2)
-    val docs = tokenized
-      .select(col("doc_id"), expr(
-        """array_distinct(transform(sequence(0, size(toks) - 2),
-          |  i -> concat_ws(' ', toks[i], toks[i+1])))""".stripMargin)
-        .as("bgs"))
-    // global top-520 minus the 20 head bigrams — offset/limit over a
-    // bounded vocab sort (no global window; PlanSpec's sweep bans those).
-    // The bigram transform feeds the generator INLINE: through an
-    // aliased column, InferFiltersFromGenerate + PushDownPredicates
-    // re-evaluate the whole transform in a filter below the spread
-    // repartition, serialized on the scan task (the round-8 explode
-    // trap — measured ~6x on this panel).
-    val panel = tokenized
-      .select(explode(expr(
-        """transform(sequence(0, size(toks) - 2),
-          |  i -> concat_ws(' ', toks[i], toks[i+1]))""".stripMargin)).as("bg"))
-      .groupBy(col("bg")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("bg"))
-      .offset(20).limit(500)
-      .select(col("bg"))
+    // global top-520 minus the 20 head bigrams
+    val (docs, panel) = bigramPanel(s, dir, offset = 20, limit = 500)
     docs.join(panel, array_contains(col("bgs"), col("bg")))
       .groupBy(col("bg"))
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(col("bg"))
   }
 
+  /** d28/d35's shared inputs: every doc's distinct bigram set `bgs`, and
+    * the probe panel — the bigrams ranked [offset, offset + limit) by
+    * corpus frequency (ties by bigram), as offset/limit over a bounded
+    * vocab sort (no global window; PlanSpec's sweep bans those). The
+    * panel's bigram transform feeds the generator inline — see
+    * [[Corpus.ngrams]]. */
+  private def bigramPanel(s: SparkSession, dir: String, offset: Int,
+      limit: Int): (DataFrame, DataFrame) = {
+    def tokenized = Corpus.tokenized(t(s, dir).documentsSpread, 2)
+    val docs = tokenized
+      .select(col("doc_id"), Corpus.distinctNgrams(2).as("bgs"))
+    val panel = tokenized
+      .select(explode(Corpus.ngrams(2)).as("bg"))
+      .groupBy(col("bg")).agg(count(lit(1)).as("c"))
+      .orderBy(col("c").desc, col("bg"))
+      .offset(offset).limit(limit)
+      .select(col("bg"))
+    (docs, panel)
+  }
+
+  /** The oracle twin of [[bigramPanel]]: `bgrams` (every bigram
+    * occurrence), the panel of bigrams ranked (lo, hi] by frequency,
+    * and `dbg`, each doc's distinct bigrams. */
+  private def bigramPanelSql(lo: Int, hi: Int): String =
+    s"""w AS (
+       |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+       |  WHERE len(string_split(text, ' ')) >= 2),
+       |bgrams AS (
+       |  SELECT doc_id, unnest(list_transform(
+       |    generate_series(1, len(toks) - 1),
+       |    i -> concat_ws(' ', toks[i], toks[i+1]))) AS bg
+       |  FROM w),
+       |tf AS (SELECT bg, count(*) AS c FROM bgrams GROUP BY bg),
+       |panel AS (
+       |  SELECT bg FROM (
+       |    SELECT bg, row_number() OVER (ORDER BY c DESC, bg) AS rk
+       |    FROM tf) r
+       |  WHERE rk > $lo AND rk <= $hi),
+       |dbg AS (SELECT DISTINCT doc_id, bg FROM bgrams)""".stripMargin
+
   private val d28Sql =
-    """WITH w AS (
-      |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-      |  WHERE len(string_split(text, ' ')) >= 2),
-      |bgrams AS (
-      |  SELECT doc_id, unnest(list_transform(
-      |    generate_series(1, len(toks) - 1),
-      |    i -> concat_ws(' ', toks[i], toks[i+1]))) AS bg
-      |  FROM w),
-      |tf AS (SELECT bg, count(*) AS c FROM bgrams GROUP BY bg),
-      |panel AS (
-      |  SELECT bg FROM (
-      |    SELECT bg, row_number() OVER (ORDER BY c DESC, bg) AS rk
-      |    FROM tf) r
-      |  WHERE rk > 20 AND rk <= 520),
-      |dbg AS (SELECT DISTINCT doc_id, bg FROM bgrams)
+    s"""WITH ${bigramPanelSql(20, 520)}
       |SELECT p.bg, CAST(count(*) AS BIGINT) AS n_docs
       |FROM dbg d JOIN panel p ON d.bg = p.bg
       |GROUP BY p.bg
@@ -2159,20 +2082,15 @@ object DedupOps {
     * Scale: the left payload crosses the wire once per row, never per
     * gram — the shape that holds when the corpus is 100 TB and the
     * banned list is millions of documents. */
-  /** Shared 3-gram corpus + banned-subset derivation for d29 and its
-    * pure-SQL spelling twin d38 — ONLY the semi-join predicate spelling
-    * may differ between the two gates (that difference IS what d38
-    * certifies, and both hash-match d29Sql verbatim), so the input
-    * derivation lives once here. */
+  /** Shared 3-gram corpus + banned-subset derivation for d29, its
+    * pure-SQL spelling twin d38 and the anti-threshold gate d34 — ONLY
+    * the join predicate may differ between the gates (that difference
+    * IS what d38 certifies, and d29/d38 hash-match d29Sql verbatim), so
+    * the input derivation lives once here. */
   private def triGramBanned(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val grams = t(s, dir).documentsSpread
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), expr(
-        """array_distinct(transform(sequence(0, size(toks) - 3),
-          |  i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))"""
-        .stripMargin).as("grams"))
+    val grams = Corpus.tokenized(t(s, dir).documentsSpread, 3)
+      .select(col("doc_id"), Corpus.distinctNgrams(3).as("grams"))
     val banned = grams.filter(col("doc_id") % 50 === 0)
       .select(col("doc_id").as("b_id"), col("grams").as("banned_grams"))
     (grams, banned)
@@ -2187,14 +2105,7 @@ object DedupOps {
   }
 
   private val d29Sql =
-    """WITH w AS (
-      |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      |g AS (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    generate_series(1, len(toks) - 2),
-      |    i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS grams
-      |  FROM w WHERE len(toks) >= 3),
-      |b AS (SELECT doc_id AS b_id, grams AS bg FROM g WHERE doc_id % 50 = 0)
+    s"""WITH $triGramBannedSql
       |SELECT CAST(g.doc_id AS BIGINT) AS doc_id FROM g
       |WHERE EXISTS (
       |  SELECT 1 FROM b WHERE len(list_intersect(g.grams, b.bg)) > 0)
@@ -2247,14 +2158,7 @@ object DedupOps {
   }
 
   private val d31Sql =
-    """WITH w AS (
-      |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      |shl AS (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    generate_series(1, len(toks) - 3),
-      |    i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3])))
-      |    AS shingles
-      |  FROM w WHERE len(toks) >= 4),
+    s"""WITH $fourGramSql,
       |fl AS (SELECT s AS e, CAST(count(*) AS BIGINT) AS f
       |  FROM (SELECT unnest(shingles) AS s FROM shl WHERE doc_id % 20 = 0)
       |  GROUP BY 1),
@@ -2290,36 +2194,12 @@ object DedupOps {
     * explodes n − c + 1 keys instead of n, and candidate pairs fall
     * roughly quadratically with c — the shape that matters when the
     * threshold is doing the real selectivity work. */
-  private def d32(s: SparkSession, dir: String): DataFrame = {
-    val sh = fourGramShingles(s, dir)
-    val a = sh.filter(col("doc_id") % 20 === 0)
-      .select(col("doc_id").as("a_id"), col("shingles").as("a_sh"))
-    val b = sh.select(col("doc_id").as("b_id"), col("shingles").as("b_sh"))
-    a.join(b, size(array_intersect(col("a_sh"), col("b_sh"))) >= 3
-        && col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        size(array_intersect(col("a_sh"), col("b_sh"))).cast("long")
-          .as("n_shared"))
-      .orderBy(col("a_id"), col("b_id"))
-  }
+  private def d32(s: SparkSession, dir: String): DataFrame =
+    sharedShinglePairs(s, dir)(
+      size(array_intersect(col("a_sh"), col("b_sh"))) >= 3)
 
   private val d32Sql =
-    """WITH w AS (
-      |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      |shl AS (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    generate_series(1, len(toks) - 3),
-      |    i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3])))
-      |    AS shingles
-      |  FROM w WHERE len(toks) >= 4),
-      |l AS (SELECT doc_id AS a_id, unnest(shingles) AS s FROM shl
-      |  WHERE doc_id % 20 = 0),
-      |r AS (SELECT doc_id AS b_id, unnest(shingles) AS s FROM shl)
-      |SELECT a_id, b_id, CAST(count(*) AS BIGINT) AS n_shared
-      |FROM l JOIN r USING (s) WHERE a_id < b_id
-      |GROUP BY a_id, b_id
-      |HAVING count(*) >= 3
-      |ORDER BY a_id, b_id""".stripMargin
+    sharedShinglePairsSql(having = "\nHAVING count(*) >= 3")
 
   /** Strict-Jaccard spelling gate — d02's NAIVE spelling, rescued: the
     * Spark side is the all-pairs theta self-join a user actually
@@ -2335,14 +2215,20 @@ object DedupOps {
     * single-shuffle topology conferred on the naive query — the
     * headline benchmark tracks the rewrite's cost directly against
     * d02's hand-rolled twin on the same relation. */
-  private def d33(s: SparkSession, dir: String): DataFrame = {
+  private def d33(s: SparkSession, dir: String): DataFrame =
+    jaccardPairs(s, dir)(size(array_intersect(col("a_sh"), col("b_sh")))
+      > lit(0.25) * size(array_union(col("a_sh"), col("b_sh"))))
+
+  /** d33/d40's naive all-pairs self-join over 4-gram sets: higher-id
+    * pairs satisfying `pred`, with their 4dp Jaccard. Only `pred`'s
+    * spelling differs between the two gates, which share d33's oracle. */
+  private def jaccardPairs(s: SparkSession, dir: String)(
+      pred: Column): DataFrame = {
     val sh = fourGramShingles(s, dir)
     val a = sh.select(col("doc_id").as("a_id"), col("shingles").as("a_sh"))
     val b = sh.select(col("doc_id").as("b_id"), col("shingles").as("b_sh"))
     val inter = size(array_intersect(col("a_sh"), col("b_sh")))
-    a.join(b, inter > lit(0.25)
-          * size(array_union(col("a_sh"), col("b_sh")))
-        && col("a_id") < col("b_id"))
+    a.join(b, pred && col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
         round(inter.cast("double")
           / (size(col("a_sh")) + size(col("b_sh")) - inter), 4)
@@ -2351,14 +2237,7 @@ object DedupOps {
   }
 
   private val d33Sql =
-    """WITH w AS (
-      |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      |shl AS (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    generate_series(1, len(toks) - 3),
-      |    i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3])))
-      |    AS shingles
-      |  FROM w WHERE len(toks) >= 4),
+    s"""WITH $fourGramSql,
       |sizes AS (SELECT doc_id, len(shingles) AS n FROM shl),
       |pairs AS (
       |  SELECT a_id, b_id, CAST(count(*) AS BIGINT) AS i
@@ -2386,15 +2265,7 @@ object DedupOps {
     * threshold on back-joined rows, and anti-joins the matched rowid
     * set. DuckDB computes the same relation via NOT EXISTS. */
   private def d34(s: SparkSession, dir: String): DataFrame = {
-    val grams = t(s, dir).documentsSpread
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), expr(
-        """array_distinct(transform(sequence(0, size(toks) - 3),
-          |  i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))"""
-        .stripMargin).as("grams"))
-    val banned = grams.filter(col("doc_id") % 50 === 0)
-      .select(col("doc_id").as("b_id"), col("grams").as("banned_grams"))
+    val (grams, banned) = triGramBanned(s, dir)
     grams.join(banned,
         size(array_intersect(col("grams"), col("banned_grams"))) >= 3,
         "left_anti")
@@ -2403,14 +2274,7 @@ object DedupOps {
   }
 
   private val d34Sql =
-    """WITH w AS (
-      |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      |g AS (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    generate_series(1, len(toks) - 2),
-      |    i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS grams
-      |  FROM w WHERE len(toks) >= 3),
-      |b AS (SELECT doc_id AS b_id, grams AS bg FROM g WHERE doc_id % 50 = 0)
+    s"""WITH $triGramBannedSql
       |SELECT CAST(g.doc_id AS BIGINT) AS doc_id FROM g
       |WHERE NOT EXISTS (
       |  SELECT 1 FROM b WHERE len(list_intersect(g.grams, b.bg)) >= 3)
@@ -2428,46 +2292,14 @@ object DedupOps {
     * O(|bigrams|) per document into a hash join. DuckDB computes the
     * same relation via NOT EXISTS over the unnested bigrams. */
   private def d35(s: SparkSession, dir: String): DataFrame = {
-    def tokenized = t(s, dir).documentsSpread
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 2)
-    val docs = tokenized
-      .select(col("doc_id"), expr(
-        """array_distinct(transform(sequence(0, size(toks) - 2),
-          |  i -> concat_ws(' ', toks[i], toks[i+1])))""".stripMargin)
-        .as("bgs"))
-    // inline generator input — same round-8 explode-trap avoidance as
-    // d28's panel (aliased, the bigram transform re-runs serialized in
-    // a pushed-down inferred filter)
-    val panel = tokenized
-      .select(explode(expr(
-        """transform(sequence(0, size(toks) - 2),
-          |  i -> concat_ws(' ', toks[i], toks[i+1]))""".stripMargin)).as("bg"))
-      .groupBy(col("bg")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("bg"))
-      .offset(520).limit(200)
-      .select(col("bg"))
+    val (docs, panel) = bigramPanel(s, dir, offset = 520, limit = 200)
     docs.join(panel, array_contains(col("bgs"), col("bg")), "left_anti")
       .select(col("doc_id"))
       .orderBy(col("doc_id"))
   }
 
   private val d35Sql =
-    """WITH w AS (
-      |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-      |  WHERE len(string_split(text, ' ')) >= 2),
-      |bgrams AS (
-      |  SELECT doc_id, unnest(list_transform(
-      |    generate_series(1, len(toks) - 1),
-      |    i -> concat_ws(' ', toks[i], toks[i+1]))) AS bg
-      |  FROM w),
-      |tf AS (SELECT bg, count(*) AS c FROM bgrams GROUP BY bg),
-      |panel AS (
-      |  SELECT bg FROM (
-      |    SELECT bg, row_number() OVER (ORDER BY c DESC, bg) AS rk
-      |    FROM tf) r
-      |  WHERE rk > 520 AND rk <= 720),
-      |dbg AS (SELECT DISTINCT doc_id, bg FROM bgrams)
+    s"""WITH ${bigramPanelSql(520, 720)}
       |SELECT CAST(d.doc_id AS BIGINT) AS doc_id
       |FROM (SELECT DISTINCT doc_id FROM bgrams) d
       |WHERE NOT EXISTS (
@@ -2551,11 +2383,7 @@ object DedupOps {
     * match certifies witnessed completeness, the per-row ceil prefix
     * bound, AND the empty-branch union in one gate. */
   private def d39(s: SparkSession, dir: String): DataFrame = {
-    val g = t(s, dir).documentsSpread
-      .filter(col("doc_id") < 200)
-      .select(col("doc_id"), expr(
-        "array_distinct(filter(split(text, ' '), t -> length(t) >= 8))")
-        .as("grams"))
+    val g = longTokenSets(s, dir)
     val a = g.select(col("doc_id").as("a_id"), col("grams").as("a_g"))
     val b = g.select(col("doc_id").as("b_id"), col("grams").as("b_g"))
     val inter = size(array_intersect(col("a_g"), col("b_g")))
@@ -2566,11 +2394,24 @@ object DedupOps {
       .orderBy(col("a_id"), col("b_id"))
   }
 
-  private val d39Sql =
-    """WITH g AS (
+  /** d39/d42's relation: the distinct ≥ 8-char tokens of every doc with
+    * doc_id < 200 — an EMPTY set for the ~20% of docs that have none. */
+  private def longTokenSets(s: SparkSession, dir: String): DataFrame =
+    t(s, dir).documentsSpread
+      .filter(col("doc_id") < 200)
+      .select(col("doc_id"), expr(
+        "array_distinct(filter(split(text, ' '), t -> length(t) >= 8))")
+        .as("grams"))
+
+  /** The oracle twin of [[longTokenSets]]: `g(doc_id, grams)`. */
+  private val longTokenSetsSql =
+    """g AS (
       |  SELECT doc_id, list_distinct(list_filter(string_split(text, ' '),
       |    t -> len(t) >= 8)) AS grams
-      |  FROM documents WHERE doc_id < 200)
+      |  FROM documents WHERE doc_id < 200)""".stripMargin
+
+  private val d39Sql =
+    s"""WITH $longTokenSetsSql
       |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
       |  CAST(len(list_intersect(a.grams, b.grams)) AS BIGINT) AS n_inter,
       |  CAST(len(list_distinct(a.grams || b.grams)) AS BIGINT) AS n_union
@@ -2588,20 +2429,9 @@ object DedupOps {
     * with only the predicate spelled via expr() (the SQL parser), so it
     * hash-matches d33Sql verbatim: the gate certifies recognizer +
     * slopped prefix bound + rewrite end-to-end under the driver. */
-  private def d40(s: SparkSession, dir: String): DataFrame = {
-    val sh = fourGramShingles(s, dir)
-    val a = sh.select(col("doc_id").as("a_id"), col("shingles").as("a_sh"))
-    val b = sh.select(col("doc_id").as("b_id"), col("shingles").as("b_sh"))
-    val inter = size(array_intersect(col("a_sh"), col("b_sh")))
-    a.join(b, expr("size(array_intersect(a_sh, b_sh)) " +
-          "> 0.25 * size(array_union(a_sh, b_sh))")
-        && col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        round(inter.cast("double")
-          / (size(col("a_sh")) + size(col("b_sh")) - inter), 4)
-          .as("jaccard"))
-      .orderBy(col("a_id"), col("b_id"))
-  }
+  private def d40(s: SparkSession, dir: String): DataFrame =
+    jaccardPairs(s, dir)(expr("size(array_intersect(a_sh, b_sh)) " +
+      "> 0.25 * size(array_union(a_sh, b_sh))"))
 
   /** Hot-BLOCK pre-flight report over d25's own fingerprint relation —
     * the declared gate for [[SkewTools.hammingJoinPreflight]], d31's
@@ -2667,20 +2497,13 @@ object DedupOps {
     * shares literally; hash-matching rows certify the arithmetic and
     * the diagnosis precedence (empty-empty outranks hot-element). */
   private def d42(s: SparkSession, dir: String): DataFrame = {
-    val g = t(s, dir).documentsSpread
-      .filter(col("doc_id") < 200)
-      .select(col("doc_id"), expr(
-        "array_distinct(filter(split(text, ' '), t -> length(t) >= 8))")
-        .as("grams"))
+    val g = longTokenSets(s, dir)
     SkewTools.overlapJoinPreflight(g, col("grams"), g, col("grams"),
       includeEmptyEmpty = true)
   }
 
   private val d42Sql =
-    """WITH g AS (
-      |  SELECT doc_id, list_distinct(list_filter(string_split(text, ' '),
-      |    t -> len(t) >= 8)) AS grams
-      |  FROM documents WHERE doc_id < 200),
+    s"""WITH $longTokenSetsSql,
       |fq AS (SELECT s AS e, CAST(count(*) AS BIGINT) AS f
       |  FROM (SELECT unnest(grams) AS s FROM g) GROUP BY 1),
       |c AS (SELECT fl.e, CAST(fl.f AS HUGEINT) * fr.f AS contrib
@@ -2727,7 +2550,14 @@ object DedupOps {
     * d44 none — two vacuous gates). At τ=0.5 this keeps 56-87 of 400
     * across sf0.001/0.01/0.1, so BOTH gates have non-trivial
     * complements. DuckDB evaluates the same EXISTS literally. */
-  private def d43(s: SparkSession, dir: String): DataFrame = {
+  private def d43(s: SparkSession, dir: String): DataFrame =
+    orEqualDecontam(s, dir, "left_semi")
+
+  /** d43/d44: the corpus slice (doc_id < 400) semi- or anti-joined
+    * (`joinType`) to the banned slice (doc_id % 9 = 0) on the `>=`
+    * 0.5-Jaccard of their long-trigram sets. */
+  private def orEqualDecontam(s: SparkSession, dir: String,
+      joinType: String): DataFrame = {
     val g = longTrigrams(s, dir)
     val corpus = g.filter(col("doc_id") < 400)
     val banned = g.filter(col("doc_id") % 9 === 0)
@@ -2735,7 +2565,7 @@ object DedupOps {
     corpus.join(banned,
         size(array_intersect(col("grams"), col("b_g")))
           >= lit(0.5) * size(array_union(col("grams"), col("b_g"))),
-        "left_semi")
+        joinType)
       .select(col("doc_id"), size(col("grams")).cast("long").as("n_grams"))
       .orderBy(col("doc_id"))
   }
@@ -2750,8 +2580,7 @@ object DedupOps {
     * [[graft.plans.SetOverlapJoinRewrite]] stands down (line 146),
     * leaving the naive nested-loop plan. */
   private def longTrigrams(s: SparkSession, dir: String): DataFrame =
-    t(s, dir).documentsSpread
-      .withColumn("toks", split(col("text"), " "))
+    Corpus.tokenized(t(s, dir).documentsSpread)
       .select(col("doc_id"), graft.functions.PlanFence.fence(expr(
         """array_distinct(
           |  CASE WHEN size(toks) >= 3 THEN
@@ -2788,18 +2617,8 @@ object DedupOps {
     * SAME matched-rowid set (witnessed ∪ empty-matched) with the back
     * join flipped to anti, so empty corpus rows fall OUT when any empty
     * banned row exists. d43 ∪ d44 partitions the corpus exactly. */
-  private def d44(s: SparkSession, dir: String): DataFrame = {
-    val g = longTrigrams(s, dir)
-    val corpus = g.filter(col("doc_id") < 400)
-    val banned = g.filter(col("doc_id") % 9 === 0)
-      .select(col("doc_id").as("b_id"), col("grams").as("b_g"))
-    corpus.join(banned,
-        size(array_intersect(col("grams"), col("b_g")))
-          >= lit(0.5) * size(array_union(col("grams"), col("b_g"))),
-        "left_anti")
-      .select(col("doc_id"), size(col("grams")).cast("long").as("n_grams"))
-      .orderBy(col("doc_id"))
-  }
+  private def d44(s: SparkSession, dir: String): DataFrame =
+    orEqualDecontam(s, dir, "left_anti")
 
   private val d44Sql =
     s"""$d43Ctes
@@ -2820,17 +2639,24 @@ object DedupOps {
     * decimal-τ slop on the `>=` semi path. Shares d43's oracle
     * VERBATIM — only the spelling differs, which is what this gate
     * certifies (the d37/d38 pattern). */
-  private def d45(s: SparkSession, dir: String): DataFrame = {
+  private def d45(s: SparkSession, dir: String): DataFrame =
+    orEqualSubquery(s, dir, "graft_d45", "EXISTS")
+
+  /** d45/d46: d43/d44's relation spelled as a SQL `[NOT] EXISTS`
+    * subquery (`exists`) over temp views `<view>_corpus` and
+    * `<view>_banned`. */
+  private def orEqualSubquery(s: SparkSession, dir: String, view: String,
+      exists: String): DataFrame = {
     val g = longTrigrams(s, dir)
     g.filter(col("doc_id") < 400)
-      .createOrReplaceTempView("graft_d45_corpus")
+      .createOrReplaceTempView(s"${view}_corpus")
     g.filter(col("doc_id") % 9 === 0)
       .select(col("doc_id").as("b_id"), col("grams").as("b_g"))
-      .createOrReplaceTempView("graft_d45_banned")
+      .createOrReplaceTempView(s"${view}_banned")
     s.sql(
-      """SELECT doc_id, CAST(size(grams) AS BIGINT) AS n_grams
-        |FROM graft_d45_corpus c WHERE EXISTS (
-        |  SELECT 1 FROM graft_d45_banned b
+      s"""SELECT doc_id, CAST(size(grams) AS BIGINT) AS n_grams
+        |FROM ${view}_corpus c WHERE $exists (
+        |  SELECT 1 FROM ${view}_banned b
         |  WHERE size(array_intersect(c.grams, b.b_g))
         |        >= 0.5 * size(array_union(c.grams, b.b_g)))
         |ORDER BY doc_id""".stripMargin)
@@ -2840,21 +2666,8 @@ object DedupOps {
     * (`WHERE NOT EXISTS`), which the late batch plans as the LeftAnti
     * rowid-union topology. Shares d44's oracle verbatim; d45 ∪ d46
     * partitions the corpus exactly, same as d43 ∪ d44. */
-  private def d46(s: SparkSession, dir: String): DataFrame = {
-    val g = longTrigrams(s, dir)
-    g.filter(col("doc_id") < 400)
-      .createOrReplaceTempView("graft_d46_corpus")
-    g.filter(col("doc_id") % 9 === 0)
-      .select(col("doc_id").as("b_id"), col("grams").as("b_g"))
-      .createOrReplaceTempView("graft_d46_banned")
-    s.sql(
-      """SELECT doc_id, CAST(size(grams) AS BIGINT) AS n_grams
-        |FROM graft_d46_corpus c WHERE NOT EXISTS (
-        |  SELECT 1 FROM graft_d46_banned b
-        |  WHERE size(array_intersect(c.grams, b.b_g))
-        |        >= 0.5 * size(array_union(c.grams, b.b_g)))
-        |ORDER BY doc_id""".stripMargin)
-  }
+  private def d46(s: SparkSession, dir: String): DataFrame =
+    orEqualSubquery(s, dir, "graft_d46", "NOT EXISTS")
 
   val defs: Seq[(String, QueryDef)] = Seq(
     "d01_dedup_exact" -> QueryDef(d01, Some(d01Sql)),

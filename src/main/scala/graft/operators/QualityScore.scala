@@ -12,11 +12,8 @@ import org.apache.spark.sql.functions._
   * twins. */
 object QualityScore {
 
-  /** THE tokenize spelling — exposed so a caller sharing one
-    * scan+tokenize subtree across branches (p05) builds `toks` through
-    * the same single source every scorer uses. */
-  def tokenize(df: DataFrame): DataFrame =
-    df.withColumn("toks", split(col("text"), " "))
+  /** [[Corpus.tokenized]] — the tokenizer every scorer uses. */
+  def tokenize(df: DataFrame): DataFrame = Corpus.tokenized(df)
 
   /** Spark side: adds `toks`, `n_tokens`, `n_stop`, and the score column
     * (rounded to 4 dp) to any frame with a `text` column. */
@@ -38,7 +35,7 @@ object QualityScore {
   /** The demo stopword list (both engines' IN-list syntax). */
   val stopList: String = "('the', 'a', 'big', 'small', 'fast', 'slow')"
 
-  /** DuckDB: the token list — MUST keep [[scored]]'s split delimiter
+  /** DuckDB: the token list — MUST keep [[Corpus.tokens]]' delimiter
     * (a fork here silently diverges every SQL twin from the Spark
     * ranking, the exact drift this object exists to prevent). */
   val duckToks: String = "string_split(text, ' ')"

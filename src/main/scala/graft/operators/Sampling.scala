@@ -53,8 +53,7 @@ object Sampling {
     * exploded tokens, partially aggregated map-side). */
   private def x03(s: SparkSession, dir: String): DataFrame = {
     val t = Tables(s, dir)
-    val docs = t.documentsSpread
-      .withColumn("toks", split(col("text"), " "))
+    val docs = Corpus.tokenized(t.documentsSpread)
     val base = docs.agg(
       count(lit(1)).as("n_docs"),
       sum(size(col("toks"))).cast("long").as("n_tokens"),
@@ -88,7 +87,7 @@ object Sampling {
           .otherwise("test"))
       .groupBy(col("split"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(split(col("text"), " "))).cast("long").as("n_tokens"))
+        sum(size(Corpus.tokens())).cast("long").as("n_tokens"))
       .orderBy(col("split"))
   }
 
@@ -247,7 +246,7 @@ object Sampling {
   private def x09(s: SparkSession, dir: String): DataFrame = {
     val spread = Tables(s, dir).documentsSpread
     val docs = spread
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+      .withColumn("n_tokens", size(Corpus.tokens()).cast("long"))
       .select(col("doc_id"), col("n_tokens"))
     // pairs is consumed TWICE (component resolution + the leak proof)
     // and its lineage is the query's dominant cost (per-shingle md5,
@@ -283,15 +282,7 @@ object Sampling {
   private val x09Sql = {
     val b = s"(${StableHash.duckH60("grp")}) % 100"
     s"""WITH RECURSIVE ${DedupOps.minhashPairsCtes},
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT b_id AS src, a_id AS dst FROM pairs),
-       |verts AS (SELECT DISTINCT src AS v FROM edges),
-       |reach(v, r) AS (
-       |  SELECT v, v FROM verts
-       |  UNION
-       |  SELECT w.v, e.dst FROM reach w JOIN edges e ON e.src = w.r),
+       |${DedupOps.componentsSql},
        |comps AS (SELECT v AS doc_id, min(r) AS component FROM reach GROUP BY v),
        |d AS (
        |  SELECT doc_id,
@@ -348,7 +339,7 @@ object Sampling {
     // (the query's dominant cost) ran three times
     val toks = Tables(s, dir).documentsSpread
       .select(col("doc_id"), col("source"),
-        explode(split(col("text"), " ")).as("tok"))
+        explode(Corpus.tokens()).as("tok"))
       .withColumn("hb", StableHash.h60(col("tok")) % dsirBuckets)
       .cache()
     val tgt = toks.filter(col("source") === "src0")
@@ -474,7 +465,7 @@ object Sampling {
     * rows) — no sort, no window, no shuffle of the corpus. */
   private def x12(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir).documentsSpread
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+      .withColumn("n_tokens", size(Corpus.tokens()).cast("long"))
       .withColumn("priority",
         round(StableHash.h32(col("text")).cast("double")
           / col("n_tokens"), 4))
@@ -518,7 +509,7 @@ object Sampling {
       .groupBy(col("fold"))
       .agg(countDistinct(col("source")).as("n_sources"),
         count(lit(1)).as("n_docs"),
-        sum(size(split(col("text"), " "))).cast("long").as("n_tokens"))
+        sum(size(Corpus.tokens())).cast("long").as("n_tokens"))
       .orderBy(col("fold"))
 
   private val x13Sql = {

@@ -37,26 +37,50 @@ object SimilarityOps {
        |     * sqrt(list_sum(list_transform($b, v -> v::DOUBLE * v::DOUBLE)))), 4)"""
       .stripMargin
 
+  /** Normalized corpus view shared by the family: vectors as doubles
+    * plus the precomputed L2 norm. */
+  private[operators] def normEmb(s: SparkSession, dir: String): DataFrame =
+    t(s, dir).embeddingsSpread
+      .withColumn("vd", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
+      .withColumn("nrm",
+        sqrt(dotF64(col("vd"), col("vd"))))
+
+  /** 4dp cosine of vector columns `a`, `b` with precomputed norms `an`,
+    * `bn`: one in-order dot fold per pair. */
+  private[operators] def cosine(a: String, an: String, b: String,
+      bn: String): Column =
+    round(dotF64(col(a), col(b)) / (col(an) * col(bn)), 4)
+
+  /** The fixed query panel (vec_id < 10 → q_id, qv, qn) and candidate
+    * side (vec_id ≥ 10 → c_id, cv, cn) of a [[normEmb]] frame; `q` and
+    * `c` append columns to each side. */
+  private def querySplit(emb: DataFrame, q: Seq[Column] = Nil,
+      c: Seq[Column] = Nil): (DataFrame, DataFrame) =
+    (emb.filter(col("vec_id") < 10).select(Seq(col("vec_id").as("q_id"),
+        col("vd").as("qv"), col("nrm").as("qn")) ++ q: _*),
+      emb.filter(col("vec_id") >= 10).select(Seq(col("vec_id").as("c_id"),
+        col("vd").as("cv"), col("nrm").as("cn")) ++ c: _*))
+
+  /** Per-query top-`k`: ranks each q_id's rows by `score` descending,
+    * ties to the lower `cand` id, into `rk` (BIGINT when `long`), and
+    * keeps rk ≤ k (rk = 1 when k is 1). */
+  private def topK(scored: DataFrame, k: Int, score: String = "cos_sim",
+      rk: String = "rk", cand: String = "c_id",
+      long: Boolean = true): DataFrame = {
+    val n = row_number().over(Window.partitionBy(col("q_id"))
+      .orderBy(col(score).desc, col(cand)))
+    scored.withColumn(rk, if (long) n.cast("long") else n)
+      .filter(if (k == 1) col(rk) === 1 else col(rk) <= k)
+  }
+
   /** Brute-force cosine top-3: query set = vec_id < 10 (broadcast),
     * candidates = the rest. Norms precomputed per vector (once, not per
     * pair): the pair stage pays a single dot fold. */
   private def s01(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir).embeddingsSpread
-      .withColumn("vd", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm",
-        sqrt(dotF64(col("vd"), col("vd"))))
-    val q = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("vd").as("qv"), col("nrm").as("qn"))
-    val c = emb.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("c_id"), col("vd").as("cv"), col("nrm").as("cn"))
+    val (q, c) = querySplit(normEmb(s, dir))
     val scored = broadcast(q).join(c, lit(true))
-      .withColumn("cos_sim", round(
-        dotF64(col("qv"), col("cv"))
-          / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
+      .withColumn("cos_sim", cosine("qv", "qn", "cv", "cn"))
+    topK(scored, 3)
       .select(col("q_id"), col("rk"), col("c_id").as("neighbor_id"),
         col("cos_sim"))
       .orderBy(col("q_id"), col("rk"))
@@ -87,9 +111,7 @@ object SimilarityOps {
     * join back. */
   private[operators] def embWithBuckets(s: SparkSession,
       dir: String): DataFrame =
-    t(s, dir).embeddingsSpread
-      .withColumn("vd", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", sqrt(dotF64(col("vd"), col("vd"))))
+    normEmb(s, dir)
       .withColumn("bucket", HyperplaneBucket.bucket8(col("vd")))
       .select(col("vec_id"), col("vd"), col("nrm"), col("bucket"))
 
@@ -122,21 +144,11 @@ object SimilarityOps {
   /** LSH-bucketed ANN over [[embWithBuckets]]: top-1 neighbor within
     * bucket. Sub-quadratic: the candidate join is an equi-join on bucket. */
   private def s02(s: SparkSession, dir: String): DataFrame = {
-    val emb = embWithBuckets(s, dir)
-    val q = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("vd").as("qv"),
-        col("nrm").as("qn"), col("bucket"))
-    val c = emb.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("c_id"), col("vd").as("cv"),
-        col("nrm").as("cn"), col("bucket"))
+    val (q, c) = querySplit(embWithBuckets(s, dir), Seq(col("bucket")),
+      Seq(col("bucket")))
     val scored = q.join(c, "bucket")
-      .withColumn("cos_sim", round(
-        dotF64(col("qv"), col("cv"))
-          / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") === 1)
+      .withColumn("cos_sim", cosine("qv", "qn", "cv", "cn"))
+    topK(scored, 1)
       .select(col("q_id"), col("bucket"), col("c_id").as("neighbor_id"),
         col("cos_sim"))
       .orderBy(col("q_id"))
@@ -185,18 +197,6 @@ object SimilarityOps {
     * codegen'd; the probe join is an equi-join on cell id. Cosines rounded
     * to 4dp before the argmax/rank so both engines break ties identically
     * (on centroid id / neighbor id). */
-  /** (assigned, probes): one-cell assignment for every vector / the
-    * nprobe probe cells per vector, against the fixed-[[ivfK]]
-    * hash-sampled centroid set — shared by s03 (full-precision ranking)
-    * and s07 (IVF-PQ: same cells, PQ-compressed candidates). */
-  /** Normalized corpus view shared by the IVF family: vectors as doubles
-    * plus the precomputed L2 norm. */
-  private def normEmb(s: SparkSession, dir: String): DataFrame =
-    t(s, dir).embeddingsSpread
-      .withColumn("vd", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm",
-        sqrt(dotF64(col("vd"), col("vd"))))
-
   /** The deterministic fixed-[[ivfK]] coarse quantizer (hash-sampled
     * centroid set) — shared by [[ivfCells]] and s18's persisted index
     * build. */
@@ -207,14 +207,16 @@ object SimilarityOps {
       .select(col("vec_id").as("cent_id"), col("vd").as("cv"),
         col("nrm").as("cn"))
 
+  /** (assigned, probes): one-cell assignment for every vector / the
+    * nprobe probe cells per vector, against the fixed-[[ivfK]]
+    * hash-sampled centroid set — shared by s03 (full-precision ranking)
+    * and s07 (IVF-PQ: same cells, PQ-compressed candidates). */
   private def ivfCells(s: SparkSession, dir: String,
       nprobe: Int = ivfNprobe): (DataFrame, DataFrame) = {
     val emb = normEmb(s, dir)
     val cents = ivfCentroids(emb)
     val scored = emb.join(broadcast(cents), lit(true))
-      .withColumn("cc", round(
-        dotF64(col("vd"), col("cv"))
-          / (col("nrm") * col("cn")), 4))
+      .withColumn("cc", cosine("vd", "nrm", "cv", "cn"))
     // corpus assignment (rank 1 only): min_by on the (−cc, cent_id) struct
     // partial-aggregates map-side, so the shuffle carries one row per
     // vector instead of one per (vector, centroid). The window form stays
@@ -243,20 +245,18 @@ object SimilarityOps {
       .select(col("vec_id").as("c_id"), col("vd").as("cv2"),
         col("nrm").as("cn2"), col("cell"))
     val scored = q.join(c, "cell")
-      .withColumn("cos_sim", round(
-        dotF64(col("qv"), col("cv2"))
-          / (col("qn") * col("cn2")), 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
+      .withColumn("cos_sim", cosine("qv", "qn", "cv2", "cn2"))
+    topK(scored, 3)
       .select(col("q_id"), col("cell"), col("rk"),
         col("c_id").as("neighbor_id"), col("cos_sim"))
       .orderBy(col("q_id"), col("rk"))
   }
 
-  private val s03Sql =
-    s"""WITH nv AS (
+  /** DuckDB IVF front shared by s03/s14: `nv` (raw embedding + norm),
+    * the hash-sampled `cents`, every vector's centroids ranked by 4dp
+    * cosine (`ranked_assign`) and its rank-1 cell (`assigned`). */
+  private val ivfAssignSql =
+    s"""nv AS (
        |  SELECT vec_id, embedding,
        |    sqrt(list_sum(list_transform(embedding, v -> v::DOUBLE * v::DOUBLE)))
        |      AS nrm
@@ -276,7 +276,11 @@ object SimilarityOps {
        |               * c.cemb[CAST(i AS INT)]::DOUBLE))
        |        / (n.nrm * c.cn), 4) DESC, c.cent_id) AS ark
        |  FROM nv n, cents c),
-       |assigned AS (SELECT vec_id, cell FROM ranked_assign WHERE ark = 1),
+       |assigned AS (SELECT vec_id, cell FROM ranked_assign WHERE ark = 1)"""
+      .stripMargin
+
+  private val s03Sql =
+    s"""WITH $ivfAssignSql,
        |probes AS (SELECT vec_id, cell FROM ranked_assign
        |           WHERE ark <= $ivfNprobe),
        |scored AS (
@@ -372,9 +376,7 @@ object SimilarityOps {
     * s05 (the declared clustering query) and DedupOps.d10 (SemDeDup:
     * within-cluster cosine near-dup). */
   private[operators] def kmeansAssignments(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir).embeddingsSpread
-      .withColumn("vd", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", sqrt(dotF64(col("vd"), col("vd"))))
+    val emb = normEmb(s, dir)
       .select(col("vec_id"), col("vd"), col("nrm"))
       .cache()
     val cents0 = emb
@@ -425,6 +427,14 @@ object SimilarityOps {
         col("cc").as("cos_to_centroid"))
       .orderBy(col("vec_id"))
 
+  /** DuckDB `nv(vec_id, vd, nrm)`: the oracle twin of [[normEmb]]. */
+  private val nvSql =
+    """nv AS (
+      |  SELECT vec_id, list_transform(embedding, v -> v::DOUBLE) AS vd,
+      |    sqrt(list_sum(list_transform(embedding, v -> v::DOUBLE * v::DOUBLE)))
+      |      AS nrm
+      |  FROM embeddings)""".stripMargin
+
   /** DuckDB CTE chain ending at `a2` = the final (vec_id, vd, nrm, cid, cc)
     * assignment — shared by the s05 and d10 oracle twins. */
   private[operators] val kmeansCtes = {
@@ -453,11 +463,7 @@ object SimilarityOps {
          |  FROM (SELECT cid, list(m ORDER BY d) AS cv FROM ${out}m
          |        GROUP BY cid) g)"""
         .stripMargin
-    s"""nv AS (
-       |  SELECT vec_id, list_transform(embedding, v -> v::DOUBLE) AS vd,
-       |    sqrt(list_sum(list_transform(embedding, v -> v::DOUBLE * v::DOUBLE)))
-       |      AS nrm
-       |  FROM embeddings),
+    s"""$nvSql,
        |c0 AS (
        |  SELECT vec_id AS cid, vd AS cv, nrm AS cn FROM nv
        |  ORDER BY ${StableHash.duckH60("vec_id")}, vec_id LIMIT $kmeansK),
@@ -558,28 +564,22 @@ object SimilarityOps {
       .withColumn("qn", sqrt(dotF64(col("vd"), col("vd"))))
       .select(col("vec_id").as("q_id"), col("vd").as("qv"), col("qn"))
     val scored = broadcast(q).join(decoded, lit(true))
-      .withColumn("adc_cos", round(
-        dotF64(col("qv"), col("rv")) / (col("qn") * col("rn")), 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_cos").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
+      .withColumn("adc_cos", cosine("qv", "qn", "rv", "rn"))
+    topK(scored, 3, score = "adc_cos", cand = "vec_id")
       .select(col("q_id"), col("rk"), col("vec_id").as("neighbor_id"),
         col("adc_cos"))
       .orderBy(col("q_id"), col("rk"))
   }
 
-  private val s06Sql = {
+  /** DuckDB PQ chain over `nv(vec_id, vd)`: hash-sampled `seeds`, the
+    * `codebook`, every candidate's argmin-L2 `enc`oding and its decoded
+    * reconstruction `decn(vec_id, rv, rn)` — the oracle twin of
+    * [[pqDecoded]], shared by s06 and the IVF-PQ chain. */
+  private val pqDecodeSql = {
     def dot8(a: String, b: String): String =
       s"""list_sum(list_transform(range(1, ${pqDsub + 1}),
          |      i -> $a[CAST(i AS INT)] * $b[CAST(i AS INT)]))""".stripMargin
-    val dot64 = """list_sum(list_transform(range(1, 65),
-                  |      i -> q.vd[CAST(i AS INT)] * d.rv[CAST(i AS INT)]))"""
-      .stripMargin
-    s"""WITH nv AS (
-       |  SELECT vec_id, list_transform(embedding, v -> v::DOUBLE) AS vd
-       |  FROM embeddings),
-       |seeds AS (
+    s"""seeds AS (
        |  SELECT vec_id AS code, vd FROM nv
        |  ORDER BY ${StableHash.duckH60("vec_id")}, vec_id LIMIT $pqKs),
        |codebook AS (
@@ -609,7 +609,17 @@ object SimilarityOps {
        |decn AS (
        |  SELECT vec_id, rv,
        |    sqrt(list_sum(list_transform(rv, x -> x * x))) AS rn
-       |  FROM dec),
+       |  FROM dec)""".stripMargin
+  }
+
+  private val s06Sql = {
+    val dot64 = """list_sum(list_transform(range(1, 65),
+                  |      i -> q.vd[CAST(i AS INT)] * d.rv[CAST(i AS INT)]))"""
+      .stripMargin
+    s"""WITH nv AS (
+       |  SELECT vec_id, list_transform(embedding, v -> v::DOUBLE) AS vd
+       |  FROM embeddings),
+       |$pqDecodeSql,
        |scored AS (
        |  SELECT q.vec_id AS q_id, d.vec_id AS neighbor_id,
        |    round(($dot64)
@@ -638,7 +648,16 @@ object SimilarityOps {
     * constant-size broadcasts at any corpus scale, and the probe join is
     * an equi-join on the cell id — nothing in the plan grows faster than
     * the corpus itself. */
-  private def s07(s: SparkSession, dir: String): DataFrame = {
+  private def s07(s: SparkSession, dir: String): DataFrame =
+    topK(ivfPqScored(s, dir), 3, score = "adc_cos")
+      .select(col("q_id"), col("cell"), col("rk"),
+        col("c_id").as("neighbor_id"), col("adc_cos"))
+      .orderBy(col("q_id"), col("rk"))
+
+  /** s07/s09's ADC candidates: each query (vec_id 1-9) joined to the PQ
+    * reconstructions of the candidates in its probed cells, scored
+    * full-precision query vs reconstruction (`adc_cos`). */
+  private def ivfPqScored(s: SparkSession, dir: String): DataFrame = {
     val (assigned, probes) = ivfCells(s, dir)
     val decoded = pqDecoded(s, dir)
     val q = probes.filter(col("vec_id").between(1, 9))
@@ -647,30 +666,15 @@ object SimilarityOps {
     val c = assigned.filter(col("vec_id") >= 10)
       .select(col("vec_id").as("c_id"), col("cell"))
       .join(decoded.withColumnRenamed("vec_id", "c_id"), "c_id")
-    val scored = q.join(c, "cell")
-      .withColumn("adc_cos", round(
-        dotF64(col("qv"), col("rv")) / (col("qn") * col("rn")), 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_cos").desc, col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
-      .select(col("q_id"), col("cell"), col("rk"),
-        col("c_id").as("neighbor_id"), col("adc_cos"))
-      .orderBy(col("q_id"), col("rk"))
+    q.join(c, "cell")
+      .withColumn("adc_cos", cosine("qv", "qn", "rv", "rn"))
   }
 
   /** Shared CTE chain for the IVF-PQ queries (s07/s09): normalized vectors →
     * sampled centroids → cell assignment/probes → PQ codebook/encode/decode →
     * ADC-scored candidates → per-query ADC rank (`ranked`). */
   private val ivfPqCoreSql = {
-    def dot8(a: String, b: String): String =
-      s"""list_sum(list_transform(range(1, ${pqDsub + 1}),
-         |      i -> $a[CAST(i AS INT)] * $b[CAST(i AS INT)]))""".stripMargin
-    s"""WITH nv AS (
-       |  SELECT vec_id, list_transform(embedding, v -> v::DOUBLE) AS vd,
-       |    sqrt(list_sum(list_transform(embedding, v -> v::DOUBLE * v::DOUBLE)))
-       |      AS nrm
-       |  FROM embeddings),
+    s"""WITH $nvSql,
        |cents AS (
        |  SELECT vec_id AS cent_id, vd AS cv, nrm AS cn FROM (
        |    SELECT vec_id, vd, nrm,
@@ -688,37 +692,7 @@ object SimilarityOps {
        |assigned AS (SELECT vec_id, cell FROM ranked_assign WHERE ark = 1),
        |probes AS (SELECT vec_id, cell FROM ranked_assign
        |           WHERE ark <= $ivfNprobe),
-       |seeds AS (
-       |  SELECT vec_id AS code, vd FROM nv
-       |  ORDER BY ${StableHash.duckH60("vec_id")}, vec_id LIMIT $pqKs),
-       |codebook AS (
-       |  SELECT code, s AS sub,
-       |    list_transform(range(1, ${pqDsub + 1}),
-       |      i -> vd[CAST(s * $pqDsub + i AS INT)]) AS cw
-       |  FROM seeds, (SELECT unnest(range($pqM)) AS s) subs),
-       |subvecs AS (
-       |  SELECT vec_id, s AS sub,
-       |    list_transform(range(1, ${pqDsub + 1}),
-       |      i -> vd[CAST(s * $pqDsub + i AS INT)]) AS sv
-       |  FROM nv, (SELECT unnest(range($pqM)) AS s) subs
-       |  WHERE vec_id >= 10),
-       |enc AS (
-       |  SELECT vec_id, sub, code FROM (
-       |    SELECT v.vec_id, v.sub, c.code,
-       |      row_number() OVER (PARTITION BY v.vec_id, v.sub ORDER BY
-       |        round(${dot8("sv", "sv")}
-       |          - 2 * ${dot8("sv", "cw")}
-       |          + ${dot8("cw", "cw")}, 4), c.code) AS rk
-       |    FROM subvecs v JOIN codebook c ON c.sub = v.sub) t
-       |  WHERE rk = 1),
-       |dec AS (
-       |  SELECT vec_id, flatten(list(cw ORDER BY sub)) AS rv
-       |  FROM enc JOIN codebook USING (sub, code)
-       |  GROUP BY vec_id),
-       |decn AS (
-       |  SELECT vec_id, rv,
-       |    sqrt(list_sum(list_transform(rv, x -> x * x))) AS rn
-       |  FROM dec),
+       |$pqDecodeSql,
        |scored AS (
        |  SELECT q.vec_id AS q_id, qa.cell AS cell, d.vec_id AS neighbor_id,
        |    round(list_sum(list_transform(range(1, 65),
@@ -757,42 +731,22 @@ object SimilarityOps {
     * join against the vector store, never a scan). Re-rank cost is
     * O(Q·10·d) flops regardless of corpus size. */
   private def s09(s: SparkSession, dir: String): DataFrame = {
-    val (assigned, probes) = ivfCells(s, dir)
-    val decoded = pqDecoded(s, dir)
-    val q = probes.filter(col("vec_id").between(1, 9))
-      .select(col("vec_id").as("q_id"), col("vd").as("qv"),
-        col("nrm").as("qn"), col("cell"))
-    val c = assigned.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("c_id"), col("cell"))
-      .join(decoded.withColumnRenamed("vec_id", "c_id"), "c_id")
-    val scored = q.join(c, "cell")
-      .withColumn("adc_cos", round(
-        dotF64(col("qv"), col("rv")) / (col("qn") * col("rn")), 4))
-    val wAdc = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_cos").desc, col("c_id"))
     // shortlist travels without any vector payload
-    val cand = scored.withColumn("crk", row_number().over(wAdc))
-      .filter(col("crk") <= 10)
+    val cand = topK(ivfPqScored(s, dir), 10, score = "adc_cos", rk = "crk",
+      long = false)
       .select(col("q_id"), col("c_id"), col("adc_cos"))
     // fetch raw vectors for the shortlist only (point-lookup joins) —
     // straight from the embedding table: re-reading via `assigned` would
     // re-run the whole IVF assignment pipeline just to project columns
     // the scan already has
-    val raw = t(s, dir).embeddingsSpread
-      .withColumn("vd", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", sqrt(dotF64(col("vd"), col("vd"))))
-      .select(col("vec_id"), col("vd"), col("nrm"))
+    val raw = normEmb(s, dir).select(col("vec_id"), col("vd"), col("nrm"))
     val rr = cand
       .join(raw.select(col("vec_id").as("q_id"), col("vd").as("qv"),
         col("nrm").as("qn")), "q_id")
       .join(raw.select(col("vec_id").as("c_id"), col("vd").as("cv"),
         col("nrm").as("cn")), "c_id")
-      .withColumn("exact_cos", round(
-        dotF64(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
-    val wEx = Window.partitionBy(col("q_id"))
-      .orderBy(col("exact_cos").desc, col("c_id"))
-    rr.withColumn("rk", row_number().over(wEx).cast("long"))
-      .filter(col("rk") <= 3)
+      .withColumn("exact_cos", cosine("qv", "qn", "cv", "cn"))
+    topK(rr, 3, score = "exact_cos")
       .select(col("q_id"), col("rk"), col("c_id").as("neighbor_id"),
         col("adc_cos"), col("exact_cos"))
       .orderBy(col("q_id"), col("rk"))
@@ -834,20 +788,11 @@ object SimilarityOps {
     * the panel's ≤Q·k (query, neighbor) pairs against the per-vector
     * bucket projection — both sides keyed by vec_id, nothing quadratic. */
   private def s08(s: SparkSession, dir: String): DataFrame = {
-    val emb = embWithBuckets(s, dir)
-    val q = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("vd").as("qv"),
-        col("nrm").as("qn"), col("bucket").as("q_bucket"))
-    val c = emb.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("c_id"), col("vd").as("cv"),
-        col("nrm").as("cn"), col("bucket").as("c_bucket"))
+    val (q, c) = querySplit(embWithBuckets(s, dir),
+      Seq(col("bucket").as("q_bucket")), Seq(col("bucket").as("c_bucket")))
     val scored = broadcast(q.drop("q_bucket")).join(c, lit(true))
-      .withColumn("cos_sim", round(
-        dotF64(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    val gt = scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
+      .withColumn("cos_sim", cosine("qv", "qn", "cv", "cn"))
+    val gt = topK(scored, 3, long = false)
       .select(col("q_id"), col("c_id"))
     gt.join(q.select(col("q_id"), col("q_bucket")), "q_id")
       .join(c.select(col("c_id"), col("c_bucket")), "c_id")
@@ -898,9 +843,7 @@ object SimilarityOps {
     * cells per label-slice, or append the label to the cell id. Range
     * constraints use q50's binning instead. */
   private def s10(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir).embeddingsSpread
-      .withColumn("vd", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", sqrt(dotF64(col("vd"), col("vd"))))
+    val emb = normEmb(s, dir)
     val q = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("vd").as("qv"), col("nrm").as("qn"))
@@ -908,12 +851,8 @@ object SimilarityOps {
       .select(col("vec_id").as("c_id"), col("label").as("c_label"),
         col("vd").as("cv"), col("nrm").as("cn"))
     val scored = broadcast(q).join(c, col("q_label") === col("c_label"))
-      .withColumn("cos_sim", round(
-        dotF64(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
+      .withColumn("cos_sim", cosine("qv", "qn", "cv", "cn"))
+    topK(scored, 3)
       .select(col("q_id"), col("q_label").cast("long").as("label"),
         col("rk"), col("c_id").as("neighbor_id"), col("cos_sim"))
       .orderBy(col("q_id"), col("rk"))
@@ -953,9 +892,7 @@ object SimilarityOps {
     * Reference anchor: ziggurat has no similarity surface (SURVEY §2.6);
     * this is north-star extension work alongside s01-s10. */
   private def s11(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir).embeddingsSpread
-      .withColumn("vd", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", sqrt(dotF64(col("vd"), col("vd"))))
+    val emb = normEmb(s, dir)
       .withColumn("code_lo", expr(
         """aggregate(sequence(0, 31), 0L,
           |  (acc, i) -> IF(vd[i] > 0D, acc | shiftleft(1L, i), acc))"""
@@ -978,22 +915,25 @@ object SimilarityOps {
       .withColumn("hrk", row_number().over(wh))
       .filter(col("hrk") <= 12)
       .select(col("q_id"), col("c_id"), col("hamming"))
-    val vecs = emb.select(col("vec_id"), col("vd"), col("nrm"))
-    val cands = vecs.join(broadcast(shortlist), col("vec_id") === col("c_id"))
-      .select(col("q_id"), col("c_id"), col("hamming"),
-        col("vd").as("cv"), col("nrm").as("cn"))
-    val qv = vecs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("jq"), col("vd").as("qv"), col("nrm").as("qn"))
-    val w2 = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    cands.join(broadcast(qv), col("q_id") === col("jq"))
-      .withColumn("cos_sim", round(
-        dotF64(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
-      .withColumn("rk", row_number().over(w2).cast("long"))
-      .filter(col("rk") <= 3)
+    exactRerank(emb, shortlist, Seq(col("hamming")))
       .select(col("q_id"), col("rk"), col("c_id").as("neighbor_id"),
         col("hamming"), col("cos_sim"))
       .orderBy(col("q_id"), col("rk"))
+  }
+
+  /** s11/s12's rerank: the (q_id, c_id, `keep`...) shortlist joined back
+    * to the full vectors of both sides (broadcast probes — the shortlist
+    * is Q·R rows), exact cosine top-3 per query. */
+  private def exactRerank(emb: DataFrame, shortlist: DataFrame,
+      keep: Seq[Column]): DataFrame = {
+    val vecs = emb.select(col("vec_id"), col("vd"), col("nrm"))
+    val cands = vecs.join(broadcast(shortlist), col("vec_id") === col("c_id"))
+      .select(Seq(col("q_id"), col("c_id")) ++ keep ++
+        Seq(col("vd").as("cv"), col("nrm").as("cn")): _*)
+    val qv = vecs.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("jq"), col("vd").as("qv"), col("nrm").as("qn"))
+    topK(cands.join(broadcast(qv), col("q_id") === col("jq"))
+      .withColumn("cos_sim", cosine("qv", "qn", "cv", "cn")), 3)
   }
 
   private val s11Sql =
@@ -1051,9 +991,7 @@ object SimilarityOps {
     * ordering uses the same in-array-order fold on both engines, so the
     * shortlist is deterministic without rounding. */
   private def s12(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir).embeddingsSpread
-      .withColumn("vd", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", sqrt(dotF64(col("vd"), col("vd"))))
+    val emb = normEmb(s, dir)
       .withColumn("pv", expr("slice(vd, 1, 16)"))
       .withColumn("pn", sqrt(dotF64(col("pv"), col("pv"))))
     val q = emb.filter(col("vec_id") < 10)
@@ -1062,27 +1000,12 @@ object SimilarityOps {
     val c = emb.filter(col("vec_id") >= 10)
       .select(col("vec_id").as("c_id"), col("pv").as("cpv"),
         col("pn").as("cpn"))
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcos").desc, col("c_id"))
-    val shortlist = broadcast(q).join(c, lit(true))
+    val shortlist = topK(broadcast(q).join(c, lit(true))
       .withColumn("pcos",
-        dotF64(col("qpv"), col("cpv")) / (col("qpn") * col("cpn")))
-      .withColumn("prk", row_number().over(wp))
-      .filter(col("prk") <= 12)
+        dotF64(col("qpv"), col("cpv")) / (col("qpn") * col("cpn"))),
+      12, score = "pcos", rk = "prk", long = false)
       .select(col("q_id"), col("c_id"))
-    val vecs = emb.select(col("vec_id"), col("vd"), col("nrm"))
-    val cands = vecs.join(broadcast(shortlist), col("vec_id") === col("c_id"))
-      .select(col("q_id"), col("c_id"), col("vd").as("cv"),
-        col("nrm").as("cn"))
-    val qv = vecs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("jq"), col("vd").as("qv"), col("nrm").as("qn"))
-    val w2 = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    cands.join(broadcast(qv), col("q_id") === col("jq"))
-      .withColumn("cos_sim", round(
-        dotF64(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
-      .withColumn("rk", row_number().over(w2).cast("long"))
-      .filter(col("rk") <= 3)
+    exactRerank(emb, shortlist, Nil)
       .select(col("q_id"), col("rk"), col("c_id").as("neighbor_id"),
         col("cos_sim"))
       .orderBy(col("q_id"), col("rk"))
@@ -1140,28 +1063,17 @@ object SimilarityOps {
     * ≤Q·k frames on (q_id, c_id). All tie-breaks on candidate id, counts
     * exact, one round(4) at the end — hash-gate safe. */
   private def s13(s: SparkSession, dir: String): DataFrame = {
-    val emb = embWithBuckets(s, dir)
-    val q = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("vd").as("qv"),
-        col("nrm").as("qn"), col("bucket"))
-    val c = emb.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("c_id"), col("vd").as("cv"),
-        col("nrm").as("cn"), col("bucket").as("c_bucket"))
-    def cos = round(dotF64(col("qv"), col("cv")) / (col("qn") * col("cn")), 4)
+    val (q, c) = querySplit(embWithBuckets(s, dir), Seq(col("bucket")),
+      Seq(col("bucket").as("c_bucket")))
+    def cos = cosine("qv", "qn", "cv", "cn")
     // ground truth: exact top-3 over the full candidate set → graded rel
-    val wAll = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    val gt = broadcast(q.drop("bucket")).join(c, lit(true))
-      .withColumn("cos_sim", cos)
-      .withColumn("trk", row_number().over(wAll))
-      .filter(col("trk") <= 3)
+    val gt = topK(broadcast(q.drop("bucket")).join(c, lit(true))
+      .withColumn("cos_sim", cos), 3, rk = "trk", long = false)
       .select(col("q_id"), col("c_id"), (lit(4) - col("trk")).cast("double")
         .as("rel"))
     // retrieved: bucket-restricted top-3 (s02's candidate generation)
-    val retrieved = q.join(c, col("bucket") === col("c_bucket"))
-      .withColumn("cos_sim", cos)
-      .withColumn("rk", row_number().over(wAll))
-      .filter(col("rk") <= 3)
+    val retrieved = topK(q.join(c, col("bucket") === col("c_bucket"))
+      .withColumn("cos_sim", cos), 3, long = false)
       .select(col("q_id"), col("c_id"), col("rk"))
     val idcg = lit(3.0) / log2(lit(2.0)) + lit(2.0) / log2(lit(3.0)) +
       lit(1.0) / log2(lit(4.0))
@@ -1243,22 +1155,16 @@ object SimilarityOps {
       .groupBy(col("q_id"), col("c_id"))
       .agg(min(col("ark")).as("min_ark"))
       .cache()
-    val emb = t(s, dir).embeddingsSpread
-      .withColumn("vd", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", sqrt(dotF64(col("vd"), col("vd"))))
+    val emb = normEmb(s, dir)
     val qv = emb.filter(col("vec_id").between(1, 9))
       .select(col("vec_id").as("q_id"), col("vd").as("qv"),
         col("nrm").as("qn"))
     val cv = emb.filter(col("vec_id") >= 10)
       .select(col("vec_id").as("c_id"), col("vd").as("cv"),
         col("nrm").as("cn"))
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    val gt = broadcast(qv).join(cv, lit(true))
-      .withColumn("cos_sim", round(
-        dotF64(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
-      .withColumn("trk", row_number().over(wq))
-      .filter(col("trk") <= 3)
+    val gt = topK(broadcast(qv).join(cv, lit(true))
+      .withColumn("cos_sim", cosine("qv", "qn", "cv", "cn")), 3, rk = "trk",
+      long = false)
       .select(col("q_id"), col("c_id"))
     val gtArk = gt.join(cand, Seq("q_id", "c_id"), "left")
     val levels = s.range(0, 3)
@@ -1275,27 +1181,7 @@ object SimilarityOps {
   }
 
   private val s14Sql =
-    s"""WITH nv AS (
-       |  SELECT vec_id, embedding,
-       |    sqrt(list_sum(list_transform(embedding, v -> v::DOUBLE * v::DOUBLE)))
-       |      AS nrm
-       |  FROM embeddings),
-       |cents AS (
-       |  SELECT vec_id AS cent_id, embedding AS cemb, nrm AS cn FROM (
-       |    SELECT vec_id, embedding, nrm,
-       |      row_number() OVER (ORDER BY
-       |        ${StableHash.duckH60("vec_id")}, vec_id) AS hrk
-       |    FROM nv) h
-       |  WHERE hrk <= $ivfK),
-       |ranked_assign AS (
-       |  SELECT n.vec_id, c.cent_id AS cell,
-       |    row_number() OVER (PARTITION BY n.vec_id ORDER BY
-       |      round(list_sum(list_transform(range(1, 65),
-       |          i -> n.embedding[CAST(i AS INT)]::DOUBLE
-       |               * c.cemb[CAST(i AS INT)]::DOUBLE))
-       |        / (n.nrm * c.cn), 4) DESC, c.cent_id) AS ark
-       |  FROM nv n, cents c),
-       |assigned AS (SELECT vec_id, cell FROM ranked_assign WHERE ark = 1),
+    s"""WITH $ivfAssignSql,
        |probes AS (SELECT vec_id, cell, ark FROM ranked_assign WHERE ark <= 4),
        |cand AS (
        |  SELECT p.vec_id AS q_id, a.vec_id AS c_id,
@@ -1356,12 +1242,8 @@ object SimilarityOps {
       .select(col("vec_id").as("c_id"), col("vd").as("cv"),
         col("nrm").as("cn"), col("bucket").as("pb"))
     val scored = probes.join(c, "pb")
-      .withColumn("cos_sim", round(
-        dotF64(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
+      .withColumn("cos_sim", cosine("qv", "qn", "cv", "cn"))
+    topK(scored, 3)
       .select(col("q_id"), col("rk"), col("c_id").as("neighbor_id"),
         col("f").cast("long").as("probe_bit"), col("cos_sim"))
       .orderBy(col("q_id"), col("rk"))
@@ -1416,14 +1298,9 @@ object SimilarityOps {
     val corpusVecs = emb.filter(col("vec_id") % 5 =!= 0)
       .select(col("vec_id").as("c_id"), col("vd").as("cv"),
         col("nrm").as("cn"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    batch.join(corpusIndex, "bucket")
+    topK(batch.join(corpusIndex, "bucket")
       .join(corpusVecs, "c_id")
-      .withColumn("cos_sim", round(
-        dotF64(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") === 1)
+      .withColumn("cos_sim", cosine("qv", "qn", "cv", "cn")), 1)
       .select(col("q_id"), col("c_id").as("nearest_indexed"), col("cos_sim"))
       .orderBy(col("q_id"))
   }
@@ -1468,32 +1345,20 @@ object SimilarityOps {
     * shortlist×shortlist pairs per query (≤64 rows here) — per-query
     * constant, embarrassingly parallel, independent of corpus size. */
   private def s17(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir).embeddingsSpread
-      .withColumn("vd", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", sqrt(dotF64(col("vd"), col("vd"))))
-    val q = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("vd").as("qv"),
-        col("nrm").as("qn"))
-    val c = emb.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("c_id"), col("vd").as("cv"),
-        col("nrm").as("cn"))
+    val (q, c) = querySplit(normEmb(s, dir))
     // rank by the INTEGER basis points (not the rounded double, not the
     // raw cosine) so shortlist order is bit-exact against the oracle,
     // which ranks by the same integer — the discipline the later MMR
-    // stages already use
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("simq_bp").desc, col("c_id"))
+    // stages already use.
     // cached: the Q·8-row shortlist feeds FIVE consumers below (both
     // pairs sides, p1, c2k, c3) and plan-internal subtree reuse does
     // not exist in Spark — un-cached, the O(Q·C·d) broadcast scoring
     // pass re-ran once per consumer (measured 2.7 s -> 1.0 s at sf0.1;
     // the d11/d21/d15/d20 fix class)
-    val short = broadcast(q).join(c, lit(true))
-      .withColumn("simq",
-        round(dotF64(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
-      .withColumn("simq_bp", expr("cast(round(simq * 10000) as bigint)"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 8)
+    val short = topK(broadcast(q).join(c, lit(true))
+      .withColumn("simq", cosine("qv", "qn", "cv", "cn"))
+      .withColumn("simq_bp", expr("cast(round(simq * 10000) as bigint)")),
+      8, score = "simq_bp", long = false)
       .select(col("q_id"), col("c_id"), col("cv"), col("cn"),
         col("simq_bp"), col("rk"))
       .cache()
@@ -1503,8 +1368,7 @@ object SimilarityOps {
         col("cn").as("an"))
       .join(short.select(col("q_id"), col("c_id").as("b_id"),
         col("cv").as("bv"), col("cn").as("bn")), Seq("q_id"))
-      .withColumn("cc",
-        round(dotF64(col("av"), col("bv")) / (col("an") * col("bn")), 4))
+      .withColumn("cc", cosine("av", "an", "bv", "bn"))
       .select(col("q_id"), col("a_id"), col("b_id"),
         expr("cast(round(cc * 10000) as bigint)").as("cc_bp"))
       .cache()
@@ -1734,12 +1598,8 @@ object SimilarityOps {
       .select(col("vec_id").as("c_id"), col("vd").as("cv2"),
         col("nrm").as("cn2"), col("cell"))
     val scored = broadcast(assigned).join(c, "cell")
-      .withColumn("cos_sim", round(
-        dotF64(col("qv"), col("cv2")) / (col("qn") * col("cn2")), 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= topK)
+      .withColumn("cos_sim", cosine("qv", "qn", "cv2", "cn2"))
+    SimilarityOps.topK(scored, topK)
       .select(col("q_id"), col("cell"), col("rk"),
         col("c_id").as("neighbor_id"), col("cos_sim"))
   }
@@ -1753,8 +1613,7 @@ object SimilarityOps {
   private[operators] def probeAssignment(queries: DataFrame,
       idx: AnnIndex.Handle, nprobe: Int): DataFrame = {
     val scored0 = queries.join(broadcast(idx.centroids), lit(true))
-      .withColumn("cc", round(
-        dotF64(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
+      .withColumn("cc", cosine("qv", "qn", "cv", "cn"))
     val wAssign = Window.partitionBy(col("q_id"))
       .orderBy(col("cc").desc, col("cent_id"))
     scored0.withColumn("ark", row_number().over(wAssign))

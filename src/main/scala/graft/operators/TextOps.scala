@@ -19,8 +19,7 @@ object TextOps {
   /** Token counting: whitespace tokens AND a BPE-ish regex tokenization
     * (alnum runs — the subword-merge input units), plus char stats. */
   private def t01(s: SparkSession, dir: String): DataFrame =
-    t(s, dir).documentsSpread
-      .withColumn("toks", split(col("text"), " "))
+    Corpus.tokenized(t(s, dir).documentsSpread)
       .select(
         col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),
@@ -136,13 +135,8 @@ object TextOps {
     * bigram per partition, not per occurrence) → TakeOrderedAndProject
     * top-k (no global sort). Deterministic tiebreak on the bigram itself. */
   private def t05(s: SparkSession, dir: String): DataFrame =
-    t(s, dir).documentsSpread
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 2)
-      .select(explode(expr(
-        """transform(sequence(0, size(toks) - 2),
-          |  i -> concat_ws(' ', toks[i], toks[i+1]))""".stripMargin))
-        .as("bigram"))
+    Corpus.tokenized(t(s, dir).documentsSpread, 2)
+      .select(explode(Corpus.ngrams(2)).as("bigram"))
       .groupBy(col("bigram"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("bigram"))
@@ -208,12 +202,8 @@ object TextOps {
     * and gets filtered before training. Pure per-row array math inside
     * whole-stage codegen — no explode, no shuffle before the output sort. */
   private def t07(s: SparkSession, dir: String): DataFrame =
-    t(s, dir).documentsSpread
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 2)
-      .withColumn("bg", expr(
-        """transform(sequence(0, size(toks) - 2),
-          |  i -> concat_ws(' ', toks[i], toks[i+1]))""".stripMargin))
+    Corpus.tokenized(t(s, dir).documentsSpread, 2)
+      .withColumn("bg", Corpus.ngrams(2))
       .select(col("doc_id"),
         size(col("bg")).cast("long").as("n_bigrams"),
         round(lit(1.0) - size(array_distinct(col("bg")))
@@ -249,14 +239,7 @@ object TextOps {
   }
 
   private val t08Sql =
-    """WITH grams AS (
-      |  SELECT DISTINCT doc_id, gram FROM (
-      |    SELECT doc_id, unnest(list_transform(range(1, len(w) - 3),
-      |      i -> concat(w[CAST(i AS INT)], ' ', w[CAST(i AS INT) + 1], ' ',
-      |        w[CAST(i AS INT) + 2], ' ', w[CAST(i AS INT) + 3], ' ',
-      |        w[CAST(i AS INT) + 4]))) AS gram
-      |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents) t
-      |    WHERE len(w) >= 5) u),
+    s"""WITH ${ContaminationGrams.duckGramRows("grams")},
       |probe AS (SELECT DISTINCT gram FROM grams WHERE doc_id < 20)
       |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_contaminated_grams
       |FROM grams JOIN probe USING (gram)
@@ -281,8 +264,7 @@ object TextOps {
     * quadratic, no driver collect. */
   def boilerplateScrub(docs: DataFrame, chunkWords: Int = 8,
       minDf: Int = 3): DataFrame = {
-    val chunks = docs
-      .withColumn("toks", split(col("text"), " "))
+    val chunks = Corpus.tokenized(docs)
       .select(col("doc_id"), posexplode(expr(
         s"""transform(sequence(0, (size(toks) - 1) div $chunkWords),
            |  i -> concat_ws(' ', slice(toks, i * $chunkWords + 1, $chunkWords)))"""
@@ -347,7 +329,7 @@ object TextOps {
     * keyed aggregate. The 1-row total broadcasts. No pairwise stage. */
   private def t10(s: SparkSession, dir: String): DataFrame = {
     val toks = t(s, dir).documentsSpread
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+      .select(col("doc_id"), explode(Corpus.tokens()).as("tok"))
     val counts = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val total = counts.agg(sum(col("c")).as("n_total"))
     toks.join(counts, "tok")
@@ -444,7 +426,7 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     val docs = t(s, dir).documentsSpread
     val tf = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+      .select(col("doc_id"), explode(Corpus.tokens()).as("term"))
       .filter(length(col("term")) > 0)
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
@@ -502,9 +484,7 @@ object TextOps {
     * Same three-shuffle shape as t12. */
   private def t13(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val bi = t(s, dir).documentsSpread
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 2)
+    val bi = Corpus.tokenized(t(s, dir).documentsSpread, 2)
       .select(col("doc_id"), explode(expr(
         """transform(sequence(0, size(toks) - 2),
           |  i -> struct(toks[i] AS prev, toks[i+1] AS cur))""".stripMargin))
@@ -564,14 +544,7 @@ object TextOps {
   }
 
   private val t14Sql =
-    """WITH gr AS (
-      |  SELECT DISTINCT doc_id, gram FROM (
-      |    SELECT doc_id, unnest(list_transform(range(1, len(w) - 3),
-      |      i -> concat(w[CAST(i AS INT)], ' ', w[CAST(i AS INT) + 1], ' ',
-      |        w[CAST(i AS INT) + 2], ' ', w[CAST(i AS INT) + 3], ' ',
-      |        w[CAST(i AS INT) + 4]))) AS gram
-      |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents) t
-      |    WHERE len(w) >= 5) u)
+    s"""WITH ${ContaminationGrams.duckGramRows("gr")}
       |SELECT c.doc_id AS doc_id, p.doc_id AS probe_id,
       |  CAST(count(*) AS BIGINT) AS n_shared_grams
       |FROM gr c JOIN gr p ON c.gram = p.gram
@@ -699,8 +672,7 @@ object TextOps {
     * are every multiple of the stride below the token count, so the
     * enumeration is exact integer math both engines reproduce. */
   private def t17(s: SparkSession, dir: String): DataFrame =
-    t(s, dir).documentsSpread
-      .withColumn("toks", split(col("text"), " "))
+    Corpus.tokenized(t(s, dir).documentsSpread)
       .withColumn("n", size(col("toks")))
       .select(col("doc_id"), col("toks"), col("n"),
         explode(expr("sequence(0, (greatest(n, 1) - 1) div 48)"))
@@ -751,7 +723,7 @@ object TextOps {
     * count hash-matches the oracle. */
   private def t18(s: SparkSession, dir: String): DataFrame = {
     val toks = t(s, dir).documentsSpread
-      .select(col("source"), explode(split(col("text"), " ")).as("tok"))
+      .select(col("source"), explode(Corpus.tokens()).as("tok"))
       .filter(length(col("tok")) > 0)
     val st = toks.groupBy(col("source"), col("tok"))
       .agg(count(lit(1)).as("c_st"))
@@ -813,7 +785,7 @@ object TextOps {
     val srcM = ranked.groupBy(col("source")).agg(count(lit(1)).as("m"))
     val firstR = ranked
       .select(col("source"), col("r"),
-        explode(split(col("text"), " ")).as("tok"))
+        explode(Corpus.tokens()).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy(col("source"), col("tok")).agg(min(col("r")).as("first_r"))
     val newPerQ = firstR.join(broadcast(srcM), "source")
@@ -880,7 +852,7 @@ object TextOps {
     * word-freq-first shape serves every subsequent merge iteration. */
   private def t20(s: SparkSession, dir: String): DataFrame = {
     val wordFreq = t(s, dir).documentsSpread
-      .select(explode(split(col("text"), " ")).as("word"))
+      .select(explode(Corpus.tokens()).as("word"))
       .filter(length(col("word")) >= 2)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
     wordFreq
@@ -924,7 +896,7 @@ object TextOps {
         s"'b', ${MinHashFamily.b(i)}L)")
       .mkString("array(", ", ", ")")
     val sigs = t(s, dir).documentsSpread
-      .select(col("source"), explode(split(col("text"), " ")).as("tok"))
+      .select(col("source"), explode(Corpus.tokens()).as("tok"))
       .filter(length(col("tok")) > 0)
       .distinct()
       .withColumn("x",
@@ -989,7 +961,7 @@ object TextOps {
     val w = Window.partitionBy(col("source"))
       .orderBy(col("c").desc, col("tok"))
     val counted = t(s, dir).documentsSpread
-      .select(col("source"), explode(split(col("text"), " ")).as("tok"))
+      .select(col("source"), explode(Corpus.tokens()).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c"))
       .withColumn("x", log(row_number().over(w).cast("double")))
@@ -1043,7 +1015,7 @@ object TextOps {
   private def t23(s: SparkSession, dir: String): DataFrame = {
     val toks = t(s, dir).documentsSpread
       .select(col("doc_id"),
-        posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
+        posexplode(Corpus.tokens()).as(Seq("pos", "tok")))
       .filter(length(col("tok")) > 0)
       .select(col("doc_id"), col("tok"), (col("pos") + 1).cast("long").as("pos"))
     val panel = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
@@ -1096,7 +1068,7 @@ object TextOps {
   private def t24(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val wf = t(s, dir).documentsSpread
-      .select(explode(split(col("text"), " ")).as("word"))
+      .select(explode(Corpus.tokens()).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
     BpeTrainer.train(wf, nMerges = 10).zipWithIndex
@@ -1305,8 +1277,7 @@ object TextOps {
     * the vocab fits); min-count 5 prunes the bigram tail before any
     * join. Top-20 is TakeOrderedAndProject. No pairwise stage. */
   private def t27(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir).documentsSpread
-      .withColumn("toks", split(col("text"), " "))
+    val docs = Corpus.tokenized(t(s, dir).documentsSpread)
     val uni = docs
       .select(explode(col("toks")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -1373,7 +1344,7 @@ object TextOps {
   private def t28(s: SparkSession, dir: String): DataFrame =
     t(s, dir).documentsSpread
       .select(col("lang"),
-        size(split(col("text"), " ")).cast("long").as("words"),
+        size(Corpus.tokens()).cast("long").as("words"),
         size(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).cast("long")
           .as("subtoks"),
         length(col("text")).cast("long").as("chars"))
@@ -1423,7 +1394,7 @@ object TextOps {
     * against exploded docs (t28's shape). */
   private def t29(s: SparkSession, dir: String): DataFrame = {
     val wf = t(s, dir).documentsSpread
-      .select(explode(split(col("text"), " ")).as("word"))
+      .select(explode(Corpus.tokens()).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
     val merges = BpeTrainer.train(wf, nMerges = 10)

@@ -128,12 +128,9 @@ object Pipeline {
     val sess = df.sparkSession
     import sess.implicits._
     val banded = df
-      .withColumn("toks", split(col(textCol), " "))
+      .withColumn("toks", graft.operators.Corpus.tokens(textCol))
       .filter(size(col("toks")) >= 3)
-      .withColumn("sh_arr", array_distinct(expr(
-        """transform(sequence(0, size(toks) - 3),
-          |  i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"""
-          .stripMargin)))
+      .withColumn("sh_arr", graft.operators.Corpus.distinctNgrams(3))
       .select(col(idCol).cast("long").as("id"),
         MinHashSig.minhashSigs(col("sh_arr")).as("sigs"))
       .select(col("id"), explode(array((0 until 4).map(bd =>

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Envelope
 import java.sql.Timestamp
 
-/** Shared session base for all specs (one JVM-wide session via getOrCreate). */
-trait SparkSuite extends AnyFunSuite {
+/** Shared session base for all specs (one JVM-wide session via
+  * getOrCreate); [[tmpDir]]s are deleted when the suite ends. */
+trait SparkSuite extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
@@ -16,14 +17,10 @@ trait SparkSuite extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     // bucketed-table specs write managed tables; keep them out of the repo
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    .config("spark.sql.warehouse.dir", SparkSuite.warehouseDir)
     .getOrCreate()
 
   def sf0001 = "/root/testdata/sf0.001"
-
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
@@ -36,5 +33,16 @@ trait SparkSuite extends AnyFunSuite {
         topic = entity, partition = 0, offset = i.toLong, timestamp = t,
         topicEntity = entity)
     }.toDF()
+  }
+}
+
+object SparkSuite {
+  /** ONE warehouse per test JVM, deleted when the JVM exits: the session
+    * is JVM-wide and getOrCreate ignores a later builder's warehouse
+    * conf, so a per-suite dir would go unused and outlive the run. */
+  lazy val warehouseDir: String = {
+    val d = java.nio.file.Files.createTempDirectory("graft-warehouse")
+    sys.addShutdownHook(TempDirs.deleteRecursively(d))
+    d.toString
   }
 }

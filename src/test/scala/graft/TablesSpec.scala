@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** Schema-drift guard for the corpus loader. The driver's testdata has
   * shipped `events.ts` as TIMESTAMP(NANOS) in some generations and
@@ -30,7 +29,7 @@ class TablesSpec extends SparkSuite {
   private def expectedUs = (0L until 5L).map(baseUs + _ * 1000000L)
 
   test("int64-nanos ts is truncated to micro timestamps") {
-    val dir = Files.createTempDirectory("tables-nanos").toString
+    val dir = tmpDir("tables-nanos")
     // int64 nano values — exactly what nanosAsLong yields for
     // TIMESTAMP(NANOS) files (plus 999 sub-µs nanos that must truncate)
     writeEvents(dir, (col("id") * 1000000L + baseUs) * 1000L + 999L, LongType)
@@ -43,7 +42,7 @@ class TablesSpec extends SparkSuite {
 
   test("timestamp_ntz (timestamp[us] file) ts is served as TimestampType " +
       "with identical micros under the UTC session zone") {
-    val dir = Files.createTempDirectory("tables-us").toString
+    val dir = tmpDir("tables-us")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     // TimestampNTZType writes parquet TIMESTAMP(MICROS, isAdjustedToUTC
     // =false) — the round-5 testdata encoding
@@ -57,7 +56,7 @@ class TablesSpec extends SparkSuite {
   }
 
   test("native TimestampType files pass through untouched") {
-    val dir = Files.createTempDirectory("tables-tz").toString
+    val dir = tmpDir("tables-tz")
     writeEvents(dir, timestamp_micros(col("id") * 1000000L + baseUs),
       TimestampType)
     val ev = Tables(spark, dir).events

@@ -8,10 +8,7 @@ import java.nio.file.{Files, Paths}
   * restart. The ring is JVM-global and other suites may interleave
   * entries, so every assertion here keys on this suite's own unique
   * markers rather than ring counts. */
-class PreflightSpillSpec extends AnyFunSuite {
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+class PreflightSpillSpec extends AnyFunSuite with graft.TempDirs {
 
   /** Register `path` and record a marker line, retrying if another
     * suite's engine construction re-pointed the JVM-global spill in the
@@ -39,7 +36,7 @@ class PreflightSpillSpec extends AnyFunSuite {
 
   test("append-on-record + reload round-trips every typed field, " +
       "including JSON-hostile characters in the line") {
-    val path = s"${tmp("pfspill")}/ckpt/_preflight_spill.jsonl"
+    val path = s"${tmpDir("pfspill")}/ckpt/_preflight_spill.jsonl"
     try {
       val marker = "m-" + System.nanoTime()
       recordWithSpill(path, marker, aborted = true, shareBp = Some(10000L))
@@ -59,7 +56,7 @@ class PreflightSpillSpec extends AnyFunSuite {
 
   test("the spill is size-capped: one rotation generation bounds disk " +
       "at ~2x maxBytes, and reload seeds at most Capacity newest") {
-    val path = s"${tmp("pfspill2")}/spill.jsonl"
+    val path = s"${tmpDir("pfspill2")}/spill.jsonl"
     try {
       PreflightLog.clearSpill()
       PreflightLog.spillTo(path, maxBytes = 4096L)
@@ -83,7 +80,7 @@ class PreflightSpillSpec extends AnyFunSuite {
       "the next record) is skipped, never thrown: loadSpill runs inside " +
       "the engine constructor, and an exception here would crash-loop " +
       "every restart against the same corrupt file") {
-    val dir = tmp("pfspill4")
+    val dir = tmpDir("pfspill4")
     val path = s"$dir/spill.jsonl"
     val marker = "torn-" + System.nanoTime()
     val valid = PreflightLog.toJson(PreflightLog.Audit(
@@ -110,7 +107,7 @@ class PreflightSpillSpec extends AnyFunSuite {
   test("reload MERGES with live entries: pre-crash audits never outrank " +
       "or evict newer live ones, and a repeated registration (A->B->A " +
       "engines) never duplicates") {
-    val path = s"${tmp("pfspill5")}/spill.jsonl"
+    val path = s"${tmpDir("pfspill5")}/spill.jsonl"
     val a = "mA-" + System.nanoTime()
     val b = "mB-" + System.nanoTime()
     try {
@@ -146,7 +143,7 @@ class PreflightSpillSpec extends AnyFunSuite {
   test("the Hadoop sink (RawLocalFileSystem proves the API path real " +
       "clusters take): append, rotation, and restart reload all work " +
       "where the nio-only spill silently no-opped") {
-    val dir = tmp("pfspill6")
+    val dir = tmpDir("pfspill6")
     val backing = s"$dir/ckpt/_preflight_spill.jsonl"
     val raw = new org.apache.hadoop.fs.RawLocalFileSystem()
     raw.initialize(java.net.URI.create("file:///"),
@@ -183,7 +180,7 @@ class PreflightSpillSpec extends AnyFunSuite {
       "records accumulate, reload works, and a crash BETWEEN the two " +
       "renames (current generation parked at .bak) still reloads — the " +
       "window never holds zero copies") {
-    val dir = tmp("pfspill7")
+    val dir = tmpDir("pfspill7")
     val backing = s"$dir/spill.jsonl"
     val lfs = org.apache.hadoop.fs.FileSystem.newInstance(
       java.net.URI.create("file:///"),
@@ -246,7 +243,7 @@ class PreflightSpillSpec extends AnyFunSuite {
   test("a file: URI resolves to the SAME nio sink as its plain path — " +
       "local mounts keep O_APPEND's torn-line durability and cost, and " +
       "the two spellings of one root never double-register") {
-    val dir = tmp("pfspill9")
+    val dir = tmpDir("pfspill9")
     val plain = s"$dir/spill.jsonl"
     try {
       PreflightLog.clearSpill()
@@ -280,7 +277,7 @@ class PreflightSpillSpec extends AnyFunSuite {
       assert(!Files.exists(Paths.get(seg).toAbsolutePath),
         "a refused registration must create nothing in the cwd")
       // the deliberate local spelling (no scheme shape) is a local path
-      val dir = tmp("pfspill11")
+      val dir = tmpDir("pfspill11")
       assert(PreflightLog.spillTo(s"$dir/./$seg/spill.jsonl"))
       val marker = "colon-" + System.nanoTime()
       PreflightLog.record(s"test preflight worst_element=$marker",
@@ -298,7 +295,7 @@ class PreflightSpillSpec extends AnyFunSuite {
   test("a FAILED re-registration detaches the previous sink: audits " +
       "must not keep landing in a stale engine's spill file while the " +
       "warning claims ring-only telemetry") {
-    val dir = tmp("pfspill10")
+    val dir = tmpDir("pfspill10")
     val good = s"$dir/spill.jsonl"
     try {
       PreflightLog.clearSpill()
@@ -318,7 +315,7 @@ class PreflightSpillSpec extends AnyFunSuite {
   test("re-registering the SAME path with a different maxBytes adopts " +
       "the new cap (returns false, so callers don't re-seed) — the old " +
       "no-op silently kept the first registration's looser bound") {
-    val path = s"${tmp("pfspill8")}/spill.jsonl"
+    val path = s"${tmpDir("pfspill8")}/spill.jsonl"
     try {
       PreflightLog.clearSpill()
       assert(PreflightLog.spillTo(path, maxBytes = 1L << 20))
@@ -363,7 +360,7 @@ class PreflightSpillSpec extends AnyFunSuite {
       "slurped (readAllLines would OOME — not NonFatal, escapes every " +
       "telemetry guard) and never deleted or rotated into the .1 slot " +
       "a later rotation REPLACEs away") {
-    val dir = tmp("pfspill10")
+    val dir = tmpDir("pfspill10")
     val path = s"$dir/spill.jsonl"
     sparseForeign(path)
     val marker = "fq-" + System.nanoTime()
@@ -392,7 +389,7 @@ class PreflightSpillSpec extends AnyFunSuite {
   test("a foreign file with the quarantine slot OCCUPIED drops the " +
       "record and leaves both files untouched — appends stay dead " +
       "rather than overwrite preserved data") {
-    val dir = tmp("pfspill11")
+    val dir = tmpDir("pfspill11")
     val path = s"$dir/spill.jsonl"
     sparseForeign(path)
     Files.write(Paths.get(path + ".quarantine"), "preserved\n".getBytes)
@@ -412,7 +409,7 @@ class PreflightSpillSpec extends AnyFunSuite {
   test("the Hadoop sink quarantines a foreign file before rotation " +
       "(rename-works FS would otherwise park it at .1 and DELETE it " +
       "one generation later)") {
-    val dir = tmp("pfspill12")
+    val dir = tmpDir("pfspill12")
     val backing = s"$dir/spill.jsonl"
     sparseForeign(backing)
     val raw = new org.apache.hadoop.fs.RawLocalFileSystem()
@@ -457,7 +454,7 @@ class PreflightSpillSpec extends AnyFunSuite {
         throw new java.io.IOException("unreadable")
     }
     val conf = new org.apache.hadoop.conf.Configuration()
-    val dir1 = tmp("pfspill13")
+    val dir1 = tmpDir("pfspill13")
     val b1 = s"$dir1/spill.jsonl"
     Files.write(Paths.get(b1), ("y" * 5000).getBytes) // >= 4096 cap
     val fs1 = new NoRotateFs(); fs1.initialize(
@@ -478,7 +475,7 @@ class PreflightSpillSpec extends AnyFunSuite {
 
       // fully-bricked: quarantine rename also fails — the file stays
       // IN PLACE (the pre-fix code deleted it here)
-      val dir2 = tmp("pfspill14")
+      val dir2 = tmpDir("pfspill14")
       val b2 = s"$dir2/spill.jsonl"
       Files.write(Paths.get(b2), ("z" * 5000).getBytes)
       val fs2 = new BrickFs(); fs2.initialize(
@@ -497,7 +494,7 @@ class PreflightSpillSpec extends AnyFunSuite {
   }
 
   test("malformed spill lines are skipped, valid ones load") {
-    val dir = tmp("pfspill3")
+    val dir = tmpDir("pfspill3")
     val path = s"$dir/spill.jsonl"
     val marker = "mm-" + System.nanoTime()
     val valid = PreflightLog.toJson(PreflightLog.Audit(

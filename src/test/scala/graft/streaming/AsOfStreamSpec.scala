@@ -132,10 +132,8 @@ class AsOfStreamSpec extends SparkSuite {
     // MemoryStream forbids checkpoint recovery, so this test drives a
     // JSON-file source and collects via foreachBatch — both restartable.
     import org.apache.spark.sql.Row
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("asof_ckpt_").toString
-    val inDir = java.nio.file.Files
-      .createTempDirectory("asof_in_").toString
+    val ckpt = tmpDir("asof_ckpt_")
+    val inDir = tmpDir("asof_in_")
     val schema = "key LONG, ts TIMESTAMP, side STRING, value DOUBLE"
     def feed(name: String, lines: String*): Unit = {
       // write outside the watched dir, then ATOMIC_MOVE in: a direct

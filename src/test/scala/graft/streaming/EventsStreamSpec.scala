@@ -34,10 +34,10 @@ class EventsStreamSpec extends SparkSuite {
   }
 
   private def stageDir(): String = {
-    val d = Files.createTempDirectory("events-stream")
+    val d = tmpDir("events-stream")
     Files.copy(Paths.get(s"$sf0001/events.parquet"),
-      d.resolve("events.parquet"))
-    d.toString
+      Paths.get(d, "events.parquet"))
+    d
   }
 
   test("streamed tumbling-window agg equals the batch/oracle result") {

@@ -100,21 +100,24 @@ class StreamJoinSpec extends SparkSuite {
       val deadline = System.currentTimeMillis + 30000
       while (!engine.metrics.snapshot().contains(gauge) &&
           System.currentTimeMillis < deadline) Thread.sleep(100)
-      assert(engine.metrics.snapshot().get(gauge).contains(1500.0),
-        engine.metrics.snapshot().filter(_._1.contains("join_diff")))
+      val diffs = engine.metrics.snapshot().filter(_._1.contains("join_diff"))
+      assert(diffs.get(gauge).contains(1500.0), diffs)
+      // one joined pair, so the max equals the average
+      assert(diffs.get("orders.join_diff.join_diff_ms_max").contains(1500.0),
+        diffs)
     } finally engine.stopAll()
   }
 
-  test("join-diff metric observes |l_ts - r_ts| (M6)") {
+  test("joinWindowed keeps l_ts, r_ts of a pair 30 s apart " +
+      "in a 60 s window") {
     val sess = spark
     import sess.implicits._
     val l = Seq(("a", ts("2024-01-01 00:00:00"), "A")).toDF("k", "ts", "v")
     val r = Seq(("a", ts("2024-01-01 00:00:30"), "B")).toDF("k", "ts", "v")
     val joined = StreamJoins.joinWindowed(l, r, "k", "ts", 60000L, "inner")
-    // static frames: compute the diff directly
-    val diff = joined.select(
-      abs(unix_millis(col("l_ts")) - unix_millis(col("r_ts")))).collect()(0).getLong(0)
-    assert(diff == 30000L)
+    val pairs = joined.select(col("l_ts"), col("r_ts")).collect()
+      .map(r => (r.getTimestamp(0), r.getTimestamp(1))).toSeq
+    assert(pairs == Seq((ts("2024-01-01 00:00:00"), ts("2024-01-01 00:00:30"))))
   }
 }
 
