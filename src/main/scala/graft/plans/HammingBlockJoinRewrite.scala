@@ -3,10 +3,9 @@ package graft.plans
 import graft.functions.HammingDistance
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, StringType}
 
 /** Exact pigeonhole rewrite for Hamming-threshold joins (SURVEY §7.2's
   * "custom Rule" tier, the whole-operator optimization beside the
@@ -41,8 +40,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * fingerprint, block)` slim rows, verifies the Hamming bound on the
   * carried 8-byte fingerprints inside the slim join (the distinct
   * rowid pairs are then already exact — no first-match pin at all),
-  * and back-joins payloads once per matching pair, exactly
-  * [[SetOverlapJoinRewrite]]'s topology. All-fixed-width rows (d25's
+  * and back-joins payloads once per matching pair
+  * ([[ThetaJoinRewrite.twoPhaseInner]]). All-fixed-width rows (d25's
   * id+fingerprint) keep the in-place form, whose exploded rows are
   * already minimal.
   *
@@ -75,8 +74,13 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * its own output joins on block equality).
   * Default ON; disable with `spark.graft.hammingBlockJoinRewrite=false`.
   */
-class HammingBlockJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
+class HammingBlockJoinRewrite(spark: SparkSession)
+    extends ThetaJoinRewrite(spark, "hamming-block", "popcount compares",
+      ScaleGuards.HammingBlockJoinRewriteKey, ScaleGuards.HammingPreflightKey,
+      ScaleGuards.HammingPreflightSampleKey,
+      ScaleGuards.HammingPreflightAutoSampleMinBytesKey) {
   import RewriteSupport._
+  import ThetaJoinRewrite.{Probe, Slim}
 
   /** `hamming64(a, b)` — or its builtin pure-SQL twin
     * `bit_count(a ^ b)`, so the rewrite rescues queries written with no
@@ -132,16 +136,51 @@ class HammingBlockJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     else BitwiseAnd(shifted, Literal((1L << width) - 1L))
   }
 
-  private def layout(k: Int) = HammingBlockJoinRewrite.layout(k)
+  /** The candidate keys: posexplode of `x`'s k+1 blocks into
+    * `(graft_bidx_<side>, graft_bval_<side>)` rows. */
+  private def blocks(x: Expression, k: Int, side: String)
+      : (Generator, Seq[Attribute]) = {
+    val (n, widths, offsets) = HammingBlockJoinRewrite.layout(k)
+    val pos = AttributeReference(s"graft_bidx_$side", IntegerType,
+      nullable = false)()
+    val bval = AttributeReference(s"graft_bval_$side", LongType)()
+    (PosExplode(CreateArray((0 until n).map(i =>
+      blockOf(x, offsets(i), widths(i))))), Seq(pos, bval))
+  }
 
-  /** Stand-down diagnostics, mirroring [[SetOverlapJoinRewrite]]'s: a
-    * join whose condition LOOKS like a hamming bound but fails a gate
-    * (non-BIGINT fingerprints, k outside [0, 15], semi/anti topology)
-    * is left on a silent nested-loop plan — name the disqualifier once
-    * per canonicalized condition (WARN + [[PreflightLog]], served by
-    * /v1/preflight). Pure structural scan. */
-  private def standDownReasons(cs: Seq[Expression], l: LogicalPlan,
-      r: LogicalPlan): Seq[String] = {
+  /** Slim `(prid, fingerprint, cheap cols, index, block)` rows; the
+    * Hamming bound verifies inside the slim join on the carried 8-byte
+    * fingerprints, so the distinct rowid pairs are already exact — no
+    * first-match pin and no recheck. */
+  private def blockProbe(a: Expression, b: Expression, k: Int): Probe =
+    new Probe {
+      def side(base: LogicalPlan, keep: Seq[Attribute], side: LogicalPlan,
+          carried: Seq[Expression], left: Boolean): Slim = {
+        val s = if (left) "l" else "r"
+        val fpA = Alias(if (left) a else b, s"graft_fp_$s")()
+        val (gen, out) = blocks(fpA.toAttribute, k, s)
+        val (plan, subst) =
+          slimSide(base, keep, side, carried, Seq(fpA), gen, out)
+        Slim(plan, out :+ fpA.toAttribute, subst)
+      }
+      override def matches(l: Slim, r: Slim): Seq[Expression] =
+        Seq(EqualTo(l.keys(0), r.keys(0)), EqualTo(l.keys(1), r.keys(1)),
+          LessThanOrEqual(HammingDistance(l.keys(2), r.keys(2)), Literal(k)))
+    }
+
+  /** A join whose condition LOOKS like a hamming bound but fails a gate
+    * (non-BIGINT fingerprints, k outside [0, 15]) is left on a silent
+    * nested-loop plan — name the disqualifier. A bound that passed every
+    * gate stood down on its semi/anti topology. Pure structural scan. */
+  override protected def standDownReasons(j: Join,
+      cs: Seq[Expression]): Seq[String] = {
+    val Join(l, r, jt, _, _) = (j: @unchecked)
+    if (hammingBound(cs, l, r).isDefined)
+      return Seq(
+        if (l.isStreaming || r.isStreaming)
+          "a streaming child keeps the supported stream-static " +
+            "nested-loop shape"
+        else rowIdStandDown(jt))
     val crossSides = RewriteSupport.crossSides(l, r) _
     val hits = scala.collection.mutable.LinkedHashSet.empty[String]
     // TOP-LEVEL conjuncts only — exactly where hammingBound looks. A
@@ -165,16 +204,16 @@ class HammingBlockJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             // any negative effective radius is vacuously FALSE
             // (hamming64 is non-negative): the nested loop it stays on
             // selects nothing — harmless at any scale, but almost
-            // certainly a spelling mistake worth one named warning
-            // (round-11's no-silent-stand-down doctrine). Name the
-            // LIKELY typo precisely: only a strict comparison against
-            // literal 0 (`< 0` / `0 >`, effective k = -1) points at the
-            // operator — and the suggested replacement must match the
-            // operator the user actually WROTE (`<` → `<=`, `>` → `>=`;
-            // suggesting `<=` for a `0 > hamming` spelling names a token
-            // the query does not contain, and following it literally
-            // would build the tautology `0 <= hamming`). A negative
-            // literal (`<= -1`, `< -2`) is the radius itself mistyped.
+            // certainly a spelling mistake worth one named warning.
+            // Name the LIKELY typo precisely: only a strict comparison
+            // against literal 0 (`< 0` / `0 >`, effective k = -1) points
+            // at the operator — and the suggested replacement must match
+            // the operator the user actually WROTE (`<` → `<=`, `>` →
+            // `>=`; suggesting `<=` for a `0 > hamming` spelling names a
+            // token the query does not contain, and following it
+            // literally would build the tautology `0 <= hamming`). A
+            // negative literal (`<= -1`, `< -2`) is the radius itself
+            // mistyped.
             val fix = c match {
               case _: LessThan if k == -1    => "did you mean <= ?"
               case _: GreaterThan if k == -1 => "did you mean >= ?"
@@ -189,83 +228,17 @@ class HammingBlockJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     hits.toSeq
   }
 
-  private def logStandDown(j: Join, reasons: Seq[String]): Unit =
-    RewriteSupport.logStandDown("hamming-block", j, "popcount compares",
-      reasons, logWarning(_))
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled = RewriteSupport
-      .activeConf(ScaleGuards.HammingBlockJoinRewriteKey)
-      .forall(!_.equalsIgnoreCase("false"))
-    if (!enabled) return plan
-    plan.transformUp {
-      case j @ Join(l, r, jt, Some(cond), _)
-          if (jt == Inner || jt == Cross) && j.resolved =>
-        val cs = conjuncts(cond)
-        if (hasEquiBetween(cs, l, r)) j
-        else hammingBound(cs, l, r) match {
-          case Some((chosen, a, b, k)) =>
-            maybePreflight(l, r, a, b, k)
-            rewriteInnerDispatch(j, cs, cond, chosen, a, b, k)
-          case None => logStandDown(j, standDownReasons(cs, l, r)); j
-        }
-      case j @ Join(l, r, jt, Some(cond), _)
-          if (jt == LeftSemi || jt == LeftAnti) && j.resolved =>
-        val cs = conjuncts(cond)
-        if (hasEquiBetween(cs, l, r)) j
-        else hammingBound(cs, l, r) match {
-          case Some((chosen, a, b, k)) =>
-            val fired = rewriteSemi(j, cs, chosen, a, b, k)
-            if (fired.isDefined) maybePreflight(l, r, a, b, k)
-            fired.getOrElse {
-              // gates passed, topology refused: anti needs a stable
-              // rowid, streaming children keep the supported
-              // stream-static shape, remaining conjuncts must be scalar
-              logStandDown(j, Seq(
-                if (l.isStreaming || r.isStreaming)
-                  "a streaming child keeps the supported stream-static " +
-                    "nested-loop shape"
-                else
-                  s"${jt.sql} needs a STABLE rowid (no limits/samples " +
-                    "below the join input) and cheap scalar remaining " +
-                    "conjuncts; one of those is missing"))
-              j
-            }
-          case None => logStandDown(j, standDownReasons(cs, l, r)); j
-        }
-    }
-  }
-
-  /** [[ScaleGuards.HammingPreflightKey]] = warn: on rewrite fire, run
-    * the d41 hot-block audit over the join's own children and log the
-    * result — [[SetOverlapJoinRewrite]]'s maybePreflight, transposed to
-    * (block-index, block-value) frequencies. Orchestration (conf gate,
-    * streaming skip, boxed BIGINT reads, best-effort catch) is
-    * [[RewriteSupport.logPreflight]], shared with the overlap rule. */
-  private def maybePreflight(l: LogicalPlan, r: LogicalPlan,
-      a: Expression, b: Expression, k: Int): Unit = {
-    // sampled estimator mode: explicit sampleFraction conf wins; unset,
-    // the stats floor auto-engages sampling on big children
-    // (ScaleGuards.effectivePreflightSample — the 100 TB default).
-    // sample_fraction=f provenance on the line either way, same
-    // contract as the overlap rule's
-    val sample = ScaleGuards.effectivePreflightSample(
-      ScaleGuards.HammingPreflightSampleKey,
-      ScaleGuards.HammingPreflightAutoSampleMinBytesKey, l, r)
-    val sampleCols = ScaleGuards.sampleProvenanceCols(sample)
-    RewriteSupport.logPreflight(spark, ScaleGuards.HammingPreflightKey,
-      "hamming-block rewrite", l, r,
+  /** [[ScaleGuards.HammingPreflightKey]] = warn: on rewrite fire, the
+    * d41 hot-block audit — (block-index, block-value) frequencies. */
+  private def audit(l: LogicalPlan, r: LogicalPlan,
+      a: Expression, b: Expression, k: Int): Unit =
+    preflight(l, r, a, b,
       Seq("est_candidate_rows" -> true, "worst_block_index" -> false,
         "worst_block_value" -> false, "max_block_rows" -> true,
-        "max_share_bp" -> false, "diagnosis" -> false) ++ sampleCols,
-      logWarning(_)) {
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      graft.operators.SkewTools.hammingJoinPreflight(
-        ColumnBridge.dataFrame(spark, l), ColumnBridge.column(a),
-        ColumnBridge.dataFrame(spark, r), ColumnBridge.column(b), k,
-        sampleFraction = sample.getOrElse(1.0))
+        "max_share_bp" -> false, "diagnosis" -> false)) {
+      (dl, ca, dr, cb, f) => graft.operators.SkewTools.hammingJoinPreflight(
+        dl, ca, dr, cb, k, sampleFraction = f)
     }
-  }
 
   /** A type whose in-row width is unbounded — when the join's children
     * expose any of these, the in-place posexplode replicates it (k+1)×
@@ -273,211 +246,69 @@ class HammingBlockJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * shape; all-fixed-width rows (d25's id+fingerprint) stay in-place,
     * where the explode rows are already minimal and two-phase would
     * only add the pair-distinct and back-join stages. */
-  private def wideType(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt match {
-      case org.apache.spark.sql.types.StringType
-        | org.apache.spark.sql.types.BinaryType => true
-      case _ => !scalarType(dt)
-    }
-
-  private def rewriteInnerDispatch(j: Join, cs: Seq[Expression],
-      cond: Expression, chosen: Expression,
-      a: Expression, b: Expression, k: Int): LogicalPlan = {
-    val Join(l, r, _, _, _) = (j: @unchecked)
-    val widePayload = (l.output ++ r.output).exists(at => wideType(at.dataType))
-    val twoPhase =
-      if (widePayload && !l.isStreaming && !r.isStreaming
-          && l.stats.sizeInBytes.max(r.stats.sizeInBytes) >= twoPhaseMinBytes)
-        twoPhaseInner(j, cs, chosen, a, b, k)
-      else None
-    twoPhase.getOrElse(rewriteInner(j, cond, a, b, k))
+  private def wideType(dt: DataType): Boolean = dt match {
+    case StringType | BinaryType => true
+    case _ => !scalarType(dt)
   }
 
-  /** Slim posexplode side shared by the two-phase hamming topologies:
-    * project (keep ++ aliased scalar-conjunct columns ++ fingerprint
-    * alias), posexplode the k+1 (index, block) rows, return (plan,
-    * fingerprint attr, index attr, block attr, original→alias
-    * substitution map for the carried conjuncts). */
-  private def slimBlockSide(base: LogicalPlan, keep: Seq[Attribute],
-      fp: Expression, side: LogicalPlan, tag: String,
-      carried: Seq[Expression], k: Int)
-      : (LogicalPlan, Attribute, Attribute, Attribute,
-        Map[Attribute, Attribute]) = {
-    val (n, widths, offsets) = layout(k)
-    val needed = carried.flatMap(_.references).distinct
-      .filter(side.outputSet.contains)
-    val aliased = needed.map(at => at -> Alias(at, at.name)())
-    val fpA = Alias(fp, s"graft_fp_$tag")()
-    val proj = Project(keep ++ aliased.map(_._2) :+ fpA, base)
-    val pos = AttributeReference(s"graft_bidx_$tag", IntegerType,
-      nullable = false)()
-    val bval = AttributeReference(s"graft_bval_$tag", LongType)()
-    val blocks = CreateArray((0 until n).map(i =>
-      blockOf(fpA.toAttribute, offsets(i), widths(i))))
-    val gen = Generate(PosExplode(blocks), Nil,
-      outer = false, None, Seq(pos, bval), proj)
-    (gen, fpA.toAttribute, pos, bval,
-      aliased.map { case (at, al) => at -> al.toAttribute }.toMap)
-  }
-
-  /** TWO-PHASE inner (round 8): slim `(rowid, fingerprint, cheap cols,
-    * index, block)` candidate rows — the Hamming bound verifies inside
-    * the slim join on the carried 8-byte fingerprints, so the distinct
-    * rowid pairs are already exact (no first-match pin, no post
-    * re-check of the bound) — then payloads back-join once per matching
-    * pair. Chosen only when a child exposes variable-width columns: the
-    * in-place form would replicate them (k+1)× through the exchange. */
-  private def twoPhaseInner(j: Join, cs: Seq[Expression], chosen: Expression,
-      a: Expression, b: Expression, k: Int): Option[LogicalPlan] = {
-    val Join(l, r, _, _, hint) = (j: @unchecked)
-    val rest = cs.filterNot(_ eq chosen)
-    val (cheap, heavy) = rest.partition(c =>
-      c.deterministic && c.references.forall(at => scalarType(at.dataType)))
-    for {
-      (lBack, ridL) <- withStableRowId(l, "graft_rid_l")
-      (rBack, ridR) <- withStableRowId(r, "graft_rid_r")
-      (lNarrow, pridL) <- withStableRowId(l, "graft_prid_l")
-      (rNarrow, pridR) <- withStableRowId(r, "graft_prid_r")
-    } yield {
-      val (nL, fpL, posL, valL, mapL) =
-        slimBlockSide(lNarrow, Seq(pridL), a, l, "l", cheap, k)
-      val (nR, fpR, posR, valR, mapR) =
-        slimBlockSide(rNarrow, Seq(pridR), b, r, "r", cheap, k)
-      val subst = mapL ++ mapR
-      val cheapSub = cheap.map(_.transform {
-        case at: Attribute if subst.contains(at) => subst(at)
-      })
-      val bound = LessThanOrEqual(HammingDistance(fpL, fpR), Literal(k))
-      val cand = Join(nL, nR, Inner,
-        Some((Seq(EqualTo(posL, posR), EqualTo(valL, valR), bound)
-          ++ cheapSub).reduce(And)),
-        selfJoinHint(l, r, hint))
-      val pairs = Aggregate(Seq(pridL, pridR), Seq(pridL, pridR), cand)
-      val back1 = Join(lBack, pairs, Inner,
-        Some(EqualTo(ridL, pridL)), JoinHint.NONE)
-      val back2 = Join(back1, rBack, Inner,
-        Some(EqualTo(pridR, ridR)), JoinHint.NONE)
-      val out = heavy.reduceOption(And)
-        .map(h => Filter(h, back2)).getOrElse(back2)
-      Project(j.output, out)
+  override protected def rewriteInner(j: Join,
+      cs: Seq[Expression]): Option[LogicalPlan] = {
+    val Join(l, r, _, Some(cond), _) = (j: @unchecked)
+    hammingBound(cs, l, r).map { case (chosen, a, b, k) =>
+      audit(l, r, a, b, k)
+      val widePayload =
+        (l.output ++ r.output).exists(at => wideType(at.dataType))
+      val twoPhase =
+        if (widePayload && !l.isStreaming && !r.isStreaming
+            && bigEnoughForTwoPhase(l, r))
+          twoPhaseInner(j, chosen, cs, blockProbe(a, b, k), recheck = None)
+        else None
+      twoPhase.getOrElse {
+        val (genL, genR) = (blocks(a, k, "l"), blocks(b, k, "r"))
+        val (posL, valL) = (genL._2(0), genL._2(1))
+        val (_, widths, offsets) = HammingBlockJoinRewrite.layout(k)
+        // first-match-only: blocks before the matched index differ
+        // (for p ≥ index the conjunct is vacuously true)
+        val priorDiffer = (0 until k).map(p =>
+          Or(GreaterThanOrEqual(Literal(p), posL),
+            Not(EqualTo(blockOf(a, offsets(p), widths(p)),
+              blockOf(b, offsets(p), widths(p))))))
+        inPlaceInner(j, genL, genR, Seq(EqualTo(posL, genR._2(0)),
+          EqualTo(valL, genR._2(1))) ++ priorDiffer :+ cond)
+      }
     }
   }
-
-  private def rewriteInner(j: Join, cond: Expression,
-      a: Expression, b: Expression, k: Int): LogicalPlan = {
-    val Join(l, r, _, _, hint) = (j: @unchecked)
-    val (n, widths, offsets) = layout(k)
-    def blocksArr(x: Expression) = CreateArray(
-      (0 until n).map(i => blockOf(x, offsets(i), widths(i))))
-    val posL = AttributeReference("graft_bidx_l", IntegerType,
-      nullable = false)()
-    val valL = AttributeReference("graft_bval_l", LongType)()
-    val posR = AttributeReference("graft_bidx_r", IntegerType,
-      nullable = false)()
-    val valR = AttributeReference("graft_bval_r", LongType)()
-    val genL = Generate(PosExplode(blocksArr(a)), Nil,
-      outer = false, None, Seq(posL, valL), l)
-    val genR = Generate(PosExplode(blocksArr(b)), Nil,
-      outer = false, None, Seq(posR, valR), r)
-    // first-match-only: blocks before the matched index differ
-    // (for p ≥ index the conjunct is vacuously true)
-    val priorDiffer = (0 until n - 1).map(p =>
-      Or(GreaterThanOrEqual(Literal(p), posL),
-        Not(EqualTo(blockOf(a, offsets(p), widths(p)),
-          blockOf(b, offsets(p), widths(p))))))
-    val full = (Seq(EqualTo(posL, posR), EqualTo(valL, valR))
-      ++ priorDiffer :+ cond).reduce(And)
-    Project(j.output,
-      Join(genL, genR, Inner, Some(full), selfJoinHint(l, r, hint)))
-  }
-
-  private def twoPhaseMinBytes: BigInt = BigInt(
-    RewriteSupport.activeConf(ScaleGuards.OverlapTwoPhaseMinBytesKey)
-      .map(_.toLong).getOrElse(ScaleGuards.OverlapTwoPhaseMinBytesDefault))
 
   /** Semi = "report the contaminated rows", anti = "keep the clean
     * corpus": both reduce to the same matching-rowid set, the back
     * join's type decides which side survives. LeftAnti has no in-place
     * fallback (its collapse is not a group-by over survivors), so
     * without a stable rowid the rule stands down. */
-  private def rewriteSemi(j: Join, cs: Seq[Expression], chosen: Expression,
-      a: Expression, b: Expression, k: Int): Option[LogicalPlan] = {
-    val Join(l, r, jt, _, _) = (j: @unchecked)
-    val rest = cs.filterNot(_ eq chosen)
-    val restCheap = rest.forall(c =>
-      c.deterministic && c.references.forall(at => scalarType(at.dataType)))
-    val twoPhase =
-      if (restCheap && !l.isStreaming && !r.isStreaming
-          && (jt == LeftAnti
-            || l.stats.sizeInBytes.max(r.stats.sizeInBytes) >= twoPhaseMinBytes))
-        twoPhaseSemi(j, rest, a, b, k)
-      else None
-    // the in-place collapse is a group-by over the exploded left side —
-    // on a streaming plan that would smuggle a stateful aggregate into
-    // a stateless semi join, so it stands down there
-    twoPhase.orElse(
-      if (jt == LeftSemi && !j.isStreaming) inPlaceSemi(j, cs, a, b, k)
-      else None)
-  }
-
-  /** Slim semi probe: `(rowid, fingerprint, cheap cols, index, block)`
-    * rows on the left, `(fingerprint, cheap cols, index, block)` on the
-    * right; the Hamming bound is verified inside the slim join on the
-    * carried 8-byte fingerprints, so nothing is re-checked later. */
-  private def twoPhaseSemi(j: Join, rest: Seq[Expression],
-      a: Expression, b: Expression, k: Int): Option[LogicalPlan] = {
+  override protected def rewriteSemi(j: Join,
+      cs: Seq[Expression]): Option[LogicalPlan] = {
     val Join(l, r, jt, _, hint) = (j: @unchecked)
-    for {
-      (lBack, ridL) <- withStableRowId(l, "graft_rid_l")
-      (lNarrow, pridL) <- withStableRowId(l, "graft_prid_l")
-    } yield {
-      val (nL, fpL, posL, valL, mapL) =
-        slimBlockSide(lNarrow, Seq(pridL), a, l, "l", rest, k)
-      val (nR, fpR, posR, valR, mapR) =
-        slimBlockSide(r, Nil, b, r, "r", rest, k)
-      val subst = mapL ++ mapR
-      val restSub = rest.map(_.transform {
-        case at: Attribute if subst.contains(at) => subst(at)
-      })
-      val bound = LessThanOrEqual(HammingDistance(fpL, fpR), Literal(k))
-      val semiCand = Join(nL, nR, LeftSemi,
-        Some((Seq(EqualTo(posL, posR), EqualTo(valL, valR), bound)
-          ++ restSub).reduce(And)),
-        selfJoinHint(l, r, hint))
-      val rids = Aggregate(Seq(pridL), Seq(pridL), semiCand)
-      val back = Join(lBack, rids, jt,
-        Some(EqualTo(ridL, pridL)), JoinHint.NONE)
-      Project(j.output, back)
+    hammingBound(cs, l, r).flatMap { case (chosen, a, b, k) =>
+      val rest = cs.filterNot(_ eq chosen)
+      val twoPhase =
+        if (rest.forall(cheapScalar) && !l.isStreaming && !r.isStreaming
+            && (jt == LeftAnti || bigEnoughForTwoPhase(l, r)))
+          twoPhaseSemi(j, blockProbe(a, b, k), rest, selfJoinHint(l, r, hint))
+        else None
+      // the in-place collapse is a group-by over the exploded left side —
+      // on a streaming plan that would smuggle a stateful aggregate into
+      // a stateless semi join, so it stands down there
+      val fired = twoPhase.orElse(
+        if (jt == LeftSemi && !j.isStreaming) Some {
+          val (genL, genR) = (blocks(a, k, "l"), blocks(b, k, "r"))
+          inPlaceSemi(j, genL, explode(genR, r),
+            Seq(EqualTo(genL._2(0), genR._2(0)),
+              EqualTo(genL._2(1), genR._2(1))) ++ cs,
+            selfJoinHint(l, r, hint))
+        }
+        else None)
+      if (fired.isDefined) audit(l, r, a, b, k)
+      fired
     }
-  }
-
-  /** Single-instantiation semi: tag, posexplode over the full rows,
-    * LeftSemi with the original predicate (no first-match pin — semi's
-    * ∃-semantics make duplicates free), group back on the srid alone
-    * (payloads ride First — see [[RewriteSupport.collapseBySrid]]). */
-  private def inPlaceSemi(j: Join, cs: Seq[Expression],
-      a: Expression, b: Expression, k: Int): Option[LogicalPlan] = {
-    val Join(l, r, _, _, hint) = (j: @unchecked)
-    val (n, widths, offsets) = layout(k)
-    def blocksArr(x: Expression) = CreateArray(
-      (0 until n).map(i => blockOf(x, offsets(i), widths(i))))
-    val srid = Alias(MonotonicallyIncreasingID(), "graft_srid")()
-    val tagged = Project(l.output :+ srid, l)
-    val posL = AttributeReference("graft_bidx_l", IntegerType,
-      nullable = false)()
-    val valL = AttributeReference("graft_bval_l", LongType)()
-    val posR = AttributeReference("graft_bidx_r", IntegerType,
-      nullable = false)()
-    val valR = AttributeReference("graft_bval_r", LongType)()
-    val genL = Generate(PosExplode(blocksArr(a)), Nil,
-      outer = false, None, Seq(posL, valL), tagged)
-    val genR = Generate(PosExplode(blocksArr(b)), Nil,
-      outer = false, None, Seq(posR, valR), r)
-    val semi = Join(genL, genR, LeftSemi,
-      Some((Seq(EqualTo(posL, posR), EqualTo(valL, valR)) ++ cs).reduce(And)),
-      selfJoinHint(l, r, hint))
-    val collapsed = collapseBySrid(srid.toAttribute, l.output, semi)
-    Some(Project(j.output, collapsed))
   }
 }
 

@@ -6,8 +6,6 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 
-/** Shared pattern helpers for the theta-join rewrite rules
-  * ([[HammingBlockJoinRewrite]], [[SetOverlapJoinRewrite]]). */
 /** Thrown by the rewrite rules' `preflight=fail` mode: a successful skew
   * audit returned a non-'ok' diagnosis, and the deployment asked for the
   * join to be refused rather than run — the message carries the full
@@ -123,6 +121,8 @@ object PreflightLog {
 
   private val spillLock = new Object
   @volatile private var spill: Option[SpillSink] = None
+  /** How many [[attachSpill]] owners share the current sink. */
+  private var spillOwners = 0
 
   /** Any file at a spill path larger than this is FOREIGN: maxBytes
     * clamps to 64 MiB and rotation fires at the cap, so no generation
@@ -284,43 +284,73 @@ object PreflightLog {
   def spillTo(path: String, maxBytes: Long = 1L << 20,
       hadoopConf: org.apache.hadoop.conf.Configuration = null): Boolean =
     spillLock.synchronized {
-      import org.apache.hadoop.fs.{Path => HPath}
-      val sinkOpt: Option[SpillSink] =
-        try {
-          val local =
-            if (!SchemePrefix.matches(path)) Some(path)
-            else Some(new HPath(path).toUri)
-              .filter(u => "file".equalsIgnoreCase(u.getScheme))
-              .map(_.getPath)
-          val (fs, hp) = local match {
-            case Some(lp) => (rawLocal, new HPath(java.nio.file.Paths
-              .get(lp).toAbsolutePath.normalize.toUri))
-            case None =>
-              val conf = Option(hadoopConf).getOrElse(
-                org.apache.spark.sql.SparkSession.getActiveSession
-                  .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-                  .map(_.sparkContext.hadoopConfiguration)
-                  .getOrElse(new org.apache.hadoop.conf.Configuration()))
-              val hp = new HPath(path)
-              (hp.getFileSystem(conf), hp)
-          }
-          Some(new SpillSink(fs, fs.makeQualified(hp)))
-        } catch { case scala.util.control.NonFatal(e) =>
-          // ANY scheme-shaped path that fails FS resolution is a
-          // warn-and-refuse — including single-slash spellings like
-          // 's3a:/bucket/x' and colon-bearing relative paths. A local
-          // fallback would turn a misspelled REMOTE root into a bogus
-          // local './s3a:…' file with a true return, so crash evidence
-          // dies with the driver's disk. A genuinely local path with a
-          // colon in its first segment must be spelled
-          // './backup:tuesday/…' (no scheme shape) or via file://.
-          System.err.println(s"[graft] preflight spill at '$path' " +
-            s"unresolvable (${e.getClass.getSimpleName}: ${e.getMessage})" +
-            " — continuing with ring-only telemetry")
-          None
-        }
-      register(sinkOpt, maxBytes)
+      val changed = register(resolve(path, hadoopConf), maxBytes)
+      if (changed) spillOwners = 0
+      changed
     }
+
+  /** [[spillTo]] for an owner that will [[detachSpill]] when it stops (a
+    * stream engine's checkpoint root): returns whether the path changed
+    * and the registered sink's id, None when unresolvable. Owners of the
+    * same path are counted, so the sink detaches with the last of them. */
+  private[graft] def attachSpill(path: String,
+      hadoopConf: org.apache.hadoop.conf.Configuration)
+      : (Boolean, Option[String]) =
+    spillLock.synchronized {
+      val sink = resolve(path, hadoopConf)
+      val changed = register(sink, 1L << 20)
+      spillOwners = if (sink.isEmpty) 0 else if (changed) 1 else spillOwners + 1
+      (changed, sink.map(_.id))
+    }
+
+  /** Release one [[attachSpill]] ownership of sink `id`: the last owner
+    * detaches it, so later audits stop landing beside a stopped owner's
+    * root. A sink another registration has since replaced is left alone. */
+  private[graft] def detachSpill(id: String): Unit =
+    spillLock.synchronized {
+      if (spill.exists(_.id == id)) {
+        spillOwners -= 1
+        if (spillOwners <= 0) { spill = None; spillOwners = 0 }
+      }
+    }
+
+  private def resolve(path: String,
+      hadoopConf: org.apache.hadoop.conf.Configuration): Option[SpillSink] = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    try {
+      val local =
+        if (!SchemePrefix.matches(path)) Some(path)
+        else Some(new HPath(path).toUri)
+          .filter(u => "file".equalsIgnoreCase(u.getScheme))
+          .map(_.getPath)
+      val (fs, hp) = local match {
+        case Some(lp) => (rawLocal, new HPath(java.nio.file.Paths
+          .get(lp).toAbsolutePath.normalize.toUri))
+        case None =>
+          val conf = Option(hadoopConf).getOrElse(
+            org.apache.spark.sql.SparkSession.getActiveSession
+              .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+              .map(_.sparkContext.hadoopConfiguration)
+              .getOrElse(new org.apache.hadoop.conf.Configuration()))
+          val hp = new HPath(path)
+          (hp.getFileSystem(conf), hp)
+      }
+      Some(new SpillSink(fs, fs.makeQualified(hp)))
+    } catch { case scala.util.control.NonFatal(e) =>
+      // ANY scheme-shaped path that fails FS resolution is a
+      // warn-and-refuse — including single-slash spellings like
+      // 's3a:/bucket/x' and colon-bearing relative paths. A local
+      // fallback would turn a misspelled REMOTE root into a bogus
+      // local './s3a:…' file with a true return, so crash evidence
+      // dies with the driver's disk. A genuinely local path with a
+      // colon in its first segment must be spelled
+      // './backup:tuesday/…' (no scheme shape) or via file://.
+      System.err.println(s"[graft] preflight spill at '$path' " +
+        s"unresolvable (${e.getClass.getSimpleName}: ${e.getMessage})" +
+        " — continuing with ring-only telemetry")
+      None
+    }
+  }
 
   /** Test seam: install a sink on a directly-constructed FileSystem (the
     * checksummed LocalFileSystem for the no-append fallback, failing
@@ -329,6 +359,7 @@ object PreflightLog {
       fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path, maxBytes: Long): Boolean =
     spillLock.synchronized {
+      spillOwners = 0
       register(Some(new SpillSink(fs, fs.makeQualified(path))), maxBytes)
     }
 
@@ -445,9 +476,10 @@ object PreflightLog {
   /** Test hook: detach the spill sink (specs must not leak a tmp spill
     * path into later suites sharing this JVM-global object). */
   private[graft] def clearSpill(): Unit =
-    spillLock.synchronized { spill = None }
+    spillLock.synchronized { spill = None; spillOwners = 0 }
 }
 
+/** Pattern helpers for the theta-join rewrites ([[ThetaJoinRewrite]]). */
 private[plans] object RewriteSupport {
 
   /** Once-per-(rule, condition) memory for stand-down diagnostics
@@ -633,23 +665,16 @@ private[plans] object RewriteSupport {
         && a.references.subsetOf(r.outputSet)) Some((b, a))
     else None
 
+  /** <=> counts: ExtractEquiJoinKeys plans EqualNullSafe as an
+    * O(collisions) hash join just like =, so a join already linked by
+    * either is better left alone than exploded. */
   def hasEquiBetween(cs: Seq[Expression],
-      l: LogicalPlan, r: LogicalPlan): Boolean = {
-    // <=> counts: ExtractEquiJoinKeys plans EqualNullSafe as an
-    // O(collisions) hash join just like =, so a join already linked by
-    // either is better left alone than exploded
-    def cross(x: Expression, y: Expression): Boolean =
-      x.references.nonEmpty && y.references.nonEmpty &&
-        ((x.references.subsetOf(l.outputSet)
-            && y.references.subsetOf(r.outputSet)) ||
-          (y.references.subsetOf(l.outputSet)
-            && x.references.subsetOf(r.outputSet)))
+      l: LogicalPlan, r: LogicalPlan): Boolean =
     cs.exists {
-      case EqualTo(x, y) => cross(x, y)
-      case EqualNullSafe(x, y) => cross(x, y)
+      case EqualTo(x, y) => crossSides(l, r)(x, y)
+      case EqualNullSafe(x, y) => crossSides(l, r)(x, y)
       case _ => false
     }
-  }
 
   /** Non-container type — what the two-phase topologies allow in the
     * slim candidate exchange (a handful of fixed-width or short scalar
@@ -793,17 +818,9 @@ private[plans] object RewriteSupport {
         withStableRowId(f.child, name).map { case (c2, rid) =>
           (f.withNewChildren(Seq(c2)), rid)
         }
-      case rp: RepartitionOperation =>
-        withStableRowId(rp.child, name).map { case (c2, rid) =>
-          (rp.withNewChildren(Seq(c2)), rid)
-        }
-      case s: Sort =>
-        withStableRowId(s.child, name).map { case (c2, rid) =>
-          (s.withNewChildren(Seq(c2)), rid)
-        }
-      case sa: SubqueryAlias =>
-        withStableRowId(sa.child, name).map { case (c2, rid) =>
-          (sa.withNewChildren(Seq(c2)), rid)
+      case u @ (_: RepartitionOperation | _: Sort | _: SubqueryAlias) =>
+        withStableRowId(u.children.head, name).map { case (c2, rid) =>
+          (u.withNewChildren(Seq(c2)), rid)
         }
       case _ => None
     }
@@ -817,13 +834,18 @@ private[plans] object RewriteSupport {
     * explodes at most once per row. */
   def hashedElems(arr: Expression): Expression = {
     val ArrayType(et, containsNull) = (arr.dataType: @unchecked)
-    val base = if (containsNull) {
+    val h = NamedLambdaVariable("graft_hx", et, nullable = containsNull)
+    ArrayDistinct(ArrayTransform(nonNullElems(arr),
+      LambdaFunction(XxHash64(Seq(h), 42L), Seq(h))))
+  }
+
+  /** `filter(arr, x -> x IS NOT NULL)`, or `arr` itself when its type
+    * is null-free. */
+  def nonNullElems(arr: Expression): Expression = arr.dataType match {
+    case ArrayType(et, true) =>
       val v = NamedLambdaVariable("graft_nn", et, nullable = true)
       ArrayFilter(arr, LambdaFunction(IsNotNull(v), Seq(v)))
-    } else arr
-    val h = NamedLambdaVariable("graft_hx", et, nullable = containsNull)
-    ArrayDistinct(ArrayTransform(base,
-      LambdaFunction(XxHash64(Seq(h), 42L), Seq(h))))
+    case _ => arr
   }
 
   /** SSJoin prefix filter (the All-Pairs/PPJoin candidate bound from
@@ -920,12 +942,6 @@ private[plans] object RewriteSupport {
   /** `array_distinct(<non-null elements of arr>)` — the raw-element twin
     * of [[hashedElems]] for the semi paths, whose witness equality must
     * be exact without a later re-check. */
-  def distinctElems(arr: Expression): Expression = {
-    val ArrayType(et, containsNull) = (arr.dataType: @unchecked)
-    val base = if (containsNull) {
-      val v = NamedLambdaVariable("graft_nn", et, nullable = true)
-      ArrayFilter(arr, LambdaFunction(IsNotNull(v), Seq(v)))
-    } else arr
-    ArrayDistinct(base)
-  }
+  def distinctElems(arr: Expression): Expression =
+    ArrayDistinct(nonNullElems(arr))
 }

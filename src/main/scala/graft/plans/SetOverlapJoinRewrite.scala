@@ -2,10 +2,9 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{ArrayType, DataType, Decimal, DecimalType, DoubleType, FloatType, IntegerType, LongType, MapType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, Decimal, DecimalType, DoubleType, FloatType, IntegerType, LongType, MapType, StringType, StructType}
 
 /** Exact explode rewrite for set-overlap theta joins — the companion of
   * [[HammingBlockJoinRewrite]], automating d02's group-and-expand
@@ -123,10 +122,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, Decimal, DecimalType, Do
   *
   * LEFT ANTI joins — "keep the clean corpus" — reduce to the SAME
   * matching-rowid sets with the back join flipped to anti: the implied
-  * spelling through [[twoPhaseSemi]], threshold/Jaccard spellings
+  * spelling through the raw-witness probe, threshold/Jaccard spellings
   * through the pair-verify [[twoPhaseSemiVerify]] (candidates from the
   * hashed-prefix join, raw predicate re-checked on back-joined rows),
-  * and left-array membership through [[twoPhaseSemiMembership]]. Anti
+  * and left-array membership through the member probe. Anti
   * has no in-place form (its collapse is not a group-by over
   * survivors), so it requires a stable rowid and stands down otherwise.
   *
@@ -137,8 +136,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, Decimal, DecimalType, Do
   * join it emits is an equi-join). Default ON; disable with
   * `spark.graft.overlapJoinRewrite=false`.
   */
-class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
+class SetOverlapJoinRewrite(spark: SparkSession)
+    extends ThetaJoinRewrite(spark, "overlap-join", "array compares",
+      ScaleGuards.OverlapJoinRewriteKey, ScaleGuards.OverlapPreflightKey,
+      ScaleGuards.OverlapPreflightSampleKey,
+      ScaleGuards.OverlapPreflightAutoSampleMinBytesKey) {
   import RewriteSupport._
+  import ThetaJoinRewrite.{Probe, Slim}
 
   import SetOverlapJoinRewrite.OverlapPred
 
@@ -373,13 +377,6 @@ class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     a.dataType.asInstanceOf[ArrayType].elementType ==
       b.dataType.asInstanceOf[ArrayType].elementType
 
-  private def twoPhaseMinBytes: BigInt = BigInt(
-    RewriteSupport.activeConf(ScaleGuards.OverlapTwoPhaseMinBytesKey)
-      .map(_.toLong).getOrElse(ScaleGuards.OverlapTwoPhaseMinBytesDefault))
-
-  private def bigEnoughForTwoPhase(l: LogicalPlan, r: LogicalPlan): Boolean =
-    l.stats.sizeInBytes.max(r.stats.sizeInBytes) >= twoPhaseMinBytes
-
   /** xxhash64 and SQL equality agree (x = y ⇒ hash(x) = hash(y)) for
     * every atomic type except float/double, whose NaN families and
     * signed zeros compare equal without sharing bits. */
@@ -391,15 +388,15 @@ class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** Stand-down diagnostics: when a join's condition LOOKS like the
     * overlap family but a gate disqualified it, the user is left with a
-    * silent nested-loop plan and only a plan probe reveals why (the
-    * round-11 re-fixture hit exactly this — a transform-then-drop-nulls
-    * gram spelling types containsNull=true and the rule walked away).
-    * Scan the conjuncts for near-miss shapes and name the disqualifier
-    * once per canonicalized condition (WARN + [[PreflightLog]], where
-    * the management API's /v1/preflight serves it). Pure structural
-    * scan — no stats reads, no side jobs. */
-  private def standDownReasons(cs: Seq[Expression], l: LogicalPlan,
-      r: LogicalPlan): Seq[String] = {
+    * silent nested-loop plan and only a plan probe reveals why (a
+    * transform-then-drop-nulls gram spelling types containsNull=true and
+    * the rule walks away). Scan the conjuncts for near-miss shapes and
+    * name the disqualifier; with every gate passed, a semi/anti that did
+    * not fire names its topological cause. Pure structural scan — no
+    * stats reads, no side jobs. */
+  override protected def standDownReasons(j: Join,
+      cs: Seq[Expression]): Seq[String] = {
+    val Join(l, r, jt, _, _) = (j: @unchecked)
     val crossSides = RewriteSupport.crossSides(l, r) _
     val hits = scala.collection.mutable.LinkedHashSet.empty[String]
     def inspect(node: Expression): Unit = node match {
@@ -434,19 +431,8 @@ class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           | _: LessThan | _: LessThanOrEqual) => c.foreach(inspect)
       case _ => ()
     }
-    hits.toSeq
-  }
-
-  private def logStandDown(j: Join, reasons: Seq[String]): Unit =
-    RewriteSupport.logStandDown("overlap-join", j, "array compares",
-      reasons, logWarning(_))
-
-  /** Semi/anti non-fires whose conjunct gates all PASSED are topological
-    * stand-downs — name the likely cause instead of staying silent. */
-  private def semiStandDownReasons(cs: Seq[Expression], l: LogicalPlan,
-      r: LogicalPlan,
-      jt: org.apache.spark.sql.catalyst.plans.JoinType): Seq[String] =
-    orientedOverlap(cs, l, r).toSeq.map { p =>
+    if (hits.nonEmpty) hits.toSeq
+    else orientedOverlap(cs, l, r).toSeq.map { p =>
       if (l.isStreaming || r.isStreaming)
         "a streaming child: the collapse would smuggle a stateful " +
           "aggregate into a stateless semi join (the naive stream-static " +
@@ -459,39 +445,17 @@ class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         "float/double elements: xxhash64 and SQL equality disagree on " +
           "NaN families and signed zeros — quantize or bit-cast the " +
           "elements to integers first"
-      else
-        s"${jt.sql} needs a STABLE rowid (no limits/samples below the " +
-          "join input) and cheap scalar remaining conjuncts; one of " +
-          "those is missing"
-    }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled = RewriteSupport
-      .activeConf(ScaleGuards.OverlapJoinRewriteKey)
-      .forall(!_.equalsIgnoreCase("false"))
-    if (!enabled) return plan
-    plan.transformUp {
-      case j @ Join(l, r, jt, Some(cond), _)
-          if (jt == Inner || jt == Cross) && j.resolved =>
-        val cs = conjuncts(cond)
-        if (hasEquiBetween(cs, l, r)) j
-        else rewriteOverlap(j, cs)
-          .orElse(rewriteMembership(j, cs))
-          .getOrElse { logStandDown(j, standDownReasons(cs, l, r)); j }
-      case j @ Join(l, r, jt, Some(cond), _)
-          if (jt == LeftSemi || jt == LeftAnti) && j.resolved =>
-        val cs = conjuncts(cond)
-        if (hasEquiBetween(cs, l, r)) j
-        else rewriteSemiOverlap(j, cs)
-          .orElse(rewriteSemiMembership(j, cs))
-          .getOrElse {
-            val gate = standDownReasons(cs, l, r)
-            logStandDown(j,
-              if (gate.nonEmpty) gate else semiStandDownReasons(cs, l, r, jt))
-            j
-          }
+      else rowIdStandDown(jt)
     }
   }
+
+  override protected def rewriteInner(j: Join,
+      cs: Seq[Expression]): Option[LogicalPlan] =
+    rewriteOverlap(j, cs).orElse(rewriteMembership(j, cs))
+
+  override protected def rewriteSemi(j: Join,
+      cs: Seq[Expression]): Option[LogicalPlan] =
+    rewriteSemiOverlap(j, cs).orElse(rewriteSemiMembership(j, cs))
 
   /** First overlap conjunct that orients across the two sides, with
     * oriented (a = left side, b = right side) array expressions — the
@@ -504,59 +468,96 @@ class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       else None
     }.nextOption()
 
-  /** [[ScaleGuards.OverlapPreflightKey]] = warn: on rewrite fire, run
-    * the d31 hot-element audit over the join's own children and log the
-    * result — "diagnosed by default" instead of "diagnosable on
-    * request". Orchestration (conf gate, streaming skip, boxed BIGINT
-    * reads, best-effort catch) is [[RewriteSupport.logPreflight]],
-    * shared with the Hamming rule. */
-  private def maybePreflight(l: LogicalPlan, r: LogicalPlan,
-      p: OverlapPred): Unit = {
+  /** [[ScaleGuards.OverlapPreflightKey]] = warn: on rewrite fire, the
+    * d31 hot-element audit over the join's own children — "diagnosed by
+    * default" instead of "diagnosable on request". */
+  private def audit(l: LogicalPlan, r: LogicalPlan, p: OverlapPred): Unit = {
     // >=-Jaccard fires withEmptyEmptyBranch — |E_l|·|E_r| rows of
     // REQUIRED output the witnessed count cannot see; price them
     val eeCols =
       if (p.jaccardOrEqual)
         Seq("empty_empty_rows" -> true, "empty_share_bp" -> false)
       else Nil
-    // sampled estimator mode: explicit sampleFraction conf wins; unset,
-    // the stats floor auto-engages sampling on big children
-    // (ScaleGuards.effectivePreflightSample — the 100 TB default). The
-    // audit line gains sample_fraction=f provenance either way, so a
-    // warn/abort read off an estimate is never mistaken for an exact
-    // count
-    val sample = ScaleGuards.effectivePreflightSample(
-      ScaleGuards.OverlapPreflightSampleKey,
-      ScaleGuards.OverlapPreflightAutoSampleMinBytesKey, l, r)
-    val sampleCols = ScaleGuards.sampleProvenanceCols(sample)
-    RewriteSupport.logPreflight(spark, ScaleGuards.OverlapPreflightKey,
-      "overlap-join rewrite", l, r,
+    preflight(l, r, p.a, p.b,
       Seq("est_candidate_rows" -> true) ++ eeCols ++ Seq(
         "worst_element" -> false, "max_element_rows" -> true,
-        "max_share_bp" -> false, "diagnosis" -> false) ++ sampleCols,
-      logWarning(_)) {
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      graft.operators.SkewTools.overlapJoinPreflight(
-        ColumnBridge.dataFrame(spark, l), ColumnBridge.column(p.a),
-        ColumnBridge.dataFrame(spark, r), ColumnBridge.column(p.b),
+        "max_share_bp" -> false, "diagnosis" -> false)) {
+      (dl, ca, dr, cb, f) => graft.operators.SkewTools.overlapJoinPreflight(
+        dl, ca, dr, cb,
         minOverlap = if (p.jaccardTau.isDefined) 1 else p.minOverlap,
-        includeEmptyEmpty = p.jaccardOrEqual,
-        sampleFraction = sample.getOrElse(1.0))
+        includeEmptyEmpty = p.jaccardOrEqual, sampleFraction = f)
+    }
+  }
+
+  /** The in-place candidate keys: raw elements, prefix-sliced when the
+    * threshold admits it, exploded into `graft_elem_<side>`. */
+  private def rawElems(arr: Expression, p: OverlapPred, side: String)
+      : (Generator, Seq[Attribute]) =
+    (Explode(candidateElems(arr, p, hashed = false)),
+      Seq(AttributeReference(s"graft_elem_$side",
+        arr.dataType.asInstanceOf[ArrayType].elementType)()))
+
+  /** Slim `(prid, element)` candidate rows: HASHED keys (8-byte
+    * xxhash64, prefix-sliced when the threshold admits it) where a raw
+    * recheck follows, raw distinct elements where a matched element IS
+    * the overlap witness and nothing is re-checked. */
+  private def elemProbe(p: OverlapPred, hashed: Boolean): Probe = new Probe {
+    def side(base: LogicalPlan, keep: Seq[Attribute], side: LogicalPlan,
+        carried: Seq[Expression], left: Boolean): Slim = {
+      val (arr, s) = if (left) (p.a, "l") else (p.b, "r")
+      val (elems, et) =
+        if (hashed) (candidateElems(arr, p, hashed = true), LongType)
+        else (distinctElems(arr),
+          arr.dataType.asInstanceOf[ArrayType].elementType)
+      val eh = AttributeReference(s"graft_elem_$s", et, nullable = !hashed)()
+      val (plan, subst) =
+        slimSide(base, keep, side, carried, Nil, Explode(elems), Seq(eh))
+      Slim(plan, Seq(eh), subst)
     }
   }
 
   /** `arrays_overlap(a, b)` / intersect-size threshold / Jaccard
-    * (strict and `>=`), inner/cross. */
+    * (strict and `>=`), inner/cross. TWO-PHASE above the floor (hashed
+    * candidates, raw recheck after the back-joins); IN-PLACE otherwise:
+    * explode both sides (prefix-sliced when the threshold admits it —
+    * the pin element, being the MINIMUM common element, is always
+    * inside both prefixes, see [[RewriteSupport.prefixElems]]),
+    * equi-join on the element, pin to the minimum non-null common
+    * element (exactly-once per qualifying pair). */
   private def rewriteOverlap(j: Join, cs: Seq[Expression])
       : Option[LogicalPlan] = {
     val Join(l, r, _, _, _) = (j: @unchecked)
     orientedOverlap(cs, l, r).map { p =>
-      maybePreflight(l, r, p)
+      val (a, b) = (p.a, p.b)
+      audit(l, r, p)
       val twoPhase =
-        if (!l.isStreaming && !r.isStreaming && hashSafeElem(p.a)
+        if (!l.isStreaming && !r.isStreaming && hashSafeElem(a)
             && bigEnoughForTwoPhase(l, r))
-          twoPhaseInner(j, cs, p)
+          // the plain arrays_overlap spelling re-checks through the exact
+          // intersect twin (hash-set path); threshold spellings re-apply
+          // their own predicate raw, which subsumes the overlap witness
+          twoPhaseInner(j, p.conj, cs, elemProbe(p, hashed = true),
+            Some(if (p.implied) fastOverlapCheck(a, b) else p.conj))
         else None
-      val witnessed = twoPhase.getOrElse(inPlaceInner(j, cs, p))
+      val witnessed = twoPhase.getOrElse {
+        val (genL, genR) = (rawElems(a, p, "l"), rawElems(b, p, "r"))
+        val ea = genL._2.head
+        // re-apply the original conjuncts, minus the overlap predicate
+        // itself when the equi-match implies it (the chosen conjunct,
+        // plus any duplicate arrays_overlap spelling of the same pair)
+        val reapplied =
+          if (p.implied)
+            cs.filterNot { x =>
+              (x eq p.conj) || (x match {
+                case ArraysOverlap(q, w) =>
+                  (q == a && w == b) || (q == b && w == a)
+                case _ => false
+              })
+            }
+          else cs
+        inPlaceInner(j, genL, genR, Seq(EqualTo(ea, genR._2.head),
+          EqualTo(ea, ArrayMin(ArrayIntersect(a, b)))) ++ reapplied)
+      }
       if (p.jaccardOrEqual) withEmptyEmptyBranch(j, cs, p, witnessed)
       else witnessed
     }
@@ -592,43 +593,6 @@ class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     Union(Seq(witnessed, fresh))
   }
 
-  /** IN-PLACE topology: explode both sides (prefix-sliced when the
-    * threshold admits it — the pin element, being the MINIMUM common
-    * element, is always inside both prefixes, see
-    * [[RewriteSupport.prefixElems]]), equi-join on the element, pin to
-    * the minimum non-null common element (exactly-once per qualifying
-    * pair). */
-  private def inPlaceInner(j: Join, cs: Seq[Expression],
-      p: OverlapPred): LogicalPlan = {
-    val Join(l, r, _, _, hint) = (j: @unchecked)
-    val (a, b) = (p.a, p.b)
-    val elemType = a.dataType.asInstanceOf[ArrayType].elementType
-    val ea = AttributeReference("graft_elem_l", elemType)()
-    val eb = AttributeReference("graft_elem_r", elemType)()
-    val genL = Generate(Explode(candidateElems(a, p, hashed = false)), Nil,
-      outer = false, None, Seq(ea), l)
-    val genR = Generate(Explode(candidateElems(b, p, hashed = false)), Nil,
-      outer = false, None, Seq(eb), r)
-    val firstCommon = ArrayMin(ArrayIntersect(a, b))
-    // re-apply the original conjuncts, minus the overlap predicate
-    // itself when the equi-match implies it (the chosen conjunct, plus
-    // any duplicate arrays_overlap spelling of the same pair)
-    val reapplied =
-      if (p.implied)
-        cs.filterNot { x =>
-          (x eq p.conj) || (x match {
-            case ArraysOverlap(q, w) =>
-              (q == a && w == b) || (q == b && w == a)
-            case _ => false
-          })
-        }
-      else cs
-    val full = (Seq(EqualTo(ea, eb),
-      EqualTo(ea, firstCommon)) ++ reapplied).reduce(And)
-    Project(j.output,
-      Join(genL, genR, Inner, Some(full), selfJoinHint(l, r, hint)))
-  }
-
   /** Exact, fast evaluation twin of `arrays_overlap(a, b)` for the
     * re-check slot: `size(array_intersect(<non-null a>, b)) >= 1`.
     * Identical three-valued semantics — null elements are filtered off
@@ -639,103 +603,10 @@ class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * path is pairwise O(n·m) comparison (measured ~2.2 ms per 297×51
     * string-array pair), while array_intersect builds a hash set
     * (~4× faster on the same inputs). */
-  private def fastOverlapCheck(a: Expression, b: Expression): Expression = {
-    val aNonNull = a.dataType match {
-      case ArrayType(et, true) =>
-        val v = NamedLambdaVariable("graft_nn", et, nullable = true)
-        ArrayFilter(a, LambdaFunction(IsNotNull(v), Seq(v)))
-      case _ => a
-    }
+  private def fastOverlapCheck(a: Expression, b: Expression): Expression =
     GreaterThanOrEqual(
-      Size(ArrayIntersect(aNonNull, b), legacySizeOfNull = false),
+      Size(ArrayIntersect(nonNullElems(a), b), legacySizeOfNull = false),
       Literal(1))
-  }
-
-  /** Slim candidate side shared by EVERY two-phase topology (hashed
-    * inner/verify, raw-witness semi, membership): project (keep
-    * columns, aliased scalar-conjunct columns, array refs), explode the
-    * candidate-element expression, return (plan, element attr,
-    * original→alias substitution map for the carried conjuncts).
-    *
-    * The elements expression feeds Explode INLINE, never through an
-    * alias: InferFiltersFromGenerate only infers size / isnotnull
-    * filters over Attribute generator inputs (SPARK-36715), and
-    * predicate pushdown would substitute an alias into those filters
-    * and re-evaluate the whole shingling expression per row below the
-    * explode — measured as 4× the entire query's runtime on d27 before
-    * this shape. */
-  private def slimSide(base: LogicalPlan, keep: Seq[Attribute],
-      side: LogicalPlan, carried: Seq[Expression], elems: Expression,
-      elemName: String, elemType: DataType, elemNullable: Boolean)
-      : (LogicalPlan, Attribute, Map[Attribute, Attribute]) = {
-    val needed = carried.flatMap(_.references).distinct
-      .filter(side.outputSet.contains)
-    val aliased = needed.map(at => at -> Alias(at, at.name)())
-    val arrRefs = elems.references.toSeq
-    val kept = keep ++ aliased.map(_._2)
-    val proj = Project(kept ++ arrRefs, base)
-    val eh = AttributeReference(elemName, elemType,
-      nullable = elemNullable)()
-    val gen = Generate(Explode(elems),
-      unrequiredChildIndex = kept.size until proj.output.size,
-      outer = false, None, Seq(eh), proj)
-    (gen, eh, aliased.map { case (at, al) => at -> al.toAttribute }.toMap)
-  }
-
-  /** [[slimSide]] with the HASHED candidate keys (8-byte xxhash64
-    * elements, prefix-sliced when the threshold admits it) — the
-    * two-phase inner/verify shape. */
-  private def slimHashedSide(base: LogicalPlan, prid: Attribute,
-      arr: Expression, side: LogicalPlan, elemName: String,
-      carried: Seq[Expression], p: OverlapPred)
-      : (LogicalPlan, Attribute, Map[Attribute, Attribute]) =
-    slimSide(base, Seq(prid), side, carried,
-      candidateElems(arr, p, hashed = true), elemName, LongType,
-      elemNullable = false)
-
-  /** TWO-PHASE topology: slim hashed candidate pair generation
-    * (prefix-sliced when the threshold admits it) + distinct + rowid
-    * back-joins + raw predicate re-application. */
-  private def twoPhaseInner(j: Join, cs: Seq[Expression],
-      p: OverlapPred): Option[LogicalPlan] = {
-    val Join(l, r, _, _, hint) = (j: @unchecked)
-    val (chosen, a, b, implied) = (p.conj, p.a, p.b, p.implied)
-    for {
-      (lBack, ridL) <- withStableRowId(l, "graft_rid_l")
-      (rBack, ridR) <- withStableRowId(r, "graft_rid_r")
-      (lNarrow, pridL) <- withStableRowId(l, "graft_prid_l")
-      (rNarrow, pridR) <- withStableRowId(r, "graft_prid_r")
-    } yield {
-      val rest = cs.filterNot(_ eq chosen)
-      // scalar-only conjuncts prune candidates inside the slim join;
-      // everything else (the overlap itself included) re-applies raw
-      // after the back-joins, which is what makes hashing exact
-      val (cheap, heavy) = rest.partition(c =>
-        c.deterministic && c.references.forall(at => scalarType(at.dataType)))
-      val (nL, ehL, mapL) =
-        slimHashedSide(lNarrow, pridL, a, l, "graft_elem_l", cheap, p)
-      val (nR, ehR, mapR) =
-        slimHashedSide(rNarrow, pridR, b, r, "graft_elem_r", cheap, p)
-      val subst = mapL ++ mapR
-      val cheapSub = cheap.map(_.transform {
-        case at: Attribute if subst.contains(at) => subst(at)
-      })
-      val cand = Join(nL, nR, Inner,
-        Some((EqualTo(ehL, ehR) +: cheapSub).reduce(And)),
-        selfJoinHint(l, r, hint))
-      val pairs = Aggregate(Seq(pridL, pridR), Seq(pridL, pridR), cand)
-      val back1 = Join(lBack, pairs, Inner,
-        Some(EqualTo(ridL, pridL)), JoinHint.NONE)
-      val back2 = Join(back1, rBack, Inner,
-        Some(EqualTo(pridR, ridR)), JoinHint.NONE)
-      // the plain arrays_overlap spelling re-checks through the exact
-      // intersect twin (hash-set path); threshold spellings re-apply
-      // their own predicate raw, which subsumes the overlap witness
-      val recheck = if (implied) fastOverlapCheck(a, b) else chosen
-      val post = (recheck +: heavy).reduce(And)
-      Project(j.output, Filter(post, back2))
-    }
-  }
 
   /** `array_contains(a, x)` with `a` and `x` on opposite sides — the
     * tag-lookup membership join — → explode the ARRAY side's distinct
@@ -770,20 +641,19 @@ class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     val Join(l, r, _, _, hint) = (j: @unchecked)
     membershipConjunct(cs, l, r).map { case (c, arr, x, arrayOnLeft) =>
       val rest = cs.filterNot(_ eq c)
-      val elemType = arr.dataType.asInstanceOf[ArrayType].elementType
-      val ea = AttributeReference("graft_member_elem", elemType)()
-      val newJoin =
-        if (arrayOnLeft)
-          Join(Generate(Explode(ArrayDistinct(arr)), Nil,
-            outer = false, None, Seq(ea), l), r, Inner,
-            Some((EqualTo(ea, x) +: rest).reduce(And)), hint)
-        else
-          Join(l, Generate(Explode(ArrayDistinct(arr)), Nil,
-            outer = false, None, Seq(ea), r), Inner,
-            Some((EqualTo(ea, x) +: rest).reduce(And)), hint)
-      Project(j.output, newJoin)
+      val gen @ (_, Seq(ea)) = memberElems(arr)
+      val cond = Some((EqualTo(ea, x) +: rest).reduce(And))
+      Project(j.output,
+        if (arrayOnLeft) Join(explode(gen, l), r, Inner, cond, hint)
+        else Join(l, explode(gen, r), Inner, cond, hint))
     }
   }
+
+  /** The membership candidate keys: the array side's distinct elements,
+    * exploded into `graft_member_elem`. */
+  private def memberElems(arr: Expression): (Generator, Seq[Attribute]) =
+    (Explode(ArrayDistinct(arr)), Seq(AttributeReference("graft_member_elem",
+      arr.dataType.asInstanceOf[ArrayType].elementType)()))
 
   // ---------------------------------------------------------------- semi
 
@@ -791,7 +661,8 @@ class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * shapes (semi = "report the contaminated rows", anti = "keep the
     * clean corpus"). Both reduce to the same matching-rowid set; the
     * back join's type decides which side of it survives. The implied
-    * spelling probes witness equality directly ([[twoPhaseSemi]]);
+    * spelling probes raw witness equality directly (a matched non-null
+    * element IS the overlap witness, so nothing is re-checked);
     * threshold/Jaccard spellings re-verify candidate pairs against the
     * raw predicate first ([[twoPhaseSemiVerify]] — a shared element is
     * only a witness there, not a verdict). LeftAnti has no in-place
@@ -800,7 +671,7 @@ class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * naive plan stays, correct but unscalable). */
   private def rewriteSemiOverlap(j: Join, cs: Seq[Expression])
       : Option[LogicalPlan] = {
-    val Join(l, r, jt, _, _) = (j: @unchecked)
+    val Join(l, r, jt, _, hint) = (j: @unchecked)
     // the `>=` Jaccard spelling admits witness-less empty-empty
     // partners: a semi/anti built from witnessed matches alone would
     // drop (semi) or wrongly keep (anti) every empty left row when the
@@ -813,12 +684,12 @@ class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // nested-loop); without a stable rowid it still stands down.
     orientedOverlap(cs, l, r).flatMap { p =>
       val rest = cs.filterNot(_ eq p.conj)
-      val restCheap = rest.forall(c =>
-        c.deterministic && c.references.forall(at => scalarType(at.dataType)))
+      val restCheap = rest.forall(cheapScalar)
       val twoPhase =
         if (p.implied && restCheap && !l.isStreaming && !r.isStreaming
             && (jt == LeftAnti || bigEnoughForTwoPhase(l, r)))
-          twoPhaseSemi(j, rest, p.a, p.b)
+          twoPhaseSemi(j, elemProbe(p, hashed = false), rest,
+            selfJoinHint(l, r, hint))
         else if (!p.implied && restCheap && !l.isStreaming && !r.isStreaming
             && hashSafeElem(p.a)
             && (jt == LeftAnti || p.jaccardOrEqual
@@ -831,65 +702,53 @@ class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // (the naive stream-static nested-loop semi stays, which is the
       // supported shape); for `>=`-Jaccard it can never fire (empty
       // arrays explode nothing, so empty-empty matches are invisible
-      // to it)
+      // to it). Threshold spellings re-apply their predicate raw.
       val fired = twoPhase.orElse(
-        if (jt == LeftSemi && !j.isStreaming && !p.jaccardOrEqual)
-          inPlaceSemi(j, cs, p)
+        if (jt == LeftSemi && !j.isStreaming && !p.jaccardOrEqual) Some {
+          val (genL, genR) = (rawElems(p.a, p, "l"), rawElems(p.b, p, "r"))
+          val reapplied = if (p.implied) cs.filterNot(_ eq p.conj) else cs
+          inPlaceSemi(j, genL, explode(genR, r),
+            EqualTo(genL._2.head, genR._2.head) +: reapplied,
+            selfJoinHint(l, r, hint))
+        }
         else None)
-      if (fired.isDefined) maybePreflight(l, r, p)
+      if (fired.isDefined) audit(l, r, p)
       fired
     }
   }
 
   /** Two-phase semi/anti for the NON-implied spellings (intersect-size
-    * threshold, strict Jaccard) — the keep-the-clean-corpus shape
-    * `corpus.join(banned, size(array_intersect(g, bg)) >= c,
-    * "left_anti")`, which previously stood down entirely for anti (the
-    * naive plan is a nested-loop cartesian). A shared element is only a
-    * WITNESS here, not a verdict, so candidate pairs from the slim
-    * hashed-prefix join are re-verified by the raw predicate on
-    * back-joined full rows, then collapsed to the matched left-rowid
-    * set; the final join's type (semi keeps it, anti keeps its
-    * complement) decides survival. Payloads cross the wire once per
-    * row into the verify join — never once per element. */
+    * threshold, strict and `>=` Jaccard) — the keep-the-clean-corpus
+    * shape `corpus.join(banned, size(array_intersect(g, bg)) >= c,
+    * "left_anti")`. A shared element is only a WITNESS here, not a
+    * verdict, so candidate pairs from the slim hashed-prefix join are
+    * re-verified by the raw predicate on back-joined full rows, then
+    * collapsed to the matched left-rowid set. Payloads cross the wire
+    * once per row into the verify join — never once per element. */
   private def twoPhaseSemiVerify(j: Join, rest: Seq[Expression],
       p: OverlapPred): Option[LogicalPlan] = {
-    val Join(l, r, jt, _, hint) = (j: @unchecked)
-    for {
-      (lBack, ridL) <- withStableRowId(l, "graft_rid_l")
-      (lNarrow, pridL) <- withStableRowId(l, "graft_prid_l")
-      (rNarrow, pridR) <- withStableRowId(r, "graft_prid_r")
-      (lVer, vridL) <- withStableRowId(l, "graft_vrid_l")
-      (rVer, vridR) <- withStableRowId(r, "graft_vrid_r")
-    } yield {
-      val (nL, ehL, mapL) =
-        slimHashedSide(lNarrow, pridL, p.a, l, "graft_elem_l", rest, p)
-      val (nR, ehR, mapR) =
-        slimHashedSide(rNarrow, pridR, p.b, r, "graft_elem_r", rest, p)
-      val subst = mapL ++ mapR
-      val restSub = rest.map(_.transform {
-        case at: Attribute if subst.contains(at) => subst(at)
-      })
-      val cand = Join(nL, nR, Inner,
-        Some((EqualTo(ehL, ehR) +: restSub).reduce(And)),
-        selfJoinHint(l, r, hint))
-      val pairs = Aggregate(Seq(pridL, pridR), Seq(pridL, pridR), cand)
-      val withL = Join(pairs, lVer, Inner,
-        Some(EqualTo(pridL, vridL)), JoinHint.NONE)
-      val withLR = Join(withL, rVer, Inner,
-        Some(EqualTo(pridR, vridR)), JoinHint.NONE)
-      val verified = Filter(p.conj, withLR)
-      val witnessedIds = Aggregate(Seq(pridL), Seq(pridL), verified)
-      // `>=`-Jaccard admits witness-less empty-empty partners (0 >= τ·0
-      // for every τ): an empty-array left row matches iff SOME
-      // empty-array right row satisfies the remaining conjuncts — a
-      // LeftSemi of the two tiny size-0-filtered subsets (broadcast; a
-      // condition-less one is the FailCartesianProducts-exempt
-      // broadcast shape, as in [[withEmptyEmptyBranch]]). Its rowids
-      // UNION into the matched set; the back join's type then decides
-      // survival for semi and anti alike.
-      val matched =
-        if (!p.jaccardOrEqual) witnessedIds
+    val Join(l, r, _, _, _) = (j: @unchecked)
+    rowIdSemi(j) { (lNarrow, pridL) =>
+      for {
+        (rNarrow, pridR) <- withStableRowId(r, "graft_prid_r")
+        (lVer, vridL) <- withStableRowId(l, "graft_vrid_l")
+        (rVer, vridR) <- withStableRowId(r, "graft_vrid_r")
+      } yield {
+        val pairs = candidatePairs(j, elemProbe(p, hashed = true),
+          lNarrow, pridL, rNarrow, pridR, rest)
+        val withL = Join(pairs, lVer, Inner,
+          Some(EqualTo(pridL, vridL)), JoinHint.NONE)
+        val withLR = Join(withL, rVer, Inner,
+          Some(EqualTo(pridR, vridR)), JoinHint.NONE)
+        val verified = Filter(p.conj, withLR)
+        // `>=`-Jaccard admits witness-less empty-empty partners (0 >= τ·0
+        // for every τ): an empty-array left row matches iff SOME
+        // empty-array right row satisfies the remaining conjuncts — a
+        // LeftSemi of the two tiny size-0-filtered subsets (broadcast; a
+        // condition-less one is the FailCartesianProducts-exempt
+        // broadcast shape, as in [[withEmptyEmptyBranch]]). Its rowids
+        // UNION into the matched set.
+        if (!p.jaccardOrEqual) verified
         else {
           val (lEmpty, erid) = withStableRowId(l, "graft_erid_l")
             .getOrElse(sys.error("unreachable: l yielded a rowid above"))
@@ -900,161 +759,67 @@ class SetOverlapJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           val emptySemi = Join(emptyL, emptyR, LeftSemi,
             rest.reduceOption(And),
             JoinHint(None, Some(HintInfo(Some(BROADCAST)))))
-          val emptyIds = Project(
-            Seq(Alias(erid, "graft_eprid_l")()), emptySemi)
-          Aggregate(Seq(pridL), Seq(pridL),
-            Union(Seq(witnessedIds, emptyIds)))
+          Union(Seq(Aggregate(Seq(pridL), Seq(pridL), verified),
+            Project(Seq(Alias(erid, "graft_eprid_l")()), emptySemi)))
         }
-      val back = Join(lBack, matched, jt,
-        Some(EqualTo(ridL, pridL)), JoinHint.NONE)
-      Project(j.output, back)
+      }
     }
   }
 
-  /** Slim semi pair-probe: explode `(rowid, element)` on the left and
-    * `element` (+ scalar conjunct columns) on the right, LeftSemi on
-    * RAW element equality — a matched non-null element IS the overlap
-    * witness, so this is exact with no re-check — collapse to distinct
-    * rowids, LeftSemi the tagged left side against them. The left
-    * payload crosses the wire once per row, never per element. */
-  private def twoPhaseSemi(j: Join, rest: Seq[Expression],
-      a: Expression, b: Expression): Option[LogicalPlan] = {
-    val Join(l, r, jt, _, hint) = (j: @unchecked)
-    for {
-      (lBack, ridL) <- withStableRowId(l, "graft_rid_l")
-      (lNarrow, pridL) <- withStableRowId(l, "graft_prid_l")
-    } yield {
-      val elemType = a.dataType.asInstanceOf[ArrayType].elementType
-      // raw distinct elements (witness equality must be exact, no
-      // re-check) through the shared slimSide scaffold
-      val (nL, eaL, mapL) = slimSide(lNarrow, Seq(pridL), l, rest,
-        distinctElems(a), "graft_elem_l", elemType, elemNullable = true)
-      val (nR, eaR, mapR) = slimSide(r, Nil, r, rest,
-        distinctElems(b), "graft_elem_r", elemType, elemNullable = true)
-      val subst = mapL ++ mapR
-      val restSub = rest.map(_.transform {
-        case at: Attribute if subst.contains(at) => subst(at)
-      })
-      val semiCand = Join(nL, nR, LeftSemi,
-        Some((EqualTo(eaL, eaR) +: restSub).reduce(And)),
-        selfJoinHint(l, r, hint))
-      val rids = Aggregate(Seq(pridL), Seq(pridL), semiCand)
-      // semi keeps the matching rowids, anti keeps their complement —
-      // the rid set itself is identical
-      val back = Join(lBack, rids, jt,
-        Some(EqualTo(ridL, pridL)), JoinHint.NONE)
-      Project(j.output, back)
-    }
-  }
-
-  /** Single-instantiation semi: tag left rows with a plain unique id
-    * (no order-stability needed — the tagged plan is evaluated once),
-    * explode, LeftSemi with the full predicate (threshold spellings
-    * re-applied raw), then collapse each row's surviving copies via
-    * group-on-srid (payloads ride First — see
-    * [[RewriteSupport.collapseBySrid]]). */
-  private def inPlaceSemi(j: Join, cs: Seq[Expression],
-      p: OverlapPred): Option[LogicalPlan] = {
-    val Join(l, r, _, _, hint) = (j: @unchecked)
-    val (a, b) = (p.a, p.b)
-    val elemType = a.dataType.asInstanceOf[ArrayType].elementType
-    val srid = Alias(MonotonicallyIncreasingID(), "graft_srid")()
-    val tagged = Project(l.output :+ srid, l)
-    val ea = AttributeReference("graft_elem_l", elemType)()
-    val eb = AttributeReference("graft_elem_r", elemType)()
-    val genL = Generate(Explode(candidateElems(a, p, hashed = false)), Nil,
-      outer = false, None, Seq(ea), tagged)
-    val genR = Generate(Explode(candidateElems(b, p, hashed = false)), Nil,
-      outer = false, None, Seq(eb), r)
-    val reapplied = if (p.implied) cs.filterNot(_ eq p.conj) else cs
-    val semi = Join(genL, genR, LeftSemi,
-      Some((EqualTo(ea, eb) +: reapplied).reduce(And)),
-      selfJoinHint(l, r, hint))
-    val collapsed = collapseBySrid(srid.toAttribute, l.output, semi)
-    Some(Project(j.output, collapsed))
+  /** Slim `(prid, element)` membership rows on the array side; the
+    * probe side stays intact and matches on element = probe. */
+  private def memberProbe(arr: Expression, x: Expression): Probe = new Probe {
+    def side(base: LogicalPlan, keep: Seq[Attribute], side: LogicalPlan,
+        carried: Seq[Expression], left: Boolean): Slim =
+      if (!left) Slim(base, Seq(x), Map.empty)
+      else {
+        val ea = AttributeReference("graft_member_elem",
+          arr.dataType.asInstanceOf[ArrayType].elementType)()
+        val (plan, subst) = slimSide(base, keep, side, carried, Nil,
+          Explode(distinctElems(arr)), Seq(ea))
+        Slim(plan, Seq(ea), subst)
+      }
   }
 
   /** LeftSemi membership. Array on the RIGHT (`probe ⋉ tags`): the left
     * side stays unexploded — explode the right side's distinct elements
     * and LeftSemi on element = probe; semi semantics already emit each
     * left row once, so no tagging or collapse at all. Array on the
-    * LEFT: explode-tag-collapse, as the overlap semi. */
+    * LEFT — the quarantine shapes `docs ⋉ banned_tags ON
+    * array_contains(tags, t)` and its anti twin "keep the docs with NO
+    * banned tag": membership witness equality IS the verdict, so the
+    * two-phase probe needs no re-verification (remaining conjuncts'
+    * left-side references must be scalar to ride the narrow
+    * projection; the probe side is fully present); small semi inputs
+    * explode-tag-collapse in place. */
   private def rewriteSemiMembership(j: Join, cs: Seq[Expression])
       : Option[LogicalPlan] = {
     val Join(l, r, jt, _, hint) = (j: @unchecked)
     membershipConjunct(cs, l, r).flatMap { case (c, arr, x, arrayOnLeft) =>
       val rest = cs.filterNot(_ eq c)
-      val elemType = arr.dataType.asInstanceOf[ArrayType].elementType
-      val ea = AttributeReference("graft_member_elem", elemType)()
-      if (!arrayOnLeft) {
+      val gen @ (_, Seq(ea)) = memberElems(arr)
+      if (!arrayOnLeft)
         // probe side stays unexploded: semi AND anti both exact (a null
         // probe or null-only tags never equi-match, exactly the rows
         // array_contains never passes TRUE for)
-        val genR = Generate(Explode(ArrayDistinct(arr)), Nil,
-          outer = false, None, Seq(ea), r)
-        Some(Project(j.output, Join(l, genR, jt,
+        Some(Project(j.output, Join(l, explode(gen, r), jt,
           Some((EqualTo(x, ea) +: rest).reduce(And)), hint)))
-      } else {
+      else {
         val twoPhase =
           if (!l.isStreaming && !r.isStreaming
-              && (jt == LeftAnti || bigEnoughForTwoPhase(l, r)))
-            twoPhaseSemiMembership(j, rest, arr, x)
+              && (jt == LeftAnti || bigEnoughForTwoPhase(l, r))
+              && rest.forall(c => c.deterministic
+                && c.references.filter(l.outputSet.contains)
+                  .forall(at => scalarType(at.dataType))))
+            twoPhaseSemi(j, memberProbe(arr, x), rest, hint)
           else None
-        twoPhase.orElse {
-          // same streaming stand-down as inPlaceSemi: the collapse is
-          // a group-by over the exploded left side
+        // same streaming stand-down as the overlap semi: the collapse is
+        // a group-by over the exploded left side
+        twoPhase.orElse(
           if (jt == LeftAnti || j.isStreaming) None
-          else {
-            val srid = Alias(MonotonicallyIncreasingID(), "graft_srid")()
-            val tagged = Project(l.output :+ srid, l)
-            val genL = Generate(Explode(ArrayDistinct(arr)), Nil,
-              outer = false, None, Seq(ea), tagged)
-            val semi = Join(genL, r, LeftSemi,
-              Some((EqualTo(ea, x) +: rest).reduce(And)), hint)
-            val collapsed = collapseBySrid(srid.toAttribute, l.output, semi)
-            Some(Project(j.output, collapsed))
-          }
-        }
+          else Some(inPlaceSemi(j, gen, r,
+            EqualTo(ea, x) +: rest, hint)))
       }
-    }
-  }
-
-  /** Two-phase semi/anti MEMBERSHIP with the array on the left — the
-    * quarantine shapes `docs ⋉ banned_tags ON array_contains(tags, t)`
-    * and its anti twin "keep the docs with NO banned tag" (which
-    * previously stood down entirely). Membership witness equality IS
-    * the verdict (`array_contains` is TRUE iff some non-null element
-    * equals the non-null probe), so no re-verification is needed:
-    * explode `(rowid, element)` slim rows, LeftSemi against the intact
-    * probe side on element = probe (+ remaining conjuncts — their
-    * left-side references must be scalar to ride the narrow
-    * projection; the probe side is fully present), collapse to
-    * distinct rowids, and semi/anti the tagged left side against them.
-    * The left payload crosses the wire once per row, never per tag. */
-  private def twoPhaseSemiMembership(j: Join, rest: Seq[Expression],
-      arr: Expression, x: Expression): Option[LogicalPlan] = {
-    val Join(l, r, jt, _, hint) = (j: @unchecked)
-    val lRefsScalar = rest.forall(c => c.deterministic
-      && c.references.filter(l.outputSet.contains)
-        .forall(at => scalarType(at.dataType)))
-    if (!lRefsScalar) None
-    else for {
-      (lBack, ridL) <- withStableRowId(l, "graft_rid_l")
-      (lNarrow, pridL) <- withStableRowId(l, "graft_prid_l")
-    } yield {
-      val elemType = arr.dataType.asInstanceOf[ArrayType].elementType
-      val (gen, ea, subst) = slimSide(lNarrow, Seq(pridL), l, rest,
-        distinctElems(arr), "graft_member_elem", elemType,
-        elemNullable = true)
-      val restSub = rest.map(_.transform {
-        case at: Attribute if subst.contains(at) => subst(at)
-      })
-      val semiCand = Join(gen, r, LeftSemi,
-        Some((EqualTo(ea, x) +: restSub).reduce(And)), hint)
-      val rids = Aggregate(Seq(pridL), Seq(pridL), semiCand)
-      val back = Join(lBack, rids, jt,
-        Some(EqualTo(ridL, pridL)), JoinHint.NONE)
-      Project(j.output, back)
     }
   }
 }

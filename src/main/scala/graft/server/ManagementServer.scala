@@ -94,73 +94,74 @@ final class ManagementServer(spark: SparkSession, engine: GraftEngine,
   private def jsonNum(v: Double): String =
     if (java.lang.Double.isFinite(v)) v.toString else "null"
 
-  server.createContext("/ping", new HttpHandler {
-    def handle(ex: HttpExchange): Unit = respond(ex, 200, "pong", "text/plain")
-  })
+  /** Any failure is a 500 server fault. */
+  private val serverFault: Throwable => Int = _ => 500
 
-  server.createContext("/v1/dead_set", new HttpHandler {
-    def handle(ex: HttpExchange): Unit = try {
-      val p = params(ex)
-      val entity = p.getOrElse("entity", "")
-      val count = nonNegIntParam(p, "count", 10)
-      // NOTE: JDK HttpServer routes by longest matching context, so
-      // /v1/dead_set/replay always hits its own context below — no
-      // path-suffix dispatch here (an earlier endsWith("/replay") branch
-      // was unreachable for the real path, yet reachable through
-      // prefix-matched oddities like /v1/dead_set2/replay)
-      if (entity.isEmpty) { respond(ex, 400, """{"error":"entity required"}""") }
-      else ex.getRequestMethod match {
-        case "GET" =>
-          val rows = engine.deadSet.view(spark, entity, count)
-            .select("topic", "partition", "offset", "timestamp")
-            .collect()
-            .map(r => s"""{"topic":"${jsonEscape(r.getString(0))}","partition":${r.getInt(1)},"offset":${r.getLong(2)},"timestamp":"${r.getTimestamp(3)}"}""")
-          respond(ex, 200, rows.mkString("[", ",", "]"))
-        case "DELETE" =>
-          val n = engine.deadSet.delete(spark, entity, count)
-          respond(ex, 200, s"""{"deleted":$n}""")
-        case m => respond(ex, 405, s"""{"error":"method $m not allowed"}""")
-      }
-    } catch {
-      case e: IllegalArgumentException =>
-        respond(ex, 400, s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
-      case e: Throwable =>
-        respond(ex, 500, s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
-    }
-  })
+  /** Bad client input (IllegalArgumentException) is a 400. */
+  private val clientOr500: Throwable => Int = {
+    case _: IllegalArgumentException => 400
+    case _ => 500
+  }
 
-  server.createContext("/v1/dead_set/replay", new HttpHandler {
-    def handle(ex: HttpExchange): Unit = try {
-      val p = params(ex)
-      val entity = p.getOrElse("entity", "")
-      val count = nonNegIntParam(p, "count", 10)
-      if (ex.getRequestMethod != "POST")
-        respond(ex, 405, """{"error":"POST required"}""")
-      else if (entity.isEmpty) respond(ex, 400, """{"error":"entity required"}""")
-      else {
-        val n = engine.deadSet.replay(spark, entity, count)
-        respond(ex, 200, s"""{"replayed":$n}""")
-      }
-    } catch {
-      case e: IllegalArgumentException =>
-        respond(ex, 400, s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
-      case e: Throwable =>
-        respond(ex, 500, s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
-    }
-  })
+  /** Mount `body` at `path`. A throw becomes a JSON `{"error": …}`
+    * response with the status `status` maps it to — without one the
+    * client sees a dropped connection instead of a status. */
+  private def route(path: String, status: Throwable => Int = serverFault)(
+      body: HttpExchange => Unit): Unit =
+    server.createContext(path, new HttpHandler {
+      def handle(ex: HttpExchange): Unit =
+        try body(ex)
+        catch { case e: Throwable =>
+          respond(ex, status(e),
+            s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
+        }
+    })
 
-  server.createContext("/v1/metrics", new HttpHandler {
-    def handle(ex: HttpExchange): Unit = try {
-      val body = engine.metrics.snapshot().toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""${jsonEscape(k)}":${jsonNum(v)}""" }
-        .mkString("{", ",", "}")
-      respond(ex, 200, body)
-    } catch { case e: Throwable =>
-      // without a response the client sees a dropped connection, not
-      // the 500 every other handler returns
-      respond(ex, 500, s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
+  route("/ping") { ex => respond(ex, 200, "pong", "text/plain") }
+
+  route("/v1/dead_set", clientOr500) { ex =>
+    val p = params(ex)
+    val entity = p.getOrElse("entity", "")
+    val count = nonNegIntParam(p, "count", 10)
+    // NOTE: JDK HttpServer routes by longest matching context, so
+    // /v1/dead_set/replay always hits its own context below — no
+    // path-suffix dispatch here (an earlier endsWith("/replay") branch
+    // was unreachable for the real path, yet reachable through
+    // prefix-matched oddities like /v1/dead_set2/replay)
+    if (entity.isEmpty) { respond(ex, 400, """{"error":"entity required"}""") }
+    else ex.getRequestMethod match {
+      case "GET" =>
+        val rows = engine.deadSet.view(spark, entity, count)
+          .select("topic", "partition", "offset", "timestamp")
+          .collect()
+          .map(r => s"""{"topic":"${jsonEscape(r.getString(0))}","partition":${r.getInt(1)},"offset":${r.getLong(2)},"timestamp":"${r.getTimestamp(3)}"}""")
+        respond(ex, 200, rows.mkString("[", ",", "]"))
+      case "DELETE" =>
+        val n = engine.deadSet.delete(spark, entity, count)
+        respond(ex, 200, s"""{"deleted":$n}""")
+      case m => respond(ex, 405, s"""{"error":"method $m not allowed"}""")
     }
-  })
+  }
+
+  route("/v1/dead_set/replay", clientOr500) { ex =>
+    val p = params(ex)
+    val entity = p.getOrElse("entity", "")
+    val count = nonNegIntParam(p, "count", 10)
+    if (ex.getRequestMethod != "POST")
+      respond(ex, 405, """{"error":"POST required"}""")
+    else if (entity.isEmpty) respond(ex, 400, """{"error":"entity required"}""")
+    else {
+      val n = engine.deadSet.replay(spark, entity, count)
+      respond(ex, 200, s"""{"replayed":$n}""")
+    }
+  }
+
+  route("/v1/metrics") { ex =>
+    val body = engine.metrics.snapshot().toSeq.sortBy(_._1)
+      .map { case (k, v) => s""""${jsonEscape(k)}":${jsonNum(v)}""" }
+      .mkString("{", ",", "}")
+    respond(ex, 200, body)
+  }
 
   // Skew-preflight visibility: the last N audit events the rewrite
   // rules produced (warn mode logs reach only the driver log; an
@@ -183,41 +184,24 @@ final class ManagementServer(spark: SparkSession, engine: GraftEngine,
   // reused — don't persist filters across driver restarts). The ring
   // stays JVM-global — see PreflightLog's doc. Rendering is
   // PreflightLog.toJson, the same bytes the durable spill writes.
-  server.createContext("/v1/preflight", new HttpHandler {
-    def handle(ex: HttpExchange): Unit = try {
-      val session = params(ex).get("session").filter(_.nonEmpty)
-      val body = graft.plans.PreflightLog.recent()
-        .filter(a => session.forall(_ == a.session))
-        .map(graft.plans.PreflightLog.toJson)
-        .mkString("""{"audits":[""", ",", "]}")
-      respond(ex, 200, body)
-    } catch { case e: Throwable =>
-      respond(ex, 500, s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
-    }
-  })
+  route("/v1/preflight") { ex =>
+    val session = params(ex).get("session").filter(_.nonEmpty)
+    val body = graft.plans.PreflightLog.recent()
+      .filter(a => session.forall(_ == a.session))
+      .map(graft.plans.PreflightLog.toJson)
+      .mkString("""{"audits":[""", ",", "]}")
+    respond(ex, 200, body)
+  }
 
   // O2 runtime control (the reference drives this via nREPL,
   // doc/CONCEPTS.md:74-97; here it is an HTTP verb)
-  server.createContext("/v1/queries/stop", new HttpHandler {
-    def handle(ex: HttpExchange): Unit = try {
-      val name = params(ex).getOrElse("name", "")
-      if (ex.getRequestMethod != "POST")
-        respond(ex, 405, """{"error":"POST required"}""")
-      else if (name.isEmpty) respond(ex, 400, """{"error":"name required"}""")
-      else respond(ex, 200, s"""{"stopped":${engine.stopRoute(name)}}""")
-    } catch {
-      // same error mapping as every other mutating handler — without it
-      // a malformed percent-encoding (params' URLDecoder) or a stop()
-      // drain timeout escapes handle() and the client sees a dropped
-      // connection instead of a status
-      case e: IllegalArgumentException =>
-        respond(ex, 400,
-          s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
-      case e: Throwable =>
-        respond(ex, 500,
-          s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
-    }
-  })
+  route("/v1/queries/stop", clientOr500) { ex =>
+    val name = params(ex).getOrElse("name", "")
+    if (ex.getRequestMethod != "POST")
+      respond(ex, 405, """{"error":"POST required"}""")
+    else if (name.isEmpty) respond(ex, 400, """{"error":"name required"}""")
+    else respond(ex, 200, s"""{"stopped":${engine.stopRoute(name)}}""")
+  }
 
   // ANN index-store lifecycle (operators/AnnIndex.scala): the engine's
   // other durable artifacts (dead-set, preflight log, queries) are
@@ -225,16 +209,9 @@ final class ManagementServer(spark: SparkSession, engine: GraftEngine,
   // discipline (the reference's management-API shape,
   // resource/dead_set.clj:46-94). GET describes without loading;
   // compact/vacuum are the two operator actions a serving index needs.
-  private def annError(ex: HttpExchange): PartialFunction[Throwable, Unit] = {
-    case e: java.util.NoSuchElementException =>
-      respond(ex, 404,
-        s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
-    case e: IllegalArgumentException =>
-      respond(ex, 400,
-        s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
-    case e: Throwable =>
-      respond(ex, 500,
-        s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
+  private val annStatus: Throwable => Int = {
+    case _: java.util.NoSuchElementException => 404
+    case e => clientOr500(e)
   }
 
   private def annDir(p: Map[String, String]): String = {
@@ -252,148 +229,122 @@ final class ManagementServer(spark: SparkSession, engine: GraftEngine,
     dir
   }
 
-  server.createContext("/v1/ann", new HttpHandler {
-    def handle(ex: HttpExchange): Unit = try {
-      if (ex.getRequestMethod != "GET")
-        respond(ex, 405, """{"error":"GET required"}""")
-      else {
-        val info = graft.operators.AnnIndex.describe(annDir(params(ex)))
-        val vs = info.versions.map { v =>
-          val head = s""""name":"${jsonEscape(v.name)}",""" +
-            s""""committed":${v.committed}"""
-          val m = (v.k, v.centroids, v.postings, v.chain) match {
-            case (Some(k), Some(c), Some(p0), Some(ch)) =>
-              s""","k":$k,"centroids":$c,"postings":$p0,"chain":$ch"""
-            case _ => ""
-          }
-          s"{$head$m}"
-        }.mkString("[", ",", "]")
-        val cur = info.current
-          .map(c => s""""${jsonEscape(c)}"""").getOrElse("null")
-        respond(ex, 200, s"""{"current":$cur,"versions":$vs,""" +
-          s""""fresh_leases":${info.freshLeases},""" +
-          s""""stale_leases":${info.staleLeases}}""")
-      }
-    } catch annError(ex)
-  })
+  route("/v1/ann", annStatus) { ex =>
+    if (ex.getRequestMethod != "GET")
+      respond(ex, 405, """{"error":"GET required"}""")
+    else {
+      val info = graft.operators.AnnIndex.describe(annDir(params(ex)))
+      val vs = info.versions.map { v =>
+        val head = s""""name":"${jsonEscape(v.name)}",""" +
+          s""""committed":${v.committed}"""
+        val m = (v.k, v.centroids, v.postings, v.chain) match {
+          case (Some(k), Some(c), Some(p0), Some(ch)) =>
+            s""","k":$k,"centroids":$c,"postings":$p0,"chain":$ch"""
+          case _ => ""
+        }
+        s"{$head$m}"
+      }.mkString("[", ",", "]")
+      val cur = info.current
+        .map(c => s""""${jsonEscape(c)}"""").getOrElse("null")
+      respond(ex, 200, s"""{"current":$cur,"versions":$vs,""" +
+        s""""fresh_leases":${info.freshLeases},""" +
+        s""""stale_leases":${info.staleLeases}}""")
+    }
+  }
 
-  server.createContext("/v1/ann/compact", new HttpHandler {
-    def handle(ex: HttpExchange): Unit = try {
-      if (ex.getRequestMethod != "POST")
-        respond(ex, 405, """{"error":"POST required"}""")
-      else {
-        val v = graft.operators.AnnIndex.compact(spark, annDir(params(ex)))
-        respond(ex, 200, s"""{"compacted":"${jsonEscape(v)}"}""")
-      }
-    } catch annError(ex)
-  })
+  route("/v1/ann/compact", annStatus) { ex =>
+    if (ex.getRequestMethod != "POST")
+      respond(ex, 405, """{"error":"POST required"}""")
+    else {
+      val v = graft.operators.AnnIndex.compact(spark, annDir(params(ex)))
+      respond(ex, 200, s"""{"compacted":"${jsonEscape(v)}"}""")
+    }
+  }
 
-  server.createContext("/v1/ann/vacuum", new HttpHandler {
-    def handle(ex: HttpExchange): Unit = try {
-      val p = params(ex)
-      if (ex.getRequestMethod != "POST")
-        respond(ex, 405, """{"error":"POST required"}""")
-      else {
-        val dir = annDir(p)
-        val keep = nonNegIntParam(p, "keep", 1)
-        graft.operators.AnnIndex.vacuum(dir, keep)
-        val left = graft.operators.AnnIndex.describe(dir).versions
-          .map(v => s""""${jsonEscape(v.name)}"""").mkString("[", ",", "]")
-        respond(ex, 200, s"""{"ok":true,"versions":$left}""")
-      }
-    } catch annError(ex)
-  })
+  route("/v1/ann/vacuum", annStatus) { ex =>
+    val p = params(ex)
+    if (ex.getRequestMethod != "POST")
+      respond(ex, 405, """{"error":"POST required"}""")
+    else {
+      val dir = annDir(p)
+      val keep = nonNegIntParam(p, "keep", 1)
+      graft.operators.AnnIndex.vacuum(dir, keep)
+      val left = graft.operators.AnnIndex.describe(dir).versions
+        .map(v => s""""${jsonEscape(v.name)}"""").mkString("[", ",", "]")
+      respond(ex, 200, s"""{"ok":true,"versions":$left}""")
+    }
+  }
 
   // O4 Prometheus text exposition (format 0.0.4): counters as
   // `graft_<name>_total`, gauges as `graft_<name>`, names sanitized to the
   // metric charset. The standard scrape endpoint the reference serves via
   // iapetos (prometheus_exporter.clj:35-44).
-  server.createContext("/metrics", new HttpHandler {
-    private def sane(name: String): String =
-      name.map(c => if (c.isLetterOrDigit || c == '_' || c == ':') c else '_')
-        .mkString match {
-        case s if s.nonEmpty && s.head.isDigit => "_" + s
-        case s => s
-      }
-    def handle(ex: HttpExchange): Unit = {
-      val (counters, gauges) = engine.metrics.typedSnapshot()
-      val sb = new StringBuilder
-      // distinct raw keys can sanitize to the same name (`a.b-c` and
-      // `a.b_c` both → graft_a_b_c); Prometheus rejects a scrape with
-      // duplicate TYPE/sample lines, so aggregate per sanitized name —
-      // counters sum (they are monotone totals), gauges keep the value of
-      // the lexicographically last raw key (deterministic)
-      counters.toSeq.groupBy { case (k, _) => s"graft_${sane(k)}_total" }
-        .view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
-        .foreach { case (n, v) =>
-          sb.append(s"# TYPE $n counter\n$n $v\n")
-        }
-      gauges.toSeq.groupBy { case (k, _) => s"graft_${sane(k)}" }
-        .view.mapValues(_.maxBy(_._1)._2).toSeq.sortBy(_._1)
-        .foreach { case (n, v) =>
-          // Prometheus exposition spells non-finite values +Inf/-Inf/NaN;
-          // Scala's Double prints "Infinity", which fails the scrape
-          val pv =
-            if (v == Double.PositiveInfinity) "+Inf"
-            else if (v == Double.NegativeInfinity) "-Inf"
-            else v.toString // NaN prints "NaN" — the valid token
-          sb.append(s"# TYPE $n gauge\n$n $pv\n")
-        }
-      respond(ex, 200, sb.toString,
-        "text/plain; version=0.0.4; charset=utf-8")
+  private def sane(name: String): String =
+    name.map(c => if (c.isLetterOrDigit || c == '_' || c == ':') c else '_')
+      .mkString match {
+      case s if s.nonEmpty && s.head.isDigit => "_" + s
+      case s => s
     }
-  })
+
+  route("/metrics") { ex =>
+    val (counters, gauges) = engine.metrics.typedSnapshot()
+    val sb = new StringBuilder
+    // distinct raw keys can sanitize to the same name (`a.b-c` and
+    // `a.b_c` both → graft_a_b_c); Prometheus rejects a scrape with
+    // duplicate TYPE/sample lines, so aggregate per sanitized name —
+    // counters sum (they are monotone totals), gauges keep the value of
+    // the lexicographically last raw key (deterministic)
+    counters.toSeq.groupBy { case (k, _) => s"graft_${sane(k)}_total" }
+      .view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
+      .foreach { case (n, v) =>
+        sb.append(s"# TYPE $n counter\n$n $v\n")
+      }
+    gauges.toSeq.groupBy { case (k, _) => s"graft_${sane(k)}" }
+      .view.mapValues(_.maxBy(_._1)._2).toSeq.sortBy(_._1)
+      .foreach { case (n, v) =>
+        // Prometheus exposition spells non-finite values +Inf/-Inf/NaN;
+        // Scala's Double prints "Infinity", which fails the scrape
+        val pv =
+          if (v == Double.PositiveInfinity) "+Inf"
+          else if (v == Double.NegativeInfinity) "-Inf"
+          else v.toString // NaN prints "NaN" — the valid token
+        sb.append(s"# TYPE $n gauge\n$n $pv\n")
+      }
+    respond(ex, 200, sb.toString,
+      "text/plain; version=0.0.4; charset=utf-8")
+  }
 
   // actor-routes: user handlers mounted next to the built-ins
   userRoutes.foreach { r =>
-    server.createContext(r.path, new HttpHandler {
-      def handle(ex: HttpExchange): Unit = try {
-        val body = new String(ex.getRequestBody.readAllBytes(),
-          StandardCharsets.UTF_8)
-        val (status, resp) = r.handler(ex.getRequestMethod, params(ex), body)
-        respond(ex, status, resp, r.contentType)
-      } catch { case e: Throwable =>
-        respond(ex, 500,
-          s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
-      }
-    })
+    route(r.path) { ex =>
+      val body = new String(ex.getRequestBody.readAllBytes(),
+        StandardCharsets.UTF_8)
+      val (status, resp) = r.handler(ex.getRequestMethod, params(ex), body)
+      respond(ex, status, resp, r.contentType)
+    }
   }
 
   // O3 runtime scaling: restart a route from its checkpoint with a new
   // per-trigger record budget (the add/remove-stream-threads analogue)
-  server.createContext("/v1/queries/scale", new HttpHandler {
-    def handle(ex: HttpExchange): Unit = try {
-      val p = params(ex)
-      val name = p.getOrElse("name", "")
-      val maxPerTrigger = intParam(p, "max_per_trigger", 0)
-      if (ex.getRequestMethod != "POST")
-        respond(ex, 405, """{"error":"POST required"}""")
-      else if (name.isEmpty || maxPerTrigger <= 0)
-        respond(ex, 400, """{"error":"name and max_per_trigger > 0 required"}""")
-      else respond(ex, 200,
-        s"""{"scaled":${engine.scaleRoute(name, maxPerTrigger)}}""")
-    } catch {
-      case e: IllegalArgumentException =>
-        respond(ex, 400,
-          s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
-      case e: Throwable =>
-        respond(ex, 500,
-          s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
-    }
-  })
+  route("/v1/queries/scale", clientOr500) { ex =>
+    val p = params(ex)
+    val name = p.getOrElse("name", "")
+    val maxPerTrigger = intParam(p, "max_per_trigger", 0)
+    if (ex.getRequestMethod != "POST")
+      respond(ex, 405, """{"error":"POST required"}""")
+    else if (name.isEmpty || maxPerTrigger <= 0)
+      respond(ex, 400, """{"error":"name and max_per_trigger > 0 required"}""")
+    else respond(ex, 200,
+      s"""{"scaled":${engine.scaleRoute(name, maxPerTrigger)}}""")
+  }
 
-  server.createContext("/v1/queries", new HttpHandler {
-    def handle(ex: HttpExchange): Unit = try {
-      val body = engine.runningQueries.toSeq.sortBy(_._1)
-        .map { case (name, q) =>
-          s""""${jsonEscape(name)}":{"id":"${q.id}","active":${q.isActive}}"""
-        }.mkString("{", ",", "}")
-      respond(ex, 200, body)
-    } catch { case e: Throwable =>
-      respond(ex, 500,
-        s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")
-    }
-  })
+  route("/v1/queries") { ex =>
+    val body = engine.runningQueries.toSeq.sortBy(_._1)
+      .map { case (name, q) =>
+        s""""${jsonEscape(name)}":{"id":"${q.id}","active":${q.isActive}}"""
+      }.mkString("{", ",", "}")
+    respond(ex, 200, body)
+  }
 
   // small pool instead of serial dispatch: a dead-set view's distributed
   // collect can take seconds on a large DLQ, and on the single dispatch

@@ -64,18 +64,23 @@ final class GraftEngine(
     // from [:ziggurat :statsd] only when enabled
     if (cfg.statsd.enabled)
       metrics.addSink(new StatsdSink(cfg.statsd.host, cfg.statsd.port))
-    // Durable preflight evidence beside the checkpoint root: fail-mode
-    // refusals are exactly the audits an operator needs post-mortem, and
-    // the in-memory ring dies with the driver. The spill writes through
-    // the checkpoint root's own filesystem; spillTo returns true only
-    // when this JVM had not already registered the path, so the ring
-    // reloads only then, and an unresolvable path is a warning —
-    // telemetry never fails engine construction.
-    if (graft.plans.PreflightLog.spillTo(
-        s"$checkpointDir/_preflight_spill.jsonl",
-        hadoopConf = spark.sparkContext.hadoopConfiguration))
-      graft.plans.PreflightLog.loadSpill()
   }
+
+  /** Durable preflight evidence beside the checkpoint root: fail-mode
+    * refusals are exactly the audits an operator needs post-mortem, and
+    * the in-memory ring dies with the driver. The spill writes through
+    * the checkpoint root's own filesystem; the ring reloads only when
+    * this JVM had not already registered the path, and an unresolvable
+    * path is a warning — telemetry never fails engine construction.
+    * [[stopAll]] releases it (the spill id, once). */
+  private val spillId = new java.util.concurrent.atomic.AtomicReference(
+    locally {
+      val (changed, id) = graft.plans.PreflightLog.attachSpill(
+        s"$checkpointDir/_preflight_spill.jsonl",
+        spark.sparkContext.hadoopConfiguration)
+      if (changed) graft.plans.PreflightLog.loadSpill()
+      id.orNull
+    })
 
   private val queries = new ConcurrentHashMap[String, StreamingQuery]()
   /** How a tracked query restarts: its Spark query name and its start. */
@@ -627,6 +632,10 @@ final class GraftEngine(
       }
     }
     metrics.terminateSinks()
+    // a stopped engine's root must not keep receiving every later
+    // session's audits (nor be re-created by them once deleted)
+    Option(spillId.getAndSet(null))
+      .foreach(graft.plans.PreflightLog.detachSpill)
   }
 
   sys.addShutdownHook { stopAll() }

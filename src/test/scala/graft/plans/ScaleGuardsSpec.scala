@@ -221,4 +221,27 @@ class ScaleGuardsSpec extends SparkSuite {
     } finally
       spark.conf.unset(ScaleGuards.OverlapPreflightAutoSampleMinBytesKey)
   }
+
+  test("a malformed two-phase floor fails planning of either theta-join " +
+      "rule with an IllegalArgumentException naming the key and value") {
+    // a fresh session: a malformed floor on the shared one would break
+    // every concurrently planned theta join
+    val sess = spark.newSession()
+    import sess.implicits._
+    sess.conf.set(ScaleGuards.OverlapTwoPhaseMinBytesKey, "8k")
+    val overlap = Seq((1L, Seq(1L, 2L))).toDF("lid", "la")
+      .join(Seq((2L, Seq(2L, 3L))).toDF("rid", "ra"),
+        arrays_overlap(col("la"), col("ra")))
+    val hamming = Seq((1L, 5L, "wide")).toDF("lid", "lc", "lp")
+      .join(Seq((2L, 7L, "wide")).toDF("rid", "rc", "rp"),
+        graft.functions.GraftFunctions.hamming64(col("lc"), col("rc")) <= 2)
+    def chain(t: Throwable): Seq[Throwable] =
+      Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
+    for (df <- Seq(overlap, hamming)) {
+      val e = intercept[Exception](df.queryExecution.optimizedPlan)
+      assert(chain(e).exists(x => x.isInstanceOf[IllegalArgumentException]
+        && x.getMessage.contains(ScaleGuards.OverlapTwoPhaseMinBytesKey)
+        && x.getMessage.contains("'8k'")), s"wrong failure: $e")
+    }
+  }
 }

@@ -47,6 +47,6 @@ class ExactRetrySpec extends SparkSuite {
       assert(dlq() == 2L, s"due-now records should dispatch first; got ${dlq()}")
       awaitUntil(now + 40000)(dlq() == 3L)
       assert(dlq() == 3L, s"parked record did not dispatch on its timer")
-    } finally engine.stopRoute("retry-exact-app")
+    } finally engine.stopAll()
   }
 }
