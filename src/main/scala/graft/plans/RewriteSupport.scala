@@ -27,7 +27,9 @@ class PreflightAbort(message: String) extends RuntimeException(message)
   * the operator watching /v1/preflight wants every session's refusals
   * in one place (the stand-down DEDUP, by contrast, is session-keyed:
   * suppression must never cross tenants — see
-  * [[RewriteSupport.logStandDown]]). */
+  * [[RewriteSupport.logStandDown]]). Volatile by design: every audit and
+  * stand-down is also written through the rule's logger, and a
+  * fail-mode refusal's [[PreflightAbort]] carries its full line. */
 object PreflightLog {
   /** One audit event, with the line PARSED into typed fields beside
     * the raw rendering: a dashboard alerting on `diagnosis != "ok"` or
@@ -73,7 +75,6 @@ object PreflightLog {
       if (buf.size >= Capacity) buf.removeFirst()
       buf.addLast(a)
     }
-    appendSpill(a)
   }
 
   /** Latest-first snapshot. */
@@ -82,9 +83,7 @@ object PreflightLog {
     buf.descendingIterator().asScala.toVector
   }
 
-  /** The ONE JSON rendering of an audit event — served verbatim by
-    * `GET /v1/preflight` and written verbatim to the spill file, so a
-    * reloaded audit is indistinguishable from a live one. */
+  /** The JSON rendering of an audit event `GET /v1/preflight` serves. */
   def toJson(a: Audit): String = {
     import graft.streaming.JsonText.{escape => esc}
     s"""{"at":${a.atMillis},"aborted":${a.aborted},""" +
@@ -97,386 +96,8 @@ object PreflightLog {
       s""""line":"${esc(a.line)}"}"""
   }
 
-  // ----- durable spill (bounded JSONL beside a checkpoint root) ---------
-  //
-  // The 50-event in-memory ring loses fail-mode abort evidence on a
-  // driver crash — exactly the event an operator needs post-mortem.
-  // When an engine registers a spill path, every record() also appends
-  // one JSON line there (append-on-record, size-capped by one `.1`
-  // rotation generation → ≤ 2×maxBytes on disk); on restart the engine
-  // reloads the tail into the ring so /v1/preflight serves pre-crash
-  // audits. Spill I/O is best-effort: telemetry must never fail
-  // planning. One spill path per JVM (last registration wins) — the
-  // ring it mirrors is JVM-global for the same reason.
-  //
-  // One sink for every path: the Hadoop FileSystem client Spark ships.
-  // Plain and `file:` paths go through the raw local filesystem, which
-  // appends in place (O_APPEND — a crash loses at most one line); remote
-  // schemes (hdfs://, s3a://) resolve through the session's Hadoop
-  // configuration, since real cluster drivers checkpoint to object
-  // storage, which is exactly where post-mortem evidence matters. Where
-  // the FS cannot append (S3A, the checksummed LocalFileSystem) the
-  // fallback is read + concat + tmp + rename, so a crash mid-write
-  // leaves the previous file intact.
-
-  private val spillLock = new Object
-  @volatile private var spill: Option[SpillSink] = None
-  /** How many [[attachSpill]] owners share the current sink. */
-  private var spillOwners = 0
-
-  /** Any file at a spill path larger than this is FOREIGN: maxBytes
-    * clamps to 64 MiB and rotation fires at the cap, so no generation
-    * this code wrote can reach 128 MiB. A foreign file must never be
-    * slurped (OutOfMemoryError is not NonFatal — it escapes every
-    * telemetry guard), deleted, or rotated into a slot a later
-    * rotation would REPLACE away: a misconfigured spill path must not
-    * destroy non-spill data. */
-  private[plans] val ForeignBound: Long = 128L << 20
-
-  /** The spill file at `p` on `fs`: rotate-if-full then append one
-    * record; read back every line, oldest generation first. */
-  private final class SpillSink(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path) {
-    import org.apache.hadoop.fs.{Path => HPath}
-    /** Qualified path — "same registration" for [[spillTo]]. */
-    def id: String = p.toString
-    @volatile var maxBytes: Long = 0L
-    private def rotated = new HPath(p.getParent, p.getName + ".1")
-    private def bak = new HPath(p.getParent, s".${p.getName}.bak")
-    private def quarantine =
-      new HPath(p.getParent, p.getName + ".quarantine")
-    def prepare(): Unit = Option(p.getParent).foreach(fs.mkdirs(_))
-    private def writeAll(target: HPath, chunks: Array[Byte]*): Unit = {
-      val o = fs.create(target, true)
-      try chunks.foreach(o.write) finally o.close()
-    }
-    private def readFully(f: HPath): Array[Byte] = {
-      // the clamp bounds files THIS sink wrote; a pre-existing foreign
-      // multi-GiB file at the same path must not be slurped onto the
-      // driver heap (OutOfMemoryError is not NonFatal — it would escape
-      // every telemetry guard) or wrap getLen.toInt negative. Refuse
-      // loudly; readLines' catch degrades that generation to empty and
-      // append's fallback drops one record — both bounded outcomes.
-      val len = fs.getFileStatus(f).getLen
-      if (len > ForeignBound) throw new java.io.IOException(
-        s"spill file $f is $len bytes — foreign/oversized, refusing to read")
-      val buf = new Array[Byte](len.toInt)
-      val in = fs.open(f)
-      try in.readFully(0, buf) finally in.close()
-      buf
-    }
-    def append(bytes: Array[Byte]): Unit = {
-      // crash recovery FIRST: a rewrite that died between its two
-      // renames left the only copy parked at .bak — restore it before
-      // anything else, or this append would recreate `p` with one
-      // record, shadow the parked generation (readLines prefers `p`),
-      // and the next rewrite's bak-delete would erase it for good.
-      // A .bak COEXISTING with `p` is the other crash residue (died
-      // after tmp took p's place, before the bak delete) — STALE by
-      // construction; clean it now, or a later rotation crash (p
-      // renamed away, then death) would resurrect the old snapshot.
-      if (!fs.exists(p) && fs.exists(bak) && !fs.rename(bak, p))
-        // restore FAILED (rename-by-false FS): bak still holds the only
-        // copy — drop THIS record rather than recreate `p` beside it
-        // (the stale-delete below would then destroy the parked
-        // generation on the next append); every later append retries
-        throw new java.io.IOException(
-          s"cannot restore parked spill generation $bak")
-      else if (fs.exists(p) && fs.exists(bak)) fs.delete(bak, false)
-      if (fs.exists(p)) {
-        val len = fs.getFileStatus(p).getLen
-        if (len > ForeignBound) {
-          // foreign data at the spill path (no generation this sink
-          // wrote can reach ForeignBound): step it aside WITHOUT
-          // touching the `.1` slot — rotation deletes that slot, which
-          // would destroy the foreign file one generation later. If
-          // the quarantine slot is occupied or the rename fails, drop
-          // THIS record — appends stay dead at this path until an
-          // operator intervenes, which beats silently destroying
-          // their file.
-          if (fs.exists(quarantine) || !fs.rename(p, quarantine))
-            throw new java.io.IOException(
-              s"foreign file at spill path $p and quarantine " +
-                "unavailable — dropping record")
-        } else if (len >= maxBytes) {
-          if (fs.exists(rotated)) fs.delete(rotated, false)
-          if (!fs.rename(p, rotated)) {
-            // rename reported failure by RETURNING false: copy-rotate
-            // instead (generation briefly exists twice, never zero) so
-            // the size bound holds even where rename never works —
-            // unbounded growth would eventually trip readFully's bound
-            // and silently kill all further spilling
-            try { writeAll(rotated, readFully(p)); fs.delete(p, false) }
-            catch { case scala.util.control.NonFatal(_) =>
-              // un-rotatable (unreadable): renaming failed AND copying
-              // can't bound it — the blocking file may be a
-              // misconfigured operator's DATA, so never delete it;
-              // quarantine it exactly like the foreign case above
-              if (fs.exists(quarantine) || !fs.rename(p, quarantine))
-                throw new java.io.IOException(
-                  s"un-rotatable file at spill path $p and quarantine " +
-                    "unavailable — dropping record")
-            }
-          }
-        }
-      }
-      if (!fs.exists(p)) writeAll(p, bytes)
-      else try {
-        val o = fs.append(p)
-        try o.write(bytes) finally o.close()
-      } catch { case scala.util.control.NonFatal(_) =>
-        // no-append FS (S3A): rewrite, never exposing a window where
-        // the only copy is gone — tmp carries the new content, the
-        // CURRENT generation steps aside to .bak (not delete) until
-        // tmp has taken its place, and readLines falls back to .bak,
-        // so a crash ANYWHERE here loses at most this one record.
-        // rename() reports failure by RETURNING false on several
-        // FSes — each step is checked, and a failed step restores
-        // the original before giving up on this record.
-        val tmp = new HPath(p.getParent, s".${p.getName}.tmp")
-        writeAll(tmp, readFully(p), bytes)
-        if (fs.exists(bak)) fs.delete(bak, false)
-        if (!fs.rename(p, bak)) fs.delete(tmp, false)
-        else if (!fs.rename(tmp, p)) { fs.rename(bak, p); fs.delete(tmp, false) }
-        else fs.delete(bak, false)
-      }
-    }
-    def readLines(): Seq[String] = {
-      // .bak stands in for a current generation lost mid-rewrite
-      val current = if (fs.exists(p)) Some(p)
-        else if (fs.exists(bak)) Some(bak) else None
-      (Seq(rotated).filter(fs.exists(_)) ++ current).flatMap { f =>
-        try new String(readFully(f),
-          java.nio.charset.StandardCharsets.UTF_8)
-          .split("\n").toSeq.filter(_.nonEmpty)
-        catch { case scala.util.control.NonFatal(_) => Nil }
-      }
-    }
-  }
-
-  /** A URI scheme prefix: anything but a plain local path. */
-  private val SchemePrefix = "^[a-zA-Z][a-zA-Z0-9+.-]*:.*".r
-
-  /** The local filesystem WITHOUT the checksum layer, so appends land in
-    * place instead of taking the rewrite fallback. */
-  private lazy val rawLocal = {
-    val fs = new org.apache.hadoop.fs.RawLocalFileSystem()
-    fs.initialize(java.net.URI.create("file:///"),
-      new org.apache.hadoop.conf.Configuration())
-    fs
-  }
-
-  /** Register the spill file. `path` may be a plain local path or any
-    * Hadoop FileSystem URI (`hdfs://`, `s3a://`, `file://`). Plain and
-    * `file:` paths resolve to the same raw local file; remote
-    * filesystems resolve through `hadoopConf` when given, else the
-    * active/default session's hadoopConfiguration, else a bare
-    * `Configuration()`. maxBytes clamps to [4 KiB, 64 MiB]: the spill is
-    * bounded telemetry, and the no-append rewrite fallback buffers a
-    * generation in memory. Returns true when this call CHANGED the path
-    * (callers reload only then — re-registering the same path, e.g. a
-    * second engine on the same checkpoint root, must not re-seed the
-    * ring with lines it already holds); a same-path re-registration
-    * still ADOPTS the new maxBytes. An unresolvable path (bad scheme, FS
-    * client error) is a warn-and-refuse false that DETACHES any previous
-    * sink — audits must never keep landing in a stale engine's file
-    * while the warn claims ring-only telemetry. */
-  def spillTo(path: String, maxBytes: Long = 1L << 20,
-      hadoopConf: org.apache.hadoop.conf.Configuration = null): Boolean =
-    spillLock.synchronized {
-      val changed = register(resolve(path, hadoopConf), maxBytes)
-      if (changed) spillOwners = 0
-      changed
-    }
-
-  /** [[spillTo]] for an owner that will [[detachSpill]] when it stops (a
-    * stream engine's checkpoint root): returns whether the path changed
-    * and the registered sink's id, None when unresolvable. Owners of the
-    * same path are counted, so the sink detaches with the last of them. */
-  private[graft] def attachSpill(path: String,
-      hadoopConf: org.apache.hadoop.conf.Configuration)
-      : (Boolean, Option[String]) =
-    spillLock.synchronized {
-      val sink = resolve(path, hadoopConf)
-      val changed = register(sink, 1L << 20)
-      spillOwners = if (sink.isEmpty) 0 else if (changed) 1 else spillOwners + 1
-      (changed, sink.map(_.id))
-    }
-
-  /** Release one [[attachSpill]] ownership of sink `id`: the last owner
-    * detaches it, so later audits stop landing beside a stopped owner's
-    * root. A sink another registration has since replaced is left alone. */
-  private[graft] def detachSpill(id: String): Unit =
-    spillLock.synchronized {
-      if (spill.exists(_.id == id)) {
-        spillOwners -= 1
-        if (spillOwners <= 0) { spill = None; spillOwners = 0 }
-      }
-    }
-
-  private def resolve(path: String,
-      hadoopConf: org.apache.hadoop.conf.Configuration): Option[SpillSink] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    try {
-      val local =
-        if (!SchemePrefix.matches(path)) Some(path)
-        else Some(new HPath(path).toUri)
-          .filter(u => "file".equalsIgnoreCase(u.getScheme))
-          .map(_.getPath)
-      val (fs, hp) = local match {
-        case Some(lp) => (rawLocal, new HPath(java.nio.file.Paths
-          .get(lp).toAbsolutePath.normalize.toUri))
-        case None =>
-          val conf = Option(hadoopConf).getOrElse(
-            org.apache.spark.sql.SparkSession.getActiveSession
-              .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-              .map(_.sparkContext.hadoopConfiguration)
-              .getOrElse(new org.apache.hadoop.conf.Configuration()))
-          val hp = new HPath(path)
-          (hp.getFileSystem(conf), hp)
-      }
-      Some(new SpillSink(fs, fs.makeQualified(hp)))
-    } catch { case scala.util.control.NonFatal(e) =>
-      // ANY scheme-shaped path that fails FS resolution is a
-      // warn-and-refuse — including single-slash spellings like
-      // 's3a:/bucket/x' and colon-bearing relative paths. A local
-      // fallback would turn a misspelled REMOTE root into a bogus
-      // local './s3a:…' file with a true return, so crash evidence
-      // dies with the driver's disk. A genuinely local path with a
-      // colon in its first segment must be spelled
-      // './backup:tuesday/…' (no scheme shape) or via file://.
-      System.err.println(s"[graft] preflight spill at '$path' " +
-        s"unresolvable (${e.getClass.getSimpleName}: ${e.getMessage})" +
-        " — continuing with ring-only telemetry")
-      None
-    }
-  }
-
-  /** Test seam: install a sink on a directly-constructed FileSystem (the
-    * checksummed LocalFileSystem for the no-append fallback, failing
-    * filesystems for the rotation and quarantine edges). */
-  private[plans] def registerSink(
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path, maxBytes: Long): Boolean =
-    spillLock.synchronized {
-      spillOwners = 0
-      register(Some(new SpillSink(fs, fs.makeQualified(path))), maxBytes)
-    }
-
-  private def register(sinkOpt: Option[SpillSink], maxBytes: Long): Boolean =
-    sinkOpt match {
-      case None =>
-        spill = None
-        false
-      case Some(s) =>
-        s.maxBytes = math.min(math.max(maxBytes, 4096L), 64L << 20)
-        val changed = !spill.map(_.id).contains(s.id)
-        if (changed) {
-          try s.prepare()
-          catch { case scala.util.control.NonFatal(_) => () }
-          spill = Some(s)
-        } else spill.foreach(_.maxBytes = s.maxBytes)
-        changed
-    }
-
-  private def appendSpill(a: Audit): Unit =
-    // registration read INSIDE the lock: a check-then-act snapshot could
-    // write to a path detached by clearSpill or superseded by a newer
-    // registration in the window.
-    // Synchronous by design, not oversight: record() only fires when a
-    // preflight RAN (an entire side Spark job at planning time — the
-    // file append is noise beside it) or for a once-per-(session,
-    // condition) deduped stand-down. An async buffer would add a flush
-    // lifecycle for an event rate of ~one per rewrite fire; revisit only
-    // if a future caller records on a genuinely hot path.
-    spillLock.synchronized {
-      spill.foreach { s =>
-        try s.append((toJson(a) + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-    }
-
-  private def jsonStr(json: String, field: String): Option[String] = {
-    val m = (s""""$field":"((?:[^"\\\\]|\\\\.)*)"""").r
-      .findFirstMatchIn(json).map(_.group(1))
-    m.map { raw =>
-      val b = new StringBuilder
-      var i = 0
-      while (i < raw.length) {
-        val c = raw.charAt(i)
-        if (c == '\\' && i + 1 < raw.length) raw.charAt(i + 1) match {
-          case 'u' if i + 5 < raw.length =>
-            b += Integer.parseInt(raw.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case o => b += o; i += 2
-        } else { b += c; i += 1 }
-      }
-      b.toString
-    }
-  }
-
-  private def parseAudit(jsonLine: String): Option[Audit] =
-    for {
-      at <- """"at":(\d+)""".r.findFirstMatchIn(jsonLine)
-        .map(_.group(1).toLong)
-      aborted <- """"aborted":(true|false)""".r.findFirstMatchIn(jsonLine)
-        .map(_.group(1).toBoolean)
-      rule <- jsonStr(jsonLine, "rule")
-      kind <- jsonStr(jsonLine, "kind")
-      diagnosis <- jsonStr(jsonLine, "diagnosis")
-      line <- jsonStr(jsonLine, "line")
-    } yield Audit(at, line, aborted, rule, kind, diagnosis,
-      worstKey = jsonStr(jsonLine, "worst").getOrElse(""),
-      shareBp = """"share_bp":(\d+)""".r.findFirstMatchIn(jsonLine)
-        .map(_.group(1).toLong),
-      session = jsonStr(jsonLine, "session").getOrElse(""))
-
-  /** Reload the registered spill file (rotated generation first, so
-    * order is oldest→newest) and MERGE it with whatever the ring already
-    * holds: reloaded pre-crash audits must never rank ABOVE (or evict)
-    * audits that fired live in this JVM, and a path registered twice
-    * with records in between (A→B→A engines; a record racing the
-    * registration) must not duplicate entries. Merge = dedupe by full
-    * structural equality, order by timestamp (live wins ties — the sort
-    * is stable and loaded entries sort first at equal stamps), keep the
-    * newest [[Capacity]]. Malformed or torn lines are SKIPPED, never
-    * thrown — a kill -9 mid-append leaves a partial line glued to the
-    * next record, and loadSpill runs inside GraftEngine's constructor:
-    * an exception here would crash-loop every restart against the same
-    * corrupt file. Returns how many audits were parsed from disk.
-    * Reloaded entries are NOT re-spilled (the file already holds
-    * them). */
-  def loadSpill(): Int = spillLock.synchronized {
-    spill.map { s =>
-      import scala.jdk.CollectionConverters._
-      val lines =
-        try s.readLines()
-        catch { case scala.util.control.NonFatal(_) => Nil }
-      val loaded = lines.flatMap { l =>
-        try parseAudit(l)
-        catch { case scala.util.control.NonFatal(_) => None }
-      }
-      buf.synchronized {
-        val live = buf.iterator().asScala.toVector
-        val merged = (loaded ++ live).distinct
-          .sortBy(_.atMillis).takeRight(Capacity)
-        buf.clear()
-        merged.foreach(buf.addLast)
-      }
-      loaded.size
-    }.getOrElse(0)
-  }
-
-  /** Test hook: specs isolate their own fired lines. Does not touch the
-    * spill file (the ring is the volatile half; the file is the durable
-    * half a reload test clears the ring AROUND). */
+  /** Test hook: specs isolate their own fired lines. */
   private[graft] def clear(): Unit = buf.synchronized(buf.clear())
-
-  /** Test hook: detach the spill sink (specs must not leak a tmp spill
-    * path into later suites sharing this JVM-global object). */
-  private[graft] def clearSpill(): Unit =
-    spillLock.synchronized { spill = None; spillOwners = 0 }
 }
 
 /** Pattern helpers for the theta-join rewrites ([[ThetaJoinRewrite]]). */
@@ -559,13 +180,25 @@ private[plans] object RewriteSupport {
     case x => Seq(x)
   }
 
-  /** Shared conf-gated preflight hook for both rewrite rules: when
-    * `confKey` is set to `warn` or `fail` and neither child is streaming
-    * (a side job cannot run over a streaming child), evaluate `report` —
-    * a one-row skew audit over the join's own children — and log its
-    * columns through `warn` as `$tag preflight: k=v ...` in `cols`
-    * order. Under `fail` a non-'ok' diagnosis additionally ABORTS
-    * planning with [[PreflightAbort]] carrying the same line — the
+  /** The preflight mode `confKey` sets, `warn` or `fail`, when an audit
+    * can run over `l` and `r`: None when it is off or when either child
+    * is streaming (a side job cannot run over a streaming child). */
+  def preflightMode(confKey: String, l: LogicalPlan,
+      r: LogicalPlan): Option[String] =
+    // Locale.ROOT: a Turkish-locale JVM lowercases "FAIL" to dotless-ı
+    // "faıl", silently disarming the circuit breaker. activeConf, not
+    // spark.conf: cloned sessions inherit the rule instance (see
+    // activeConf's note) and must honor their OWN preflight mode.
+    activeConf(confKey).map(_.toLowerCase(java.util.Locale.ROOT))
+      .filter(m => (m == "warn" || m == "fail") &&
+        !l.isStreaming && !r.isStreaming)
+
+  /** Shared preflight hook for both rewrite rules, run under `mode` (see
+    * [[preflightMode]]): evaluate `report` — a one-row skew audit over
+    * the join's own children — and log its columns through `warn` as
+    * `$tag preflight: k=v ...` in `cols` order. Under `fail` a non-'ok'
+    * diagnosis additionally ABORTS planning with [[PreflightAbort]]
+    * carrying the same line — the
     * circuit breaker for the 100 TB deployment where a hot-key join is
     * cheaper to refuse than to run; 'ok' audits proceed silently-fast
     * either way. Best-effort for INFRASTRUCTURE errors under both modes:
@@ -575,65 +208,55 @@ private[plans] object RewriteSupport {
     * columns try_cast-degraded to NULL past ~9.2e18 candidates — they
     * are read boxed so the log prints >Long.Max instead of unboxing NULL
     * to a self-contradictory 0 at exactly the hottest extreme. */
-  def logPreflight(spark: org.apache.spark.sql.SparkSession,
-      confKey: String, tag: String, l: LogicalPlan, r: LogicalPlan,
+  def logPreflight(mode: String, confKey: String, tag: String,
       cols: Seq[(String, Boolean)], warn: String => Unit)
       (report: => org.apache.spark.sql.DataFrame): Unit = {
-    // Locale.ROOT: a Turkish-locale JVM lowercases "FAIL" to dotless-ı
-    // "faıl", silently disarming the circuit breaker. activeConf, not
-    // spark.conf: cloned sessions inherit the rule instance (see
-    // activeConf's note) and must honor their OWN preflight mode.
-    val mode = activeConf(confKey)
-      .map(_.toLowerCase(java.util.Locale.ROOT))
-      .filter(m => m == "warn" || m == "fail")
-    if (mode.isDefined && !l.isStreaming && !r.isStreaming) {
-      val line = try {
-        val row = report.head()
-        def big(name: String): String =
-          Option(row.getAs[java.lang.Long](name))
-            .map(_.toString).getOrElse(">Long.Max")
-        def rendered1(n: String, isBig: Boolean): String =
-          s"$n=${if (isBig) big(n) else String.valueOf(row.getAs[Any](n))}"
-        val rendered = s"$tag preflight: " + cols.map { case (n, isBig) =>
-          rendered1(n, isBig)
-        }.mkString(" ")
-        warn(rendered)
-        val diagnosis = row.getAs[String]("diagnosis")
-        val bad = diagnosis != "ok"
-        // structured twin fields (served by /v1/preflight): the rule
-        // tag minus the " rewrite" suffix matches the stand-down tags,
-        // and worstKey/shareBp must describe the DIAGNOSED problem —
-        // the >=-Jaccard empty-empty diagnosis is keyed off
-        // empty_share_bp, and reporting max_share_bp/worst_element
-        // beside it would send the dashboard operator to cap a harmless
-        // element while understating the alert by the share ratio (the
-        // raw line always carries every column for the full picture)
-        val eeDiag = diagnosis != null && diagnosis.startsWith("empty-empty")
-        def boxedShare(name: String): Option[Long] =
-          Option(row.getAs[java.lang.Long](name)).map(_.longValue)
-        PreflightLog.record(rendered,
-          aborted = bad && mode.contains("fail"),
-          rule = tag.stripSuffix(" rewrite"), kind = "preflight",
-          diagnosis = String.valueOf(diagnosis),
-          worstKey =
-            if (eeDiag) rendered1("empty_empty_rows", isBig = true)
-            else cols.collect {
-              case (n, isBig) if n.startsWith("worst_") =>
-                rendered1(n, isBig)
-            }.mkString(" "),
-          shareBp = boxedShare(
-            if (eeDiag) "empty_share_bp" else "max_share_bp"))
-        if (bad) Some(rendered) else None
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          warn(s"$tag preflight failed: $e")
-          None
-      }
-      if (mode.contains("fail"))
-        line.foreach(msg => throw new PreflightAbort(
-          s"$msg — refusing to plan the join ($confKey=fail; set it to " +
-            "warn, or fix the diagnosed skew, to proceed)"))
+    val line = try {
+      val row = report.head()
+      def big(name: String): String =
+        Option(row.getAs[java.lang.Long](name))
+          .map(_.toString).getOrElse(">Long.Max")
+      def rendered1(n: String, isBig: Boolean): String =
+        s"$n=${if (isBig) big(n) else String.valueOf(row.getAs[Any](n))}"
+      val rendered = s"$tag preflight: " + cols.map { case (n, isBig) =>
+        rendered1(n, isBig)
+      }.mkString(" ")
+      warn(rendered)
+      val diagnosis = row.getAs[String]("diagnosis")
+      val bad = diagnosis != "ok"
+      // structured twin fields (served by /v1/preflight): the rule
+      // tag minus the " rewrite" suffix matches the stand-down tags,
+      // and worstKey/shareBp must describe the DIAGNOSED problem —
+      // the >=-Jaccard empty-empty diagnosis is keyed off
+      // empty_share_bp, and reporting max_share_bp/worst_element
+      // beside it would send the dashboard operator to cap a harmless
+      // element while understating the alert by the share ratio (the
+      // raw line always carries every column for the full picture)
+      val eeDiag = diagnosis != null && diagnosis.startsWith("empty-empty")
+      def boxedShare(name: String): Option[Long] =
+        Option(row.getAs[java.lang.Long](name)).map(_.longValue)
+      PreflightLog.record(rendered,
+        aborted = bad && mode == "fail",
+        rule = tag.stripSuffix(" rewrite"), kind = "preflight",
+        diagnosis = String.valueOf(diagnosis),
+        worstKey =
+          if (eeDiag) rendered1("empty_empty_rows", isBig = true)
+          else cols.collect {
+            case (n, isBig) if n.startsWith("worst_") =>
+              rendered1(n, isBig)
+          }.mkString(" "),
+        shareBp = boxedShare(
+          if (eeDiag) "empty_share_bp" else "max_share_bp"))
+      if (bad) Some(rendered) else None
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        warn(s"$tag preflight failed: $e")
+        None
     }
+    if (mode == "fail")
+      line.foreach(msg => throw new PreflightAbort(
+        s"$msg — refusing to plan the join ($confKey=fail; set it to " +
+          "warn, or fix the diagnosed skew, to proceed)"))
   }
 
   /** SELF-joins (canonically identical children — d25's fingerprint

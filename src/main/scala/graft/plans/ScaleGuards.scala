@@ -255,7 +255,8 @@ object ScaleGuards {
     *     floor: auto-pick `targetRows / max(est rows per side)`, so the
     *     per-side sample is bounded regardless of input scale. Row
     *     estimates use CBO rowCount when present, else sizeInBytes over
-    *     a conservative row-width guess.
+    *     a conservative row-width guess. A malformed floor or target
+    *     fails planning, naming its key.
     *  3. Otherwise exact (None) — small inputs keep the provenance-free
     *     audit schema the d31/d41 oracles pin. */
   private[plans] def effectivePreflightSample(sampleKey: String,
@@ -270,17 +271,15 @@ object ScaleGuards {
     if (parsed.isDefined)
       parsed.filter(f => f > 0.0 && f < 1.0)
     else {
-      val minBytes = RewriteSupport.activeConf(autoMinBytesKey)
-        .flatMap(_.toLongOption).filter(_ >= 0L)
-        .getOrElse(PreflightAutoSampleMinBytesDefault)
+      val minBytes = autoSampleConf(autoMinBytesKey, 0L,
+        PreflightAutoSampleMinBytesDefault)
+      val target = autoSampleConf(PreflightAutoSampleTargetRowsKey, 1L,
+        PreflightAutoSampleTargetRowsDefault)
       // an unsizeable child (stats untrusted) must audit EXACTLY, not
       // clear the floor with a fake size and then sample ~nothing
       if (!statsTrusted(l) || !statsTrusted(r)) None
       else if (l.stats.sizeInBytes.max(r.stats.sizeInBytes) < minBytes) None
       else {
-        val target = RewriteSupport.activeConf(PreflightAutoSampleTargetRowsKey)
-          .flatMap(_.toLongOption).filter(_ > 0L)
-          .getOrElse(PreflightAutoSampleTargetRowsDefault)
         val rows = estimatedRows(l).max(estimatedRows(r))
         val f = target.toDouble / rows.toDouble
         // a side already within the row budget audits exactly even
@@ -290,6 +289,15 @@ object ScaleGuards {
       }
     }
   }
+
+  /** An auto-sample knob: `key`'s whole-number value, at least `min`, or
+    * `default` when unset. Any other value fails planning with an error
+    * that names the key. */
+  private def autoSampleConf(key: String, min: Long, default: Long): Long =
+    RewriteSupport.activeConf(key).map(v => v.toLongOption.filter(_ >= min)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$key must be a whole number >= $min, got '$v'")))
+      .getOrElse(default)
 
   /** The provenance column both rules append to their audit-line specs
     * when (and only when) the sampled estimator is active. */

@@ -226,15 +226,17 @@ private[plans] abstract class ThetaJoinRewrite(spark: SparkSession,
     * sample provenance column when sampling). The sample decision is
     * [[ScaleGuards.effectivePreflightSample]]: an explicit sampleFraction
     * wins; unset, the stats floor auto-engages sampling on big children.
-    * Conf gate, streaming skip, boxed BIGINT reads and the best-effort
-    * catch are [[RewriteSupport.logPreflight]]. */
+    * The conf gate and streaming skip are [[RewriteSupport.preflightMode]];
+    * the sample keys are read only under it, so a malformed one fails
+    * planning only when an audit would run. Boxed BIGINT reads and the
+    * best-effort catch are [[RewriteSupport.logPreflight]]. */
   protected def preflight(l: LogicalPlan, r: LogicalPlan,
       a: Expression, b: Expression, cols: Seq[(String, Boolean)])(
       report: (DataFrame, Column, DataFrame, Column, Double) => DataFrame)
-      : Unit = {
+      : Unit = preflightMode(preflightKey, l, r).foreach { mode =>
     val sample = ScaleGuards.effectivePreflightSample(sampleKey,
       autoSampleKey, l, r)
-    logPreflight(spark, preflightKey, s"$tag rewrite", l, r,
+    logPreflight(mode, preflightKey, s"$tag rewrite",
       cols ++ ScaleGuards.sampleProvenanceCols(sample), logWarning(_)) {
       import org.apache.spark.sql.graftbridge.ColumnBridge
       report(ColumnBridge.dataFrame(spark, l), ColumnBridge.column(a),

@@ -182,8 +182,7 @@ final class ManagementServer(spark: SparkSession, engine: GraftEngine,
   // tokens are stable for a session's lifetime, which is exactly the
   // filter's useful horizon (a GC'd session's token may eventually be
   // reused — don't persist filters across driver restarts). The ring
-  // stays JVM-global — see PreflightLog's doc. Rendering is
-  // PreflightLog.toJson, the same bytes the durable spill writes.
+  // stays JVM-global and in memory only — see PreflightLog's doc.
   route("/v1/preflight") { ex =>
     val session = params(ex).get("session").filter(_.nonEmpty)
     val body = graft.plans.PreflightLog.recent()

@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
   * validated route config into one StreamingQuery per route, with per-route
   * checkpoints, mode-driven subsystem startup, runtime stop/start of
   * individual routes (O2, streams.clj:114-123), and a JVM shutdown hook that
-  * stops queries then the HTTP server.
+  * stops its queries. Everything the engine registers on the session or
+  * the JVM — its one listener, its shutdown hook — ends at
+  * [[GraftEngine.stopAll]].
   *
   * Scale mapping of the reference's knobs:
   *  - stream-threads-count (O3)  → spark.sql.shuffle.partitions +
@@ -59,28 +61,11 @@ final class GraftEngine(
   {
     val errs = EngineConfig.validate(cfg)
     require(errs.isEmpty, s"invalid engine config:\n  ${errs.mkString("\n  ")}")
-    spark.streams.addListener(metrics.listener)
     // push backend boot ≡ the reference initializing its statsd wrapper
     // from [:ziggurat :statsd] only when enabled
     if (cfg.statsd.enabled)
       metrics.addSink(new StatsdSink(cfg.statsd.host, cfg.statsd.port))
   }
-
-  /** Durable preflight evidence beside the checkpoint root: fail-mode
-    * refusals are exactly the audits an operator needs post-mortem, and
-    * the in-memory ring dies with the driver. The spill writes through
-    * the checkpoint root's own filesystem; the ring reloads only when
-    * this JVM had not already registered the path, and an unresolvable
-    * path is a warning — telemetry never fails engine construction.
-    * [[stopAll]] releases it (the spill id, once). */
-  private val spillId = new java.util.concurrent.atomic.AtomicReference(
-    locally {
-      val (changed, id) = graft.plans.PreflightLog.attachSpill(
-        s"$checkpointDir/_preflight_spill.jsonl",
-        spark.sparkContext.hadoopConfiguration)
-      if (changed) graft.plans.PreflightLog.loadSpill()
-      id.orNull
-    })
 
   private val queries = new ConcurrentHashMap[String, StreamingQuery]()
   /** How a tracked query restarts: its Spark query name and its start. */
@@ -123,19 +108,23 @@ final class GraftEngine(
     Option(queryName).flatMap(n => Option(queryNameToTrack.get(n)))
       .foreach(n => idToName.put(id, n))
 
-  // E12: react to abnormal termination per the configured policy.
-  // Held in a field so stopAll can DEREGISTER it: a decommissioned
-  // engine must never bind or act on a later engine's same-named
-  // queries on the shared session.
+  // The engine's one listener, scoped to its own query ids: it harvests
+  // their progress into `metrics`, counts their terminations and applies
+  // the E12 failure policy. Held in a field so stopAll can DEREGISTER
+  // it: a decommissioned engine must never bind, record or act on a
+  // later engine's same-named queries on the shared session.
   private[streaming] val lifecycleListener = new StreamingQueryListener {
     import StreamingQueryListener._
     // synchronous with start() — see queryNameToTrack's note
     override def onQueryStarted(e: QueryStartedEvent): Unit =
       bindStarted(e.name, e.id)
-    override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
-      if (e.exception.isDefined) {
-        Option(idToName.get(e.id)).foreach { name =>
+    override def onQueryProgress(e: QueryProgressEvent): Unit =
+      if (idToName.containsKey(e.progress.id))
+        metrics.recordProgress(e.progress)
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+      Option(idToName.get(e.id)).foreach { name =>
+        metrics.increment("query.terminated")
+        if (e.exception.isDefined) {
           metrics.increment(s"$name.query.failed")
           failurePolicy match {
             case FailurePolicy.StopQuery => queries.remove(name)
@@ -148,7 +137,6 @@ final class GraftEngine(
           }
         }
       }
-    }
   }
   spark.streams.addListener(lifecycleListener)
 
@@ -607,9 +595,10 @@ final class GraftEngine(
   /** E11 drain: stop everything, bounded by drainTimeoutMs per query;
     * then shut down push-metrics backends (metrics_interface.clj
     * `terminate` runs on service stop). TERMINAL: the engine
-    * deregisters its lifecycle listener and clears its tracking state,
-    * so queries started on this instance afterwards get no failure
-    * policy — build a fresh GraftEngine instead. */
+    * deregisters its listener and its shutdown hook and clears its
+    * tracking state, so queries started on this instance afterwards get
+    * no failure policy and no metrics — build a fresh GraftEngine
+    * instead. A second call is a no-op. */
   def stopAll(): Unit = {
     // decommission FIRST: a stopped engine must never bind or act on a
     // later engine's same-named queries on the shared session — with the
@@ -632,13 +621,14 @@ final class GraftEngine(
       }
     }
     metrics.terminateSinks()
-    // a stopped engine's root must not keep receiving every later
-    // session's audits (nor be re-created by them once deleted)
-    Option(spillId.getAndSet(null))
-      .foreach(graft.plans.PreflightLog.detachSpill)
+    // inside the hook itself the JVM is already shutting down, and
+    // removing any hook then throws
+    try Runtime.getRuntime.removeShutdownHook(shutdownHook)
+    catch { case _: IllegalStateException => () }
   }
 
-  sys.addShutdownHook { stopAll() }
+  private[streaming] val shutdownHook = new Thread(() => stopAll())
+  Runtime.getRuntime.addShutdownHook(shutdownHook)
 }
 
 object GraftEngine {

@@ -1,13 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 import scala.jdk.CollectionConverters._
 
 /** Metrics facade (O4, metrics.clj:40-150): counters + gauges fed from two
   * directions — explicit increments from the dispatcher (per-disposition
-  * counts) and `observe()` rows harvested by a StreamingQueryListener.
+  * counts) and progress harvested by [[recordProgress]].
   * Pluggable reporters (Prometheus/StatsD in the reference) reduce to a
   * snapshot() any exporter can scrape; the management HTTP layer exposes it
   * as JSON.
@@ -122,45 +122,37 @@ final class MetricsRegistry {
     increment(s"$entity.message.invalid", c.invalid, tags)
   }
 
-  /** Harvests `observe()` metrics (Pipeline.observeReads) from streaming
-    * progress events. Register with
-    * `spark.streams.addListener(registry.listener)`. */
-  val listener: StreamingQueryListener = new StreamingQueryListener {
-    override def onQueryStarted(
-        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(
-        e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-      increment("query.terminated")
-    override def onQueryProgress(
-        e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      // per-trigger wall time as a timing sample — the engine analogue of
-      // the reference's handler execution timing (metrics.clj timing
-      // around the mapper invocation)
-      val qname = Option(e.progress.name).getOrElse(e.progress.id.toString)
-      Option(e.progress.durationMs.get("triggerExecution"))
-        .foreach(ms => timing(s"$qname.trigger", ms.longValue()))
-      e.progress.observedMetrics.asScala.foreach { case (name, row) =>
-        row.schema.fieldNames.foreach { f =>
-          val v = row.getAs[Any](f)
-          v match {
-            case n: Number => gauge(s"$name.$f", n.doubleValue())
-            case _ => ()
-          }
+  /** Harvests one trigger's progress: its wall time as
+    * `<query>.trigger`, `observe()` metrics (Pipeline.observeReads) as
+    * gauges, and state-store gauges per stateful operator. The engine's
+    * listener calls it for the engine's own queries only. */
+  def recordProgress(p: StreamingQueryProgress): Unit = {
+    // per-trigger wall time as a timing sample — the engine analogue of
+    // the reference's handler execution timing (metrics.clj timing
+    // around the mapper invocation)
+    val qname = Option(p.name).getOrElse(p.id.toString)
+    Option(p.durationMs.get("triggerExecution"))
+      .foreach(ms => timing(s"$qname.trigger", ms.longValue()))
+    p.observedMetrics.asScala.foreach { case (name, row) =>
+      row.schema.fieldNames.foreach { f =>
+        row.getAs[Any](f) match {
+          case n: Number => gauge(s"$name.$f", n.doubleValue())
+          case _ => ()
         }
       }
-      // State-store health per stateful operator — the gauges an operator
-      // watches to see that watermarks are actually bounding state (the
-      // production complement to the specs' plateau assertions) and how
-      // much late data the watermark is dropping. Keyed by operator name
-      // so a join chain's stages are distinguishable.
-      e.progress.stateOperators.foreach { so =>
-        val op = Option(so.operatorName).getOrElse("state")
-        gauge(s"$qname.state.$op.rows_total", so.numRowsTotal.toDouble)
-        gauge(s"$qname.state.$op.rows_updated", so.numRowsUpdated.toDouble)
-        gauge(s"$qname.state.$op.dropped_late",
-          so.numRowsDroppedByWatermark.toDouble)
-        gauge(s"$qname.state.$op.memory_bytes", so.memoryUsedBytes.toDouble)
-      }
+    }
+    // State-store health per stateful operator — the gauges an operator
+    // watches to see that watermarks are actually bounding state (the
+    // production complement to the specs' plateau assertions) and how
+    // much late data the watermark is dropping. Keyed by operator name
+    // so a join chain's stages are distinguishable.
+    p.stateOperators.foreach { so =>
+      val op = Option(so.operatorName).getOrElse("state")
+      gauge(s"$qname.state.$op.rows_total", so.numRowsTotal.toDouble)
+      gauge(s"$qname.state.$op.rows_updated", so.numRowsUpdated.toDouble)
+      gauge(s"$qname.state.$op.dropped_late",
+        so.numRowsDroppedByWatermark.toDouble)
+      gauge(s"$qname.state.$op.memory_bytes", so.memoryUsedBytes.toDouble)
     }
   }
 }

@@ -244,4 +244,45 @@ class ScaleGuardsSpec extends SparkSuite {
         && x.getMessage.contains("'8k'")), s"wrong failure: $e")
     }
   }
+
+  test("a malformed auto-sample floor or target fails planning with an " +
+      "IllegalArgumentException naming the key, only when the rule's " +
+      "preflight runs: preflight-off never reads the key") {
+    // a fresh session: malformed keys on the shared one would break
+    // every concurrently planned theta join with preflight on
+    val sess = spark.newSession()
+    import sess.implicits._
+    def overlap = Seq((1L, Seq(1L, 2L))).toDF("lid", "la")
+      .join(Seq((2L, Seq(2L, 3L))).toDF("rid", "ra"),
+        arrays_overlap(col("la"), col("ra")))
+    def hamming = Seq((1L, 5L, "wide")).toDF("lid", "lc", "lp")
+      .join(Seq((2L, 7L, "wide")).toDF("rid", "rc", "rp"),
+        graft.functions.GraftFunctions.hamming64(col("lc"), col("rc")) <= 2)
+    def chain(t: Throwable): Seq[Throwable] =
+      Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
+    import ScaleGuards._
+    for ((key, bad, modeKey, df) <- Seq(
+        (OverlapPreflightAutoSampleMinBytesKey, "4g", OverlapPreflightKey,
+          () => overlap),
+        (OverlapPreflightAutoSampleMinBytesKey, "-1", OverlapPreflightKey,
+          () => overlap),
+        (HammingPreflightAutoSampleMinBytesKey, "abc", HammingPreflightKey,
+          () => hamming),
+        (PreflightAutoSampleTargetRowsKey, "0", OverlapPreflightKey,
+          () => overlap),
+        (PreflightAutoSampleTargetRowsKey, "abc", HammingPreflightKey,
+          () => hamming))) {
+      sess.conf.set(key, bad)
+      try {
+        assert(df().count() == 1L, s"$key='$bad' failed with preflight off")
+        for (mode <- Seq("warn", "fail")) {
+          sess.conf.set(modeKey, mode)
+          val e = intercept[Exception](df().queryExecution.optimizedPlan)
+          assert(chain(e).exists(x => x.isInstanceOf[IllegalArgumentException]
+            && x.getMessage.contains(key) && x.getMessage.contains(s"'$bad'")),
+            s"$key='$bad' under $mode: wrong failure: $e")
+        }
+      } finally { sess.conf.unset(key); sess.conf.unset(modeKey) }
+    }
+  }
 }

@@ -133,66 +133,22 @@ class ManagementServerSpec extends SparkSuite {
     }
   }
 
-  test("preflight audits survive a simulated driver restart: the engine " +
-      "registers a bounded JSONL spill beside its checkpoint root and a " +
-      "fresh engine on the same root reloads it — fail-mode refusals are " +
-      "exactly the post-mortem evidence a 50-event in-memory ring loses") {
+  test("an engine over a NON-LOCAL checkpoint root (hdfs://) leaves no " +
+      "local 'hdfs:' debris in the working directory") {
     import graft.plans.PreflightLog
-    val dir = tmpDir("mgmt-spill")
-    val topics = new FileTopicIO(s"$dir/topics")
-    val marker = "restart-" + System.nanoTime()
-    // engine 1 registers the spill; record an abort-shaped audit, with a
-    // retry in case a concurrently-constructed engine from another suite
-    // re-points the JVM-global spill inside the window
-    var landed = false
-    var attempts = 0
-    while (!landed && attempts < 5) {
-      PreflightLog.clearSpill()
-      val e1 = new GraftEngine(spark, EngineConfig(), topics, s"$dir/ckpt")
-      PreflightLog.record(s"test preflight: worst_element=$marker",
-        aborted = true, rule = "overlap-join", kind = "preflight",
-        diagnosis = "hot-element: test", worstKey = s"worst_element=$marker")
-      e1.stopAll()
-      val f = java.nio.file.Paths.get(s"$dir/ckpt/_preflight_spill.jsonl")
-      landed = java.nio.file.Files.exists(f) &&
-        new String(java.nio.file.Files.readAllBytes(f)).contains(marker)
-      attempts += 1
-    }
-    assert(landed, "audit never reached this test's spill file")
-    // simulated restart: ring and registration die with the JVM
-    PreflightLog.clear()
-    PreflightLog.clearSpill()
-    val engine2 = new GraftEngine(spark, EngineConfig(), topics, s"$dir/ckpt")
-    val server = new ManagementServer(spark, engine2, 0)
-    server.start()
-    try {
-      val (s, b) = get(server.boundPort, "/v1/preflight")
-      assert(s == 200, b)
-      assert(b.contains(marker),
-        s"reloaded audit must be served after restart: $b")
-      assert(b.contains(""""aborted":true"""), b)
-    } finally { server.stop(); engine2.stopAll(); PreflightLog.clearSpill() }
-  }
-
-  test("a NON-LOCAL checkpoint root (hdfs://, s3a://) skips spill " +
-      "registration instead of silently creating a bogus './hdfs:/...' " +
-      "dir in the container's cwd") {
-    import graft.plans.PreflightLog
-    PreflightLog.clearSpill()
     val topics = new FileTopicIO(tmpDir("mgmt-hdfs"))
     val engine = new GraftEngine(spark, EngineConfig(), topics,
       "hdfs://namenode:8020/graft/ckpt")
     try {
       // no local debris from the URI's parts
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get("hdfs:")))
-      // and nothing registered: a recorded audit must not create one
+      // and a recorded audit must not create any either
       PreflightLog.record("test preflight: nonlocal", aborted = false,
         rule = "overlap-join", kind = "preflight", diagnosis = "ok")
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get("hdfs:")))
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get("hdfs:__namenode:8020")))
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
-        "hdfs://namenode:8020/graft/ckpt/_preflight_spill.jsonl")))
-    } finally { engine.stopAll(); PreflightLog.clearSpill() }
+    } finally engine.stopAll()
   }
 
   test("GET /v1/preflight?session= filters to one tenant's audits; the " +

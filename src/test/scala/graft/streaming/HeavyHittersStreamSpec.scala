@@ -59,7 +59,6 @@ class HeavyHittersStreamSpec extends SparkSuite {
     import sess.implicits._
     implicit val ctx = sess.sqlContext
     val reg = new MetricsRegistry
-    sess.streams.addListener(reg.listener)
     val in = MemoryStream[HhEv]
     val name = s"hhm_${System.nanoTime()}"
     val q = Pipeline.streamingHeavyHitters("key", "group", maxMapSize = 8)(
@@ -69,22 +68,15 @@ class HeavyHittersStreamSpec extends SparkSuite {
     try {
       in.addData(HhEv("g", "a"), HhEv("g", "b"), HhEv("h", "a"))
       q.processAllAvailable()
-      // progress events are delivered asynchronously — poll the registry
-      val deadline = System.currentTimeMillis + 30000
-      def stateGauges() = reg.snapshot().filter(_._1.contains(".state."))
-      while (stateGauges().isEmpty && System.currentTimeMillis < deadline)
-        Thread.sleep(100)
-      val gs = stateGauges()
+      reg.recordProgress(q.lastProgress)
+      val gs = reg.snapshot().filter(_._1.contains(".state."))
       assert(gs.keys.exists(_.endsWith("rows_total")), s"got ${gs.keys}")
       assert(gs.collect {
         case (k, v) if k.endsWith("rows_total") => v }.sum >= 2.0,
         s"expected ≥2 state rows (groups g, h): $gs")
       assert(gs.keys.exists(_.endsWith("dropped_late")) &&
         gs.keys.exists(_.endsWith("memory_bytes")), s"got ${gs.keys}")
-    } finally {
-      q.stop()
-      sess.streams.removeListener(reg.listener)
-    }
+    } finally q.stop()
   }
 }
 
