@@ -181,17 +181,25 @@ private[plans] object RewriteSupport {
   }
 
   /** The preflight mode `confKey` sets, `warn` or `fail`, when an audit
-    * can run over `l` and `r`: None when it is off or when either child
-    * is streaming (a side job cannot run over a streaming child). */
+    * can run over `l` and `r`: None when it is unset or `off`, or when
+    * either child is streaming (a side job cannot run over a streaming
+    * child). Any other value fails planning: a typo (`fial`, `on`) must
+    * not silently disarm the circuit breaker. */
   def preflightMode(confKey: String, l: LogicalPlan,
       r: LogicalPlan): Option[String] =
     // Locale.ROOT: a Turkish-locale JVM lowercases "FAIL" to dotless-ı
-    // "faıl", silently disarming the circuit breaker. activeConf, not
+    // "faıl", which would fail planning as a typo. activeConf, not
     // spark.conf: cloned sessions inherit the rule instance (see
     // activeConf's note) and must honor their OWN preflight mode.
-    activeConf(confKey).map(_.toLowerCase(java.util.Locale.ROOT))
-      .filter(m => (m == "warn" || m == "fail") &&
-        !l.isStreaming && !r.isStreaming)
+    activeConf(confKey).flatMap { raw =>
+      raw.toLowerCase(java.util.Locale.ROOT) match {
+        case m @ ("warn" | "fail") =>
+          if (l.isStreaming || r.isStreaming) None else Some(m)
+        case "off" => None
+        case _ => throw new IllegalArgumentException(
+          s"$confKey must be warn, fail or off, got '$raw'")
+      }
+    }
 
   /** Shared preflight hook for both rewrite rules, run under `mode` (see
     * [[preflightMode]]): evaluate `report` — a one-row skew audit over

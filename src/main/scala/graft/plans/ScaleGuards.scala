@@ -122,9 +122,9 @@ object ScaleGuards {
     * [[graft.plans.PreflightAbort]] carrying the full audit line — the
     * circuit breaker for deployments where a hot-key join is cheaper to
     * refuse than to run ('ok' audits proceed; a preflight that itself
-    * errors only warns, under either mode). Default off: the preflight
-    * is a real (small — rows = distinct elements) Spark job at planning
-    * time. */
+    * errors only warns, under either mode). Default off (unset or
+    * `off`; any other value fails planning): the preflight is a real
+    * (small — rows = distinct elements) Spark job at planning time. */
   val OverlapPreflightKey = "spark.graft.overlapJoinRewrite.preflight"
 
   /** Same contract (`warn` / `fail`) for the Hamming block rule: every

@@ -37,10 +37,7 @@ final case class StreamRouteConfig(
     oldestProcessedMessageInS: Long = 604800L,
     threadCount: Int = 1,
     retry: RetryConfig = RetryConfig(),
-    channels: Map[String, ChannelConfig] = Map.empty,
-    /** false → per-trigger due-filter reader (TTL quantized to trigger);
-      * true → exact-time release via flatMapGroupsWithState timers. */
-    exactRetryRelease: Boolean = false)
+    channels: Map[String, ChannelConfig] = Map.empty)
 
 /** A batch route (kafka_consumer/consumer.clj): polled consumption with
   * bounded batches — in Spark, Trigger.AvailableNow + maxOffsetsPerTrigger. */

@@ -277,6 +277,16 @@ object ConfigLoader {
       case (entity, v) =>
         val o = obj(v)
         val d = StreamRouteConfig("", "")
+        // the timer release this key selected is gone, and its parked
+        // retries live only in that reader's checkpoint: loading `true` as
+        // the due filter would strand them
+        if (bool(o, "exact-retry-release", false)) {
+          val key = (if (root.contains("graft")) "graft." else "") +
+            s"stream-routes.$entity.exact-retry-release"
+          throw new ParseError(s"$key = true is no longer supported: the " +
+            "exact-timer retry release was removed; drain its parked " +
+            "retries before upgrading (MIGRATION.md §7)")
+        }
         entity -> StreamRouteConfig(
           topicEntity = entity,
           originTopic = str(o, "origin-topic", ""),
@@ -297,8 +307,7 @@ object ConfigLoader {
                 workerCount = int(co, "worker-count", ChannelConfig(cn).workerCount),
                 retry = co.get("retry").map(r => retryOf(obj(r)))
                   .getOrElse(RetryConfig()))
-          }.toMap,
-          exactRetryRelease = bool(o, "exact-retry-release", d.exactRetryRelease))
+          }.toMap)
     }.toMap
     val batches = g.get("batch-routes").map(obj).getOrElse(new Obj).map {
       case (entity, v) =>
@@ -333,7 +342,7 @@ object ConfigLoader {
   private val channelKeys = Set("worker-count", "retry")
   private val streamRouteKeys = Set("origin-topic",
     "oldest-processed-message-in-s", "oldest-processed-messages-in-s",
-    "thread-count", "retry", "channels", "exact-retry-release")
+    "thread-count", "retry", "channels")
   private val batchRouteKeys = Set("origin-topic", "max-poll-records",
     "thread-count", "retry")
   private val statsdKeys = Set("host", "port", "enabled")

@@ -72,8 +72,7 @@ final class GraftApp(
         // unconditional — the DLQ (and so dead-set replay) is reachable
         // without retry via direct dead_letter dispositions.
         if (route.retry.enabled)
-          engine.startReleasingRetryReader(route, w.middleware, w.handler,
-            trigger)
+          engine.startRetryReader(route, w.middleware, w.handler, trigger)
         engine.startInstantWorker(route, w.middleware, w.handler, trigger)
         route.channels.foreach { case (ch, chCfg) =>
           engine.startChannelWorker(route, ch, w.middleware, w.handler, trigger)

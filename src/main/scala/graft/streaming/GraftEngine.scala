@@ -29,13 +29,13 @@ import scala.jdk.CollectionConverters._
   * trigger, per-batch body with its `<queryName>-<batchId>` emit token);
   * only the analytics route, which needs update output mode, starts its
   * own. Derived-topic consumers run one worker body (metadata →
-  * middleware → dispatch → counts) and the due-filter retry readers one
-  * reader body; each takes the stream or batch dispatch contract as a
+  * middleware → dispatch → counts) and every retry reader (route,
+  * channel, batch) runs one due-filter reader body under the caller's
+  * trigger; each takes the stream or batch dispatch contract as a
   * parameter. The query names and checkpoint subdirs are restart state:
-  * `<e>`/`route-<e>`, `view-<e>`, `retry-<e>`, `retry-exact-<e>`,
-  * `channel-<e>-<ch>`, `instant-<e>`, `retry-batch-<e>`,
-  * `instant-batch-<e>`, `batch-<e>`, `join-<e>`/`joinroute-<e>`,
-  * `analytics-<name>`.
+  * `<e>`/`route-<e>`, `view-<e>`, `retry-<e>`, `channel-<e>-<ch>`,
+  * `instant-<e>`, `retry-batch-<e>`, `instant-batch-<e>`, `batch-<e>`,
+  * `join-<e>`/`joinroute-<e>`, `analytics-<name>`.
   */
 /** E12 uncaught-exception policy (streams.clj:208-214): what to do when a
   * route's query dies with an error. */
@@ -307,39 +307,6 @@ final class GraftEngine(
     startDueFilterReader(s"retry-${route.topicEntity}",
       streamTarget(route, handler), middleware, trigger)
 
-  /** Exact-time retry reader: same contract as [[startRetryReader]] but
-    * releases records via [[RetryTimers.release]] (flatMapGroupsWithState +
-    * processing-time timers) instead of the per-trigger due-filter — no
-    * requeue I/O, release latency decoupled from the trigger interval
-    * (SURVEY §4.2's "exact" option). Needs a running trigger (timers fire
-    * on batch boundaries), so it uses ProcessingTime, not AvailableNow. */
-  def startExactRetryReader(route: StreamRouteConfig,
-      middleware: DataFrame => DataFrame,
-      handler: Dispatch.Handler,
-      triggerMs: Long = 200L): StreamingQuery = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[Envelope]
-    val src = topics.readStreamExact(spark,
-        EngineConfig.retryTopic(route.topicEntity))
-      .select(Envelope.schema.fieldNames.map(
-        org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-      .as[Envelope]
-    startWorker(s"retry-exact-${route.topicEntity}",
-      RetryTimers.release(src).toDF(), streamTarget(route, handler),
-      middleware, Trigger.ProcessingTime(triggerMs))
-  }
-
-  /** The route's retry reader in its configured release mode: exact
-    * timer-based release ([[startExactRetryReader]]) or the per-trigger
-    * due filter ([[startRetryReader]]). The one place that choice is
-    * made, for a route's own cycle and for each channel's. */
-  private[streaming] def startReleasingRetryReader(route: StreamRouteConfig,
-      middleware: DataFrame => DataFrame,
-      handler: Dispatch.Handler,
-      trigger: Trigger): StreamingQuery =
-    if (route.exactRetryRelease)
-      startExactRetryReader(route, middleware, handler)
-    else startRetryReader(route, middleware, handler, trigger)
-
   /** Start a channel worker (D2/E2, mapper.clj:71-111): consumes the
     * channel's topic with its own handler and channel-scoped retry config —
     * the RabbitMQ-worker analogue whose parallelism is decoupled from the
@@ -385,14 +352,13 @@ final class GraftEngine(
     * parked forever: never retried, never exhausted to the channel's
     * DLQ, silently lost (the reference's channel workers share the
     * route's RabbitMQ retry machinery, mapper.clj:71-111 — here the
-    * channel's cycle is its own, so it needs its own reader). It honors
-    * the route's release mode, like the route's own cycle.
+    * channel's cycle is its own, so it needs its own reader).
     * [[GraftApp]] starts one per retry-enabled channel in Worker mode. */
   def startChannelRetryReader(route: StreamRouteConfig, channelName: String,
       middleware: DataFrame => DataFrame,
       handler: Dispatch.Handler,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startReleasingRetryReader(channelRoute(route, channelName)._2,
+    startRetryReader(channelRoute(route, channelName)._2,
       middleware, handler, trigger)
 
   /** Start the instant-topic worker: consumes records the dead-set replay

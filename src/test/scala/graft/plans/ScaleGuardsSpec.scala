@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -284,5 +285,50 @@ class ScaleGuardsSpec extends SparkSuite {
         }
       } finally { sess.conf.unset(key); sess.conf.unset(modeKey) }
     }
+  }
+
+  /** A mistyped preflight mode fails planning of a fired rewrite naming
+    * the key and value; unset and `off` plan and run with no audit. */
+  private def assertModeTypoFails(modeKey: String,
+      join: SparkSession => DataFrame): Unit = {
+    // a fresh session: a bad mode on the shared one would break every
+    // concurrently planned theta join
+    val sess = spark.newSession()
+    def chain(t: Throwable): Seq[Throwable] =
+      Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
+    assert(join(sess).count() == 1L, s"$modeKey unset")
+    try {
+      sess.conf.set(modeKey, "off")
+      assert(join(sess).count() == 1L, s"$modeKey=off")
+      for (bad <- Seq("fial", "true", "on")) {
+        sess.conf.set(modeKey, bad)
+        val e = intercept[Exception](join(sess).queryExecution.optimizedPlan)
+        assert(chain(e).exists(x => x.isInstanceOf[IllegalArgumentException]
+          && x.getMessage.contains(modeKey) && x.getMessage.contains(s"'$bad'")),
+          s"$modeKey='$bad': wrong failure: $e")
+      }
+    } finally sess.conf.unset(modeKey)
+  }
+
+  test("a mistyped overlap preflight mode fails planning with an " +
+      "IllegalArgumentException naming the key, instead of silently " +
+      "turning the skew circuit breaker off") {
+    assertModeTypoFails(ScaleGuards.OverlapPreflightKey, { sess =>
+      import sess.implicits._
+      Seq((1L, Seq(1L, 2L))).toDF("lid", "la")
+        .join(Seq((2L, Seq(2L, 3L))).toDF("rid", "ra"),
+          arrays_overlap(col("la"), col("ra")))
+    })
+  }
+
+  test("a mistyped hamming preflight mode fails planning with an " +
+      "IllegalArgumentException naming the key, instead of silently " +
+      "turning the skew circuit breaker off") {
+    assertModeTypoFails(ScaleGuards.HammingPreflightKey, { sess =>
+      import sess.implicits._
+      Seq((1L, 5L, "wide")).toDF("lid", "lc", "lp")
+        .join(Seq((2L, 7L, "wide")).toDF("rid", "rc", "rp"),
+          graft.functions.GraftFunctions.hamming64(col("lc"), col("rc")) <= 2)
+    })
   }
 }

@@ -130,7 +130,6 @@ class ConfigSpec extends AnyFunSuite {
     |        geo { worker-count = 8
     |              retry { enabled = true, count = 2, type = linear } }
     |      }
-    |      exact-retry-release = true
     |    }
     |    clicks.origin-topic = "clicks"   // dotted-key form
     |  }
@@ -146,7 +145,7 @@ class ConfigSpec extends AnyFunSuite {
     val orders = cfg.streamRoutes("orders")
     assert(orders.originTopic == "orders-events.*")
     assert(orders.oldestProcessedMessageInS == 3600L)
-    assert(orders.threadCount == 2 && orders.exactRetryRelease)
+    assert(orders.threadCount == 2)
     assert(orders.retry == RetryConfig(enabled = true, count = 5,
       backoffType = BackoffType.Exponential, queueTimeoutMs = 250L))
     assert(orders.channels("geo").workerCount == 8)
@@ -245,12 +244,12 @@ class ConfigSpec extends AnyFunSuite {
       "GRAFT_STREAM_ROUTES_ORDERS_RETRY_COUNT" -> "9",
       "GRAFT_STREAM_ROUTES_ORDERS_RETRY_TYPE" -> "linear",
       "GRAFT_BATCH_ROUTES_NIGHTLY_MAX_POLL_RECORDS" -> "100",
-      "GRAFT_STREAM_ROUTES_ORDERS_EXACT_RETRY_RELEASE" -> "false"))
+      "GRAFT_STREAM_ROUTES_ORDERS_RETRY_ENABLED" -> "false"))
     assert(cfg.httpPort == 9001)
     assert(cfg.streamRoutes("orders").retry.count == 9)
     assert(cfg.streamRoutes("orders").retry.backoffType == BackoffType.Linear)
     assert(cfg.batchRoutes("nightly").maxPollRecords == 100)
-    assert(!cfg.streamRoutes("orders").exactRetryRelease)
+    assert(!cfg.streamRoutes("orders").retry.enabled)
   }
 
   test("the plural oldest-processed-messages-in-s is accepted as an alias " +
@@ -291,6 +290,27 @@ class ConfigSpec extends AnyFunSuite {
     assert(unknown.contains("graft.batch-routes.b.max-pol-records"))
     assert(unknown.size == 5, s"got $unknown")
     assert(ConfigLoader.unknownKeys(ConfigLoader.parse(sampleConf)).isEmpty)
+  }
+
+  test("the removed exact-retry-release key: `true`, from the file or " +
+      "from an env override, is a ParseError naming the key path and " +
+      "MIGRATION.md §7; `false` loads and is linted as unknown") {
+    def conf(v: String) =
+      s"""graft { stream-routes { orders {
+         |  origin-topic = t
+         |  exact-retry-release = $v } } }""".stripMargin
+    val path = "graft.stream-routes.orders.exact-retry-release"
+    for (err <- Seq(
+        intercept[ConfigLoader.ParseError](
+          ConfigLoader.load(conf("true"), env = Map.empty)),
+        intercept[ConfigLoader.ParseError](ConfigLoader.load(conf("false"),
+          env = Map("GRAFT_STREAM_ROUTES_ORDERS_EXACT_RETRY_RELEASE" -> "true")))))
+      assert(err.getMessage.contains(path) &&
+        err.getMessage.contains("MIGRATION.md §7"), err.getMessage)
+    val cfg = ConfigLoader.load(conf("false"), env = Map.empty)
+    assert(cfg.streamRoutes("orders").originTopic == "t")
+    assert(ConfigLoader.unknownKeys(ConfigLoader.parse(conf("false"))) ==
+      Seq(path))
   }
 
   test("malformed config fails loudly with an offset") {

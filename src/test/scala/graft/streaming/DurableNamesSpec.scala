@@ -67,12 +67,6 @@ class DurableNamesSpec extends SparkSuite {
       .withColumn("nextAttemptAt",
         lit(new java.sql.Timestamp(System.currentTimeMillis + dueInMs)))
 
-  private def awaitMarker(f: Fixture, topic: String, prefix: String): Unit = {
-    val deadline = System.currentTimeMillis + 60000L
-    while (!f.markers(topic).exists(_.startsWith(prefix)) &&
-        System.currentTimeMillis < deadline) Thread.sleep(100)
-  }
-
   test("stream route: route-<e> over checkpoint <e>") {
     withFixture { f =>
       f.topics.append(envelopes("app", Seq(("k", "v", now))), "app_origin")
@@ -106,19 +100,6 @@ class DurableNamesSpec extends SparkSuite {
       f.assertNames(q, "retry-app", "retry-app", track = "retry-app")
       assert(f.markers("app_retry") ==
         Set("_applied-retry-app-0", "_applied-retry-app-0-requeue"))
-    }
-  }
-
-  test("exact retry reader: retry-exact-<e> over checkpoint retry-exact-<e>") {
-    withFixture { f =>
-      f.topics.append(parked("app", "due", -60000L), "app_retry")
-      val q = f.engine.startExactRetryReader(route, identity, retryAll)
-      awaitMarker(f, "app_retry", "_applied-retry-exact-app-")
-      f.assertNames(q, "retry-exact-app", "retry-exact-app",
-        track = "retry-exact-app")
-      val ms = f.markers("app_retry")
-      assert(ms.nonEmpty &&
-        ms.forall(_.matches("_applied-retry-exact-app-\\d+")), ms)
     }
   }
 

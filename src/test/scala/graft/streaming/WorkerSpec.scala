@@ -97,29 +97,6 @@ class WorkerSpec extends SparkSuite {
     engine.stopAll()
   }
 
-  test("channel retry reader honors the route's release mode: with " +
-      "exactRetryRelease the channel cycle gets the timer-based exact " +
-      "reader, not the due-filter reader quantized to the trigger " +
-      "interval (the route and channel cycles must agree on semantics)") {
-    val dir = tmpDir("chanexact")
-    val topics = new FileTopicIO(s"$dir/topics")
-    val route = StreamRouteConfig(
-      topicEntity = "app", originTopic = "app_origin",
-      exactRetryRelease = true,
-      channels = Map("geo" -> ChannelConfig("geo", workerCount = 1,
-        retry = RetryConfig(enabled = true, count = 1))))
-    val engine = new GraftEngine(spark,
-      EngineConfig(streamRoutes = Map("app" -> route)),
-      topics, s"$dir/ckpt")
-    topics.provision("app_channel_geo", Nil)
-    engine.startChannelRetryReader(route, "geo", identity,
-      Dispatch.ExprHandler(lit("success")))
-    assert(engine.runningQueries.contains("retry-exact-app_channel_geo"),
-      engine.runningQueries.keys.mkString(","))
-    assert(!engine.runningQueries.contains("retry-app_channel_geo"))
-    engine.stopAll()
-  }
-
   test("batch-route retry cycle COMPLETES: the batch retry reader " +
       "consumes the batch entity's retry topic (previously nothing did — " +
       "retryable batch records were parked forever, never retried, never " +
