@@ -29,9 +29,7 @@ private[graft] object FsTree {
       }
     // bestEffort guards the WALK too: an entry vanishing mid-iteration
     // (a concurrent cleaner on a shared /tmp) throws UncheckedIOException
-    // out of the stream itself, not out of any per-entry delete — a
-    // "never fails its caller" contract that only wrapped the deletes
-    // was a contract violation waiting for a concurrent reaper
+    // out of the stream itself, not out of any per-entry delete
     if (bestEffort)
       try walkAndDelete()
       catch { case scala.util.control.NonFatal(_) => () }

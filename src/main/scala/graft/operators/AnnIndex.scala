@@ -741,11 +741,28 @@ object AnnIndex {
     * cross-process vacuum racing another driver's IN-FLIGHT build would
     * otherwise classify its half-written version dir as debris and
     * delete it mid-write (the per-dir publish lock only serializes
-    * within one JVM — same exposure class as LayoutOps scratch reap,
-    * same remedy). Override with -Dgraft.annindex.orphanAgeMs. */
+    * within one JVM). Override with -Dgraft.annindex.orphanAgeMs. */
   private[operators] def OrphanMinAgeMillis: Long =
     sys.props.get("graft.annindex.orphanAgeMs").flatMap(_.toLongOption)
       .getOrElse(60L * 60 * 1000)
+
+  /** True when ANY entry under `root` (the root directory itself
+    * included) was modified after `cutoff` — [[vacuum]]'s freshness
+    * signal. Part-file writes in subdirectories never refresh the root
+    * directory's own mtime, so the whole tree is read, SHORT-CIRCUITING
+    * on the first fresh entry. Any unreadable entry or traversal error
+    * reads as FRESH: an uninspectable dir must never become
+    * reclaimable by default. */
+  private[operators] def anyMtimeAfter(root: Path, cutoff: Long): Boolean =
+    try {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.exists { p =>
+        try Files.getLastModifiedTime(p).toMillis > cutoff
+        catch { case scala.util.control.NonFatal(_) => true }
+      }
+      finally walk.close()
+    } catch { case scala.util.control.NonFatal(_) => true }
 
   /** Drop version dirs that are not retained. Retained = the current
     * version, the `keep` most recent COMMITTED predecessors (dirs
@@ -759,8 +776,8 @@ object AnnIndex {
     * (manifest-less through its whole data write; manifest-complete
     * but un-pointed in its final commit window — on EITHER side of the
     * pointer, since a slow build can be overtaken by a faster publish
-    * minting a higher number), so the age gate applies uniformly, like
-    * the scratch reap, an unreadable mtime counting as fresh. Counting committed
+    * minting a higher number), so the age gate applies uniformly, an
+    * unreadable mtime counting as fresh. Counting committed
     * versions, not version NUMBERS, matters under gapped numbering:
     * v1,v2 committed + v3 orphaned + v4 committed must keep v2 (the
     * only rollback target) under keep=1, not retain the useless v3
@@ -863,7 +880,7 @@ object AnnIndex {
               // age gate applies uniformly; the cost is only that
               // committed history outside the keep window survives one
               // extra [[OrphanMinAgeMillis]].
-              val maybeInFlight = LayoutOps.anyMtimeAfter(p, cutoff)
+              val maybeInFlight = anyMtimeAfter(p, cutoff)
               if (!maybeInFlight) deleteTree(p)
             }
           }

@@ -28,14 +28,11 @@ final case class ChannelConfig(
 
 /** A stream route (stream-router entry, streams.clj:181-190):
   * `originTopic` is a regex subscription; `oldestProcessedMessageInS` is the
-  * too-old cutoff (streams.clj:26 default 604800 = 7 days);
-  * `threadCount` maps to the per-route parallelism knob
-  * (num.stream.threads ≈ shuffle partitions / maxOffsetsPerTrigger). */
+  * too-old cutoff (streams.clj:26 default 604800 = 7 days). */
 final case class StreamRouteConfig(
     topicEntity: String,
     originTopic: String,
     oldestProcessedMessageInS: Long = 604800L,
-    threadCount: Int = 1,
     retry: RetryConfig = RetryConfig(),
     channels: Map[String, ChannelConfig] = Map.empty)
 
@@ -45,7 +42,6 @@ final case class BatchRouteConfig(
     topicEntity: String,
     originTopic: String,
     maxPollRecords: Int = 500,
-    threadCount: Int = 2,
     retry: RetryConfig = RetryConfig())
 
 /** Broker security settings — the Spark translation of the reference's

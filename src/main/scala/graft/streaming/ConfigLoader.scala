@@ -297,7 +297,6 @@ object ConfigLoader {
             lng(o, "oldest-processed-message-in-s",
               lng(o, "oldest-processed-messages-in-s",
                 d.oldestProcessedMessageInS)),
-          threadCount = int(o, "thread-count", d.threadCount),
           retry = o.get("retry").map(r => retryOf(obj(r)))
             .getOrElse(RetryConfig()),
           channels = o.get("channels").map(obj).getOrElse(new Obj).map {
@@ -317,7 +316,6 @@ object ConfigLoader {
           topicEntity = entity,
           originTopic = str(o, "origin-topic", ""),
           maxPollRecords = int(o, "max-poll-records", d.maxPollRecords),
-          threadCount = int(o, "thread-count", d.threadCount),
           retry = o.get("retry").map(r => retryOf(obj(r)))
             .getOrElse(RetryConfig()))
     }.toMap
@@ -342,9 +340,9 @@ object ConfigLoader {
   private val channelKeys = Set("worker-count", "retry")
   private val streamRouteKeys = Set("origin-topic",
     "oldest-processed-message-in-s", "oldest-processed-messages-in-s",
-    "thread-count", "retry", "channels")
+    "retry", "channels")
   private val batchRouteKeys = Set("origin-topic", "max-poll-records",
-    "thread-count", "retry")
+    "retry")
   private val statsdKeys = Set("host", "port", "enabled")
   private val rootKeys = Set("stream-routes", "batch-routes", "http-port",
     "drain-timeout-ms", "statsd", "state-store")

@@ -67,36 +67,39 @@ object Envelope {
   private val optional: Seq[StructField] =
     schema.fields.filter(f => optionalNames.contains(f.name)).toSeq
 
-  /** Adds any missing nullable envelope columns as typed nulls, so frames
-    * built before a column existed (or by minimal producers) still satisfy
-    * the full envelope schema at append time. Presence matches the
-    * session's column-resolution rules (the same hardening as
-    * KafkaTopicIO.sinkProjection's resolve): under the default
-    * case-INsensitive analysis, an exact-case contains() would miss a
-    * producer's `retrycount` and withColumn would then REPLACE it with a
-    * typed null — persisting the record with its retry state erased, so
-    * every hop restarted the full budget. Multi-variant frames under a
-    * case-insensitive session are genuinely ambiguous and fail loudly. */
-  def withOptionalColumns(df: DataFrame): DataFrame =
+  /** Gives every optional envelope column its canonical name, adding a
+    * typed null for each one the frame lacks, so frames built before a
+    * column existed (or by minimal producers) satisfy the full envelope
+    * schema. One presence rule serves every transport:
+    *  - the exact-case name wins;
+    *  - otherwise a lone case variant (`retrycount`) binds and is renamed
+    *    to the canonical name, so its retry state is kept rather than
+    *    replaced by a null that would restart the retry budget;
+    *  - anything else that is ambiguous fails, naming the columns: several
+    *    variants with no exact name, or, under case-insensitive analysis
+    *    (where col() cannot tell them apart), any two variants.
+    * The case mode is the FRAME's session conf, not the thread-local
+    * SQLConf.get: this runs on non-Spark threads too (management-server
+    * pool → dead-set replay → append), where the thread-local falls back
+    * to a default conf. */
+  def withOptionalColumns(df: DataFrame): DataFrame = {
+    val caseSensitive =
+      df.sparkSession.sessionState.conf.caseSensitiveAnalysis
     optional.foldLeft(df) { (d, f) =>
       val matches = d.columns.filter(_.equalsIgnoreCase(f.name))
-      // the FRAME's session conf, not the thread-local SQLConf.get: this
-      // runs on non-Spark threads too (management-server pool → dead-set
-      // replay → append), where no session is active and the thread-local
-      // falls back to a default conf — silently treating a
-      // caseSensitiveAnalysis=true session as case-insensitive
-      val caseSensitive =
-        df.sparkSession.sessionState.conf.caseSensitiveAnalysis
-      if (matches.length > 1 && !caseSensitive)
+      val exact = matches.contains(f.name)
+      if (matches.length > 1 && (!caseSensitive || !exact))
         throw new IllegalArgumentException(
           s"ambiguous producer frame: columns ${matches.mkString(", ")} " +
             s"all match '${f.name}' case-insensitively — rename so one " +
             "canonical column carries the state")
-      val present =
-        if (caseSensitive) matches.contains(f.name) else matches.nonEmpty
-      if (present) d
-      else d.withColumn(f.name, lit(null).cast(f.dataType))
+      matches match {
+        case _ if exact => d
+        case Array(variant) => d.withColumnRenamed(variant, f.name)
+        case _ => d.withColumn(f.name, lit(null).cast(f.dataType))
+      }
     }
+  }
 
   /** Result codes a handler may return per record — mapper.clj:55-65.
     * (`:block` is unimplemented in the reference, mapper.clj:62 — out of

@@ -182,59 +182,17 @@ final class KafkaTopicIO(bootstrapServers: String,
     def entry(name: String, v: org.apache.spark.sql.Column) =
       when(v.isNotNull, struct(lit(name).as("key"),
         encode(v.cast("string"), "UTF-8").as("value")))
-    // Producer frames from user code may carry only key/value (the
-    // plain send path) — each retry-state column gets the same
-    // presence guard as `headers`, falling back to a typed null so
-    // entry() drops the header instead of the whole select failing.
-    // Presence must match col()'s CASE-INSENSITIVE resolution (Spark's
-    // default): an exact-match contains() would silently null out retry
-    // state carried as e.g. `retrycount`, turning every record into a
-    // first failure forever. Resolve through the ACTUALLY-PRESENT name,
-    // not the canonical one — under spark.sql.caseSensitive=true a
-    // col("retryCount") over a `retrycount` frame would fail analysis
-    // where the old code merely degraded to null.
-    // Exact-case match wins when several columns match case-
-    // insensitively: under spark.sql.caseSensitive=true a frame may
-    // legally carry BOTH `retryCount` and `retrycount`, and binding to
-    // whichever enumerates first could read stale retry state. Genuine
-    // ambiguity fails loudly with a curated message — that is EVERY
-    // multi-match under a case-INsensitive session (col() there
-    // resolves case-insensitively and would throw Spark's opaque
-    // ambiguous-reference error even for the exact-case name), and a
-    // no-exact-winner multi-match under a case-sensitive one (silently
-    // picking one is the stale-state bug with a different winner).
-    def resolve(name: String): Option[org.apache.spark.sql.Column] = {
-      val matches = df.columns.filter(_.equalsIgnoreCase(name))
-      // the FRAME's session conf, not the thread-local SQLConf.get: this
-      // runs on non-Spark threads too (management-server pool → dead-set
-      // replay → append), where no session is active and the thread-local
-      // falls back to a default conf — silently treating a
-      // caseSensitiveAnalysis=true session as case-insensitive (the
-      // Envelope.withOptionalColumns hardening, mirrored)
-      val caseSensitive =
-        df.sparkSession.sessionState.conf.caseSensitiveAnalysis
-      def ambiguous = throw new IllegalArgumentException(
-        s"ambiguous producer frame: columns ${matches.mkString(", ")} " +
-          s"all match '$name' case-insensitively — rename so one " +
-          "canonical column carries the state")
-      if (matches.length > 1 && !caseSensitive) ambiguous
-      matches.find(_ == name).orElse {
-        if (matches.length > 1) ambiguous else matches.headOption
-      }.map(col)
-    }
-    def stateCol(name: String, tpe: String) =
-      resolve(name).getOrElse(lit(null).cast(tpe))
+    // the file transport's presence rule (Envelope.withOptionalColumns):
+    // a key/value-only producer frame (the plain send path) gets typed
+    // nulls, which entry() drops; a lone case variant keeps its state
     val graft = filter(array(
-      entry(RetryCountHeader, stateCol("retryCount", "int")),
-      entry(NextAttemptHeader,
-        unix_micros(stateCol("nextAttemptAt", "timestamp"))),
-      entry(ChannelHeader, stateCol("channel", "string"))),
+      entry(RetryCountHeader, col("retryCount")),
+      entry(NextAttemptHeader, unix_micros(col("nextAttemptAt"))),
+      entry(ChannelHeader, col("channel"))),
       e => e.isNotNull)
-    val user = resolve("headers")
-      .map(h0 => filter(coalesce(h0, array()),
-        h => !h.getField("key").startsWith(HeaderPrefix)))
-      .getOrElse(array().cast("array<struct<key:string,value:binary>>"))
-    df.select(Seq(col("key"), col("value"),
+    val user = filter(coalesce(col("headers"), array()),
+      h => !h.getField("key").startsWith(HeaderPrefix))
+    Envelope.withOptionalColumns(df).select(Seq(col("key"), col("value"),
       concat(user, graft).as("headers")) ++ extra: _*)
   }
 
@@ -515,9 +473,6 @@ final class FileTopicIO(baseDir: String) extends TopicIO {
   private def unapplied(topic: String, token: String): Boolean = {
     val d = Paths.get(dir(topic))
     val staging = d.resolve(s"_staging-$token")
-    // pre-rework recovery marker: superseded by the staging protocol (its
-    // whole-topic snapshot diff is exactly the loss bug fixed there)
-    Files.deleteIfExists(d.resolve(s"_intent-$token"))
     if (Files.exists(d.resolve(s"_applied-$token"))) {
       // a crash between the marker and cleanup just leaks the staging dir
       deleteRecursively(staging)

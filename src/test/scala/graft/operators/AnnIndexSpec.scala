@@ -112,6 +112,28 @@ class AnnIndexSpec extends SparkSuite {
     assert(AnnIndex.load(spark, dir).version == "v4")
   }
 
+  test("vacuum's age gate reads the NEWEST mtime anywhere in the tree: " +
+      "a version dir whose nested part file was written recently is " +
+      "fresh even when the dir itself is old") {
+    val root = Paths.get(tmpDir("annidx-fresh"), "v3")
+    val part = Files.writeString(Files.createDirectories(
+      root.resolve("postings").resolve("cell=1")).resolve("part-1.parquet"),
+      "y")
+    val now = System.currentTimeMillis()
+    val cutoff = now - AnnIndex.OrphanMinAgeMillis
+    val old = java.nio.file.attribute.FileTime.fromMillis(cutoff - 60000L)
+    Seq(part, part.getParent, root.resolve("postings"), root)
+      .foreach(Files.setLastModifiedTime(_, old))
+    assert(!AnnIndex.anyMtimeAfter(root, cutoff), "a fully aged tree is stale")
+    Files.setLastModifiedTime(part,
+      java.nio.file.attribute.FileTime.fromMillis(now - 1000L))
+    assert(AnnIndex.anyMtimeAfter(root, cutoff),
+      "a fresh nested write must read as fresh whatever the version " +
+        "dir's own mtime says")
+    assert(AnnIndex.anyMtimeAfter(root.resolve("gone"), cutoff),
+      "an uninspectable tree reads as fresh, never as reclaimable")
+  }
+
   test("publishDelta appends a batch as a delta version: centroids " +
       "inherited by reference, loaded postings = base + delta, and a " +
       "second delta flattens the full dir list (one-hop-complete " +
@@ -858,32 +880,15 @@ class AnnIndexSpec extends SparkSuite {
     val sf = "/root/testdata/sf0.001/"
     graft.SparkEntry.queries("s18_ann_persisted_index")(spark, sf)
       .collect()
-    val base = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft-scratch")
-    // only THIS run's root (keyed by the unique sf spelling's hash):
-    // the shared /tmp scratch base holds roots from other processes'
-    // past Verify/Bench runs, whose pre-fix lease residue must not
-    // fail this pin
-    val marker = s"graft-s18-${Integer.toHexString(sf.hashCode)}-"
-    val s = Files.list(base)
-    val roots = try {
+    val ivf = LayoutOps.scratchBase
+      .resolve(s"graft-s18-${Integer.toHexString(sf.hashCode)}/ivf")
+    assert(Files.isDirectory(ivf), "the s18 scratch index must exist after a run")
+    val ls = Files.list(ivf)
+    val leaked = try {
       import scala.jdk.CollectionConverters._
-      s.iterator().asScala.filter(
-        _.getFileName.toString.startsWith(marker)).toSeq
-    } finally s.close()
-    assert(roots.nonEmpty, "the s18 scratch root must exist after a run")
-    val leaked = roots.flatMap { r =>
-      val ivf = r.resolve("ivf")
-      if (!Files.exists(ivf)) Nil
-      else {
-        val ls = Files.list(ivf)
-        try {
-          import scala.jdk.CollectionConverters._
-          ls.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.startsWith("_reading-")).toList
-        } finally ls.close()
-      }
-    }
+      ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("_reading-")).toList
+    } finally ls.close()
     assert(leaked.isEmpty, s"leaked read leases: $leaked")
   }
 

@@ -60,6 +60,56 @@ class EnvelopeSpec extends SparkSuite {
     assert(e.getMessage.contains("ambiguous producer frame"), e.getMessage)
   }
 
+  test("one presence rule for the optional envelope columns: the file " +
+      "transport and the Kafka sink projection keep, null or reject the " +
+      "same frames under both case modes (a lone case variant keeps its " +
+      "retry state; several variants with no exact name fail)") {
+    val cs = spark.newSession()
+    cs.conf.set("spark.sql.caseSensitive", "true")
+    val kafka = new KafkaTopicIO("b1:9092")
+    val files = new FileTopicIO(tmpDir("presence"))
+    val ambiguous = Left("ambiguous")
+    // (case-sensitive session?, retry-state columns in frame order,
+    // the retry count both transports must carry)
+    val table = Seq(
+      (false, Seq("retryCount" -> 4), Right(Some(4))),
+      (false, Seq("retrycount" -> 4), Right(Some(4))),
+      (false, Seq("retryCount" -> 4, "retrycount" -> 9), ambiguous),
+      (false, Nil, Right(None)),
+      (true, Seq("retryCount" -> 4), Right(Some(4))),
+      (true, Seq("retrycount" -> 4), Right(Some(4))),
+      (true, Seq("retrycount" -> 9, "retryCount" -> 4), Right(Some(4))),
+      (true, Seq("RETRYCOUNT" -> 9, "retrycount" -> 4), ambiguous),
+      (true, Nil, Right(None)))
+    table.zipWithIndex.foreach { case ((sensitive, state, want), i) =>
+      val sess = if (sensitive) cs else spark
+      val frame = sess.range(1).select(Seq(
+        lit("k".getBytes).as("key"), lit("v".getBytes).as("value"),
+        lit("t").as("topic"), lit(0).as("partition"), lit(0L).as("offset"),
+        current_timestamp().as("timestamp"), lit("e").as("topicEntity")) ++
+        state.map { case (n, v) => lit(v).as(n) }: _*)
+      def outcome(carried: => Option[Int]) =
+        try Right(carried)
+        catch {
+          case e: IllegalArgumentException
+              if e.getMessage.contains("ambiguous producer frame") =>
+            ambiguous
+        }
+      val viaKafka = outcome(kafka.sinkProjection(frame).select("headers")
+        .head().getSeq[org.apache.spark.sql.Row](0).collectFirst {
+          case h if h.getString(0) == "graft.retryCount" =>
+            new String(h.getAs[Array[Byte]](1), "UTF-8").toInt
+        })
+      val viaFile = outcome {
+        files.append(frame, s"t$i")
+        Option(files.read(sess, s"t$i").select("retryCount").head()
+          .getAs[Integer](0)).map(_.intValue)
+      }
+      assert(viaKafka == want, s"Kafka sink, row $i $state: $viaKafka")
+      assert(viaFile == want, s"file transport, row $i $state: $viaFile")
+    }
+  }
+
   test("file-transport pacing scales with the record budget: " +
       "maxFilesPerTrigger ≈ records / 500 (a file ≈ one poll batch at " +
       "Kafka's default max.poll.records) — scaleRoute's budget lever was " +
