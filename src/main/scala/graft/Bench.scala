@@ -170,7 +170,9 @@ object Bench {
     // between passes: min-of-N measures the engine rather than the neighbors,
     // and rotation keeps a load spike from taxing the same query every pass.
     // clearCache() between runs evicts operator-internal .cache()s so every
-    // execution pays the full pipeline.
+    // execution pays the full pipeline. Table schemas are metadata, not
+    // cached data: the session resolves them in the first pass (Tables),
+    // so later passes build without the schema-inference jobs.
     val passes = 3
     val timed = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)

@@ -40,8 +40,10 @@ object GraftSession {
     // Spark 4 refuses TIMESTAMP(NANOS) parquet columns without this
     // legacy flag (they read as LongType; Tables.events then truncates
     // to micros). Session-global by necessity — the flag has no
-    // per-read form — so it belongs HERE, visible at session build,
-    // not as a hidden side effect of a table accessor.
+    // per-read form — so it belongs HERE, visible at session build.
+    // Tables.events also sets it when it resolves events.parquet in a
+    // session (once per resolution, via the table catalog), which covers
+    // sessions built elsewhere.
     b.config("spark.sql.legacy.parquet.nanosAsLong", "true")
     if (rocksdbStateStore) rocksdbConfs.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()

@@ -17,6 +17,9 @@ import scala.util.{Failure, Success, Try}
   *   - expression ids (`#123`, `#123L`) become `#n`;
   *   - physical plan ids inside cached relations (`plan_id=123`) become
   *     `plan_id=n`;
+  *   - broadcast variable ids (`Broadcast(123)`, from the SparkContext's
+  *     JVM-wide counter that every earlier job bumps) become
+  *     `Broadcast(n)`;
   *   - JVM lambda class names and identity hashes
   *     (`$$Lambda$123/0x7f...@1a2b`) become `$$Lambda`;
   *   - run-specific temp paths (`/tmp/...`, the JVM's temp dir, spark
@@ -32,6 +35,7 @@ import scala.util.{Failure, Success, Try}
 object PlanDump {
   private val exprId = "#\\d+L?".r
   private val planId = "plan_id=\\d+".r
+  private val broadcastId = "Broadcast\\(\\d+\\)".r
   private val lambda = "\\$\\$Lambda\\$\\d+/0x[0-9a-f]+@[0-9a-f]+".r
 
   private def tmpRoots: Seq[String] =
@@ -43,7 +47,9 @@ object PlanDump {
   /** The normalisation applied to every dumped plan. */
   def normalise(plan: String): String = {
     val noIds = lambda.replaceAllIn(
-      planId.replaceAllIn(exprId.replaceAllIn(plan, "#n"), "plan_id=n"),
+      broadcastId.replaceAllIn(
+        planId.replaceAllIn(exprId.replaceAllIn(plan, "#n"), "plan_id=n"),
+        "Broadcast(n)"),
       java.util.regex.Matcher.quoteReplacement("$$Lambda"))
     tmpRoots.foldLeft(noIds) { (s, root) =>
       val quoted = java.util.regex.Pattern.quote(root)

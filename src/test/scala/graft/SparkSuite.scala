@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Envelope
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 /** Shared session base for all specs (one JVM-wide session via
   * getOrCreate); [[tmpDir]]s are deleted when the suite ends. */
@@ -23,6 +26,36 @@ trait SparkSuite extends AnyFunSuite with TempDirs {
   def sf0001 = "/root/testdata/sf0.001"
 
   def ts(s: String): Timestamp = Timestamp.valueOf(s)
+
+  /** Spark jobs started on this thread while `body` ran, tagged by a local
+    * property (other suites share the SparkContext concurrently). A
+    * sentinel job posted after `body` marks the end: listener events
+    * arrive in order, so once it is seen every job of `body` is. */
+  def jobsOf(body: => Unit): Int = {
+    val tag = "graft.spec.jobs"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      body
+      sc.setLocalProperty(tag, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen.contains("sentinel") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains("sentinel"), "listener never saw the sentinel job")
+      seen.asScala.count(_ == "body")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   /** Build an envelope DataFrame from (key, value-string, timestamp). */
   def envelopes(entity: String, rows: Seq[(String, String, Timestamp)]): DataFrame = {

@@ -1,10 +1,7 @@
 package graft.streaming
 
 import graft.SparkSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 
 /** Spark jobs per dispatched micro-batch — the per-trigger fixed cost a
   * small stream batch pays. The routed emit writes every destination in
@@ -12,36 +9,6 @@ import scala.jdk.CollectionConverters._
   * write; per-sink emits ran a counting job and a write per destination
   * (7 jobs for retry + DLQ + channel). */
 class DispatchJobsSpec extends SparkSuite {
-
-  private val Tag = "graft.spec.jobs"
-
-  /** Jobs started on this thread while `body` ran, tagged by a local
-    * property. A sentinel job posted after `body` marks the end: listener
-    * events arrive in order, so once it is seen every job of `body` is. */
-  private def jobsOf(body: => Unit): Int = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(Tag)))
-          .foreach(seen.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(Tag, "body")
-      body
-      sc.setLocalProperty(Tag, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!seen.contains("sentinel") && System.currentTimeMillis() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains("sentinel"), "listener never saw the sentinel job")
-      seen.asScala.count(_ == "body")
-    } finally {
-      sc.setLocalProperty(Tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private val route = StreamRouteConfig("jobs", "jobs-topic",
     retry = RetryConfig(enabled = true, count = 3,
