@@ -62,10 +62,8 @@ object GraftFunctions {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // scale guardrails (opt-in by conf — see ScaleGuards)
-    ext.injectOptimizerRule(spark =>
-      new graft.plans.FailUnpartitionedWindows(spark))
-    ext.injectOptimizerRule(spark =>
-      new graft.plans.FailCartesianProducts(spark))
+    ext.injectOptimizerRule(_ => new graft.plans.FailUnpartitionedWindows)
+    ext.injectOptimizerRule(_ => new graft.plans.FailCartesianProducts)
     // exact pigeonhole rewrite: hamming64 ≤ k theta-join → posexplode
     // block equi-join (default ON — see HammingBlockJoinRewrite)
     ext.injectOptimizerRule { spark =>

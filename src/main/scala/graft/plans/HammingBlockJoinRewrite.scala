@@ -74,11 +74,11 @@ import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, 
   * its own output joins on block equality).
   * Default ON; disable with `spark.graft.hammingBlockJoinRewrite=false`.
   */
-class HammingBlockJoinRewrite(spark: SparkSession)
+class HammingBlockJoinRewrite private[plans] (spark: SparkSession,
+    sampleGate: ThetaJoinRewrite.SampleGate)
     extends ThetaJoinRewrite(spark, "hamming-block", "popcount compares",
-      ScaleGuards.HammingBlockJoinRewriteKey, ScaleGuards.HammingPreflightKey,
-      ScaleGuards.HammingPreflightSampleKey,
-      ScaleGuards.HammingPreflightAutoSampleMinBytesKey) {
+      ScaleGuards.HammingBlockJoinRewriteKey, sampleGate) {
+  def this(spark: SparkSession) = this(spark, ThetaJoinRewrite.StatsGate)
   import RewriteSupport._
   import ThetaJoinRewrite.{Probe, Slim}
 
@@ -228,7 +228,7 @@ class HammingBlockJoinRewrite(spark: SparkSession)
     hits.toSeq
   }
 
-  /** [[ScaleGuards.HammingPreflightKey]] = warn: on rewrite fire, the
+  /** [[ScaleGuards.PreflightKey]] = warn: on rewrite fire, the
     * d41 hot-block audit — (block-index, block-value) frequencies. */
   private def audit(l: LogicalPlan, r: LogicalPlan,
       a: Expression, b: Expression, k: Int): Unit =

@@ -180,26 +180,32 @@ private[plans] object RewriteSupport {
     case x => Seq(x)
   }
 
-  /** The preflight mode `confKey` sets, `warn` or `fail`, when an audit
-    * can run over `l` and `r`: None when it is unset or `off`, or when
-    * either child is streaming (a side job cannot run over a streaming
-    * child). Any other value fails planning: a typo (`fial`, `on`) must
-    * not silently disarm the circuit breaker. */
-  def preflightMode(confKey: String, l: LogicalPlan,
-      r: LogicalPlan): Option[String] =
+  /** The [[ScaleGuards.PreflightKey]] mode, `warn` or `fail`, when an
+    * audit can run over `l` and `r`: None when it is unset or `off`, or
+    * when either child is streaming (a side job cannot run over a
+    * streaming child). Any other value, or a set retired per-family key
+    * ([[ScaleGuards.RetiredPreflightKeys]]), fails planning: a typo
+    * (`fial`, `on`) or a stale key must not silently disarm the circuit
+    * breaker. */
+  def preflightMode(l: LogicalPlan, r: LogicalPlan): Option[String] = {
+    val key = ScaleGuards.PreflightKey
+    ScaleGuards.RetiredPreflightKeys.find(activeConf(_).isDefined)
+      .foreach(old => throw new IllegalArgumentException(
+        s"$old is retired: set $key (warn, fail or off) instead"))
     // Locale.ROOT: a Turkish-locale JVM lowercases "FAIL" to dotless-ı
     // "faıl", which would fail planning as a typo. activeConf, not
     // spark.conf: cloned sessions inherit the rule instance (see
     // activeConf's note) and must honor their OWN preflight mode.
-    activeConf(confKey).flatMap { raw =>
+    activeConf(key).flatMap { raw =>
       raw.toLowerCase(java.util.Locale.ROOT) match {
         case m @ ("warn" | "fail") =>
           if (l.isStreaming || r.isStreaming) None else Some(m)
         case "off" => None
         case _ => throw new IllegalArgumentException(
-          s"$confKey must be warn, fail or off, got '$raw'")
+          s"$key must be warn, fail or off, got '$raw'")
       }
     }
+  }
 
   /** Shared preflight hook for both rewrite rules, run under `mode` (see
     * [[preflightMode]]): evaluate `report` — a one-row skew audit over
@@ -216,7 +222,7 @@ private[plans] object RewriteSupport {
     * columns try_cast-degraded to NULL past ~9.2e18 candidates — they
     * are read boxed so the log prints >Long.Max instead of unboxing NULL
     * to a self-contradictory 0 at exactly the hottest extreme. */
-  def logPreflight(mode: String, confKey: String, tag: String,
+  def logPreflight(mode: String, tag: String,
       cols: Seq[(String, Boolean)], warn: String => Unit)
       (report: => org.apache.spark.sql.DataFrame): Unit = {
     val line = try {
@@ -263,8 +269,8 @@ private[plans] object RewriteSupport {
     }
     if (mode == "fail")
       line.foreach(msg => throw new PreflightAbort(
-        s"$msg — refusing to plan the join ($confKey=fail; set it to " +
-          "warn, or fix the diagnosed skew, to proceed)"))
+        s"$msg — refusing to plan the join (${ScaleGuards.PreflightKey}" +
+          "=fail; set it to warn, or fix the diagnosed skew, to proceed)"))
   }
 
   /** SELF-joins (canonically identical children — d25's fingerprint

@@ -136,11 +136,11 @@ import org.apache.spark.sql.types.{ArrayType, Decimal, DecimalType, DoubleType, 
   * join it emits is an equi-join). Default ON; disable with
   * `spark.graft.overlapJoinRewrite=false`.
   */
-class SetOverlapJoinRewrite(spark: SparkSession)
+class SetOverlapJoinRewrite private[plans] (spark: SparkSession,
+    sampleGate: ThetaJoinRewrite.SampleGate)
     extends ThetaJoinRewrite(spark, "overlap-join", "array compares",
-      ScaleGuards.OverlapJoinRewriteKey, ScaleGuards.OverlapPreflightKey,
-      ScaleGuards.OverlapPreflightSampleKey,
-      ScaleGuards.OverlapPreflightAutoSampleMinBytesKey) {
+      ScaleGuards.OverlapJoinRewriteKey, sampleGate) {
+  def this(spark: SparkSession) = this(spark, ThetaJoinRewrite.StatsGate)
   import RewriteSupport._
   import ThetaJoinRewrite.{Probe, Slim}
 
@@ -468,7 +468,7 @@ class SetOverlapJoinRewrite(spark: SparkSession)
       else None
     }.nextOption()
 
-  /** [[ScaleGuards.OverlapPreflightKey]] = warn: on rewrite fire, the
+  /** [[ScaleGuards.PreflightKey]] = warn: on rewrite fire, the
     * d31 hot-element audit over the join's own children — "diagnosed by
     * default" instead of "diagnosable on request". */
   private def audit(l: LogicalPlan, r: LogicalPlan, p: OverlapPred): Unit = {

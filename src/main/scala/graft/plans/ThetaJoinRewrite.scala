@@ -21,10 +21,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *  - the conf-gated preflight hook.
   *
   * `tag` names the rule in stand-down and preflight lines; `compares`
-  * names what the nested loop it replaces compares. */
+  * names what the nested loop it replaces compares; `sampleGate` picks
+  * the preflight's sample fraction from the join's children. */
 private[plans] abstract class ThetaJoinRewrite(spark: SparkSession,
     tag: String, compares: String, enableKey: String,
-    preflightKey: String, sampleKey: String, autoSampleKey: String)
+    sampleGate: ThetaJoinRewrite.SampleGate)
     extends Rule[LogicalPlan] {
   import RewriteSupport._
   import ThetaJoinRewrite.{Probe, Slim}
@@ -40,8 +41,7 @@ private[plans] abstract class ThetaJoinRewrite(spark: SparkSession,
   protected def standDownReasons(j: Join, cs: Seq[Expression]): Seq[String]
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled = activeConf(enableKey).forall(!_.equalsIgnoreCase("false"))
-    if (!enabled) return plan
+    if (!ScaleGuards.flag(enableKey, default = true)) return plan
     plan.transformUp {
       case j @ Join(l, r, jt, Some(cond), _) if j.resolved
           && (jt == Inner || jt == Cross || jt == LeftSemi || jt == LeftAnti) =>
@@ -224,19 +224,15 @@ private[plans] abstract class ThetaJoinRewrite(spark: SparkSession,
     * children: `report(left, a, right, b, sampleFraction)` runs the
     * family's SkewTools preflight, logged in `cols` order (plus the
     * sample provenance column when sampling). The sample decision is
-    * [[ScaleGuards.effectivePreflightSample]]: an explicit sampleFraction
-    * wins; unset, the stats floor auto-engages sampling on big children.
-    * The conf gate and streaming skip are [[RewriteSupport.preflightMode]];
-    * the sample keys are read only under it, so a malformed one fails
-    * planning only when an audit would run. Boxed BIGINT reads and the
+    * `sampleGate`'s. The conf gate and streaming skip are
+    * [[RewriteSupport.preflightMode]]; boxed BIGINT reads and the
     * best-effort catch are [[RewriteSupport.logPreflight]]. */
   protected def preflight(l: LogicalPlan, r: LogicalPlan,
       a: Expression, b: Expression, cols: Seq[(String, Boolean)])(
       report: (DataFrame, Column, DataFrame, Column, Double) => DataFrame)
-      : Unit = preflightMode(preflightKey, l, r).foreach { mode =>
-    val sample = ScaleGuards.effectivePreflightSample(sampleKey,
-      autoSampleKey, l, r)
-    logPreflight(mode, preflightKey, s"$tag rewrite",
+      : Unit = preflightMode(l, r).foreach { mode =>
+    val sample = sampleGate(l, r)
+    logPreflight(mode, s"$tag rewrite",
       cols ++ ScaleGuards.sampleProvenanceCols(sample), logWarning(_)) {
       import org.apache.spark.sql.graftbridge.ColumnBridge
       report(ColumnBridge.dataFrame(spark, l), ColumnBridge.column(a),
@@ -247,6 +243,14 @@ private[plans] abstract class ThetaJoinRewrite(spark: SparkSession,
 }
 
 private[plans] object ThetaJoinRewrite {
+  /** Picks a preflight's sample fraction from the join's two children;
+    * None audits exactly. */
+  type SampleGate = (LogicalPlan, LogicalPlan) => Option[Double]
+
+  /** The gate every registered rule uses: plan statistics against the
+    * default floor and row target ([[ScaleGuards.preflightSample]]). */
+  val StatsGate: SampleGate = ScaleGuards.preflightSample(_, _)
+
   /** One side of a slim candidate join: the exploded plan, the keys the
     * rule's [[Probe.matches]] joins on, and the original→alias
     * substitution for the carried conjuncts. */

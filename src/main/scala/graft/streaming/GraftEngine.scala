@@ -26,9 +26,8 @@ import scala.jdk.CollectionConverters._
   * filter → metadata → middleware → handler → result-code routing), and
   * the start methods share one body for it. Each query is started by one
   * skeleton (`startQuery`: query name, checkpoint subdir, source,
-  * trigger, per-batch body with its `<queryName>-<batchId>` emit token);
-  * only the analytics route, which needs update output mode, starts its
-  * own. Derived-topic consumers run one worker body (metadata →
+  * trigger, output mode, per-batch body with its `<queryName>-<batchId>`
+  * emit token). Derived-topic consumers run one worker body (metadata →
   * middleware → dispatch → counts) and every retry reader (route,
   * channel, batch) runs one due-filter reader body under the caller's
   * trigger; each takes the stream or batch dispatch contract as a
@@ -141,15 +140,17 @@ final class GraftEngine(
   spark.streams.addListener(lifecycleListener)
 
   /** The one query skeleton: a foreachBatch query over `src` named
-    * `queryName`, checkpointed under `<checkpointDir>/<subdir>` and
-    * tracked as `name`. `body` gets each micro-batch, its id and its emit
-    * token `<queryName>-<batchId>`. Only [[startAnalyticsRoute]] (update
-    * output mode) starts its query elsewhere. */
+    * `queryName`, checkpointed under `<checkpointDir>/<subdir>`, tracked
+    * as `name` and run in `outputMode` (append, DataStreamWriter's own
+    * default, unless given). `body` gets each micro-batch, its id and its
+    * emit token `<queryName>-<batchId>`. */
   private def startQuery(queryName: String)(src: DataFrame, trigger: Trigger,
-      subdir: String = queryName, name: String = queryName)(
+      subdir: String = queryName, name: String = queryName,
+      outputMode: String = "append")(
       body: (DataFrame, Long, String) => Unit): StreamingQuery =
     track(name, Starter(queryName, () => src.writeStream
       .queryName(queryName)
+      .outputMode(outputMode)
       .option("checkpointLocation", s"$checkpointDir/$subdir")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -456,31 +457,25 @@ final class GraftEngine(
       keyCol: Option[String] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import org.apache.spark.sql.functions._
-    val agg = aggregation(topics.readStream(spark, originTopic))
-    val queryName = s"analytics-$name"
-    track(queryName, Starter(queryName, () => agg.writeStream
-      .queryName(queryName)
-      .outputMode("update")
-      .option("checkpointLocation", s"$checkpointDir/$queryName")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val env = batch.select(
-          keyCol.map(k => col(k).cast("string").cast("binary"))
-            .getOrElse(lit(null).cast("binary")).as("key"),
-          to_json(struct(batch.columns.map(col).toIndexedSeq: _*))
-            .cast("binary").as("value"),
-          lit(sinkTopic).as("topic"),
-          lit(0).as("partition"),
-          lit(0L).as("offset"),
-          current_timestamp().as("timestamp"),
-          lit(name).as("topicEntity"),
-          lit(null).cast("int").as("retryCount"),
-          lit(null).cast("timestamp").as("nextAttemptAt"),
-          lit(null).cast("string").as("channel"))
-        topics.appendIdempotent(env, sinkTopic, s"$queryName-$batchId")
-        metrics.increment(s"$name.analytics.batches")
-      }
-      .start()))
+    startQuery(s"analytics-$name")(
+      aggregation(topics.readStream(spark, originTopic)), trigger,
+      outputMode = "update") { (batch, _, token) =>
+      val env = batch.select(
+        keyCol.map(k => col(k).cast("string").cast("binary"))
+          .getOrElse(lit(null).cast("binary")).as("key"),
+        to_json(struct(batch.columns.map(col).toIndexedSeq: _*))
+          .cast("binary").as("value"),
+        lit(sinkTopic).as("topic"),
+        lit(0).as("partition"),
+        lit(0L).as("offset"),
+        current_timestamp().as("timestamp"),
+        lit(name).as("topicEntity"),
+        lit(null).cast("int").as("retryCount"),
+        lit(null).cast("timestamp").as("nextAttemptAt"),
+        lit(null).cast("string").as("channel"))
+      topics.appendIdempotent(env, sinkTopic, token)
+      metrics.increment(s"$name.analytics.batches")
+    }
   }
 
   /** O2: stop/restart a single route's query at runtime (same bounded

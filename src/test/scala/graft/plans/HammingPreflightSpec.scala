@@ -2,11 +2,12 @@ package graft.plans
 
 import graft.SparkSuite
 import graft.functions.GraftFunctions.hamming64
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** The opt-in Hamming preflight hook
-  * (`spark.graft.hammingBlockJoinRewrite.preflight = warn`): on rewrite
-  * fire it runs the d41 hot-block audit over the join's children and
+/** The opt-in preflight hook (`spark.graft.preflight = warn`) on the
+  * Hamming block rule: on rewrite fire it runs the d41 hot-block audit over the join's children and
   * logs estimate + worst (block-index, block-value); with the conf
   * unset it stays silent — OverlapPreflightSpec's contract, transposed
   * to the second rewrite family. */
@@ -21,7 +22,7 @@ class HammingPreflightSpec extends SparkSuite {
     * zero-heavy-block skew of degenerate fingerprints), contributing
     * 30·30 = 900 candidate rows through one (index, value) key while
     * the other twelve blocks stay near-uniform. */
-  private def skewedJoinCount(): Long = {
+  private def skewedJoin(): DataFrame = {
     val sess = spark
     import sess.implicits._
     val fps = (1L to 30L).map(i => (i * 0x9E3779B97F4A7C15L) & ~31L)
@@ -29,12 +30,21 @@ class HammingPreflightSpec extends SparkSuite {
       .map { case (f, i) => (i.toLong, f) }.toDF("lid", "lfp")
     val right = fps.zipWithIndex
       .map { case (f, i) => (i.toLong, f) }.toDF("rid", "rfp")
-    left.join(right, hamming64(col("lfp"), col("rfp")) <= 12).count()
+    left.join(right, hamming64(col("lfp"), col("rfp")) <= 12)
   }
+
+  private def skewedJoinCount(): Long = skewedJoin().count()
+
+  /** The skewed join rewritten by a rule whose preflight samples as
+    * `gate` says (spec-sized fixtures sit far below the stats floor),
+    * then counted. */
+  private def gatedCount(gate: ThetaJoinRewrite.SampleGate): Long =
+    ColumnBridge.dataFrame(spark, new HammingBlockJoinRewrite(spark, gate)(
+      skewedJoin().queryExecution.analyzed)).count()
 
   test("preflight=warn logs the candidate estimate with the hot block " +
       "named and the hot-block diagnosis") {
-    spark.conf.set(ScaleGuards.HammingPreflightKey, "warn")
+    spark.conf.set(ScaleGuards.PreflightKey, "warn")
     try {
       // at least the 30 distance-0 diagonal pairs must survive
       val lines = capturing { assert(skewedJoinCount() >= 30L) }
@@ -45,7 +55,7 @@ class HammingPreflightSpec extends SparkSuite {
       assert(line.contains("worst_block_value=0"), line)
       assert(line.contains("max_block_rows=900"), line)
       assert(line.contains("hot-block"), line)
-    } finally spark.conf.unset(ScaleGuards.HammingPreflightKey)
+    } finally spark.conf.unset(ScaleGuards.PreflightKey)
   }
 
   test("without the conf the hook stays silent") {
@@ -56,10 +66,11 @@ class HammingPreflightSpec extends SparkSuite {
 
   test("sampled preflight names the SAME worst block and diagnosis as " +
       "the exact audit, with sample_fraction provenance on the line") {
-    spark.conf.set(ScaleGuards.HammingPreflightKey, "warn")
-    spark.conf.set(ScaleGuards.HammingPreflightSampleKey, "0.5")
+    spark.conf.set(ScaleGuards.PreflightKey, "warn")
     try {
-      val lines = capturing { assert(skewedJoinCount() >= 30L) }
+      val lines = capturing {
+        assert(gatedCount((_, _) => Some(0.5)) >= 30L)
+      }
       val pf = lines.filter(_.contains("hamming-block rewrite preflight:"))
       assert(pf.nonEmpty, s"expected a preflight line, got: $lines")
       val line = pf.head
@@ -74,42 +85,16 @@ class HammingPreflightSpec extends SparkSuite {
       val hot = "max_block_rows=(\\d+)".r
         .findFirstMatchIn(line).map(_.group(1).toLong)
       assert(hot.exists(h => h > 0 && h <= 3600L), line)
-    } finally {
-      spark.conf.unset(ScaleGuards.HammingPreflightKey)
-      spark.conf.unset(ScaleGuards.HammingPreflightSampleKey)
-    }
+    } finally spark.conf.unset(ScaleGuards.PreflightKey)
   }
 
   test("preflight=fail refuses to plan the skewed-block join with the " +
       "audit line in the abort") {
-    spark.conf.set(ScaleGuards.HammingPreflightKey, "fail")
+    spark.conf.set(ScaleGuards.PreflightKey, "fail")
     try {
       val ex = intercept[PreflightAbort] { skewedJoinCount() }
       assert(ex.getMessage.contains("hot-block"), ex.getMessage)
       assert(ex.getMessage.contains("worst_block_index=0"), ex.getMessage)
-    } finally spark.conf.unset(ScaleGuards.HammingPreflightKey)
-  }
-
-  test("the hamming rule auto-samples BY DEFAULT above its own byte " +
-      "floor (no sampleFraction conf), naming the same worst block with " +
-      "sampling provenance on the line") {
-    spark.conf.set(ScaleGuards.HammingPreflightKey, "warn")
-    spark.conf.set(ScaleGuards.HammingPreflightAutoSampleMinBytesKey, "0")
-    spark.conf.set(ScaleGuards.PreflightAutoSampleTargetRowsKey, "3")
-    try {
-      val lines = capturing { assert(skewedJoinCount() >= 30L) }
-      val pf = lines.filter(_.contains("hamming-block rewrite preflight:"))
-      assert(pf.nonEmpty, s"expected a preflight line, got: $lines")
-      val line = pf.head
-      assert(line.contains("sample_fraction="),
-        s"auto gate must stamp sampling provenance: $line")
-      // block 0's value 0 is in every row: any non-empty sample names it
-      assert(line.contains("worst_block_index=0"), line)
-      assert(line.contains("worst_block_value=0"), line)
-    } finally {
-      spark.conf.unset(ScaleGuards.HammingPreflightKey)
-      spark.conf.unset(ScaleGuards.HammingPreflightAutoSampleMinBytesKey)
-      spark.conf.unset(ScaleGuards.PreflightAutoSampleTargetRowsKey)
-    }
+    } finally spark.conf.unset(ScaleGuards.PreflightKey)
   }
 }

@@ -1,10 +1,12 @@
 package graft.plans
 
 import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** The opt-in preflight hook (`spark.graft.overlapJoinRewrite.preflight
-  * = warn`): on rewrite fire it runs the d31 hot-element audit over the
+/** The opt-in preflight hook (`spark.graft.preflight = warn`): on
+  * overlap-rewrite fire it runs the d31 hot-element audit over the
   * join's children and logs estimate + worst element; with the conf
   * unset it stays silent (no side job, no log line). */
 class OverlapPreflightSpec extends SparkSuite {
@@ -13,18 +15,34 @@ class OverlapPreflightSpec extends SparkSuite {
   private def capturing(body: => Unit): Seq[String] =
     LogCapture.capturing(classOf[SetOverlapJoinRewrite])(body)
 
-  private def hotJoinCount(): Long = {
+  private def hotJoin(): DataFrame = {
     val sess = spark
     import sess.implicits._
     // element 1L appears in EVERY row of both sides — a 100% hot element
     val left = (1L to 30L).map(i => (i, Seq(1L, i + 100))).toDF("lid", "la")
     val right = (1L to 30L).map(i => (i, Seq(1L, i + 900))).toDF("rid", "ra")
-    left.join(right, arrays_overlap(col("la"), col("ra"))).count()
+    left.join(right, arrays_overlap(col("la"), col("ra")))
   }
+
+  private def hotJoinCount(): Long = hotJoin().count()
+
+  /** `df` with its join rewritten by a rule whose preflight samples as
+    * `gate` says: spec-sized fixtures sit far below the stats floor, so
+    * a sampled audit needs the gate substituted. The rewritten plan is
+    * an equi-join the session's own rules leave alone. */
+  private def gated(df: DataFrame, gate: ThetaJoinRewrite.SampleGate)
+      : DataFrame = ColumnBridge.dataFrame(spark,
+    new SetOverlapJoinRewrite(spark, gate)(df.queryExecution.analyzed))
+
+  /** The stats gate, lowered so a spec-sized fixture counts as big: floor
+    * 0 engages it, a 3-row target forces f < 1 at any honest row
+    * estimate. */
+  private val lowGate: ThetaJoinRewrite.SampleGate =
+    ScaleGuards.preflightSample(_, _, minBytes = 0, targetRows = 3)
 
   test("preflight=warn logs the candidate estimate with the hot element " +
       "named and the hot-element diagnosis") {
-    spark.conf.set(ScaleGuards.OverlapPreflightKey, "warn")
+    spark.conf.set(ScaleGuards.PreflightKey, "warn")
     try {
       val lines = capturing { assert(hotJoinCount() >= 900L) }
       val pf = lines.filter(_.contains("overlap-join rewrite preflight:"))
@@ -33,16 +51,17 @@ class OverlapPreflightSpec extends SparkSuite {
       assert(line.contains("worst_element=1"), line)
       assert(line.contains("est_candidate_rows=900"), line)
       assert(line.contains("hot-element"), line)
-    } finally spark.conf.unset(ScaleGuards.OverlapPreflightKey)
+    } finally spark.conf.unset(ScaleGuards.PreflightKey)
   }
 
   test("sampled preflight (sampleFraction in (0,1)) names the SAME " +
       "worst element and diagnosis as the exact audit and stamps the " +
       "line with sample_fraction provenance") {
-    spark.conf.set(ScaleGuards.OverlapPreflightKey, "warn")
-    spark.conf.set(ScaleGuards.OverlapPreflightSampleKey, "0.5")
+    spark.conf.set(ScaleGuards.PreflightKey, "warn")
     try {
-      val lines = capturing { assert(hotJoinCount() >= 900L) }
+      val lines = capturing {
+        assert(gated(hotJoin(), (_, _) => Some(0.5)).count() >= 900L)
+      }
       val pf = lines.filter(_.contains("overlap-join rewrite preflight:"))
       assert(pf.nonEmpty, s"expected a preflight line, got: $lines")
       val line = pf.head
@@ -59,52 +78,32 @@ class OverlapPreflightSpec extends SparkSuite {
       val est = "est_candidate_rows=(\\d+)".r
         .findFirstMatchIn(line).map(_.group(1).toLong)
       assert(est.exists(e => e > 0 && e <= 3600L), line)
-    } finally {
-      spark.conf.unset(ScaleGuards.OverlapPreflightKey)
-      spark.conf.unset(ScaleGuards.OverlapPreflightSampleKey)
-    }
+    } finally spark.conf.unset(ScaleGuards.PreflightKey)
   }
 
   test("sampled preflight under fail mode refuses the hot join with " +
       "the sampling provenance carried in the abort — an estimate-based " +
       "refusal must be readable as one") {
-    spark.conf.set(ScaleGuards.OverlapPreflightKey, "fail")
-    spark.conf.set(ScaleGuards.OverlapPreflightSampleKey, "0.5")
+    spark.conf.set(ScaleGuards.PreflightKey, "fail")
     try {
-      val ex = intercept[PreflightAbort] { hotJoinCount() }
+      val ex = intercept[PreflightAbort] {
+        gated(hotJoin(), (_, _) => Some(0.5))
+      }
       assert(ex.getMessage.contains("hot-element"), ex.getMessage)
       assert(ex.getMessage.contains("worst_element=1"), ex.getMessage)
       assert(ex.getMessage.contains("sample_fraction=0.5"), ex.getMessage)
-    } finally {
-      spark.conf.unset(ScaleGuards.OverlapPreflightKey)
-      spark.conf.unset(ScaleGuards.OverlapPreflightSampleKey)
-    }
-  }
-
-  test("a sampleFraction outside (0,1) means exact: no provenance " +
-      "column, byte-identical estimate") {
-    spark.conf.set(ScaleGuards.OverlapPreflightKey, "warn")
-    spark.conf.set(ScaleGuards.OverlapPreflightSampleKey, "1.0")
-    try {
-      val lines = capturing { assert(hotJoinCount() >= 900L) }
-      val pf = lines.filter(_.contains("overlap-join rewrite preflight:"))
-      assert(pf.nonEmpty, s"expected a preflight line, got: $lines")
-      assert(pf.head.contains("est_candidate_rows=900"), pf.head)
-      assert(!pf.head.contains("sample_fraction"), pf.head)
-    } finally {
-      spark.conf.unset(ScaleGuards.OverlapPreflightKey)
-      spark.conf.unset(ScaleGuards.OverlapPreflightSampleKey)
-    }
+    } finally spark.conf.unset(ScaleGuards.PreflightKey)
   }
 
   test("preflight=fail refuses to plan the hot join (PreflightAbort " +
       "carries the audit line), and lets a clean join through") {
-    spark.conf.set(ScaleGuards.OverlapPreflightKey, "fail")
+    spark.conf.set(ScaleGuards.PreflightKey, "fail")
     try {
       val ex = intercept[PreflightAbort] { hotJoinCount() }
       assert(ex.getMessage.contains("hot-element"), ex.getMessage)
       assert(ex.getMessage.contains("worst_element=1"), ex.getMessage)
       assert(ex.getMessage.contains("preflight=fail"), ex.getMessage)
+      assert(!ex.getMessage.contains("sample_fraction"), ex.getMessage)
       // a join whose audit says 'ok' plans and runs under fail mode
       val sess = spark
       import sess.implicits._
@@ -112,7 +111,7 @@ class OverlapPreflightSpec extends SparkSuite {
       val right = (1L to 30L).map(i => (i, Seq(i + 100))).toDF("rid", "ra")
       assert(left.join(right, arrays_overlap(col("la"), col("ra")))
         .count() == 30L, "clean join must survive fail mode")
-    } finally spark.conf.unset(ScaleGuards.OverlapPreflightKey)
+    } finally spark.conf.unset(ScaleGuards.PreflightKey)
   }
 
   test("preflight=warn on the >=-Jaccard spelling prices the " +
@@ -120,7 +119,7 @@ class OverlapPreflightSpec extends SparkSuite {
       "own diagnosis") {
     val sess = spark
     import sess.implicits._
-    spark.conf.set(ScaleGuards.OverlapPreflightKey, "warn")
+    spark.conf.set(ScaleGuards.PreflightKey, "warn")
     try {
       // 20% empty arrays per side (2 of 10): the >= spelling's union
       // branch MUST emit the 2*2 empty-empty pairs, a volume no
@@ -154,7 +153,7 @@ class OverlapPreflightSpec extends SparkSuite {
           s"${graft.plans.PreflightLog.recent().map(_.diagnosis)}")
       assert(audit.get.shareBp.contains(3333L), audit.get.toString)
       assert(audit.get.worstKey == "empty_empty_rows=4", audit.get.toString)
-    } finally spark.conf.unset(ScaleGuards.OverlapPreflightKey)
+    } finally spark.conf.unset(ScaleGuards.PreflightKey)
   }
 
   test("preflight fires on the >=-Jaccard SEMI/ANTI paths too — the " +
@@ -173,7 +172,7 @@ class OverlapPreflightSpec extends SparkSuite {
           else if (i <= 6) Seq(i + 100) else Seq(i + 900))).toDF("rid", "ra")
     def jaccardGE = size(array_intersect(col("la"), col("ra"))) >=
       lit(0.5) * size(array_union(col("la"), col("ra")))
-    spark.conf.set(ScaleGuards.OverlapPreflightKey, "warn")
+    spark.conf.set(ScaleGuards.PreflightKey, "warn")
     try {
       val lines = capturing {
         assert(left.join(right, jaccardGE, "left_semi").count() == 6L,
@@ -183,40 +182,15 @@ class OverlapPreflightSpec extends SparkSuite {
       assert(pf.nonEmpty, s"expected a preflight line, got: $lines")
       assert(pf.head.contains("empty_empty_rows=4"), pf.head)
       assert(pf.head.contains("empty-empty"), pf.head)
-    } finally spark.conf.unset(ScaleGuards.OverlapPreflightKey)
-    spark.conf.set(ScaleGuards.OverlapPreflightKey, "fail")
+    } finally spark.conf.unset(ScaleGuards.PreflightKey)
+    spark.conf.set(ScaleGuards.PreflightKey, "fail")
     try {
       val ex = intercept[PreflightAbort] {
         left.join(right, jaccardGE, "left_anti").count()
       }
       assert(ex.getMessage.contains("empty-empty"), ex.getMessage)
       assert(ex.getMessage.contains("preflight=fail"), ex.getMessage)
-    } finally spark.conf.unset(ScaleGuards.OverlapPreflightKey)
-  }
-
-  test("the rule auto-samples BY DEFAULT when the children's stats cross " +
-      "the (conf-lowered) byte floor — no sampleFraction conf set — and " +
-      "the sampled line still names the same worst element") {
-    spark.conf.set(ScaleGuards.OverlapPreflightKey, "warn")
-    // lower the gate so this spec-sized fixture counts as "big": floor 0
-    // engages the auto path, a 3-row target forces f < 1 at any honest row estimate
-    spark.conf.set(ScaleGuards.OverlapPreflightAutoSampleMinBytesKey, "0")
-    spark.conf.set(ScaleGuards.PreflightAutoSampleTargetRowsKey, "3")
-    try {
-      val lines = capturing { assert(hotJoinCount() >= 900L) }
-      val pf = lines.filter(_.contains("overlap-join rewrite preflight:"))
-      assert(pf.nonEmpty, s"expected a preflight line, got: $lines")
-      val line = pf.head
-      assert(line.contains("sample_fraction="),
-        s"auto gate must stamp sampling provenance: $line")
-      // element 1L rides in every row: any non-empty sample names it
-      assert(line.contains("worst_element=1"), line)
-      assert(line.contains("max_share_bp=10000"), line)
-    } finally {
-      spark.conf.unset(ScaleGuards.OverlapPreflightKey)
-      spark.conf.unset(ScaleGuards.OverlapPreflightAutoSampleMinBytesKey)
-      spark.conf.unset(ScaleGuards.PreflightAutoSampleTargetRowsKey)
-    }
+    } finally spark.conf.unset(ScaleGuards.PreflightKey)
   }
 
   test("seeded sweep: an ACTIVE auto-sampled warn preflight never " +
@@ -224,24 +198,57 @@ class OverlapPreflightSpec extends SparkSuite {
       "must stay on the observation side of that line") {
     val sess = spark
     import sess.implicits._
-    def counts(): Seq[Long] = (1 to 5).map { seed =>
-      val rnd = new scala.util.Random(seed * 7919)
-      val left = (1L to 40L).map(i =>
-        (i, Seq.fill(3)(rnd.nextInt(30).toLong))).toDF("lid", "la")
-      val right = (1L to 40L).map(i =>
-        (i, Seq.fill(3)(rnd.nextInt(30).toLong))).toDF("rid", "ra")
-      left.join(right, arrays_overlap(col("la"), col("ra"))).count()
+    def counts(run: DataFrame => DataFrame): Seq[Long] = (1 to 5).map {
+      seed =>
+        val rnd = new scala.util.Random(seed * 7919)
+        val left = (1L to 40L).map(i =>
+          (i, Seq.fill(3)(rnd.nextInt(30).toLong))).toDF("lid", "la")
+        val right = (1L to 40L).map(i =>
+          (i, Seq.fill(3)(rnd.nextInt(30).toLong))).toDF("rid", "ra")
+        run(left.join(right, arrays_overlap(col("la"), col("ra")))).count()
     }
-    val baseline = counts()
-    spark.conf.set(ScaleGuards.OverlapPreflightKey, "warn")
-    spark.conf.set(ScaleGuards.OverlapPreflightAutoSampleMinBytesKey, "0")
-    spark.conf.set(ScaleGuards.PreflightAutoSampleTargetRowsKey, "3")
-    try assert(counts() == baseline,
-      "sampled-audit mode must answer identically to no-audit mode")
-    finally {
-      spark.conf.unset(ScaleGuards.OverlapPreflightKey)
-      spark.conf.unset(ScaleGuards.OverlapPreflightAutoSampleMinBytesKey)
-      spark.conf.unset(ScaleGuards.PreflightAutoSampleTargetRowsKey)
+    val baseline = counts(identity)
+    spark.conf.set(ScaleGuards.PreflightKey, "warn")
+    try {
+      val lines = capturing {
+        assert(counts(gated(_, lowGate)) == baseline,
+          "sampled-audit mode must answer identically to no-audit mode")
+      }
+      assert(lines.count(_.contains("sample_fraction=")) == 5,
+        s"every round must run a sampled audit: $lines")
+    } finally spark.conf.unset(ScaleGuards.PreflightKey)
+  }
+
+  test("streaming children skip the audit: a hot stream-static join " +
+      "fires the rewrite and runs under preflight=fail with no audit") {
+    // a fresh session: fail mode on the shared one would refuse other
+    // suites' hot joins
+    val sess = spark.newSession()
+    import sess.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = sess.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    sess.conf.set(ScaleGuards.PreflightKey, "fail")
+    val src = MemoryStream[(Long, Seq[Long])]
+    val right = (1L to 30L).map(i => (i, Seq(1L, i + 900))).toDF("rid", "ra")
+    val q = src.toDF().toDF("lid", "la")
+      .join(right, arrays_overlap(col("la"), col("ra")))
+      .writeStream.format("memory").queryName("preflight_stream_skip")
+      .outputMode("append").start()
+    try {
+      val lines = capturing {
+        src.addData((1L to 30L).map(i => (i, Seq(1L, i + 100))): _*)
+        q.processAllAvailable()
+      }
+      assert(sess.table("preflight_stream_skip").count() == 900L)
+      val plan = new java.io.ByteArrayOutputStream()
+      Console.withOut(plan)(q.explain())
+      assert(plan.toString.contains("Generate"),
+        s"the rewrite must fire on the streaming join: $plan")
+      assert(!lines.exists(_.contains("overlap-join rewrite preflight")),
+        s"a streaming child must skip the audit: $lines")
+    } finally {
+      q.stop()
+      sess.sql("DROP TABLE IF EXISTS preflight_stream_skip")
     }
   }
 

@@ -5,10 +5,43 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The injected optimizer guardrail: unpartitioned windows fail at planning
-  * when the conf is on, pass when off (default), and partitioned windows
-  * are never touched. */
+/** The injected optimizer guardrails (unpartitioned windows and cartesian
+  * joins fail at planning when their key is on, pass when off, the
+  * default), the one parse of the four on/off plan keys, and the
+  * rewrite-time preflight's settings: its stats-driven sample gate and
+  * its one mode key. */
 class ScaleGuardsSpec extends SparkSuite {
+
+  /** `t` and its causes, outermost first. */
+  private def chain(t: Throwable): Seq[Throwable] =
+    Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
+
+  private def messages(t: Throwable): Seq[String] =
+    chain(t).flatMap(x => Option(x.getMessage))
+
+  /** Planning `df` fails with an IllegalArgumentException whose message
+    * holds every one of `parts`. */
+  private def assertPlanningFails(df: DataFrame, parts: String*): Unit = {
+    val e = intercept[Exception](df.queryExecution.optimizedPlan)
+    assert(chain(e).exists(x => x.isInstanceOf[IllegalArgumentException]
+      && parts.forall(x.getMessage.contains)), s"wrong failure: $e")
+  }
+
+  /** A one-row overlap theta join and a one-row Hamming theta join in
+    * `sess`: each fires its rewrite rule. */
+  private def overlapJoin(sess: SparkSession): DataFrame = {
+    import sess.implicits._
+    Seq((1L, Seq(1L, 2L))).toDF("lid", "la")
+      .join(Seq((2L, Seq(2L, 3L))).toDF("rid", "ra"),
+        arrays_overlap(col("la"), col("ra")))
+  }
+
+  private def hammingJoin(sess: SparkSession): DataFrame = {
+    import sess.implicits._
+    Seq((1L, 5L, "wide")).toDF("lid", "lc", "lp")
+      .join(Seq((2L, 7L, "wide")).toDF("rid", "rc", "rp"),
+        graft.functions.GraftFunctions.hamming64(col("lc"), col("rc")) <= 2)
+  }
 
   private def withGuard[A](on: Boolean)(f: => A): A = {
     spark.conf.set(ScaleGuards.FailUnpartitionedWindowsKey, on.toString)
@@ -20,9 +53,6 @@ class ScaleGuardsSpec extends SparkSuite {
     val df = spark.range(100)
       .withColumn("rk", row_number().over(Window.orderBy(col("id"))))
     val e = intercept[Exception](withGuard(on = true)(df.collect()))
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x =>
-        Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("unpartitioned window")),
       s"wrong failure: $e")
   }
@@ -56,9 +86,6 @@ class ScaleGuardsSpec extends SparkSuite {
     val b = spark.range(100).toDF("y")
     val e = intercept[Exception](
       withCartesianGuard(on = true)(a.crossJoin(b).collect()))
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x =>
-        Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("cartesian")), s"wrong failure: $e")
   }
 
@@ -103,67 +130,71 @@ class ScaleGuardsSpec extends SparkSuite {
     assert(got == Seq((1L, 7L), (4L, 5L)), s"got $got")
   }
 
-  // --- stats-gated auto-sampling for the preflight audits -----------------
+  test("the four on/off plan keys take true or false in any case, and " +
+      "any other value fails planning with an IllegalArgumentException " +
+      "naming the key and the value") {
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    // a fresh session: a bad value on the shared one would break every
+    // concurrently planned query
+    val sess = spark.newSession()
+    def window = sess.range(100)
+      .withColumn("rk", row_number().over(Window.orderBy(col("id"))))
+    def cross = sess.range(10).toDF("x").crossJoin(sess.range(10).toDF("y"))
+    // a guard is armed when planning refuses the query; a rewrite is on
+    // when the join became an explode (both fixtures plan in place)
+    def refused(df: DataFrame) =
+      scala.util.Try(df.queryExecution.optimizedPlan).failed.toOption
+        .exists(chain(_).exists(_.isInstanceOf[IllegalStateException]))
+    def rewritten(df: DataFrame) =
+      df.queryExecution.optimizedPlan.exists(_.isInstanceOf[Generate])
+    import ScaleGuards._
+    for ((key, default, query, armed) <- Seq[(String, Boolean,
+        () => DataFrame, DataFrame => Boolean)](
+        (FailUnpartitionedWindowsKey, false, () => window, refused),
+        (FailCartesianProductsKey, false, () => cross, refused),
+        (OverlapJoinRewriteKey, true, () => overlapJoin(sess), rewritten),
+        (HammingBlockJoinRewriteKey, true, () => hammingJoin(sess),
+          rewritten))) {
+      assert(armed(query()) == default, s"$key unset")
+      try {
+        for ((v, on) <- Seq("TRUE" -> true, "false" -> false)) {
+          sess.conf.set(key, v)
+          assert(armed(query()) == on, s"$key=$v")
+        }
+        for (bad <- Seq("on", "off", "1")) {
+          sess.conf.set(key, bad)
+          assertPlanningFails(query(), key, s"'$bad'")
+        }
+      } finally sess.conf.unset(key)
+    }
+  }
 
-  private def plan(df: org.apache.spark.sql.DataFrame) =
-    df.queryExecution.optimizedPlan
+  // --- the preflight's stats-driven sample gate ----------------------------
 
-  private def effective(l: org.apache.spark.sql.DataFrame,
-      r: org.apache.spark.sql.DataFrame): Option[Double] =
-    ScaleGuards.effectivePreflightSample(
-      ScaleGuards.OverlapPreflightSampleKey,
-      ScaleGuards.OverlapPreflightAutoSampleMinBytesKey, plan(l), plan(r))
+  private def plan(df: DataFrame) = df.queryExecution.optimizedPlan
+
+  private def sample(l: DataFrame, r: DataFrame): Option[Double] =
+    ScaleGuards.preflightSample(plan(l), plan(r))
 
   test("auto-sampling engages BY DEFAULT (no conf set) when a join " +
       "child's stats cross the byte floor: the fraction targets the row " +
       "budget from the larger side's estimated rows") {
     // Range stats: sizeInBytes = n*8, rowCount = n. 1e9 rows = 8 GB >
-    // the 4 GB default floor; target 1M rows → f = 1e-3
+    // the 4 GB floor; target 1M rows → f = 1e-3
     val big = spark.range(1000000000L).toDF("id")
     val small = spark.range(10L).toDF("id")
-    val f = effective(big, small)
-    assert(f.isDefined, "stats-large child must auto-sample by default")
+    val f = sample(big, small)
+    assert(f.isDefined, "a stats-large child must sample")
     assert(math.abs(f.get - 0.001) < 1e-9, s"expected 1e-3, got $f")
     // symmetric: the large side may be either child
-    assert(effective(small, big) == f)
+    assert(sample(small, big) == f)
   }
 
   test("auto-sampling stays OFF below the byte floor: small fixtures " +
       "keep the exact, provenance-free audit (the d31/d41 oracle shape)") {
     val a = spark.range(100000L).toDF("id") // 800 KB << 4 GB
     val b = spark.range(50000L).toDF("id")
-    assert(effective(a, b).isEmpty)
-  }
-
-  test("an explicitly SET sampleFraction wins over the auto gate — " +
-      "valid (0,1) values sample at that rate, and an explicit 1.0 is " +
-      "a deliberate exact request even above the floor") {
-    val big = spark.range(1000000000L).toDF("id")
-    val small = spark.range(10L).toDF("id")
-    spark.conf.set(ScaleGuards.OverlapPreflightSampleKey, "0.25")
-    try assert(effective(big, small).contains(0.25))
-    finally spark.conf.unset(ScaleGuards.OverlapPreflightSampleKey)
-    spark.conf.set(ScaleGuards.OverlapPreflightSampleKey, "1.0")
-    try assert(effective(big, small).isEmpty,
-      "explicit 1.0 must disable auto-sampling: the operator asked for exact")
-    finally spark.conf.unset(ScaleGuards.OverlapPreflightSampleKey)
-  }
-
-  test("a MALFORMED explicit sampleFraction ('0.5x' typo) warns and " +
-      "falls through to the AUTO gate instead of forcing exact: the " +
-      "operator was trying to ENABLE sampling, and honoring the typo " +
-      "as a deliberate exact request would silently disable both the " +
-      "requested sampling and the default") {
-    val big = spark.range(1000000000L).toDF("id")
-    val small = spark.range(10L).toDF("id")
-    spark.conf.set(ScaleGuards.OverlapPreflightSampleKey, "0.5x")
-    try {
-      val f = effective(big, small)
-      assert(f.isDefined && math.abs(f.get - 0.001) < 1e-9,
-        s"malformed explicit value must degrade to the auto gate; got $f")
-      // below the floor the fall-through lands on exact, same as unset
-      assert(effective(small, small).isEmpty)
-    } finally spark.conf.unset(ScaleGuards.OverlapPreflightSampleKey)
+    assert(sample(a, b).isEmpty)
   }
 
   test("SENTINEL stats (LogicalRDD-style unknown size) fall back to the " +
@@ -182,14 +213,14 @@ class ScaleGuardsSpec extends SparkSuite {
     val small = spark.range(10L).toDF("id")
     assert(plan(rddDf).stats.rowCount.isEmpty,
       "fixture must actually be statless for this test to mean anything")
-    assert(effective(rddDf, small).isEmpty,
+    assert(sample(rddDf, small).isEmpty,
       "unknown stats must audit exactly (the conservative default)")
-    assert(effective(small, rddDf).isEmpty)
+    assert(sample(small, rddDf).isEmpty)
     // a Project over the statless leaf SCALES the sentinel by a
     // row-width ratio to an arbitrary plausible size — trust is judged
     // at the LEAVES, where nothing has rescaled anything yet
     val projected = rddDf.select("id")
-    assert(effective(projected, small).isEmpty,
+    assert(sample(projected, small).isEmpty,
       "a projected statless plan is still unsizeable")
   }
 
@@ -199,28 +230,21 @@ class ScaleGuardsSpec extends SparkSuite {
     val big = spark.range(1000000000L).toDF("id").cache()
     try {
       val small = spark.range(10L).toDF("id")
-      val f = effective(big, small)
+      val f = sample(big, small)
       assert(f.isDefined && f.get < 1.0,
-        s"a stat-bearing cached frame above the floor must auto-sample: $f")
+        s"a stat-bearing cached frame above the floor must sample: $f")
     } finally big.unpersist(blocking = false)
   }
 
-  test("above the byte floor but within the row budget stays exact, and " +
-      "the floor + target are conf-tunable") {
-    val a = spark.range(500L).toDF("id")
-    val b = spark.range(400L).toDF("id")
-    spark.conf.set(ScaleGuards.OverlapPreflightAutoSampleMinBytesKey, "0")
-    try {
-      // 500 estimated rows < the 1M default target → f >= 1 → exact
-      assert(effective(a, b).isEmpty)
-      spark.conf.set(ScaleGuards.PreflightAutoSampleTargetRowsKey, "100")
-      try {
-        val f = effective(a, b)
-        assert(f.isDefined && math.abs(f.get - 0.2) < 1e-9,
-          s"100 target over 500 rows = 0.2, got $f")
-      } finally spark.conf.unset(ScaleGuards.PreflightAutoSampleTargetRowsKey)
-    } finally
-      spark.conf.unset(ScaleGuards.OverlapPreflightAutoSampleMinBytesKey)
+  test("above the byte floor but within the row budget stays exact; the " +
+      "floor and the target are the gate's parameters") {
+    val (a, b) = (plan(spark.range(500L).toDF("id")),
+      plan(spark.range(400L).toDF("id")))
+    // 500 estimated rows < the 1M default target → f >= 1 → exact
+    assert(ScaleGuards.preflightSample(a, b, minBytes = 0).isEmpty)
+    val f = ScaleGuards.preflightSample(a, b, minBytes = 0, targetRows = 100)
+    assert(f.isDefined && math.abs(f.get - 0.2) < 1e-9,
+      s"100 target over 500 rows = 0.2, got $f")
   }
 
   test("a malformed two-phase floor fails planning of either theta-join " +
@@ -228,107 +252,52 @@ class ScaleGuardsSpec extends SparkSuite {
     // a fresh session: a malformed floor on the shared one would break
     // every concurrently planned theta join
     val sess = spark.newSession()
-    import sess.implicits._
     sess.conf.set(ScaleGuards.OverlapTwoPhaseMinBytesKey, "8k")
-    val overlap = Seq((1L, Seq(1L, 2L))).toDF("lid", "la")
-      .join(Seq((2L, Seq(2L, 3L))).toDF("rid", "ra"),
-        arrays_overlap(col("la"), col("ra")))
-    val hamming = Seq((1L, 5L, "wide")).toDF("lid", "lc", "lp")
-      .join(Seq((2L, 7L, "wide")).toDF("rid", "rc", "rp"),
-        graft.functions.GraftFunctions.hamming64(col("lc"), col("rc")) <= 2)
-    def chain(t: Throwable): Seq[Throwable] =
-      Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
-    for (df <- Seq(overlap, hamming)) {
-      val e = intercept[Exception](df.queryExecution.optimizedPlan)
-      assert(chain(e).exists(x => x.isInstanceOf[IllegalArgumentException]
-        && x.getMessage.contains(ScaleGuards.OverlapTwoPhaseMinBytesKey)
-        && x.getMessage.contains("'8k'")), s"wrong failure: $e")
-    }
+    for (df <- Seq(overlapJoin(sess), hammingJoin(sess)))
+      assertPlanningFails(df, ScaleGuards.OverlapTwoPhaseMinBytesKey, "'8k'")
   }
 
-  test("a malformed auto-sample floor or target fails planning with an " +
-      "IllegalArgumentException naming the key, only when the rule's " +
-      "preflight runs: preflight-off never reads the key") {
-    // a fresh session: malformed keys on the shared one would break
-    // every concurrently planned theta join with preflight on
-    val sess = spark.newSession()
-    import sess.implicits._
-    def overlap = Seq((1L, Seq(1L, 2L))).toDF("lid", "la")
-      .join(Seq((2L, Seq(2L, 3L))).toDF("rid", "ra"),
-        arrays_overlap(col("la"), col("ra")))
-    def hamming = Seq((1L, 5L, "wide")).toDF("lid", "lc", "lp")
-      .join(Seq((2L, 7L, "wide")).toDF("rid", "rc", "rp"),
-        graft.functions.GraftFunctions.hamming64(col("lc"), col("rc")) <= 2)
-    def chain(t: Throwable): Seq[Throwable] =
-      Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
-    import ScaleGuards._
-    for ((key, bad, modeKey, df) <- Seq(
-        (OverlapPreflightAutoSampleMinBytesKey, "4g", OverlapPreflightKey,
-          () => overlap),
-        (OverlapPreflightAutoSampleMinBytesKey, "-1", OverlapPreflightKey,
-          () => overlap),
-        (HammingPreflightAutoSampleMinBytesKey, "abc", HammingPreflightKey,
-          () => hamming),
-        (PreflightAutoSampleTargetRowsKey, "0", OverlapPreflightKey,
-          () => overlap),
-        (PreflightAutoSampleTargetRowsKey, "abc", HammingPreflightKey,
-          () => hamming))) {
-      sess.conf.set(key, bad)
-      try {
-        assert(df().count() == 1L, s"$key='$bad' failed with preflight off")
-        for (mode <- Seq("warn", "fail")) {
-          sess.conf.set(modeKey, mode)
-          val e = intercept[Exception](df().queryExecution.optimizedPlan)
-          assert(chain(e).exists(x => x.isInstanceOf[IllegalArgumentException]
-            && x.getMessage.contains(key) && x.getMessage.contains(s"'$bad'")),
-            s"$key='$bad' under $mode: wrong failure: $e")
-        }
-      } finally { sess.conf.unset(key); sess.conf.unset(modeKey) }
-    }
-  }
-
-  /** A mistyped preflight mode fails planning of a fired rewrite naming
-    * the key and value; unset and `off` plan and run with no audit. */
-  private def assertModeTypoFails(modeKey: String,
-      join: SparkSession => DataFrame): Unit = {
+  /** A mistyped spark.graft.preflight mode fails planning of a fired
+    * rewrite naming the key and value; unset and `off` plan and run with
+    * no audit. */
+  private def assertModeTypoFails(join: SparkSession => DataFrame): Unit = {
     // a fresh session: a bad mode on the shared one would break every
     // concurrently planned theta join
     val sess = spark.newSession()
-    def chain(t: Throwable): Seq[Throwable] =
-      Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
-    assert(join(sess).count() == 1L, s"$modeKey unset")
+    val key = ScaleGuards.PreflightKey
+    assert(join(sess).count() == 1L, s"$key unset")
     try {
-      sess.conf.set(modeKey, "off")
-      assert(join(sess).count() == 1L, s"$modeKey=off")
+      sess.conf.set(key, "off")
+      assert(join(sess).count() == 1L, s"$key=off")
       for (bad <- Seq("fial", "true", "on")) {
-        sess.conf.set(modeKey, bad)
-        val e = intercept[Exception](join(sess).queryExecution.optimizedPlan)
-        assert(chain(e).exists(x => x.isInstanceOf[IllegalArgumentException]
-          && x.getMessage.contains(modeKey) && x.getMessage.contains(s"'$bad'")),
-          s"$modeKey='$bad': wrong failure: $e")
+        sess.conf.set(key, bad)
+        assertPlanningFails(join(sess), key, s"'$bad'")
       }
-    } finally sess.conf.unset(modeKey)
+    } finally sess.conf.unset(key)
   }
 
   test("a mistyped overlap preflight mode fails planning with an " +
       "IllegalArgumentException naming the key, instead of silently " +
       "turning the skew circuit breaker off") {
-    assertModeTypoFails(ScaleGuards.OverlapPreflightKey, { sess =>
-      import sess.implicits._
-      Seq((1L, Seq(1L, 2L))).toDF("lid", "la")
-        .join(Seq((2L, Seq(2L, 3L))).toDF("rid", "ra"),
-          arrays_overlap(col("la"), col("ra")))
-    })
+    assertModeTypoFails(overlapJoin)
   }
 
   test("a mistyped hamming preflight mode fails planning with an " +
       "IllegalArgumentException naming the key, instead of silently " +
       "turning the skew circuit breaker off") {
-    assertModeTypoFails(ScaleGuards.HammingPreflightKey, { sess =>
-      import sess.implicits._
-      Seq((1L, 5L, "wide")).toDF("lid", "lc", "lp")
-        .join(Seq((2L, 7L, "wide")).toDF("rid", "rc", "rp"),
-          graft.functions.GraftFunctions.hamming64(col("lc"), col("rc")) <= 2)
-    })
+    assertModeTypoFails(hammingJoin)
+  }
+
+  test("a retired per-family preflight mode key fails planning of either " +
+      "family's fired rewrite, naming spark.graft.preflight, so a stale " +
+      "fail-mode deployment cannot silently lose its circuit breaker") {
+    val sess = spark.newSession()
+    for (old <- Seq("spark.graft.overlapJoinRewrite.preflight",
+        "spark.graft.hammingBlockJoinRewrite.preflight");
+        join <- Seq(overlapJoin _, hammingJoin _)) {
+      sess.conf.set(old, "fail")
+      try assertPlanningFails(join(sess), old, ScaleGuards.PreflightKey)
+      finally sess.conf.unset(old)
+    }
   }
 }

@@ -70,7 +70,7 @@ class ManagementServerSpec extends SparkSuite {
       // element 1L in every row of both sides: 100% hot, diagnosis warns
       val left = (1L to 20L).map(i => (i, Seq(1L, i + 100))).toDF("lid", "la")
       val right = (1L to 20L).map(i => (i, Seq(1L, i + 900))).toDF("rid", "ra")
-      spark.conf.set(graft.plans.ScaleGuards.OverlapPreflightKey, "warn")
+      spark.conf.set(graft.plans.ScaleGuards.PreflightKey, "warn")
       try {
         assert(left.join(right,
           arrays_overlap(col("la"), col("ra"))).count() >= 400L)
@@ -80,14 +80,14 @@ class ManagementServerSpec extends SparkSuite {
         assert(b1.contains("hot-element"), b1)
         assert(b1.contains("\"aborted\":false"), b1)
         // fail mode: the refusal is recorded with aborted=true
-        spark.conf.set(graft.plans.ScaleGuards.OverlapPreflightKey, "fail")
+        spark.conf.set(graft.plans.ScaleGuards.PreflightKey, "fail")
         intercept[graft.plans.PreflightAbort] {
           left.join(right, arrays_overlap(col("la"), col("ra"))).count()
         }
         val (_, b2) = get(port, "/v1/preflight")
         assert(b2.contains("\"aborted\":true"), b2)
       } finally
-        spark.conf.unset(graft.plans.ScaleGuards.OverlapPreflightKey)
+        spark.conf.unset(graft.plans.ScaleGuards.PreflightKey)
     }
   }
 
@@ -104,10 +104,10 @@ class ManagementServerSpec extends SparkSuite {
       // warn audit: element 1L in every row of both sides, 100% hot
       val left = (1L to 20L).map(i => (i, Seq(1L, i + 100))).toDF("lid", "la")
       val right = (1L to 20L).map(i => (i, Seq(1L, i + 900))).toDF("rid", "ra")
-      spark.conf.set(graft.plans.ScaleGuards.OverlapPreflightKey, "warn")
+      spark.conf.set(graft.plans.ScaleGuards.PreflightKey, "warn")
       try assert(left.join(right,
         arrays_overlap(col("la"), col("ra"))).count() >= 400L)
-      finally spark.conf.unset(graft.plans.ScaleGuards.OverlapPreflightKey)
+      finally spark.conf.unset(graft.plans.ScaleGuards.PreflightKey)
       val (s1, b1) = get(port, "/v1/preflight")
       assert(s1 == 200, b1)
       assert(b1.contains(""""rule":"overlap-join""""), b1)
@@ -161,10 +161,10 @@ class ManagementServerSpec extends SparkSuite {
     withServer { (port, _, _) =>
       val left = (1L to 20L).map(i => (i, Seq(7L, i + 100))).toDF("lid", "la")
       val right = (1L to 20L).map(i => (i, Seq(7L, i + 900))).toDF("rid", "ra")
-      spark.conf.set(graft.plans.ScaleGuards.OverlapPreflightKey, "warn")
+      spark.conf.set(graft.plans.ScaleGuards.PreflightKey, "warn")
       try assert(left.join(right,
         arrays_overlap(col("la"), col("ra"))).count() >= 400L)
-      finally spark.conf.unset(graft.plans.ScaleGuards.OverlapPreflightKey)
+      finally spark.conf.unset(graft.plans.ScaleGuards.PreflightKey)
       val token = Integer.toHexString(System.identityHashCode(spark))
       val (s1, b1) = get(port, s"/v1/preflight?session=$token")
       assert(s1 == 200, b1)
